@@ -13,6 +13,8 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{
   LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
+import org.apache.spark.sql.execution.datasources.v2.FileTable
 import org.apache.spark.sql.execution.datasources.v2.orc.OrcTable
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, raise_error, when}
@@ -108,6 +110,11 @@ final class GraftTableCatalog extends TableCatalog {
 
   override def tableExists(ident: Identifier): Boolean =
     tableNameOf(ident).exists(n => binding.tables.contains(n.fullyQualifiedName))
+
+  /** `REFRESH TABLE`: drop the cached version-dir listings and schemas
+    * ([[SchemaCache]]). Never needed for correctness — published dirs are
+    * immutable — it is the operator's reset for hand-edited storage. */
+  override def invalidateTable(ident: Identifier): Unit = SchemaCache.invalidateAll()
 
   override def loadTable(ident: Identifier): Table = {
     val (defn, schema) = definitionOf(ident)
@@ -230,6 +237,10 @@ final class GraftTableCatalog extends TableCatalog {
         (Nil, Map.empty[String, String])
       case SnapshotTableVersion(v) =>
         (Seq(VersionPaths.pathFor(defn.location, v).toString), Map.empty[String, String])
+      case PartitionedTableVersion(pvs) if pvs.isEmpty =>
+        // nothing written yet (or every partition deleted): no basePath —
+        // the location may not exist, and there is nothing to infer from
+        (Nil, Map.empty[String, String])
       case PartitionedTableVersion(pvs) =>
         // leaf version dirs + basePath so `k=v` segments become partition
         // columns (same layout contract as VersionedReader.doMaterialize)
@@ -264,11 +275,9 @@ final class GraftTableCatalog extends TableCatalog {
     val options = new CaseInsensitiveStringMap(opts.asJava)
     defn.format match {
       case FileFormat.Orc =>
-        OrcTable(defn.name.fullyQualifiedName, spark, options, paths, schema,
-          classOf[org.apache.spark.sql.execution.datasources.orc.OrcFileFormat])
+        new GraftOrcTable(defn.name.fullyQualifiedName, spark, options, paths, schema)
       case _ =>
-        ParquetTable(defn.name.fullyQualifiedName, spark, options, paths, schema,
-          classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
+        new GraftParquetTable(defn.name.fullyQualifiedName, spark, options, paths, schema)
     }
   }
 
@@ -655,6 +664,54 @@ final class GraftTableCatalog extends TableCatalog {
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
     throw new UnsupportedOperationException("graft catalog does not support RENAME")
 }
+
+/** Spark's own file table over a state's version dirs, with the listing
+  * served through [[SchemaCache]]'s shared cache: the stock `fileIndex`
+  * lists every dir again on each load (one Spark job above 32 dirs). The
+  * existence check of the stock index still runs on every load. */
+private[spark] trait GraftFileTable extends FileTable {
+  // the case-class fields of ParquetTable / OrcTable
+  def sparkSession: SparkSession
+  def options: CaseInsensitiveStringMap
+  def paths: Seq[String]
+  def userSpecifiedSchema: Option[StructType]
+
+  override lazy val fileIndex: PartitioningAwareFileIndex =
+    SchemaCache.fileIndex(
+      sparkSession, paths, options.asCaseSensitiveMap.asScala.toMap, userSpecifiedSchema)
+
+  // no files and no declared schema: nothing can type the table (the
+  // stock error names neither the cause nor the way out)
+  abstract override def inferSchema(
+      files: Seq[org.apache.hadoop.fs.FileStatus]): Option[StructType] =
+    if (paths.nonEmpty) super.inferSchema(files)
+    else
+      throw new IllegalStateException(
+        s"table ${name()} has no schema: it was registered without one and no " +
+          "version holding data has been written yet. Register it with a schema " +
+          "(GraftTableCatalog.register(catalog, table, Some(schema)) or CREATE " +
+          "TABLE with columns), or write it once through versionedInsertInto")
+}
+
+private[spark] final class GraftParquetTable(
+    name: String,
+    spark: SparkSession,
+    options: CaseInsensitiveStringMap,
+    paths: Seq[String],
+    schema: Option[StructType])
+  extends ParquetTable(name, spark, options, paths, schema, classOf[
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
+  with GraftFileTable
+
+private[spark] final class GraftOrcTable(
+    name: String,
+    spark: SparkSession,
+    options: CaseInsensitiveStringMap,
+    paths: Seq[String],
+    schema: Option[StructType])
+  extends OrcTable(name, spark, options, paths, schema, classOf[
+    org.apache.spark.sql.execution.datasources.orc.OrcFileFormat])
+  with GraftFileTable
 
 /** V2 table wrapper: reads pass straight through to Spark's file table;
   * writes become versioned commits (see the catalog scaladoc); DELETE over

@@ -300,18 +300,12 @@ object RowOverlay {
     val partitioned = leaves.head._1.isDefined
     val df0 = SessionConf.withConf(
       spark, "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
-      def loadWith(schema: Option[org.apache.spark.sql.types.StructType]) = {
-        val r = spark.read.format(table.format.name)
-        schema.foreach(r.schema)
-        (if (partitioned) r.option("basePath", dir) else r)
-          .load(leaves.map(_._2): _*)
-      }
-      // schema cached per immutable overlay-leaf set ([[SchemaCache]]) —
-      // every read of an overlay-carrying table unions these leaves, and a
-      // bare load pays one footer-inference job per leaf set per read
-      loadWith(Some(SchemaCache.getOrInfer(
-        table.format.name, mergeSchema = false, leaves.map(_._2))(
-        loadWith(None).schema)))
+      // listing and schema cached per immutable overlay-leaf set
+      // ([[SchemaCache]]) — every read of an overlay-carrying table unions
+      // these leaves, and a stock load re-lists and re-infers them per read
+      SchemaCache.load(
+        spark, table.format, leaves.map(_._2),
+        if (partitioned) Map("basePath" -> dir) else Map.empty[String, String])
     }
     val pointed = pointers.fold(df0) { case (f, p) =>
       df0.select(

@@ -340,18 +340,11 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
         spark.emptyDataFrame
       case SnapshotTableVersion(v) =>
         val path = VersionPaths.pathFor(table.location, v).toString
-        def loadWith(schema: Option[org.apache.spark.sql.types.StructType]) = {
-          val r = spark.read
-            .option("mergeSchema", mergeSchema.toString)
-            .format(table.format.name)
-          schema.foreach(r.schema)
-          r.load(path)
-        }
-        // schema cached per immutable version dir ([[SchemaCache]]): a bare
-        // load pays one footer-inference Spark job per call
-        def cachedLoad = loadWith(Some(SchemaCache.getOrInfer(
-          table.format.name, mergeSchema, Seq(path))(loadWith(None).schema)))
-        point(withWidening(table, at, s => loadWith(Some(s)), cachedLoad), pointers)
+        // listing and schema cached per immutable version dir ([[SchemaCache]])
+        def loadWith(schema: Option[org.apache.spark.sql.types.StructType]) =
+          SchemaCache.load(
+            spark, table.format, Seq(path), Map("mergeSchema" -> mergeSchema.toString), schema)
+        point(withWidening(table, at, s => loadWith(Some(s)), loadWith(None)), pointers)
       case PartitionedTableVersion(pvs) if pvs.nonEmpty =>
         // one scan per partition-column SIGNATURE: a metadata-only
         // partition evolution ([[PartitionEvolution.evolveMetadataOnly]])
@@ -370,34 +363,26 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
             (if (sig == currentSig) 0 else 1, sig.mkString(","))
           }
           .map(_._2)
+        // listings and schema cached per immutable version-dir set
+        // ([[SchemaCache]]): a stock load lists every dir (one Spark job
+        // above 32 dirs) and infers footers on every call, and lifecycle
+        // queries re-resolve the same states dozens of times
         def loadGroup(
             entries: Seq[(Partition, Version)],
             schema: Option[org.apache.spark.sql.types.StructType]) = {
           val paths = entries
             .map { case (p, v) => SparkPaths.dirFor(table.location, p, v) }
             .sorted
-          val r = spark.read
-            .option("basePath", table.location.toString)
-            .option("mergeSchema", mergeSchema.toString)
-            .format(table.format.name)
-          schema.foreach(r.schema)
-          r.load(paths: _*)
-        }
-        // schema cached per immutable version-dir set ([[SchemaCache]]): a
-        // bare load pays one footer-inference Spark job per call, and
-        // lifecycle queries re-resolve the same states dozens of times
-        def cachedGroup(entries: Seq[(Partition, Version)]) = {
-          val paths = entries
-            .map { case (p, v) => SparkPaths.dirFor(table.location, p, v) }
-            .sorted
-          loadGroup(entries, Some(SchemaCache.getOrInfer(
-            table.format.name, mergeSchema, paths)(loadGroup(entries, None).schema)))
+          SchemaCache.load(
+            spark, table.format, paths,
+            Map("basePath" -> table.location.toString, "mergeSchema" -> mergeSchema.toString),
+            schema)
         }
         if (groups.lengthCompare(1) == 0)
           point(withWidening(
             table, at,
             s => loadGroup(groups.head, Some(s)),
-            cachedGroup(groups.head)), pointers)
+            loadGroup(groups.head, None)), pointers)
         else {
           // widening derives from the POINTER-FREE union schema (pointer
           // columns are computed, never in files), then every era loads
@@ -406,12 +391,12 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
           val schemaOpt =
             if (widened.isEmpty) None
             else {
-              val base = groups.map(cachedGroup(_))
+              val base = groups.map(loadGroup(_, None))
                 .reduce(_.unionByName(_, allowMissingColumns = true)).schema
               Some(ColumnMapping.applyWideningToSchema(base, widened))
             }
           groups.map(g => point(
-            schemaOpt.fold(cachedGroup(g))(s => loadGroup(g, Some(s))), pointers))
+            loadGroup(g, schemaOpt), pointers))
             .reduce(_.unionByName(_, allowMissingColumns = true))
         }
       case PartitionedTableVersion(_) =>

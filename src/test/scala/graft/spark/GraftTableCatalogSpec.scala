@@ -145,6 +145,47 @@ class GraftTableCatalogSpec extends AnyFunSuite with Matchers {
       .as[Long].collect() shouldBe Array(1L, 2L, 3L)
   }
 
+  test("INSERT INTO a never-written table registered without a schema names the cause and both remedies") {
+    // the location does not exist yet: nothing has been written (own
+    // namespace: SHOW TABLES IN cdb below pins that namespace's listing)
+    val table = TableDefinition(
+      TableName("nsdb", "no_schema"),
+      Files.createTempDirectory("graft_cat_noschema").resolve("t").toUri,
+      PartitionSchema(List(PartitionColumn("date"))), FileFormat.Parquet)
+    ctx.init(table, user, UpdateMessage("init"))
+    GraftTableCatalog.register("graftcat", table)
+    val insert = "INSERT INTO graftcat.nsdb.no_schema VALUES (1, 'a', '2024-01-01')"
+
+    val e = intercept[IllegalStateException](spark.sql(insert))
+    e.getMessage should include("nsdb.no_schema has no schema")
+    e.getMessage should include("registered without one")
+    e.getMessage should include("Register it with a schema")
+    e.getMessage should include("versionedInsertInto")
+    log.updates(table.name) should have size 1 // analysis failed: nothing committed
+
+    // remedy 1: register the schema — the same INSERT now commits
+    GraftTableCatalog.register("graftcat", table, Some(new org.apache.spark.sql.types.StructType()
+      .add("id", "long").add("label", "string").add("date", "string")))
+    spark.sql(insert)
+    spark.sql("SELECT id FROM graftcat.nsdb.no_schema").as[Long].collect() shouldBe Array(1L)
+
+    // remedy 2: one Scala-API write gives a schema-less registration files
+    // to infer from
+    val table2 = table.copy(
+      name = TableName("nsdb", "no_schema2"),
+      location = Files.createTempDirectory("graft_cat_noschema2").resolve("t").toUri)
+    ctx.init(table2, user, UpdateMessage("init"))
+    GraftTableCatalog.register("graftcat", table2)
+    intercept[IllegalStateException](
+      spark.sql("INSERT INTO graftcat.nsdb.no_schema2 VALUES (2, 'b', '2024-01-02')"))
+    Seq(CatEvent(1, "a", "2024-01-01")).toDS()
+      .versionedInsertInto(ctx, table2, user, UpdateMessage("first write"))
+    // the written `date` dirs now infer as DATE on load
+    spark.sql("INSERT INTO graftcat.nsdb.no_schema2 VALUES (2, 'b', DATE'2024-01-02')")
+    spark.sql("SELECT id FROM graftcat.nsdb.no_schema2 ORDER BY id")
+      .as[Long].collect() shouldBe Array(1L, 2L)
+  }
+
   test("snapshot SQL DML: INSERT INTO unions with current, OVERWRITE replaces") {
     val table = TableDefinition(
       TableName("cdb", "dml_snap"),
