@@ -1,7 +1,5 @@
 package graft.spark
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField, StructType}
@@ -29,37 +27,17 @@ import graft.core.TableVersions.{UpdateMessage, UserId}
  *
  * The expression must be foldable (a constant — `current_date()` style
  * functions fold at write time, which is exactly SQL's CURRENT DEFAULT
- * semantics per-batch). Metadata lives at
- * `<table>/_defaults/<schema.table>.json` (the [[GeneratedColumns]]
- * discipline: name-keyed under the possibly-shared location, so shallow
- * clones own independent defaults; atomic publish; one driver-side read
- * per write).
+ * semantics per-batch). Defaults live in [[MetadataFiles.defaults]] (the
+ * [[GeneratedColumns]] discipline: name-keyed under the possibly-shared
+ * location, so shallow clones own independent defaults; one driver-side
+ * read per write).
  */
 object ColumnDefaults {
 
   final case class ColumnDefault(column: String, expr: String)
 
-  private val mapper = new ObjectMapper()
-
-  private def filePath(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString +
-        s"_defaults/${table.name.fullyQualifiedName}.json")
-
-  def list(spark: org.apache.spark.sql.SparkSession, table: TableDefinition): List[ColumnDefault] = {
-    val p = filePath(table)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val node = mapper.readTree(text)
-    (0 until node.size()).toList.map { i =>
-      val c = node.get(i)
-      ColumnDefault(c.get("column").asText(), c.get("expr").asText())
-    }
-  }
+  def list(spark: org.apache.spark.sql.SparkSession, table: TableDefinition): List[ColumnDefault] =
+    MetadataFiles.defaults.read(spark, table)
 
   /** Declare (or replace) a column's default. The column must not be
     * GENERATED or IDENTITY (those own their fill rules), and the
@@ -87,8 +65,8 @@ object ColumnDefaults {
     require(!parsed.exists(_.isInstanceOf[
       org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute]),
       s"DEFAULT for $column must be a constant expression, got: $defaultExpr")
-    val existing = list(spark, table).filterNot(_.column.equalsIgnoreCase(column))
-    write(spark, table, existing :+ ColumnDefault(column, defaultExpr))
+    MetadataFiles.defaults.update(spark, table)(ds =>
+      ds.filterNot(_.column.equalsIgnoreCase(column)) :+ ColumnDefault(column, defaultExpr))
     log.commit(table.name, TableVersions.TableUpdate(
       user, UpdateMessage(s"ALTER TABLE ALTER COLUMN $column SET DEFAULT $defaultExpr"),
       java.time.Instant.now(), Nil))
@@ -103,42 +81,19 @@ object ColumnDefaults {
       table: TableDefinition,
       column: String,
       user: UserId): Unit = {
-    val existing = list(spark, table)
-    if (!existing.exists(_.column.equalsIgnoreCase(column))) return
-    write(spark, table, existing.filterNot(_.column.equalsIgnoreCase(column)))
+    if (!list(spark, table).exists(_.column.equalsIgnoreCase(column))) return
+    MetadataFiles.defaults.update(spark, table)(_.filterNot(_.column.equalsIgnoreCase(column)))
     ctx.metastore.tableVersions.commit(table.name, TableVersions.TableUpdate(
       user, UpdateMessage(s"ALTER TABLE ALTER COLUMN $column DROP DEFAULT"),
       java.time.Instant.now(), Nil))
     ()
   }
 
-  /** Shallow-clone carry ([[ShallowClone]]). */
-  private[spark] def seed(
-      spark: org.apache.spark.sql.SparkSession,
-      table: TableDefinition,
-      ds: List[ColumnDefault]): Unit = write(spark, table, ds)
-
-  private def write(
-      spark: org.apache.spark.sql.SparkSession,
-      table: TableDefinition,
-      ds: List[ColumnDefault]): Unit = {
-    val arr = mapper.createArrayNode()
-    ds.foreach { d =>
-      val n = mapper.createObjectNode()
-      n.put("column", d.column); n.put("expr", d.expr)
-      arr.add(n)
-    }
-    AtomicSidecar.writeUtf8(
-      spark.sessionState.newHadoopConf(), filePath(table), mapper.writeValueAsString(arr))
-  }
-
   /** The write-path fill: compute ABSENT defaulted columns; supplied
     * columns pass through verbatim (NULLs included). Rides the shared
     * pre-write pipeline next to [[GeneratedColumns.applied]]. */
   def applied(df: DataFrame, table: TableDefinition): DataFrame = {
-    val ds =
-      try list(df.sparkSession, table)
-      catch { case _: java.io.IOException => Nil }
+    val ds = list(df.sparkSession, table)
     if (ds.isEmpty) return df
     val names = df.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     ds.foldLeft(df) { (acc, d) =>
@@ -156,9 +111,7 @@ object ColumnDefaults {
       spark: org.apache.spark.sql.SparkSession,
       table: TableDefinition,
       schema: StructType): StructType = {
-    val ds =
-      try list(spark, table)
-      catch { case _: java.io.IOException => Nil }
+    val ds = list(spark, table)
     if (ds.isEmpty) return schema
     val byName = ds.map(d => d.column.toLowerCase(java.util.Locale.ROOT) -> d.expr).toMap
     StructType(schema.map { f =>

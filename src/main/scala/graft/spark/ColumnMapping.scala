@@ -1,6 +1,6 @@
 package graft.spark
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.annotation.{JsonIgnore, JsonProperty}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -53,7 +53,7 @@ object ColumnMapping {
   final case class Entry(
       logical: String, physical: String, dropped: Boolean,
       widened: Option[String] = None) {
-    def isNested: Boolean = physical.contains('.') || logical.contains('.')
+    @JsonIgnore def isNested: Boolean = physical.contains('.') || logical.contains('.')
   }
 
   /** The full mapping in force from `commit` onward. `owner` names the
@@ -61,62 +61,12 @@ object ColumnMapping {
     * (shallow clones) write into one file, and the retention fallback
     * must never adopt another lineage's state (absent = legacy entry,
     * single-table usage). */
-  final case class State(commit: String, entries: List[Entry], owner: Option[String] = None)
-
-  private val FileName = "_column_mapping.json"
-  private val mapper = new ObjectMapper()
-
-  private def filePath(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString + FileName)
+  final case class State(
+      commit: String, entries: List[Entry], @JsonProperty("table") owner: Option[String] = None)
 
   /** All recorded states, oldest first (empty = identity mapping). */
-  def states(spark: SparkSession, table: TableDefinition): List[State] = {
-    val p = filePath(table)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val node = mapper.readTree(text)
-    (0 until node.size()).toList.map { i =>
-      val s = node.get(i)
-      val es = s.get("entries")
-      State(
-        s.get("commit").asText(),
-        (0 until es.size()).toList.map { j =>
-          val e = es.get(j)
-          Entry(e.get("logical").asText(), e.get("physical").asText(),
-            e.get("dropped").asBoolean(),
-            Option(e.get("widened")).filterNot(_.isNull).map(_.asText()))
-        },
-        Option(s.get("table")).filterNot(_.isNull).map(_.asText()))
-    }
-  }
-
-  private def write(
-      spark: SparkSession, table: TableDefinition, all: List[State]): Unit = {
-    val p = filePath(table)
-    val arr = mapper.createArrayNode()
-    all.foreach { s =>
-      val n = mapper.createObjectNode()
-      n.put("commit", s.commit)
-      s.owner.foreach(n.put("table", _))
-      val es = mapper.createArrayNode()
-      s.entries.foreach { e =>
-        val en = mapper.createObjectNode()
-        en.put("logical", e.logical); en.put("physical", e.physical)
-        en.put("dropped", e.dropped)
-        e.widened.foreach(en.put("widened", _))
-        es.add(en)
-      }
-      n.set("entries", es)
-      arr.add(n)
-    }
-    AtomicSidecar.writeUtf8(
-      spark.sessionState.newHadoopConf(), p, mapper.writeValueAsString(arr))
-  }
+  def states(spark: SparkSession, table: TableDefinition): List[State] =
+    MetadataFiles.columnMapping.read(spark, table)
 
   /** The mapping in force at `at` (default: the current pointer): the
     * newest state whose anchor commit is at-or-before `at` in the lineage.
@@ -163,9 +113,11 @@ object ColumnMapping {
       table: TableDefinition,
       state: State,
       anchor: CommitId,
-      owner: TableName): Unit =
-    write(spark, table, states(spark, table) :+
-      State(anchor.id, state.entries, Some(owner.fullyQualifiedName)))
+      owner: TableName): Unit = {
+    MetadataFiles.columnMapping.update(spark, table)(
+      _ :+ State(anchor.id, state.entries, Some(owner.fullyQualifiedName)))
+    ()
+  }
 
   /** RENAME COLUMN (metadata-only). Refuses partition columns, unknown
     * columns, and name collisions. */
@@ -607,8 +559,9 @@ object ColumnMapping {
     val (_, _) = ctx.metastore.commit(table.name, TableUpdate(
       user, message, java.time.Instant.now(), Nil))
     val anchor = ctx.metastore.tableVersions.currentCommit(table.name)
-    write(spark, table, states(spark, table) :+
-      State(anchor.id, entries, Some(table.name.fullyQualifiedName)))
+    MetadataFiles.columnMapping.update(spark, table)(
+      _ :+ State(anchor.id, entries, Some(table.name.fullyQualifiedName)))
+    ()
   }
 
   /** The mapping entries in force at `at`, seeded from the PHYSICAL schema

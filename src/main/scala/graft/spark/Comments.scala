@@ -1,7 +1,5 @@
 package graft.spark
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
@@ -16,9 +14,9 @@ import graft.core.TableVersions.{TableUpdate, UpdateMessage, UserId}
  * documentation along with structure. Purely descriptive: no read or
  * write behavior changes.
  *
- * Comments live at `<table>/_comments/<schema.table>.json` (the
- * [[ColumnDefaults]] discipline: name-keyed under the possibly-shared
- * location so shallow clones own independent sets; atomic publish).
+ * Comments live in [[MetadataFiles.comments]] (the [[ColumnDefaults]]
+ * discipline: name-keyed under the possibly-shared location so shallow
+ * clones own independent sets).
  * Keys are dotted field paths, so nested-field comments
  * (`ALTER COLUMN meta.lang COMMENT '…'`) store naturally; only
  * top-level comments decorate the served schema (DESCRIBE) and the
@@ -28,66 +26,15 @@ import graft.core.TableVersions.{TableUpdate, UpdateMessage, UserId}
  */
 object Comments {
 
-  private val mapper = new ObjectMapper()
-
-  private def filePath(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString +
-        s"_comments/${table.name.fullyQualifiedName}.json")
-
-  // the [[TableProperties]] memoization discipline: decorate() runs on
-  // every served-schema resolution, so without a short-lived cache each
-  // analysis pays a sidecar probe — costly on object stores; entries
-  // invalidate on every write through this process and expire after the
-  // TTL so another writer's comment is seen promptly (descriptive text —
-  // a one-TTL lag is benign)
-  private val CacheTtlMs = 30000L
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Map[String, String])]()
-
-  /** Test/ops hook: drop every cached comment map. */
-  private[graft] def invalidateCache(): Unit = cache.clear()
-
   /** Dotted field path → comment (empty when none declared). One
-    * driver-side metadata probe, memoized per path. */
-  def list(spark: SparkSession, table: TableDefinition): Map[String, String] = {
-    val p = filePath(table)
-    val key = p.toString
-    val now = System.currentTimeMillis()
-    val hit = cache.get(key)
-    if (hit != null && now - hit._1 < CacheTtlMs) return hit._2
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val all =
-      if (!fs.exists(p)) Map.empty[String, String]
-      else {
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val node = mapper.readTree(text)
-        val out = Map.newBuilder[String, String]
-        node.fieldNames().forEachRemaining(k => out += k -> node.get(k).asText())
-        out.result()
-      }
-    cache.put(key, (now, all))
-    all
-  }
+    * driver-side metadata probe, memoized ([[MetadataFiles.comments]]). */
+  def list(spark: SparkSession, table: TableDefinition): Map[String, String] =
+    MetadataFiles.comments.read(spark, table)
 
-  private def write(
-      spark: SparkSession, table: TableDefinition, all: Map[String, String]): Unit = {
-    val obj = mapper.createObjectNode()
-    all.toSeq.sortBy(_._1).foreach { case (k, v) => obj.put(k, v) }
-    AtomicSidecar.writeUtf8(
-      spark.sessionState.newHadoopConf(), filePath(table),
-      mapper.writeValueAsString(obj))
-    cache.remove(filePath(table).toString)
-    ()
-  }
-
-  /** Seed without a commit — CREATE-time comments and clone carry. */
+  /** Seed without a commit — CREATE-time comments. */
   private[spark] def seed(
       spark: SparkSession, table: TableDefinition, all: Map[String, String]): Unit =
-    if (all.nonEmpty) write(spark, table, all)
+    if (all.nonEmpty) { MetadataFiles.comments.update(spark, table)(_ => all); () }
 
   /** Set (or clear, `comment = None`) one field path's comment — a
     * metadata-only audit commit, like every other declaration change. */
@@ -98,12 +45,10 @@ object Comments {
       path: String,
       comment: Option[String],
       user: UserId): Unit = {
-    val existing = list(spark, table)
-    val updated = comment match {
+    MetadataFiles.comments.update(spark, table)(existing => comment match {
       case Some(c) => existing + (path -> c)
       case None    => existing - path
-    }
-    write(spark, table, updated)
+    })
     ctx.metastore.commit(table.name, TableUpdate(
       user,
       UpdateMessage(comment match {

@@ -1,7 +1,5 @@
 package graft.spark
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, expr, lit, raise_error, when}
 
@@ -17,9 +15,10 @@ import graft.core.TableVersions.{TableUpdate, UpdateMessage, UserId}
  * is applied), rejecting violations loudly BEFORE the commit publishes.
  *
  * Mechanics:
- *  - constraints persist as one JSON file at `<table>/_constraints.json`
- *    (driver-side metadata, like the commit log itself); adding/dropping
- *    also lands a metadata-only audit commit in the history;
+ *  - constraints persist in the table's metadata files
+ *    ([[MetadataFiles.constraints]], name-keyed so a shallow clone owns
+ *    an independent set); adding/dropping also lands a metadata-only
+ *    audit commit in the history;
  *  - enforcement costs ZERO extra scans: the check rides the write's own
  *    pass as a filter whose predicate calls `raise_error` on the first
  *    violating row (`CHECK` semantics are SQL-standard: NULL/unknown
@@ -42,64 +41,10 @@ object Constraints {
   def notNull(column: String): Constraint = Constraint(s"${column}_not_null", "notnull", column)
   def check(name: String, sqlExpr: String): Constraint = Constraint(name, "check", sqlExpr)
 
-  private val LegacyFileName = "_constraints.json"
-  private val mapper = new ObjectMapper()
-
-  /** Constraint metadata is keyed by TABLE NAME under the (possibly
-    * shared) location: `_constraints/<schema.table>.json`. A shallow
-    * clone and its source share one physical namespace but must own
-    * INDEPENDENT constraint sets — a location-global file would let one
-    * side mutate the other's enforcement. Reads fall back to the legacy
-    * location-global `_constraints.json` when no keyed file exists;
-    * writes always target the keyed file (the effective list was read
-    * first), so legacy metadata migrates on the first DDL. */
-  private def keyedPath(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString +
-        s"_constraints/${table.name.fullyQualifiedName}.json")
-
-  private def legacyPath(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString + LegacyFileName)
-
   /** The table's recorded constraints (empty when none were ever added).
-    * One driver-side metadata read — the same bound as a commit-log
-    * open. */
-  def list(spark: SparkSession, table: TableDefinition): List[Constraint] = {
-    val keyed = keyedPath(table)
-    val fs = keyed.getFileSystem(spark.sessionState.newHadoopConf())
-    val p = if (fs.exists(keyed)) keyed else legacyPath(table)
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val node = mapper.readTree(text)
-    (0 until node.size()).toList.map { i =>
-      val c = node.get(i)
-      Constraint(c.get("name").asText(), c.get("kind").asText(), c.get("expr").asText())
-    }
-  }
-
-  /** Seed the keyed constraint file directly — the shallow-clone carry
-    * (the clone INHERITS the source's constraints at clone time and owns
-    * them independently from then on). */
-  private[spark] def seed(
-      spark: SparkSession, table: TableDefinition, cs: List[Constraint]): Unit =
-    write(spark, table, cs)
-
-  private def write(
-      spark: SparkSession, table: TableDefinition, cs: List[Constraint]): Unit = {
-    val p = keyedPath(table)
-    val arr = mapper.createArrayNode()
-    cs.foreach { c =>
-      val n = mapper.createObjectNode()
-      n.put("name", c.name); n.put("kind", c.kind); n.put("expr", c.expr)
-      arr.add(n)
-    }
-    AtomicSidecar.writeUtf8(
-      spark.sessionState.newHadoopConf(), p, mapper.writeValueAsString(arr))
-  }
+    * One driver-side metadata read ([[MetadataFiles.constraints]]). */
+  def list(spark: SparkSession, table: TableDefinition): List[Constraint] =
+    MetadataFiles.constraints.read(spark, table)
 
   /** Violation predicate (true = row violates `c`). */
   private def violation(c: Constraint): Column = c.kind match {
@@ -118,9 +63,12 @@ object Constraints {
       table: TableDefinition,
       c: Constraint,
       user: UserId): Unit = {
-    val existing = list(spark, table)
-    require(!existing.exists(_.name == c.name),
-      s"constraint ${c.name} already exists on ${table.name.fullyQualifiedName}")
+    val added: List[Constraint] => List[Constraint] = cs => {
+      require(!cs.exists(_.name == c.name),
+        s"constraint ${c.name} already exists on ${table.name.fullyQualifiedName}")
+      cs :+ c
+    }
+    added(list(spark, table)) // refuse a duplicate before the scan
     val log = ctx.metastore.tableVersions
     val current = DeletionVectors.read(spark, log, table)
     if (current.columns.nonEmpty) {
@@ -129,7 +77,7 @@ object Constraints {
         s"cannot add constraint ${c.name} to ${table.name.fullyQualifiedName}: " +
           s"$violating existing row(s) violate ${c.kind} (${c.expr})")
     }
-    write(spark, table, existing :+ c)
+    MetadataFiles.constraints.update(spark, table)(added)
     ctx.metastore.commit(table.name, TableUpdate(
       user, UpdateMessage(s"ADD CONSTRAINT ${c.name} ${c.kind} (${c.expr})"),
       java.time.Instant.now(), Nil))
@@ -144,10 +92,11 @@ object Constraints {
       table: TableDefinition,
       name: String,
       user: UserId): Unit = {
-    val existing = list(spark, table)
-    require(existing.exists(_.name == name),
-      s"no constraint named $name on ${table.name.fullyQualifiedName}")
-    write(spark, table, existing.filterNot(_.name == name))
+    MetadataFiles.constraints.update(spark, table) { cs =>
+      require(cs.exists(_.name == name),
+        s"no constraint named $name on ${table.name.fullyQualifiedName}")
+      cs.filterNot(_.name == name)
+    }
     ctx.metastore.commit(table.name, TableUpdate(
       user, UpdateMessage(s"DROP CONSTRAINT $name"), java.time.Instant.now(), Nil))
     ()
@@ -157,11 +106,10 @@ object Constraints {
     * its own write pass rejects the first violating row via `raise_error`
     * — zero extra scans, codegen-friendly, and the staged dirs of a failed
     * write stay invisible. Identity when the table has no constraints (one
-    * driver-side existence check). */
+    * driver-side existence check); an unreadable constraint file fails the
+    * write rather than skipping its checks. */
   def enforced[T](ds: Dataset[T], table: TableDefinition): Dataset[T] = {
-    val cs =
-      try list(ds.sparkSession, table)
-      catch { case _: java.io.IOException => Nil } // unreadable metadata ≠ silently skip writes
+    val cs = list(ds.sparkSession, table)
     if (cs.isEmpty) return ds
     val names = ds.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     val applicable = cs.filter {

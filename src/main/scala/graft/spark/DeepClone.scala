@@ -114,19 +114,12 @@ object DeepClone {
       }
     }
 
-    val constraints = Constraints.list(spark, src)
-    if (constraints.nonEmpty) Constraints.seed(spark, dstDefn, constraints)
-    val generated = GeneratedColumns.list(spark, src)
-    if (generated.nonEmpty) GeneratedColumns.seed(spark, dstDefn, generated)
-    val defaults = ColumnDefaults.list(spark, src)
-    if (defaults.nonEmpty) ColumnDefaults.seed(spark, dstDefn, defaults)
-    Comments.seed(spark, dstDefn, Comments.list(spark, src))
-    TableProperties.seed(spark, dstDefn, TableProperties.list(spark, src))
-    // identity: declaration plus the source's high-water mark AT the
-    // cloned state, riding a metadata commit exactly like ShallowClone —
-    // a clone write stamping from 0 would collide with carried ids
+    MetadataFiles.carry(spark, src, dstDefn)
+    // identity: the carried declaration plus the source's high-water mark
+    // AT the cloned state, riding a metadata commit exactly like
+    // ShallowClone — a clone write stamping from 0 would collide with
+    // carried ids
     IdentityColumns.declared(spark, src).foreach { c =>
-      IdentityColumns.seedDeclaration(spark, dstDefn, c)
       val mark = IdentityColumns.markText(
         c, IdentityColumns.effectiveHighWaterMarkAt(spark, log, src, c, Some(at)))
       ctx.metastore.commit(dst, TableUpdate(

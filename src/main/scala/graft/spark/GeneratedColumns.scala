@@ -1,6 +1,6 @@
 package graft.spark
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.annotation.JsonProperty
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{coalesce, col, expr, lit, raise_error, when}
@@ -26,8 +26,8 @@ import graft.core.TableVersions.{UpdateMessage, UserId}
  * the right partitions — and partition pruning on the generated column
  * works unchanged (it IS an ordinary partition column at rest).
  *
- * Metadata lives at `<table>/_generated.json` (the [[Constraints]]
- * pattern: location-scoped, one driver-side read per write, audited as a
+ * Rules live in [[MetadataFiles.generated]] (the [[Constraints]]
+ * pattern: name-keyed, one driver-side read per write, audited as a
  * metadata-only commit).
  */
 object GeneratedColumns {
@@ -46,44 +46,10 @@ object GeneratedColumns {
     * Scala API (the column's type then lives in the data files). */
   final case class GeneratedColumn(
       column: String, expr: String, zone: Option[String] = None,
-      tpe: Option[String] = None)
+      @JsonProperty("type") tpe: Option[String] = None)
 
-  private val LegacyFileName = "_generated.json"
-  private val mapper = new ObjectMapper()
-
-  /** Rules are keyed by TABLE NAME under the (possibly shared) location —
-    * `_generated/<schema.table>.json` — so a shallow clone and its source
-    * own independent rule sets (the [[Constraints]] discipline); the
-    * legacy location-global file is read as a fallback and migrates on
-    * the next declare. */
-  private def filePath(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString +
-        s"_generated/${table.name.fullyQualifiedName}.json")
-
-  private def legacyPath(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString + LegacyFileName)
-
-  def list(spark: org.apache.spark.sql.SparkSession, table: TableDefinition): List[GeneratedColumn] = {
-    val keyed = filePath(table)
-    val fs = keyed.getFileSystem(spark.sessionState.newHadoopConf())
-    val p = if (fs.exists(keyed)) keyed else legacyPath(table)
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val node = mapper.readTree(text)
-    (0 until node.size()).toList.map { i =>
-      val c = node.get(i)
-      val zone =
-        if (c.has("zone") && !c.get("zone").isNull) Some(c.get("zone").asText()) else None
-      val tpe =
-        if (c.has("type") && !c.get("type").isNull) Some(c.get("type").asText()) else None
-      GeneratedColumn(c.get("column").asText(), c.get("expr").asText(), zone, tpe)
-    }
-  }
+  def list(spark: org.apache.spark.sql.SparkSession, table: TableDefinition): List[GeneratedColumn] =
+    MetadataFiles.generated.read(spark, table)
 
   /** Declare a generated column. Must be declared before the first write
     * that carries or needs it (a generation rule is never born violated:
@@ -96,9 +62,16 @@ object GeneratedColumns {
       table: TableDefinition,
       g: GeneratedColumn,
       user: UserId): Unit = {
-    val existing = list(spark, table)
-    require(!existing.exists(_.column.equalsIgnoreCase(g.column)),
-      s"column ${g.column} already has a generation rule on ${table.name.fullyQualifiedName}")
+    // stamp the declaring session's zone — the zone every subsequent write
+    // derives the column under (writes run in this engine's sessions, which
+    // pin one zone); readers in a DIFFERENT zone must not derive pruning
+    val stamped = g.copy(zone = Some(spark.sessionState.conf.sessionLocalTimeZone))
+    val added: List[GeneratedColumn] => List[GeneratedColumn] = gs => {
+      require(!gs.exists(_.column.equalsIgnoreCase(g.column)),
+        s"column ${g.column} already has a generation rule on ${table.name.fullyQualifiedName}")
+      gs :+ stamped
+    }
+    added(list(spark, table)) // refuse a duplicate before the scan
     val log = ctx.metastore.tableVersions
     val current = DeletionVectors.read(spark, log, table)
     if (current.columns.nonEmpty) {
@@ -116,37 +89,10 @@ object GeneratedColumns {
             s"$bad existing rows disagree")
       }
     }
-    // stamp the declaring session's zone — the zone every subsequent write
-    // derives the column under (writes run in this engine's sessions, which
-    // pin one zone); readers in a DIFFERENT zone must not derive pruning
-    val stamped = g.copy(zone = Some(spark.sessionState.conf.sessionLocalTimeZone))
-    write(spark, table, existing :+ stamped)
+    MetadataFiles.generated.update(spark, table)(added)
     log.commit(table.name, TableVersions.TableUpdate(
       user, UpdateMessage(s"ALTER TABLE ADD GENERATED COLUMN ${g.column} AS (${g.expr})"),
       java.time.Instant.now(), Nil))
-  }
-
-  /** Seed the keyed rule file directly — the shallow-clone carry. */
-  private[spark] def seed(
-      spark: org.apache.spark.sql.SparkSession,
-      table: TableDefinition,
-      gs: List[GeneratedColumn]): Unit = write(spark, table, gs)
-
-  private def write(
-      spark: org.apache.spark.sql.SparkSession,
-      table: TableDefinition,
-      gs: List[GeneratedColumn]): Unit = {
-    val arr = mapper.createArrayNode()
-    gs.foreach { g =>
-      val n = mapper.createObjectNode()
-      n.put("column", g.column); n.put("expr", g.expr)
-      g.zone.foreach(n.put("zone", _))
-      g.tpe.foreach(n.put("type", _))
-      arr.add(n)
-    }
-    val p = filePath(table)
-    AtomicSidecar.writeUtf8(
-      spark.sessionState.newHadoopConf(), p, mapper.writeValueAsString(arr))
   }
 
   /** SQL-originated writes arrive with the analyzer's NULL fill for
@@ -173,9 +119,7 @@ object GeneratedColumns {
     * inside the entry point's dynamic scope — lazy execution later does
     * not re-read the flag. */
   def applied(df: DataFrame, table: TableDefinition): DataFrame = {
-    val gs =
-      try list(df.sparkSession, table)
-      catch { case _: java.io.IOException => Nil }
+    val gs = list(df.sparkSession, table)
     if (gs.isEmpty) return df
     val fillNulls = sqlNullFill.get()
     val names = df.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet

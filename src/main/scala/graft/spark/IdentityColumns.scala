@@ -41,53 +41,13 @@ import graft.spark.VersionContext.DatasetVersionOps
 object IdentityColumns {
 
   private val Mark = """identity:(\w+) hwm=(\d+)""".r.unanchored
-  private val LegacyDeclFileName = "_identity.json"
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  /** Declarations are keyed by TABLE NAME under the (possibly shared)
-    * location — `_identity/<schema.table>.json` — so a shallow clone and
-    * its source own independent declarations (the [[Constraints]]
-    * discipline); the legacy location-global file is read as a fallback
-    * and migrates on the next declare. */
-  private def declFile(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString +
-        s"_identity/${table.name.fullyQualifiedName}.json")
-
-  private def legacyDeclFile(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString + LegacyDeclFileName)
 
   /** The table's DECLARED identity column, if any — the SQL
     * `GENERATED ALWAYS AS IDENTITY` registration ([[declare]]). One
-    * driver-side metadata read, the [[Constraints]]/`_generated.json`
-    * pattern. */
+    * driver-side metadata read ([[MetadataFiles.identity]]). */
   def declared(
-      spark: org.apache.spark.sql.SparkSession, table: TableDefinition): Option[String] = {
-    val keyed = declFile(table)
-    val fs = keyed.getFileSystem(spark.sessionState.newHadoopConf())
-    val p = if (fs.exists(keyed)) keyed else legacyDeclFile(table)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(mapper.readTree(text).get("column").asText())
-    }
-  }
-
-  /** Seed the keyed declaration directly — the shallow-clone carry. */
-  private[spark] def seedDeclaration(
-      spark: org.apache.spark.sql.SparkSession,
-      table: TableDefinition,
-      column: String): Unit = {
-    val node = mapper.createObjectNode()
-    node.put("column", column)
-    val p = declFile(table)
-    AtomicSidecar.writeUtf8(
-      spark.sessionState.newHadoopConf(), p, mapper.writeValueAsString(node))
-  }
+      spark: org.apache.spark.sql.SparkSession, table: TableDefinition): Option[String] =
+    MetadataFiles.identity.read(spark, table).get("column")
 
   /** Declare `column` as the table's engine-assigned identity column
     * (the `ALTER TABLE … ADD COLUMN c BIGINT GENERATED ALWAYS AS
@@ -103,13 +63,17 @@ object IdentityColumns {
       table: TableDefinition,
       column: String,
       user: UserId): Unit = {
-    declared(spark, table).foreach(existing => throw new IllegalArgumentException(
-      s"table ${table.name.fullyQualifiedName} already has identity column $existing"))
+    val declaredOnce: Map[String, String] => Map[String, String] = decl => {
+      decl.get("column").foreach(existing => throw new IllegalArgumentException(
+        s"table ${table.name.fullyQualifiedName} already has identity column $existing"))
+      Map("column" -> column)
+    }
+    declaredOnce(MetadataFiles.identity.read(spark, table))
     require(!table.partitionSchema.columns.exists(_.name.equalsIgnoreCase(column)),
       s"identity column $column cannot be a partition column")
     require(!GeneratedColumns.list(spark, table).exists(_.column.equalsIgnoreCase(column)),
       s"column $column already has a generation rule")
-    seedDeclaration(spark, table, column)
+    MetadataFiles.identity.update(spark, table)(declaredOnce)
     ctx.metastore.commit(table.name, graft.core.TableVersions.TableUpdate(
       user, UpdateMessage(s"ALTER TABLE ADD IDENTITY COLUMN $column"),
       java.time.Instant.now(), Nil))

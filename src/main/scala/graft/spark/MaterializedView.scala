@@ -26,7 +26,8 @@ import graft.spark.VersionContext.DatasetVersionOps
  *
  *  - the STATIC definition (source table, optional WHERE, group columns,
  *    aggregate list), extracted once at CREATE from the analyzed Catalyst
- *    plan of the defining SELECT and persisted at `<mv>/_mv.json`;
+ *    plan of the defining SELECT and persisted in the MV's metadata
+ *    files ([[MetadataFiles.mv]]);
  *  - the dynamic REFRESH ANCHOR (the source commit the current MV state
  *    reflects), carried IN the MV commit's message (`anchor=<commit-id>`)
  *    so state and anchor move in ONE atomic commit — a crash between
@@ -93,7 +94,6 @@ object MaterializedView {
     * racy point deterministically. No-op outside tests. */
   private[spark] var interleaveForTest: () => Unit = () => ()
 
-  private val FileName = "_mv.json"
   private val mapper = new ObjectMapper()
   private val AnchorMark = """anchor=([0-9a-fA-F-]{8,})""".r.unanchored
   // `dims=<fqtn>:<commit>;...` — the DIM anchors a refresh reflected; a
@@ -606,10 +606,6 @@ object MaterializedView {
     (mvDef, srcDefn, binding)
   }
 
-  private def filePath(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString + FileName)
-
   private def writeDef(session: SparkSession, mv: TableDefinition, d: MvDef): Unit = {
     val n = mapper.createObjectNode()
     n.put("source", d.sourceParts.mkString("."))
@@ -632,20 +628,13 @@ object MaterializedView {
       }
       val gr = n.putArray("groupRefs"); d.refsForGroups.foreach(gr.add)
     }
-    val p = filePath(mv)
-    AtomicSidecar.writeUtf8(
-      session.sessionState.newHadoopConf(), p, mapper.writeValueAsString(n))
+    MetadataFiles.mv.update(session, mv)(_ => n)
+    ()
   }
 
   def readDef(session: SparkSession, mv: TableDefinition): MvDef = {
-    val p = filePath(mv)
-    val fs = p.getFileSystem(session.sessionState.newHadoopConf())
-    require(fs.exists(p), s"${mv.name.fullyQualifiedName} is not a materialized view")
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val node = mapper.readTree(text)
+    val node = MetadataFiles.mv.read(session, mv)
+    require(!node.isMissingNode, s"${mv.name.fullyQualifiedName} is not a materialized view")
     MvDef(
       node.get("source").asText().split("\\.").toSeq,
       Option(node.get("where")).map(_.asText()),

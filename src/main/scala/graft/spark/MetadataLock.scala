@@ -8,9 +8,9 @@ import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 /** Mutual exclusion for shared-file metadata rewrites — the
   * create-exclusive lock discipline of the commit log
   * (`JsonFileTableVersions.withTableLock`) lifted to a Hadoop path, so
-  * files that live at the TABLE location (the partition-scheme registry,
-  * shared by every clone of a location) can serialize their
-  * read-transform-rename cycles.
+  * every table metadata file ([[MetadataFiles]]) serializes its
+  * read-transform-rename cycles — including the location-global ones
+  * shared by every clone of a location.
   *
   * Why verify-retry alone is not enough (the round-16 `weak`): a rewrite
   * that re-reads, renames, then verifies its own edit survived catches a

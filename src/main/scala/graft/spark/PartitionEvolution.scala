@@ -1,6 +1,6 @@
 package graft.spark
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.annotation.{JsonInclude, JsonProperty}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -32,7 +32,7 @@ import graft.spark.VersionContext.DatasetVersionOps
  * anchored at the read state, so a concurrent writer conflicts loudly
  * instead of landing old-scheme dirs into the new era.
  *
- * The ERA REGISTRY (`_partitioning.json`) records `(anchor commit,
+ * The ERA REGISTRY ([[MetadataFiles.partitioning]]) records `(anchor commit,
  * partition columns)` states: the scheme at a commit is the newest state
  * at-or-before it in the table's OWN lineage (shared-location clones are
  * isolated by their uuid anchors, like every other sidecar). A table
@@ -66,116 +66,32 @@ object PartitionEvolution {
     * names the lineage that anchored it (shared-location forks write one
     * file; the retention fallback must not adopt a foreign state). */
   final case class SchemeState(
-      commit: String, columns: List[String], owner: Option[String] = None,
-      pending: Boolean = false)
-
-  private val FileName = "_partitioning.json"
-  private val mapper = new ObjectMapper()
+      commit: String, columns: List[String],
+      @JsonProperty("table") owner: Option[String] = None,
+      @JsonInclude(JsonInclude.Include.NON_DEFAULT) pending: Boolean = false)
 
   /** Re-entrancy escape for [[requireCurrentScheme]]: the evolve rewrite
     * itself writes under the NEW scheme before the registry records it. */
   private val evolving = new scala.util.DynamicVariable[Boolean](false)
 
-  private def filePath(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString + FileName)
-
   /** All recorded scheme states, oldest first (empty = never evolved). */
-  def states(spark: SparkSession, table: TableDefinition): List[SchemeState] = {
-    val p = filePath(table)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val node = mapper.readTree(text)
-    (0 until node.size()).toList.map { i =>
-      val s = node.get(i)
-      val cs = s.get("columns")
-      SchemeState(
-        s.get("commit").asText(),
-        (0 until cs.size()).toList.map(cs.get(_).asText()),
-        Option(s.get("table")).filterNot(_.isNull).map(_.asText()),
-        Option(s.get("pending")).exists(_.asBoolean(false)))
-    }
-  }
-
-  private def write(
-      spark: SparkSession, table: TableDefinition, all: List[SchemeState]): Unit = {
-    val p = filePath(table)
-    val arr = mapper.createArrayNode()
-    all.foreach { s =>
-      val n = mapper.createObjectNode()
-      n.put("commit", s.commit)
-      s.owner.foreach(n.put("table", _))
-      if (s.pending) n.put("pending", true)
-      val cs = n.putArray("columns")
-      s.columns.foreach(cs.add)
-      arr.add(n)
-    }
-    AtomicSidecar.writeUtf8(
-      spark.sessionState.newHadoopConf(), p, mapper.writeValueAsString(arr))
-  }
+  def states(spark: SparkSession, table: TableDefinition): List[SchemeState] =
+    MetadataFiles.partitioning.read(spark, table)
 
   /** REGISTRY MUTATION DISCIPLINE: the file is shared by concurrent
-    * evolves and (for shared-location clones) by other lineages, and the
-    * FS gives us atomic whole-file rename but no compare-and-swap — so a
-    * rewrite built from a stale read could drop a racer's just-appended
-    * intent or a clone's committed state. Every rewrite therefore
-    * (1) re-reads the file IMMEDIATELY before writing, (2) applies an
-    * IDEMPOTENT set-like transform (append-if-absent / mark / remove-own)
-    * to the fresh list — never replaces the file with a locally-held
-    * snapshot, (3) publishes atomically, then (4) re-reads to verify its
-    * transform survived, retrying against the racer's content when a
-    * concurrent rename clobbered ours in the window. Convergence:
-    * transforms commute on disjoint entries (each writer only appends or
-    * marks its OWN commit id), so a bounded number of retries settles;
-    * exhaustion throws loudly rather than publishing a maybe-lost edit. */
-  /** Test seam: runs between a registry publish and its verify re-read —
-    * the window a concurrent whole-file rename can clobber ours in. */
-  private[spark] val interleaveRegistryForTest =
-    new scala.util.DynamicVariable[Option[() => Unit]](None)
-
-  /** Test seam: runs between a rewrite's fresh re-read and its rename —
-    * the window the round-16 audit flagged: a racer completing a FULL
-    * write+verify cycle in here would be clobbered by our rename while
-    * our verify (which only checks our own edit) still passed. The
-    * [[MetadataLock]] closes it: a full cycle injected here blocks on
-    * the lock until ours releases. */
-  private[spark] val interleaveRegistryReadForTest =
-    new scala.util.DynamicVariable[Option[() => Unit]](None)
-
+    * evolves and (for shared-location clones) by other lineages, so every
+    * rewrite is an IDEMPOTENT set-like transform (append-if-absent / mark
+    * / remove-own) of the fresh list inside the store's locked update —
+    * never a replacement with a locally-held snapshot. Transforms commute
+    * on disjoint entries (each writer only appends or marks its OWN
+    * commit id), so the store's verify-retry converges against a writer
+    * that bypasses the lock. */
   private def mutateRegistry(
       spark: SparkSession, table: TableDefinition)(
-      transform: List[SchemeState] => List[SchemeState]): Unit =
-    // MUTUAL EXCLUSION, not just verify-retry: the whole
-    // read-transform-rename-verify cycle runs under the registry file's
-    // create-exclusive lock (keyed by the file PATH, so shared-location
-    // clones contend on the same lock). Verify-retry stays as the
-    // belt-and-suspenders check — it also converges against writers that
-    // bypass the lock (an older binary, a hand edit).
-    MetadataLock.withLock(spark.sessionState.newHadoopConf(), filePath(table)) {
-      var attempts = 0
-      var done = false
-      while (!done) {
-        attempts += 1
-        val fresh = states(spark, table)
-        interleaveRegistryReadForTest.value.foreach(_.apply())
-        val next = transform(fresh)
-        if (next == fresh) done = true
-        else {
-          write(spark, table, next)
-          interleaveRegistryForTest.value.foreach(_.apply())
-          if (states(spark, table) == next) done = true
-          else if (attempts >= 20)
-            throw new IllegalStateException(
-              s"partition-scheme registry for ${table.name.fullyQualifiedName} " +
-                s"kept moving under $attempts merge attempts (${filePath(table)}) — " +
-                "concurrent evolves are thrashing; re-run the losing operation")
-        }
-      }
-    }
+      transform: List[SchemeState] => List[SchemeState]): Unit = {
+    MetadataFiles.partitioning.update(spark, table)(transform)
+    ()
+  }
 
   /** The newest scheme state anchored at-or-before `at` in this table's
     * lineage; None = never evolved (or `at` predates the first record).

@@ -1,6 +1,6 @@
 package graft.spark
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.annotation.JsonProperty
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -26,51 +26,19 @@ import graft.core.TableVersions.CommitId
  *    contract (time travel projects top-level adds as typed NULLs,
  *    pinned since q62) intact. Only struct SHAPES travel.
  *
- * States live beside the table (`_schema_states/<schema.table>.json`,
- * the [[GeneratedColumns]] keying — shared-location clones own separate
- * files), written through [[AtomicSidecar]]. Tables that never evolve a
+ * States live beside the table ([[MetadataFiles.schemaStates]], the
+ * [[GeneratedColumns]] keying — shared-location clones own separate
+ * files). Tables that never evolve a
  * nested field have no file and pay only a driver-side existence probe
  * on time-traveled loads.
  */
 object SchemaStates {
 
-  final case class State(commit: String, schemaJson: String)
-
-  private val mapper = new ObjectMapper()
-
-  private def filePath(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString +
-        s"_schema_states/${table.name.fullyQualifiedName}.json")
+  final case class State(commit: String, @JsonProperty("schema") schemaJson: String)
 
   /** All recorded states, oldest first (empty = no nested evolution). */
-  def list(spark: SparkSession, table: TableDefinition): List[State] = {
-    val p = filePath(table)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val node = mapper.readTree(text)
-    (0 until node.size()).toList.map { i =>
-      val s = node.get(i)
-      State(s.get("commit").asText(), s.get("schema").asText())
-    }
-  }
-
-  private def write(
-      spark: SparkSession, table: TableDefinition, all: List[State]): Unit = {
-    val arr = mapper.createArrayNode()
-    all.foreach { s =>
-      val n = mapper.createObjectNode()
-      n.put("commit", s.commit); n.put("schema", s.schemaJson)
-      arr.add(n)
-    }
-    AtomicSidecar.writeUtf8(
-      spark.sessionState.newHadoopConf(), filePath(table),
-      mapper.writeValueAsString(arr))
-  }
+  def list(spark: SparkSession, table: TableDefinition): List[State] =
+    MetadataFiles.schemaStates.read(spark, table)
 
   /** Record one nested-evolution step: seed the baseline (pre-change
     * schema anchored at the pre-change commit) if this is the table's
@@ -83,11 +51,13 @@ object SchemaStates {
       preAnchor: CommitId,
       newSchema: StructType,
       anchor: CommitId): Unit = {
-    val existing = list(spark, table)
-    val seeded =
-      if (existing.isEmpty) List(State(preAnchor.id, preSchema.json))
-      else existing
-    write(spark, table, seeded :+ State(anchor.id, newSchema.json))
+    MetadataFiles.schemaStates.update(spark, table) { existing =>
+      val seeded =
+        if (existing.isEmpty) List(State(preAnchor.id, preSchema.json))
+        else existing
+      seeded :+ State(anchor.id, newSchema.json)
+    }
+    ()
   }
 
   /** SHALLOW-CLONE carry: seed the clone's OWN keyed state file with the
@@ -99,8 +69,10 @@ object SchemaStates {
       spark: SparkSession,
       clone: TableDefinition,
       shape: StructType,
-      anchor: CommitId): Unit =
-    write(spark, clone, list(spark, clone) :+ State(anchor.id, shape.json))
+      anchor: CommitId): Unit = {
+    MetadataFiles.schemaStates.update(spark, clone)(_ :+ State(anchor.id, shape.json))
+    ()
+  }
 
   /** The schema state in force at `at`: the newest state whose anchor is
     * at-or-before `at` in the table's lineage; when states exist but none

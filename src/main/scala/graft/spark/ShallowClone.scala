@@ -95,12 +95,12 @@ object ShallowClone {
       case PartitionedTableVersion(pvs) =>
         pvs.toList.map { case (p, v) => TableOperation.AddPartitionVersion(p, v) }
     }
-    // identity carry: the clone inherits the declaration into its OWN
-    // name-keyed file, and the source's high-water mark AT the cloned
-    // state rides the clone-state commit message — a clone write stamping
-    // from a fresh mark of 0 would collide with the carried rows' ids
+    // identity carry: the clone inherits the declaration (carried below
+    // with the other declarations), and the source's high-water mark AT
+    // the cloned state rides the clone-state commit message — a clone
+    // write stamping from a fresh mark of 0 would collide with the carried
+    // rows' ids
     val identityMark = IdentityColumns.declared(spark, src).map { c =>
-      IdentityColumns.seedDeclaration(spark, dstDefn, c)
       // resolve like the WRITE path (lineage mark, else max(id) over the
       // cloned state, DV-hidden rows included): a checkpoint that folded
       // the source's mark must not carry hwm=0 and re-mint carried ids
@@ -119,7 +119,7 @@ object ShallowClone {
     // carry commit-anchored / shared metadata into the clone's own
     // namespace, re-anchored at the clone's state commit (see the class
     // doc): DV pairs, the effective column mapping, and the current
-    // constraint list all survive the fork with both-ways isolation
+    // declarations all survive the fork with both-ways isolation
     val cloneAnchor = log.currentCommit(dst)
     if (DeletionVectors.hasVectors(spark, log, src, Some(at)))
       DeletionVectors.cloneResolvedState(spark, log, src, at, cloneAnchor)
@@ -135,14 +135,7 @@ object ShallowClone {
     ColumnMapping.stateAt(spark, log, src, None).foreach { s =>
       ColumnMapping.cloneStateTo(spark, src, s, cloneAnchor, dst)
     }
-    val constraints = Constraints.list(spark, src)
-    if (constraints.nonEmpty) Constraints.seed(spark, dstDefn, constraints)
-    val generated = GeneratedColumns.list(spark, src)
-    if (generated.nonEmpty) GeneratedColumns.seed(spark, dstDefn, generated)
-    val defaults = ColumnDefaults.list(spark, src)
-    if (defaults.nonEmpty) ColumnDefaults.seed(spark, dstDefn, defaults)
-    Comments.seed(spark, dstDefn, Comments.list(spark, src))
-    TableProperties.seed(spark, dstDefn, TableProperties.list(spark, src))
+    MetadataFiles.carry(spark, src, dstDefn)
     PartitionEvolution.stateAt(spark, log, src, Some(at)).foreach { s =>
       PartitionEvolution.cloneStateTo(spark, src, s, cloneAnchor, dst)
     }

@@ -2,7 +2,6 @@ package graft.spark
 
 import java.time.Instant
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 
 import graft.core._
@@ -41,8 +40,8 @@ import graft.core.TableVersions.{TableUpdate, UpdateMessage, UserId}
  *  - `graft.zorder.columns` — declared clustering: a bare `OPTIMIZE t`
  *    Z-orders by these columns (the statement's own ZORDER BY wins).
  *
- * Storage follows the [[Constraints]] convention: a name-keyed JSON file
- * `_tblproperties/<schema.table>.json` under the (possibly shared)
+ * Storage follows the [[Constraints]] convention: a name-keyed file
+ * ([[MetadataFiles.tblProperties]]) under the (possibly shared)
  * location, so shallow clones own independent property sets; every
  * SET/UNSET lands a metadata-only audit commit in the history.
  */
@@ -58,13 +57,6 @@ object TableProperties {
     * bin-packs to ~this file size ([[Compaction.compactToSize]]); the
     * statement's own `TARGET n MB` wins. */
   val OptimizeTargetFileSize = "graft.optimize.targetFileSize"
-
-  private val mapper = new ObjectMapper()
-
-  private def keyedPath(table: TableDefinition): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(table.location).toString +
-        s"_tblproperties/${table.name.fullyQualifiedName}.json")
 
   /** Behavior keys with a typed contract — validated at declaration time
     * so a bad value refuses at SET/CREATE instead of breaking every
@@ -96,46 +88,12 @@ object TableProperties {
             s"${table.name.fullyQualifiedName} — expected a positive byte count")
     }
 
-  /** SHORT-LIVED per-path cache: the behavior keys are consulted inside
-    * analyzer rules (DML routing, MERGE widening gates), which run in
-    * fixed-point batches — without memoization each statement pays
-    * several uncached sidecar reads, costly on object stores. Entries
-    * invalidate on every [[set]]/[[unset]]/[[seed]] through this process
-    * and expire after [[CacheTtlMs]] so another writer's change is seen
-    * promptly (the keys are advisory behavior toggles, not correctness
-    * state — a one-TTL lag is benign). */
-  private val CacheTtlMs = 30000L
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Map[String, String])]()
-
-  /** Test/ops hook: drop every cached property map. */
-  private[graft] def invalidateCache(): Unit = cache.clear()
-
   /** The table's recorded properties (empty when none were ever set).
-    * One driver-side metadata probe, memoized per path. */
-  def list(spark: SparkSession, table: TableDefinition): Map[String, String] = {
-    val p = keyedPath(table)
-    val key = p.toString
-    val now = System.currentTimeMillis()
-    val hit = cache.get(key)
-    if (hit != null && now - hit._1 < CacheTtlMs) return hit._2
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val props =
-      if (!fs.exists(p)) Map.empty[String, String]
-      else {
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val node = mapper.readTree(text)
-        val it = node.fieldNames()
-        val b = Map.newBuilder[String, String]
-        while (it.hasNext) { val k = it.next(); b += k -> node.get(k).asText() }
-        b.result()
-      }
-    cache.put(key, (now, props))
-    props
-  }
+    * One driver-side metadata probe, memoized: the behavior keys are
+    * consulted inside analyzer rules, which run in fixed-point batches
+    * ([[MetadataFiles.tblProperties]]). */
+  def list(spark: SparkSession, table: TableDefinition): Map[String, String] =
+    MetadataFiles.tblProperties.read(spark, table)
 
   def get(spark: SparkSession, table: TableDefinition, key: String): Option[String] =
     list(spark, table).get(key)
@@ -199,7 +157,7 @@ object TableProperties {
       "SET/UNSET TBLPROPERTIES needs at least one property")
     sets.keys.foreach(k => require(k.trim.nonEmpty, "empty property key"))
     validate(table, sets)
-    write(spark, table, list(spark, table) ++ sets -- unsets)
+    MetadataFiles.tblProperties.update(spark, table)(_ ++ sets -- unsets)
     val msg = List(
       if (sets.nonEmpty)
         Some("SET TBLPROPERTIES (" +
@@ -213,26 +171,14 @@ object TableProperties {
     ()
   }
 
-  /** Seed the keyed file directly — the clone carry (shallow and deep
-    * clones inherit the source's properties and own them independently
-    * from then on) and the CREATE TABLE TBLPROPERTIES landing. */
+  /** Seed without a commit — the CREATE TABLE TBLPROPERTIES landing. */
   private[spark] def seed(
       spark: SparkSession, table: TableDefinition, props: Map[String, String]): Unit =
     if (props.nonEmpty) {
       validate(table, props)
-      write(spark, table, props)
+      MetadataFiles.tblProperties.update(spark, table)(_ => props)
+      ()
     }
-
-  private def write(
-      spark: SparkSession, table: TableDefinition, props: Map[String, String]): Unit = {
-    val node = mapper.createObjectNode()
-    props.toList.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
-    AtomicSidecar.writeUtf8(
-      spark.sessionState.newHadoopConf(), keyedPath(table),
-      mapper.writeValueAsString(node))
-    cache.put(keyedPath(table).toString, (System.currentTimeMillis(), props))
-    ()
-  }
 
   // ---- post-write auto-optimize hook ------------------------------------
 

@@ -331,24 +331,21 @@ object Vacuum {
         else Nil
       }
 
-    // crashed atomic sidecar writers ([[AtomicSidecar]]) leave
+    // crashed metadata-file writers ([[MetadataFiles.publish]]) leave
     // `.<name>.tmp-<uuid>` staging files behind — harmless (a dangling
     // temp never resolves) but immortal; reclaim the stale ones under
     // the same mtime grace. An IN-FLIGHT writer's temp is younger than
     // any sane grace window by construction.
-    val tmpDirs = root ::
-      List("_constraints", "_generated", "_identity", "_defaults").map(new HPath(root, _))
-    val tmpOnDisk: List[(String, Boolean)] = tmpDirs
+    val tmpOnDisk: List[(String, Boolean)] = MetadataFiles.tempDirs(root)
       .filter(fs.exists(_)).flatMap { d =>
-        fs.listStatus(d).toList.filter(st => st.isFile && {
-          val n = st.getPath.getName
-          n.startsWith(".") && n.contains(".tmp-")
-        }).map { st =>
-          val rel =
-            if (d == root) st.getPath.getName
-            else s"${d.getName}/${st.getPath.getName}"
-          rel -> (st.getModificationTime < cutoff)
-        }
+        fs.listStatus(d).toList
+          .filter(st => st.isFile && MetadataFiles.isTempFile(st.getPath.getName))
+          .map { st =>
+            val rel =
+              if (d == root) st.getPath.getName
+              else s"${d.getName}/${st.getPath.getName}"
+            rel -> (st.getModificationTime < cutoff)
+          }
       }
 
     val doomed = (onDisk ++ statsOnDisk ++ deletesOnDisk ++ appendsOnDisk ++ tmpOnDisk).collect {

@@ -168,13 +168,11 @@ class CompactionSpec extends AnyFunSuite with Matchers {
     // a LEGACY bad value (pre-validation sidecar) fails its first
     // consultation with an error naming table/key/value — never a bare
     // NumberFormatException
-    AtomicSidecar.writeUtf8(
+    MetadataFiles.publish(
       spark.sessionState.newHadoopConf(),
-      new org.apache.hadoop.fs.Path(
-        Partition.normalizedDir(table.location).toString +
-          s"_tblproperties/${table.name.fullyQualifiedName}.json"),
+      MetadataFiles.tblProperties.path(table),
       s"""{"${TableProperties.OptimizeTargetFileSize}":"huge"}""")
-    TableProperties.invalidateCache()
+    MetadataFiles.invalidateMemo()
     val legacy = intercept[Exception](spark.sql(s"OPTIMIZE $name").collect())
     legacy.getMessage should include(TableProperties.OptimizeTargetFileSize)
     legacy.getMessage should include("'huge'")

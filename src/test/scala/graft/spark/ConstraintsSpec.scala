@@ -186,4 +186,21 @@ class ConstraintsSpec extends AnyFunSuite with Matchers {
         Array("id"), true))
     log.updates(table.name).head.message.content should include("ALTER COLUMN id DROP NOT NULL")
   }
+
+  test("a torn constraint file fails the write instead of skipping its checks") {
+    val (ctx, log, table) = freshTable("con_torn")
+    Constraints.add(spark, ctx, table, Constraints.check("id_positive", "id > 0"), user)
+    Seq(Event(1L, "k", "2024-01-01")).toDS()
+      .versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
+    val before = log.currentVersion(table.name)
+    val file = java.nio.file.Paths.get(MetadataFiles.constraints.path(table).toUri)
+    Files.write(file, "{\"torn\":".getBytes("UTF-8"))
+    val e = intercept[Exception] {
+      Seq(Event(-5L, "k", "2024-01-01")).toDS()
+        .versionedInsertInto(ctx, table, user, UpdateMessage("unchecked"))
+    }
+    e.getMessage should include(file.getFileName.toString)
+    log.currentVersion(table.name) shouldBe before
+    VersionedReader(spark, log).read(table).count() shouldBe 1L
+  }
 }

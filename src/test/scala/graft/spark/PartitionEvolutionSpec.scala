@@ -708,8 +708,9 @@ class PartitionEvolutionSpec extends AnyFunSuite with Matchers {
         fired = true
         racer = new Thread {
           override def run(): Unit = {
-            // a full registry rewrite cycle of its own (cloneStateTo is
-            // mutateRegistry-backed): must serialize behind our lock
+            // a full registry update of its own (cloneStateTo goes
+            // through the store's locked update): must serialize behind
+            // our lock
             PartitionEvolution.cloneStateTo(
               spark, t,
               PartitionEvolution.SchemeState("racer-anchor", List("region"), None),
@@ -723,7 +724,7 @@ class PartitionEvolutionSpec extends AnyFunSuite with Matchers {
         blockedWhileHeld = !racerDone.get() // still waiting = excluded
       }
     }
-    val evolved = PartitionEvolution.interleaveRegistryReadForTest.withValue(Some(inject)) {
+    val evolved = MetadataFiles.beforePublishForTest.withValue(_ => inject()) {
       PartitionEvolution.evolve(
         spark, ctx, t, PartitionSchema(List(PartitionColumn("kind"))), user)
     }
@@ -764,7 +765,7 @@ class PartitionEvolutionSpec extends AnyFunSuite with Matchers {
         Files.write(registryPath(t), s"[$racer]".getBytes("UTF-8"))
       }
     }
-    val evolved = PartitionEvolution.interleaveRegistryForTest.withValue(Some(clobber)) {
+    val evolved = MetadataFiles.afterPublishForTest.withValue(_ => clobber()) {
       PartitionEvolution.evolve(
         spark, ctx, t, PartitionSchema(List(PartitionColumn("kind"))), user)
     }

@@ -208,13 +208,11 @@ class RowTrackingSpec extends AnyFunSuite with Matchers {
     rows(t, log).select(RowTracking.RowIdCol).as[Long].collect() shouldBe Array(1L)
 
     // a crashed sidecar writer's staging temp reclaims under vacuum
-    val p = new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(t.location).toString +
-        s"_identity/${t.name.fullyQualifiedName}.json")
     val boom = intercept[RuntimeException] {
-      AtomicSidecar.writeUtf8(
-        spark.sessionState.newHadoopConf(), p, "{}",
-        () => throw new RuntimeException("crash"))
+      MetadataFiles.beforePublishForTest.withValue(_ => throw new RuntimeException("crash")) {
+        MetadataFiles.publish(
+          spark.sessionState.newHadoopConf(), MetadataFiles.identity.path(t), "{}")
+      }
     }
     boom.getMessage shouldBe "crash"
     val report = Vacuum.vacuum(t, log, spark.sessionState.newHadoopConf(), graceMs = 0)

@@ -232,13 +232,10 @@ class TablePropertiesSpec extends AnyFunSuite with Matchers {
 
     // a LEGACY bad value (written before validation existed) fails its
     // consultation with an error naming table, key, and value
-    val legacyDir = Partition.normalizedDir(t.location).toString
-    val legacyFile = new org.apache.hadoop.fs.Path(
-      legacyDir + s"_tblproperties/${t.name.fullyQualifiedName}.json")
-    AtomicSidecar.writeUtf8(
-      spark.sessionState.newHadoopConf(), legacyFile,
+    MetadataFiles.publish(
+      spark.sessionState.newHadoopConf(), MetadataFiles.tblProperties.path(t),
       """{"graft.dml.mergeOnRead":"yes"}""")
-    TableProperties.invalidateCache()
+    MetadataFiles.invalidateMemo()
     val e3 = intercept[IllegalArgumentException] {
       TableProperties.effectiveFlag(spark, t, TableProperties.MergeOnRead)
     }
@@ -297,13 +294,11 @@ class TablePropertiesSpec extends AnyFunSuite with Matchers {
     // count filesystem opens by swapping in a counting scheme? simpler:
     // delete the sidecar BEHIND the cache — a memoized read still serves
     // the cached map until invalidated, proving no per-consult IO
-    val f = new org.apache.hadoop.fs.Path(
-      Partition.normalizedDir(t.location).toString +
-        s"_tblproperties/${t.name.fullyQualifiedName}.json")
+    val f = MetadataFiles.tblProperties.path(t)
     val fs = f.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(f, false)
     TableProperties.effectiveFlag(spark, t, TableProperties.MergeOnRead) shouldBe true
-    TableProperties.invalidateCache()
+    MetadataFiles.invalidateMemo()
     TableProperties.effectiveFlag(spark, t, TableProperties.MergeOnRead) shouldBe false
   }
 }
