@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.Instant
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
@@ -91,6 +93,10 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
       node.put("txnBatch", t.batchId)
       ()
     }
+    if (update.metadata.tableMetadata.nonEmpty) {
+      val m = node.putObject("tableMetadata")
+      update.metadata.tableMetadata.toSeq.sortBy(_._1).foreach { case (k, v) => m.put(k, v) }
+    }
     val ops = node.putArray("operations")
     update.operations.foreach(op => ops.add(opToJson(mapper.createObjectNode(), op)))
     mapper.writeValueAsString(node)
@@ -165,7 +171,10 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
                 // optional stream-txn marker (absent in pre-r11 logs)
                 txn = Option(node.get("txnApp")).map(app =>
                   StreamTxn(app.asText(), node.get("txnBatch").asLong())),
-                detached = detached)
+                detached = detached,
+                // optional commit-carried table metadata (absent when none)
+                tableMetadata = Option(node.get("tableMetadata")).map(_.properties.asScala
+                  .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty))
               val ops = node.get("operations").asInstanceOf[ArrayNode]
               val parsed = (0 until ops.size()).toList
                 .map(i => opFromJson(ops.get(i).asInstanceOf[ObjectNode]))
@@ -586,9 +595,12 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
     * [[graft.spark.Vacuum]], which reclaims the data dirs of the same
     * horizon). The base keeps the folded-at commit's id/metadata, so that
     * commit itself stays addressable and the current pointer — required to
-    * sit at or after the base — keeps resolving. The rewrite is
-    * temp + fsync + atomic rename under the table lock; readers replay
-    * either the old file or the new one, never a mix.
+    * sit at or after the base — keeps resolving. The base also carries the
+    * newest value of every table-metadata family the folded prefix
+    * carried, so [[TableVersions.foldMetadata]] resolves the same at every
+    * retained commit. The rewrite is temp + fsync + atomic rename under
+    * the table lock; readers replay either the old file or the new one,
+    * never a mix.
     *
     * @return true if the log was rewritten, false if already minimal. */
   def checkpoint(table: TableName, keepLast: Int): Boolean = withTableLock(table) {
@@ -635,7 +647,8 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
           s"ref '$name' names commit ${r.id.id}, older than the checkpoint base; " +
             "delete or advance the ref, or raise keepLast")
       }
-      val rewritten = TableUpdate(base.metadata, ops) :: tail
+      val carried = prefix.flatMap(_.metadata.tableMetadata).toMap // newest wins
+      val rewritten = TableUpdate(base.metadata.copy(tableMetadata = carried), ops) :: tail
       // commits re-emit with their TRUE detached flags (a staged tail
       // commit must stay staged through a checkpoint) and one explicit
       // checkout pins the pointer wherever the original history left it

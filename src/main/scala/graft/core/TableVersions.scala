@@ -66,6 +66,21 @@ trait TableVersions {
   def currentCommit(table: TableName): CommitId =
     tableState(table).currentVersion
 
+  /** Table metadata `family` folded at `at` (default: the current pointer)
+    * from one read of the table's state — see [[TableVersions.foldMetadata]]. */
+  def metadataAt(
+      table: TableName, family: String, at: Option[CommitId] = None): MetadataFold[String] = {
+    val state = tableState(table)
+    foldMetadata(state, family, at.getOrElse(state.currentVersion))
+  }
+
+  /** [[metadataAt]] the log HEAD (the newest appended commit), which a
+    * commit after a rollback resurrects into the fold. */
+  def metadataAtHead(table: TableName, family: String): MetadataFold[String] = {
+    val state = tableState(table)
+    foldMetadata(state, family, state.updates.last.metadata.id)
+  }
+
   /** Version state as of a specific commit, regardless of the current pointer
    * (time-travel reads, Q26). Pure fold over the history prefix. */
   def versionAt(table: TableName, id: CommitId): TableVersion = {
@@ -324,7 +339,12 @@ object TableVersions {
         * into main reads as soon as any LATER normal commit moved the
         * pointer past it in the list — unpublished data served with no
         * checkout ever issued. */
-      detached: Boolean = false
+      detached: Boolean = false,
+      /** Table metadata this commit changes: family name → the family's
+        * new value as opaque JSON (the Delta `metaData` action). The log
+        * never reads the values; [[TableVersions.foldMetadata]] resolves
+        * them per family. */
+      tableMetadata: Map[String, String] = Map.empty
   )
 
   object TableUpdateMetadata {
@@ -333,7 +353,10 @@ object TableVersions {
   }
 
   /** A set of operations applied and tracked as one atomic commit. */
-  final case class TableUpdate(metadata: TableUpdateMetadata, operations: List[TableOperation])
+  final case class TableUpdate(metadata: TableUpdateMetadata, operations: List[TableOperation]) {
+    def withTableMetadata(values: Map[String, String]): TableUpdate =
+      copy(metadata = metadata.copy(tableMetadata = metadata.tableMetadata ++ values))
+  }
 
   object TableUpdate {
     def apply(
@@ -422,9 +445,30 @@ object TableVersions {
    * rollback-then-commit behavior (reference `TableVersions.scala:32-41`).
    */
   def currentVersionFromState(state: TableState): TableVersion =
-    replay(visibleOperations(state))
+    replay(visibleUpdates(state, state.currentVersion).flatMap(_.operations))
 
-  /** The prefix of updates a fold at the pointer may see.
+  /** One metadata family folded at a commit: `inForce` is the value of
+    * the newest commit at or before it that carries the family, `oldest`
+    * the value of the family's oldest carrier in the log. Both None: no
+    * visible commit carries the family. */
+  final case class MetadataFold[+A](inForce: Option[A], oldest: Option[A]) {
+    def map[B](f: A => B): MetadataFold[B] = MetadataFold(inForce.map(f), oldest.map(f))
+  }
+
+  /** THE metadata fold: resolve `family` at `at` over the same prefix the
+    * version fold sees (so a rollback, a resurrecting commit and a staged
+    * commit resolve exactly as the data does). An `at` outside the history
+    * has nothing in force. A log checkpoint writes each family's newest
+    * folded value onto its base commit, so the fold survives it. */
+  def foldMetadata(state: TableState, family: String, at: CommitId): MetadataFold[String] = {
+    def carried(us: Iterator[TableUpdate]) = us.flatMap(_.metadata.tableMetadata.get(family))
+    val known = state.updates.exists(_.metadata.id == at)
+    MetadataFold(
+      if (known) carried(visibleUpdates(state, at).reverseIterator).nextOption() else None,
+      carried(state.updates.iterator.filterNot(_.metadata.detached)).nextOption())
+  }
+
+  /** The prefix of updates a fold at `at` may see.
     *
     * DETACHED (staged) commits are excluded: they are history entries whose
     * data main readers must never serve until published — and because the
@@ -435,12 +479,11 @@ object TableVersions {
     * staged commit in the prefix is included — which is exactly the set
     * [[TableVersions.publish]] attaches, so the audited state and the
     * published state are the same state by construction. */
-  private def visibleOperations(state: TableState): List[TableOperation] = {
-    val idx = state.updates.indexWhere(_.metadata.id == state.currentVersion)
+  private def visibleUpdates(state: TableState, at: CommitId): List[TableUpdate] = {
+    val idx = state.updates.indexWhere(_.metadata.id == at)
     val visible = if (idx < 0) state.updates else state.updates.take(idx + 1)
     val auditRead = idx >= 0 && state.updates(idx).metadata.detached
-    val folded = if (auditRead) visible else visible.filterNot(_.metadata.detached)
-    folded.flatMap(_.operations)
+    if (auditRead) visible else visible.filterNot(_.metadata.detached)
   }
 
   /** Fold a linear operation history into the table version it produces.

@@ -2076,7 +2076,7 @@ object Versioned {
     * — the Iceberg repartitioning parity: the table's partition columns
     * change at a commit boundary (one atomic rewrite commit: every
     * new-scheme partition added, every old-scheme partition removed, DVs
-    * absorbed), the era registry scopes each commit range to its scheme,
+    * absorbed), the boundary commit scopes each commit range to its scheme,
     * and time travel reads each era under its own layout. The query
     * builds a by-returnflag table, DV-deletes scattered rows, evolves to
     * by-linestatus, then overwrites one NEW-era partition — asserting

@@ -1,6 +1,6 @@
 package graft.spark
 
-import com.fasterxml.jackson.annotation.{JsonIgnore, JsonProperty}
+import com.fasterxml.jackson.annotation.JsonIgnore
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -15,16 +15,18 @@ import graft.core.TableVersions.{CommitId, TableUpdate, UpdateMessage, UserId}
  * LOGICAL per commit. A rename or drop is then metadata-only — no file
  * rewrite, ever, at any scale:
  *
- *  - RENAME appends a mapping state (anchored to its audit commit) where
- *    the physical column carries a new logical name; old and new files
+ *  - RENAME records the full mapping on its audit commit
+ *    ([[MetadataFiles.columnMapping]], carried by the commit line), with
+ *    the physical column under a new logical name; old and new files
  *    agree on the physical name, so reads across generations stay
  *    correct;
  *  - DROP marks the physical column dropped — it stops projecting, while
  *    the bytes stay in the immutable version dirs (time travel to a
  *    pre-drop commit still shows them);
- *  - TIME TRAVEL resolves the mapping state AT-OR-BEFORE the addressed
- *    commit (the deletion-vector resolution discipline), so a read as of
- *    a pre-rename commit sees the old logical schema.
+ *  - TIME TRAVEL resolves the mapping carried by the newest commit
+ *    at-or-before the addressed one (the log's metadata fold), so a read
+ *    as of a pre-rename commit sees the old logical schema; a log
+ *    checkpoint keeps the mapping on its base commit.
  *
  * The write path ([[VersionContext]]) translates logical → physical
  * before staging; the read path ([[read]], and the SQL scan rule for
@@ -56,68 +58,15 @@ object ColumnMapping {
     @JsonIgnore def isNested: Boolean = physical.contains('.') || logical.contains('.')
   }
 
-  /** The full mapping in force from `commit` onward. `owner` names the
-    * table whose lineage anchored the state — shared-location forks
-    * (shallow clones) write into one file, and the retention fallback
-    * must never adopt another lineage's state (absent = legacy entry,
-    * single-table usage). */
-  final case class State(
-      commit: String, entries: List[Entry], @JsonProperty("table") owner: Option[String] = None)
-
-  /** All recorded states, oldest first (empty = identity mapping). */
-  def states(spark: SparkSession, table: TableDefinition): List[State] =
-    MetadataFiles.columnMapping.read(spark, table)
-
-  /** The mapping in force at `at` (default: the current pointer): the
-    * newest state whose anchor commit is at-or-before `at` in the lineage.
-    * None = identity.
-    *
-    * RETENTION FALLBACK: a log checkpoint folds old commits — and the
-    * anchors riding them — away. When no anchor survives in `at`'s
-    * lineage but states whose anchors predate the whole retained history
-    * exist, the NEWEST such pre-horizon state still governs (everything
-    * retained is at-or-after it); without this, a checkpoint would
-    * silently revert renames/drops to the identity mapping. */
-  def stateAt(
+  /** The mapping entries in force at `at` (default: the current pointer):
+    * those the newest commit at-or-before `at` in the lineage carries.
+    * None = identity. */
+  def entriesAt(
       spark: SparkSession,
       log: TableVersions,
       table: TableDefinition,
-      at: Option[CommitId]): Option[State] = {
-    val all = states(spark, table)
-    if (all.isEmpty) return None
-    val byAnchor = all.map(s => s.commit -> s).toMap
-    val retained = log.updates(table.name) // newest first
-    val pointer = at.getOrElse(log.currentCommit(table.name))
-    retained
-      .dropWhile(_.id != pointer)
-      .iterator
-      .map(m => byAnchor.get(m.id.id))
-      .collectFirst { case Some(s) => s }
-      .orElse {
-        // only MY lineage's pre-horizon states are eligible: a shared-file
-        // fork's states carry its own owner name
-        val ids = retained.map(_.id.id).toSet
-        all.filter(_.owner.forall(_ == table.name.fullyQualifiedName))
-          .filterNot(s => ids(s.commit)).lastOption // states are oldest-first
-      }
-  }
-
-  /** SHALLOW-CLONE carry: append the source's effective mapping state
-    * re-anchored at the CLONE's state commit. The mapping file is shared
-    * (same location), but states resolve through each table's OWN log
-    * lineage — the re-anchored copy is visible only to the clone, and
-    * later renames/drops on either side append states under their own
-    * anchors: independent evolution over one file. */
-  private[spark] def cloneStateTo(
-      spark: SparkSession,
-      table: TableDefinition,
-      state: State,
-      anchor: CommitId,
-      owner: TableName): Unit = {
-    MetadataFiles.columnMapping.update(spark, table)(
-      _ :+ State(anchor.id, state.entries, Some(owner.fullyQualifiedName)))
-    ()
-  }
+      at: Option[CommitId]): Option[List[Entry]] =
+    MetadataFiles.columnMapping.fold(spark, log, table, at).inForce
 
   /** RENAME COLUMN (metadata-only). Refuses partition columns, unknown
     * columns, and name collisions. */
@@ -173,7 +122,7 @@ object ColumnMapping {
         e.copy(logical = to + e.logical.drop(from.length))
       case e => e
     }
-    commitState(spark, ctx, table, next,
+    commitState(ctx, table, next,
       UpdateMessage(s"ALTER TABLE RENAME COLUMN $from TO $to"), user)
   }
 
@@ -235,7 +184,7 @@ object ColumnMapping {
       case None => current :+ Entry(
         newLogical, physicalPathOf(current, path).mkString("."), dropped = false)
     }
-    commitState(spark, ctx, table, next,
+    commitState(ctx, table, next,
       UpdateMessage(s"ALTER TABLE RENAME COLUMN $lpath TO $to"), user)
   }
 
@@ -268,7 +217,7 @@ object ColumnMapping {
       case None => current :+ Entry(
         lpath, physicalPathOf(current, path).mkString("."), dropped = true)
     }
-    commitState(spark, ctx, table, next,
+    commitState(ctx, table, next,
       UpdateMessage(s"ALTER TABLE DROP COLUMN $lpath"), user)
   }
 
@@ -280,7 +229,7 @@ object ColumnMapping {
       log: TableVersions,
       table: TableDefinition,
       path: Seq[String]): Boolean = {
-    val entries = stateAt(spark, log, table, None).map(_.entries).getOrElse(Nil)
+    val entries = entriesAt(spark, log, table, None).getOrElse(Nil)
     val phys = physicalPathOf(entries, path).mkString(".")
     entries.exists(e => e.isNested && e.dropped && e.physical.equalsIgnoreCase(phys))
   }
@@ -330,7 +279,19 @@ object ColumnMapping {
       table: TableDefinition,
       path: Seq[String],
       newType: String,
-      user: UserId): Unit = {
+      user: UserId): Unit =
+    widenPath(spark, ctx, table, path, newType, user, Map.empty)
+
+  /** [[widenPath]] whose audit commit also carries `alsoCarried` (the
+    * statement's schema state when the widen is its last commit). */
+  private[spark] def widenPath(
+      spark: SparkSession,
+      ctx: VersionContext,
+      table: TableDefinition,
+      path: Seq[String],
+      newType: String,
+      user: UserId,
+      alsoCarried: Map[String, String]): Unit = {
     require(path.nonEmpty, "empty field path")
     val lpath = path.mkString(".")
     require(!table.partitionSchema.columns.exists(_.name.equalsIgnoreCase(path.head)),
@@ -368,8 +329,8 @@ object ColumnMapping {
         lpath, physicalPathOf(current, path).mkString("."),
         dropped = false, widened = Some(target))
     }
-    commitState(spark, ctx, table, next,
-      UpdateMessage(s"ALTER TABLE ALTER COLUMN $lpath TYPE $target"), user)
+    commitState(ctx, table, next,
+      UpdateMessage(s"ALTER TABLE ALTER COLUMN $lpath TYPE $target"), user, alsoCarried)
   }
 
   /** Pure pre-flight for [[widenPath]] against a DECLARED schema: the
@@ -516,10 +477,10 @@ object ColumnMapping {
       log: TableVersions,
       table: TableDefinition,
       at: Option[CommitId]): Map[String, org.apache.spark.sql.types.DataType] =
-    stateAt(spark, log, table, at) match {
+    entriesAt(spark, log, table, at) match {
       case None => Map.empty
-      case Some(s) =>
-        s.entries.collect {
+      case Some(entries) =>
+        entries.collect {
           case e if e.widened.isDefined && !e.dropped =>
             e.physical.toLowerCase ->
               org.apache.spark.sql.catalyst.parser.CatalystSqlParser
@@ -545,22 +506,20 @@ object ColumnMapping {
       case e if e.physical == entry.physical => e.copy(dropped = true)
       case e                                 => e
     }
-    commitState(spark, ctx, table, next,
+    commitState(ctx, table, next,
       UpdateMessage(s"ALTER TABLE DROP COLUMN $name"), user)
   }
 
+  /** The audit commit IS the mapping change: it carries the new entries. */
   private def commitState(
-      spark: SparkSession,
       ctx: VersionContext,
       table: TableDefinition,
       entries: List[Entry],
       message: UpdateMessage,
-      user: UserId): Unit = {
-    val (_, _) = ctx.metastore.commit(table.name, TableUpdate(
-      user, message, java.time.Instant.now(), Nil))
-    val anchor = ctx.metastore.tableVersions.currentCommit(table.name)
-    MetadataFiles.columnMapping.update(spark, table)(
-      _ :+ State(anchor.id, entries, Some(table.name.fullyQualifiedName)))
+      user: UserId,
+      alsoCarried: Map[String, String] = Map.empty): Unit = {
+    ctx.metastore.commit(table.name, TableUpdate(user, message, java.time.Instant.now(), Nil)
+      .withTableMetadata(MetadataFiles.columnMapping.entry(entries) ++ alsoCarried))
     ()
   }
 
@@ -571,8 +530,8 @@ object ColumnMapping {
       log: TableVersions,
       table: TableDefinition,
       at: Option[CommitId]): List[Entry] =
-    stateAt(spark, log, table, at) match {
-      case Some(s) => s.entries
+    entriesAt(spark, log, table, at) match {
+      case Some(entries) => entries
       case None =>
         val phys = VersionedReader(spark, log).read(table).columns
         val parts = table.partitionSchema.columns.map(_.name.toLowerCase).toSet
@@ -699,10 +658,10 @@ object ColumnMapping {
   def toPhysical[T](ds: Dataset[T], table: TableDefinition, log: TableVersions): DataFrame = {
     val spark = ds.sparkSession
     val df = ds.toDF()
-    stateAt(spark, log, table, None) match {
+    entriesAt(spark, log, table, None) match {
       case None => df
-      case Some(s) =>
-        val (nested, top) = s.entries.partition(_.isNested)
+      case Some(entries) =>
+        val (nested, top) = entries.partition(_.isNested)
         val byLogical = top.map(e => e.logical.toLowerCase -> e).toMap
         val cols = df.columns.toList.map { c =>
           val (base, _) =
@@ -741,10 +700,10 @@ object ColumnMapping {
       log: TableVersions,
       table: TableDefinition,
       at: Option[CommitId]): DataFrame =
-    stateAt(spark, log, table, at) match {
+    entriesAt(spark, log, table, at) match {
       case None => df
-      case Some(s) =>
-        val (nested, top) = s.entries.partition(_.isNested)
+      case Some(entries) =>
+        val (nested, top) = entries.partition(_.isNested)
         val byPhysical = top.map(e => e.physical.toLowerCase -> e).toMap
         val cols = df.columns.toList.flatMap { c =>
           val (base, _) =
@@ -783,8 +742,8 @@ object ColumnMapping {
       table: TableDefinition,
       column: String,
       at: Option[CommitId] = None): String =
-    stateAt(spark, log, table, at)
-      .flatMap(_.entries.find(e => !e.dropped && e.logical.equalsIgnoreCase(column)))
+    entriesAt(spark, log, table, at)
+      .flatMap(_.find(e => !e.dropped && e.logical.equalsIgnoreCase(column)))
       .map(_.physical).getOrElse(column)
 
   /** Top-level RENAME lineage between the addressed commit and the current
@@ -801,11 +760,11 @@ object ColumnMapping {
       table: TableDefinition,
       at: Option[CommitId]): Map[String, String] =
     if (at.isEmpty) Map.empty
-    else stateAt(spark, log, table, None) match {
+    else entriesAt(spark, log, table, None) match {
       case None => Map.empty
       case Some(cur) =>
-        val atEntries = stateAt(spark, log, table, at).map(_.entries).getOrElse(Nil)
-        cur.entries.iterator.filter(e => !e.isNested && !e.dropped).flatMap { e =>
+        val atEntries = entriesAt(spark, log, table, at).getOrElse(Nil)
+        cur.iterator.filter(e => !e.isNested && !e.dropped).flatMap { e =>
           val atName = atEntries.find(a =>
             !a.isNested && !a.dropped && a.physical.equalsIgnoreCase(e.physical))
             .map(_.logical).getOrElse(e.physical)
@@ -814,12 +773,12 @@ object ColumnMapping {
         }.toMap
     }
 
-  /** Whether any mapping state applies at `at` — the SQL scan rule's cheap
-    * probe (a driver-side metadata-file read). */
+  /** Whether any mapping applies at `at` — the SQL scan rule's cheap
+    * probe (one read of the log state). */
   def hasMapping(
       spark: SparkSession,
       log: TableVersions,
       table: TableDefinition,
       at: Option[CommitId]): Boolean =
-    stateAt(spark, log, table, at).isDefined
+    entriesAt(spark, log, table, at).isDefined
 }

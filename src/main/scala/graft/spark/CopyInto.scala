@@ -165,9 +165,6 @@ object CopyInto {
         batch.schema.filterNot(f =>
           currentLogical.columns.exists(_.equalsIgnoreCase(f.name))).toSeq
       else Nil
-    // the evolution baseline: captured before ANY widen/audit commit
-    val preEvolution =
-      if (currentLogical.columns.nonEmpty) Some(log.currentCommit(table.name)) else None
     // AUTOMATIC TYPE WIDENING (`graft.dml.typeWidening`): a batch carrying
     // a losslessly WIDER numeric leaf widens the TABLE instead of the
     // carry/union resolving by luck. Declared BEFORE the data lands — a
@@ -280,10 +277,9 @@ object CopyInto {
         ).flatten.mkString(", ")
         log.commit(table.name, graft.core.TableVersions.TableUpdate(
           user, UpdateMessage(s"COPY INTO SCHEMA EVOLUTION $parts"),
-          java.time.Instant.now(), Nil))
-        if (structWide.nonEmpty || numWide.nonEmpty)
-          preEvolution.foreach(pre => SchemaStates.record(
-            spark, table, base, pre, widened, log.currentCommit(table.name)))
+          java.time.Instant.now(), Nil).withTableMetadata(
+          if (structWide.nonEmpty || numWide.nonEmpty) SchemaStates.entry(base, widened)
+          else Map.empty))
         onSchemaWiden(widened)
       }
     }

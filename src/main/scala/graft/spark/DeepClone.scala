@@ -84,7 +84,7 @@ object DeepClone {
       // no carried schema, and a single-footer inference could then drop
       // evolved fields the resolved tier materializes as typed NULLs —
       // any recorded schema state falls back to the resolved-rows write
-      SchemaStates.list(spark, src).isEmpty
+      SchemaStates.at(spark, log, src, at).isEmpty
     if (sidecarFree) {
       val ops = rawCopy(spark, src, dstLocation, tvAt)
       if (ops.nonEmpty) {

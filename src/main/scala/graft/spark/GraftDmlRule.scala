@@ -506,9 +506,6 @@ final case class GraftMergeCommand(
         src.schema.filterNot(f => current.columns.exists(_.equalsIgnoreCase(f.name))).toSeq
       else Nil
     val ctx = VersionContext(GraftV2Table.metastoreFor(binding, defn))
-    // the evolution baseline: captured before ANY widen/audit commit so a
-    // recorded schema state anchors at the true pre-evolution commit
-    val preEvolution = binding.log.currentCommit(defn.name)
     // AUTOMATIC TYPE WIDENING (`graft.dml.typeWidening`, the Delta
     // typeWidening contract): a source carrying a losslessly WIDER
     // numeric leaf (int→bigint, float→double, int→double — top-level,
@@ -575,18 +572,16 @@ final case class GraftMergeCommand(
           Some(s"WIDEN TYPES (${numWide.map(_._1.mkString(".")).sorted.mkString(", ")})")
         else None
       ).flatten.mkString(", ")
+      // struct/type widenings record a schema state on this audit commit:
+      // time travel to the merge's own data commit (or earlier) keeps
+      // reading the narrow shape/width
       GraftV2Table.metastoreFor(binding, defn).commit(defn.name,
         graft.core.TableVersions.TableUpdate(
           UserId("sql"),
           UpdateMessage(s"MERGE SCHEMA EVOLUTION $parts"),
-          java.time.Instant.now(), Nil))
-      // struct/type widenings anchor a schema state: time travel to the
-      // merge's own data commit (or earlier) keeps reading the narrow
-      // shape/width
-      if (structWide.nonEmpty || numWide.nonEmpty)
-        SchemaStates.record(
-          session, defn, base, preEvolution, widened,
-          binding.log.currentCommit(defn.name))
+          java.time.Instant.now(), Nil).withTableMetadata(
+          if (structWide.nonEmpty || numWide.nonEmpty) SchemaStates.entry(base, widened)
+          else Map.empty))
     }
     Seq.empty
   }

@@ -1546,7 +1546,7 @@ final case class GraftDescribeDetailCommand(parts: Seq[String]) extends LeafRunn
       binding.log.currentCommit(defn.name).id,
       Constraints.list(session, defn).size,
       GeneratedColumns.list(session, defn).size,
-      ColumnMapping.stateAt(session, binding.log, defn, None).isDefined,
+      ColumnMapping.hasMapping(session, binding.log, defn, None),
       ShallowClone.hasCloneLink(binding.log, defn.name),
       PartitionEvolution.schemeAt(session, binding.log, defn, None)
         .columns.map(_.name).mkString(","),

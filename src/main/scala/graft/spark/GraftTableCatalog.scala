@@ -418,10 +418,6 @@ final class GraftTableCatalog extends TableCatalog {
       c.isInstanceOf[TableChange.SetProperty] || c.isInstanceOf[TableChange.RemoveProperty])
     if (schemaChanges.isEmpty) { applyProps(); return loadTable(ident) }
     val base = declared.getOrElse(loadTable(ident).asInstanceOf[GraftV2Table].schema())
-    // captured BEFORE the fold: TYPE WIDENING commits its audit entry
-    // right after the fold (below), and the schema-state baseline must
-    // anchor at-or-before that commit
-    val preFold = binding.log.currentCommit(defn.name)
     // TYPE widenings VALIDATE inside the fold (pure — ColumnMapping.
     // validateWiden against the folding schema) but COMMIT only after the
     // whole fold passes: a multi-change ALTER that fails on a later
@@ -465,8 +461,8 @@ final class GraftTableCatalog extends TableCatalog {
         // its physical column, and a by-name footer union would resurrect
         // pre-drop values into the new column
         val spark = SparkSession.active
-        require(!ColumnMapping.stateAt(spark, binding.log, defn, None)
-          .exists(_.entries.exists(e => e.dropped && e.logical.equalsIgnoreCase(n))),
+        require(!ColumnMapping.entriesAt(spark, binding.log, defn, None)
+          .exists(_.exists(e => e.dropped && e.logical.equalsIgnoreCase(n))),
           s"column $n was dropped via column mapping and cannot be re-added")
         schema.add(org.apache.spark.sql.types.StructField(n, add.dataType(), nullable = true))
       case (schema, ren: TableChange.RenameColumn) if ren.fieldNames().length > 1 =>
@@ -620,37 +616,38 @@ final class GraftTableCatalog extends TableCatalog {
             s"(reorder), ALTER COLUMN SET/DROP NOT NULL, and ALTER COLUMN " +
             s"COMMENT only, got ${other.getClass.getSimpleName}")
     }
-    // the whole fold validated — the collected widens commit now (their
-    // audit entries anchor after preFold, before the schema-state record)
-    pendingWidens.foreach { case (path, dt) =>
-      ColumnMapping.widenPath(
-        SparkSession.active, VersionContext(GraftV2Table.metastoreFor(binding, defn)),
-        defn, path, dt.catalogString, UserId("sql"))
-    }
-    binding.tables.put(tableName.fullyQualifiedName, (defn, Some(widened)))
     val added = changes.collect { case a: TableChange.AddColumn => a.fieldNames().mkString(".") }
     val nestedAdd = changes.exists {
       case a: TableChange.AddColumn => a.fieldNames().length > 1
       case _ => false
     }
-    val typeChanged = schemaChanges.exists(_.isInstanceOf[TableChange.UpdateColumnType])
-    if (added.nonEmpty)
-      GraftV2Table.metastoreFor(binding, defn).commit(defn.name, TableUpdate(
-        UserId("sql"), UpdateMessage(s"ALTER TABLE ADD COLUMNS (${added.mkString(", ")})"),
-        java.time.Instant.now(), Nil))
-    if (reorders.nonEmpty)
-      GraftV2Table.metastoreFor(binding, defn).commit(defn.name, TableUpdate(
-        UserId("sql"), UpdateMessage(s"ALTER TABLE ${reorders.mkString("; ")}"),
-        java.time.Instant.now(), Nil))
-    // nested adds, TYPE widenings, and column reorders anchor a schema
-    // state at their audit commit (plus the pre-change baseline), so a
+    // nested adds, TYPE widenings, and column reorders record the
+    // statement's schema change on its LAST audit commit, so a
     // time-traveled load declares the ADDRESSED commit's struct shape /
     // column width / column order — rename/drop shape travel stays with
-    // the column-mapping states
-    if (nestedAdd || typeChanged || reorders.nonEmpty)
-      SchemaStates.record(
-        SparkSession.active, defn, base, preFold, widened,
-        binding.log.currentCommit(defn.name))
+    // the column mapping
+    val schemaState =
+      if (nestedAdd || pendingWidens.nonEmpty || reorders.nonEmpty)
+        SchemaStates.entry(base, widened)
+      else Map.empty[String, String]
+    val audits =
+      (if (added.nonEmpty) List(s"ALTER TABLE ADD COLUMNS (${added.mkString(", ")})") else Nil) ++
+        (if (reorders.nonEmpty) List(s"ALTER TABLE ${reorders.mkString("; ")}") else Nil)
+    def lastCarries(i: Int, n: Int) = if (i == n - 1) schemaState else Map.empty[String, String]
+    // the whole fold validated — the collected widens commit now, before
+    // the statement's other audit entries
+    pendingWidens.zipWithIndex.foreach { case ((path, dt), i) =>
+      ColumnMapping.widenPath(
+        SparkSession.active, VersionContext(GraftV2Table.metastoreFor(binding, defn)),
+        defn, path, dt.catalogString, UserId("sql"),
+        if (audits.isEmpty) lastCarries(i, pendingWidens.size) else Map.empty)
+    }
+    binding.tables.put(tableName.fullyQualifiedName, (defn, Some(widened)))
+    audits.zipWithIndex.foreach { case (text, i) =>
+      GraftV2Table.metastoreFor(binding, defn).commit(defn.name, TableUpdate(
+        UserId("sql"), UpdateMessage(text), java.time.Instant.now(), Nil)
+        .withTableMetadata(lastCarries(i, audits.size)))
+    }
     applyProps()
     loadTable(ident)
   }

@@ -18,14 +18,15 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, Options, Path}
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{Partition, TableDefinition}
+import graft.core.{Partition, TableDefinition, TableVersions}
+import graft.core.TableVersions.{CommitId, MetadataFold}
 
-/** THE STORE for table metadata files: every declaration graft keeps
-  * beside a table's version dirs is one of the families below, and this
-  * module alone decides where a family's file lives, how it is read, how
-  * it is updated, which families a clone carries, and where VACUUM looks
-  * for a crashed writer's temp files. The family modules keep only their
-  * rules (validation, enforcement, at-or-before resolution, decoration).
+/** THE STORE for table metadata: every declaration graft keeps beside a
+  * table's version dirs is one of the families below, and this module
+  * alone decides where a family's file lives, how it is read, how it is
+  * updated, which families a clone carries, and where VACUUM looks for a
+  * crashed writer's temp files. The family modules keep only their rules
+  * (validation, enforcement, decoration).
   *
   * | family           | file (under the table location)      | legacy fallback      |
   * |------------------|--------------------------------------|----------------------|
@@ -35,19 +36,20 @@ import graft.core.{Partition, TableDefinition}
   * | `defaults`       | `_defaults/<schema.table>.json`      | –                    |
   * | `comments`       | `_comments/<schema.table>.json`      | –                    |
   * | `tblproperties`  | `_tblproperties/<schema.table>.json` | –                    |
-  * | `schema_states`  | `_schema_states/<schema.table>.json` | –                    |
-  * | `column_mapping` | `_column_mapping.json`               | –                    |
-  * | `partitioning`   | `_partitioning.json`                 | –                    |
   * | `mv`             | `_mv.json`                           | –                    |
   *
   * NAME-KEYED families live under the (possibly shared) location keyed by
   * table name, so a shallow clone and its source own independent sets.
-  * LOCATION-GLOBAL families are one file per location; the two anchored
-  * ones (column mapping, partitioning) stay isolated per lineage through
-  * commit anchors and owner names inside the file. A keyed family with a
-  * legacy fallback reads the location-global file while no keyed file
-  * exists; every update writes the keyed file, so legacy metadata
-  * migrates on the first DDL that changes it.
+  * A keyed family with a legacy fallback reads the location-global file
+  * while no keyed file exists; every update writes the keyed file, so
+  * legacy metadata migrates on the first DDL that changes it.
+  *
+  * COMMIT-CARRIED families (column mapping, partitioning, schema states)
+  * have no file: their value rides the commit that changes it, in the
+  * commit line's `tableMetadata`, and resolves through the log's one
+  * metadata fold ([[graft.core.TableVersions.foldMetadata]]) — see
+  * [[CommitCarried]]. Each table's log is its own lineage, so a clone
+  * owns its values, and a log checkpoint keeps them on its base commit.
   *
   * READ: one open of the keyed file (a missing file is the empty value;
   * the legacy file is tried only when the keyed one is missing), then a
@@ -82,8 +84,8 @@ import graft.core.{Partition, TableDefinition}
   *
   * CLONE CARRY: [[carry]] copies the current-declaration families
   * (constraints, generated, identity, defaults, comments, tblproperties)
-  * to the clone's own keyed files. Schema states, column mapping and
-  * partitioning are anchored at commits and re-anchored by their modules.
+  * to the clone's own keyed files. A shallow clone's state commit carries
+  * the source's commit-carried values.
   */
 object MetadataFiles {
 
@@ -213,20 +215,76 @@ object MetadataFiles {
     family("comments", keyed = true, Map.empty, carried = true, memoized = true)
   val tblProperties: Family[Map[String, String]] =
     family("tblproperties", keyed = true, Map.empty, carried = true, memoized = true)
-  val schemaStates: Family[List[SchemaStates.State]] =
-    family("schema_states", keyed = true, Nil)
-  val columnMapping: Family[List[ColumnMapping.State]] =
-    family("column_mapping", keyed = false, Nil)
-  val partitioning: Family[List[PartitionEvolution.SchemeState]] =
-    family("partitioning", keyed = false, Nil)
   /** The view definition as a JSON tree: its stored shape is not
     * [[MaterializedView.MvDef]], so that module keeps its own codec. */
   val mv: Family[JsonNode] =
     family[JsonNode]("mv", keyed = false, MissingNode.getInstance())
 
   val families: List[Family[_]] = List(
-    constraints, generated, identity, defaults, comments, tblProperties,
-    schemaStates, columnMapping, partitioning, mv)
+    constraints, generated, identity, defaults, comments, tblProperties, mv)
+
+  /** The value a statement changed a table's metadata from and to. */
+  final case class Change[A](before: A, after: A)
+
+  /** A COMMIT-CARRIED family: [[entry]] is what the changing commit
+    * carries, [[fold]] resolves it at a commit. `legacy` is the file the
+    * earlier sidecar store kept the family in — a table whose log carries
+    * no value but whose location still holds that file is REFUSED with an
+    * error naming the file (one probe, only while the log carries none):
+    * reading it would resurrect sidecar anchors this log never wrote. */
+  final class CommitCarried[A] private[MetadataFiles] (
+      val name: String, legacy: TableDefinition => Path, javaType: JavaType) {
+
+    /** The commit-line entry recording `value` as this family's new value. */
+    def entry(value: A): Map[String, String] = Map(name -> mapper.writeValueAsString(value))
+
+    /** The family folded at `at` (None: the current pointer). */
+    def fold(
+        spark: SparkSession, log: TableVersions, table: TableDefinition,
+        at: Option[CommitId]): MetadataFold[A] =
+      decode(spark, table, log.metadataAt(table.name, name, at))
+
+    /** The family folded at the log head. */
+    def foldAtHead(
+        spark: SparkSession, log: TableVersions, table: TableDefinition): MetadataFold[A] =
+      decode(spark, table, log.metadataAtHead(table.name, name))
+
+    private def decode(
+        spark: SparkSession, table: TableDefinition, f: MetadataFold[String]): MetadataFold[A] = {
+      if (f.oldest.isEmpty) {
+        val p = legacy(table)
+        if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
+          throw new IllegalStateException(
+            s"table ${table.name.fullyQualifiedName} has a legacy metadata file $p, " +
+              s"which this version no longer reads: its $name now rides the commit " +
+              "log. Move the file away, then redo the change (or recreate the " +
+              "table) with this version")
+      }
+      f.map(v => mapper.readValue[A](v, javaType))
+    }
+  }
+
+  private def commitCarried[A](name: String, legacy: TableDefinition => Path)(
+      implicit jt: JavaTypeable[A]): CommitCarried[A] =
+    new CommitCarried(name, legacy, jt.asJavaType(mapper.getTypeFactory))
+
+  /** Mapping entries, on each RENAME / DROP / widen audit commit. */
+  val columnMapping: CommitCarried[List[ColumnMapping.Entry]] =
+    commitCarried("column_mapping", t => new Path(s"${root(t)}_column_mapping.json"))
+  /** Partition columns, on each EVOLVE PARTITIONING boundary commit. */
+  val partitioning: CommitCarried[Change[List[String]]] =
+    commitCarried("partitioning", t => new Path(s"${root(t)}_partitioning.json"))
+  /** Declared-schema JSON, on the last audit commit of a nested ADD,
+    * struct/type widening or reorder. */
+  val schemaStates: CommitCarried[Change[String]] =
+    commitCarried("schema_states",
+      t => new Path(s"${root(t)}_schema_states/${t.name.fullyQualifiedName}.json"))
+
+  /** The value governing a [[Change]] family's fold: the in-force
+    * carrier's `after`, or — before the first carrier — the oldest
+    * carrier's `before`. None: the family never changed. */
+  def governing[A](f: MetadataFold[Change[A]]): Option[A] =
+    f.inForce.map(_.after).orElse(f.oldest.map(_.before))
 
   /** Copy the current-declaration families of a clone source into the
     * clone's own keyed files (the clone inherits them at clone time and

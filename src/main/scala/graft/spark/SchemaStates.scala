@@ -1,7 +1,5 @@
 package graft.spark
 
-import com.fasterxml.jackson.annotation.JsonProperty
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -9,15 +7,19 @@ import graft.core._
 import graft.core.TableVersions.CommitId
 
 /**
- * DECLARED-SCHEMA HISTORY for nested evolution — commit-anchored schema
- * states, resolved at-or-before like [[ColumnMapping.stateAt]] and the
- * deletion-vector sidecars, so TIME TRAVEL reads the struct shape of the
- * addressed commit (the Delta snapshot-schema contract):
+ * DECLARED-SCHEMA HISTORY for nested evolution — schema states carried by
+ * the commit line ([[MetadataFiles.schemaStates]]) and resolved by the
+ * log's metadata fold like [[ColumnMapping.entriesAt]], so TIME TRAVEL
+ * reads the struct shape of the addressed commit (the Delta
+ * snapshot-schema contract):
  *
- *  - a nested `ADD COLUMN s.x` (or a MERGE autoMerge struct widening)
- *    records the PRE-change schema anchored at the pre-change commit
- *    (once, the baseline) and the widened schema anchored at its audit
- *    commit;
+ *  - a nested `ADD COLUMN s.x` (or a MERGE autoMerge struct widening, a
+ *    type widening, a reorder) records `{before, after}` — the declared
+ *    schema the statement changed from and to — on the last audit commit
+ *    the statement makes;
+ *  - a commit resolves to the `after` of the newest carrier at-or-before
+ *    it, and a commit older than every carrier to the OLDEST carrier's
+ *    `before` (the pre-evolution shape);
  *  - a time-traveled load overlays the resolved state onto the CURRENT
  *    declared schema per top-level column: a column whose state-recorded
  *    type differs takes the state's type (the addressed commit's struct
@@ -26,75 +28,25 @@ import graft.core.TableVersions.CommitId
  *    contract (time travel projects top-level adds as typed NULLs,
  *    pinned since q62) intact. Only struct SHAPES travel.
  *
- * States live beside the table ([[MetadataFiles.schemaStates]], the
- * [[GeneratedColumns]] keying — shared-location clones own separate
- * files). Tables that never evolve a
- * nested field have no file and pay only a driver-side existence probe
- * on time-traveled loads.
+ * Each table's log is its own lineage (a shallow clone's state commit
+ * carries the cloned shape), and a log checkpoint keeps the newest state
+ * on its base commit. Tables that never evolve a nested field pay one
+ * read of the log state on time-traveled loads.
  */
 object SchemaStates {
 
-  final case class State(commit: String, @JsonProperty("schema") schemaJson: String)
+  /** The commit-line entry recording a change of the declared schema. */
+  def entry(before: StructType, after: StructType): Map[String, String] =
+    MetadataFiles.schemaStates.entry(MetadataFiles.Change(before.json, after.json))
 
-  /** All recorded states, oldest first (empty = no nested evolution). */
-  def list(spark: SparkSession, table: TableDefinition): List[State] =
-    MetadataFiles.schemaStates.read(spark, table)
-
-  /** Record one nested-evolution step: seed the baseline (pre-change
-    * schema anchored at the pre-change commit) if this is the table's
-    * first recorded evolution, then append the widened schema anchored at
-    * the evolution's audit commit. */
-  def record(
-      spark: SparkSession,
-      table: TableDefinition,
-      preSchema: StructType,
-      preAnchor: CommitId,
-      newSchema: StructType,
-      anchor: CommitId): Unit = {
-    MetadataFiles.schemaStates.update(spark, table) { existing =>
-      val seeded =
-        if (existing.isEmpty) List(State(preAnchor.id, preSchema.json))
-        else existing
-      seeded :+ State(anchor.id, newSchema.json)
-    }
-    ()
-  }
-
-  /** SHALLOW-CLONE carry: seed the clone's OWN keyed state file with the
-    * source's resolved shape, anchored at the clone's state commit — the
-    * clone's lineage starts there, so its time travel reads the cloned
-    * struct shapes while later evolutions on either side stay isolated
-    * (the [[ColumnMapping.cloneStateTo]] discipline). */
-  private[spark] def cloneStateTo(
-      spark: SparkSession,
-      clone: TableDefinition,
-      shape: StructType,
-      anchor: CommitId): Unit = {
-    MetadataFiles.schemaStates.update(spark, clone)(_ :+ State(anchor.id, shape.json))
-    ()
-  }
-
-  /** The schema state in force at `at`: the newest state whose anchor is
-    * at-or-before `at` in the table's lineage; when states exist but none
-    * anchors in the addressed lineage (travel before the baseline, or a
-    * checkpoint folded the anchors away), the OLDEST state — the
-    * pre-evolution shape — governs. None when the table has no states. */
+  /** The schema state in force at `at`; None when no commit carries one. */
   def at(
       spark: SparkSession,
       log: TableVersions,
       table: TableDefinition,
-      at: CommitId): Option[StructType] = {
-    val all = list(spark, table)
-    if (all.isEmpty) return None
-    val byAnchor = all.map(s => s.commit -> s).toMap
-    val resolved = log.updates(table.name) // newest first
-      .dropWhile(_.id != at)
-      .iterator
-      .map(m => byAnchor.get(m.id.id))
-      .collectFirst { case Some(s) => s }
-      .getOrElse(all.head)
-    Some(DataType.fromJson(resolved.schemaJson).asInstanceOf[StructType])
-  }
+      at: CommitId): Option[StructType] =
+    MetadataFiles.governing(MetadataFiles.schemaStates.fold(spark, log, table, Some(at)))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** Overlay the resolved state onto the current declaration, per
     * top-level column: the state's type wins where recorded and different

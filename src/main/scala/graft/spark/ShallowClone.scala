@@ -40,17 +40,16 @@ import graft.core.TableVersions.{CommitId, TableOperation, TableUpdate, UpdateMe
  *    clone's state commit — cloned reads keep hiding deleted rows, and
  *    each side's later deletes anchor under its own (uuid) commit ids,
  *    invisible to the other's resolution walk;
- *  - an active COLUMN MAPPING: the effective mapping state is appended
- *    to the shared mapping file re-anchored at the clone's commit —
- *    renames/drops survive the clone, and each side evolves the mapping
- *    independently through its own lineage;
+ *  - COMMIT-CARRIED metadata — an active COLUMN MAPPING, the
+ *    PARTITION-EVOLUTION era and the nested-evolution SCHEMA STATE: the
+ *    source's resolved values ride the clone's state commit, so
+ *    renames/drops, the era and struct shapes survive the clone, and each
+ *    side evolves them independently through its own log;
  *  - table CONSTRAINTS, GENERATED-COLUMN rules, and the IDENTITY
  *    declaration: the clone inherits the source's current set into its
  *    own name-keyed metadata files, owning them independently from then
  *    on; the identity HIGH-WATER MARK rides the clone-state commit
  *    message so clone writes never re-mint carried ids;
- *  - the PARTITION-EVOLUTION era registry: the effective scheme
- *    re-anchors at the clone's commit (owner-tagged in the shared file);
  *  - the COPY INTO load history: one metadata commit carries the
  *    source's loaded-file set so the clone never re-ingests rows it
  *    already holds.
@@ -107,45 +106,41 @@ object ShallowClone {
       " " + IdentityColumns.markText(
         c, IdentityColumns.effectiveHighWaterMarkAt(spark, log, src, c, Some(at)))
     }.getOrElse("")
-    // the mark must ride a commit even when the cloned state has no ops
-    // (an empty-state clone still inherits the never-reuse-ids contract)
-    if (ops.nonEmpty || identityMark.nonEmpty) {
+    // commit-carried metadata rides the state commit. The CURRENT
+    // effective mapping carries (not the at-state one): the clone's files
+    // keep their frozen PHYSICAL names, and the clone — like a `VERSION
+    // AS OF` load of the source (the pinned SQL posture) — serves the
+    // CURRENT logical names over them; carrying the at-state mapping would
+    // leave a post-`at` rename's registered name with no physical
+    // resolution and NULL-blank real values. The era and the struct
+    // shapes carry as resolved at the cloned commit.
+    val none = Map.empty[String, String]
+    val carried =
+      ColumnMapping.entriesAt(spark, log, src, None)
+        .fold(none)(MetadataFiles.columnMapping.entry) ++
+      MetadataFiles.governing(MetadataFiles.partitioning.fold(spark, log, src, Some(at)))
+        .fold(none)(c => MetadataFiles.partitioning.entry(MetadataFiles.Change(c, c))) ++
+      SchemaStates.at(spark, log, src, at).fold(none)(s => SchemaStates.entry(s, s))
+    // the mark and the carried metadata must ride a commit even when the
+    // cloned state has no ops (an empty-state clone still inherits the
+    // never-reuse-ids contract and the source's metadata)
+    if (ops.nonEmpty || identityMark.nonEmpty || carried.nonEmpty) {
       ctx.metastore.commit(dst, TableUpdate(
         user, UpdateMessage(
           s"clone state of ${src.name.fullyQualifiedName} @ ${at.id}$identityMark"),
-        Instant.now(), ops))
+        Instant.now(), ops).withTableMetadata(carried))
       ()
     }
-    // carry commit-anchored / shared metadata into the clone's own
-    // namespace, re-anchored at the clone's state commit (see the class
-    // doc): DV pairs, the effective column mapping, and the current
-    // declarations all survive the fork with both-ways isolation
+    // carry the remaining metadata into the clone's own namespace (see the
+    // class doc): DV pairs and overlay rows re-anchored at the clone's
+    // state commit, and the current declarations
     val cloneAnchor = log.currentCommit(dst)
     if (DeletionVectors.hasVectors(spark, log, src, Some(at)))
       DeletionVectors.cloneResolvedState(spark, log, src, at, cloneAnchor)
     // merge-on-read overlay rows: resolved (live, DV-applied) rows carry as
     // one complete overlay dir anchored at the clone's state commit
     RowOverlay.cloneResolvedState(spark, log, src, at, cloneAnchor)
-    // the CURRENT effective mapping carries (not the at-state one): the
-    // clone's files keep their frozen PHYSICAL names, and the clone —
-    // like a `VERSION AS OF` load of the source (the pinned SQL posture)
-    // — serves the CURRENT logical names over them; carrying the at-state
-    // mapping would leave a post-`at` rename's registered name with no
-    // physical resolution and NULL-blank real values
-    ColumnMapping.stateAt(spark, log, src, None).foreach { s =>
-      ColumnMapping.cloneStateTo(spark, src, s, cloneAnchor, dst)
-    }
     MetadataFiles.carry(spark, src, dstDefn)
-    PartitionEvolution.stateAt(spark, log, src, Some(at)).foreach { s =>
-      PartitionEvolution.cloneStateTo(spark, src, s, cloneAnchor, dst)
-    }
-    // nested-evolution schema states: the source's resolved struct shapes
-    // at the cloned commit seed ONE state anchored at the clone's state
-    // commit — the clone's time travel reads the cloned shapes, and later
-    // nested evolutions on either side stay isolated (separate keyed files)
-    SchemaStates.at(spark, log, src, at).foreach { shape =>
-      SchemaStates.cloneStateTo(spark, dstDefn, shape, cloneAnchor)
-    }
     // COPY INTO load history: the clone's data already contains the
     // source's ingested rows, so the loaded-file set must carry — without
     // it, a COPY INTO on the clone from the same landing dir would

@@ -75,7 +75,7 @@ object VersionContext {
     * the head, re-validate the scheme at it, then commit iff the head is
     * unchanged. An evolution boundary landing after the guard passed
     * necessarily moves the head, failing the CAS and re-running the
-    * guard against the new registry state — the validate-then-commit
+    * guard against the landed boundary — the validate-then-commit
     * TOCTOU window of a stage-time-only check is closed. Disjoint
     * concurrent writers just re-target the CAS (same composition as
     * plain commit; the retry bound only trips under pathological

@@ -94,4 +94,51 @@ class LogEquivalenceSpec extends AnyFunSuite with Matchers {
     reopened.currentVersion(tbl) shouldBe before
     retained.foreach(u => reopened.versionAt(tbl, u.id) shouldBe beforeAt(u.id))
   }
+
+  test("seeded op sequences carrying table metadata fold it identically in both impls, through a checkpoint") {
+    val rnd = new scala.util.Random(20261017L)
+    val dir = Files.createTempDirectory("graft_equiv_meta").toString
+    val json = JsonFileTableVersions(dir)
+    val mem = new InMemoryTableVersions
+    val tbl = TableName("db", "meta")
+    json.init(tbl, isSnapshot = false, who, UpdateMessage("init"), Instant.ofEpochSecond(0))
+    mem.init(tbl, isSnapshot = false, who, UpdateMessage("init"), Instant.ofEpochSecond(0))
+    val families = List("f", "g")
+    // both folds at every commit, the init commit aligned by position
+    def foldsAt(log: TableVersions): List[List[MetadataFold[String]]] =
+      log.updates(tbl).map(u => families.map(f => log.metadataAt(tbl, f, Some(u.id))))
+    def current(log: TableVersions) = families.map(f => log.metadataAt(tbl, f))
+
+    for (step <- 1 to 40) {
+      rnd.nextInt(10) match {
+        case r if r < 8 =>
+          val values = families.filter(_ => rnd.nextInt(3) == 0).map(_ -> s"v$step").toMap
+          val ops =
+            if (rnd.nextBoolean()) Nil
+            else List(TableOperation.AddPartitionVersion(
+              Partition(PartitionColumn("date"), s"2026-01-0${1 + rnd.nextInt(6)}"),
+              Version(Instant.ofEpochSecond(step.toLong), new UUID(rnd.nextLong(), rnd.nextLong()))))
+          val u = TableUpdate(who, UpdateMessage(s"step $step"), Instant.ofEpochSecond(step.toLong), ops)
+            .withTableMetadata(values)
+          json.commit(tbl, u); mem.commit(tbl, u)
+        case _ => // rollback to the same chronological position in each log
+          val idx = rnd.nextInt(mem.updates(tbl).size)
+          mem.setCurrentVersion(tbl, mem.updates(tbl)(idx).id)
+          json.setCurrentVersion(tbl, json.updates(tbl)(idx).id)
+      }
+      assertEquivalent(mem, json, tbl)
+      foldsAt(JsonFileTableVersions(dir)) shouldBe foldsAt(mem)
+      current(json) shouldBe current(mem)
+    }
+    foldsAt(mem).flatten.exists(_.inForce.isDefined) shouldBe true
+
+    // a checkpoint keeps the in-force value at every retained commit
+    val head = TableUpdate(who, UpdateMessage("head"), Instant.ofEpochSecond(99), Nil)
+    json.commit(tbl, head); mem.commit(tbl, head)
+    val retained = mem.updates(tbl).take(4).map(_.id)
+    json.checkpoint(tbl, keepLast = 3) shouldBe true
+    val reopened = JsonFileTableVersions(dir)
+    retained.foreach(id => families.foreach(f =>
+      reopened.metadataAt(tbl, f, Some(id)).inForce shouldBe mem.metadataAt(tbl, f, Some(id)).inForce))
+  }
 }

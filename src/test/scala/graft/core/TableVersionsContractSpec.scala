@@ -3,6 +3,8 @@ package graft.core
 import java.time.Instant
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -574,6 +576,61 @@ trait TableVersionsContract extends Matchers { self: AnyFunSuite =>
       tb -> TableUpdate(who, msg("z"), Instant.now(), Nil)))
     log.currentCommit(tb) should not be good.metadata.id
   }
+
+  // ---- commit-carried table metadata and its fold ----
+
+  private def carrying(values: (String, String)*): TableUpdate =
+    TableUpdate(who, msg("meta"), Instant.now(), Nil).withTableMetadata(values.toMap)
+
+  test(s"$implName: table metadata round-trips on its commit") {
+    val log = newLog()
+    initPartitioned(log)
+    val u = carrying("mapping" -> """[{"logical":"b","physical":"a"}]""", "scheme" -> "{}")
+    log.commit(tbl, u)
+    addPartitions(log, p("2024-01-01") -> v())
+    log.updates(tbl).map(_.tableMetadata) shouldBe
+      List(Map.empty, u.metadata.tableMetadata, Map.empty)
+  }
+
+  test(s"$implName: the metadata fold resolves at or before a commit in its lineage, after a rollback too") {
+    val log = newLog()
+    initPartitioned(log)
+    val init = log.currentCommit(tbl)
+    val c1 = carrying("f" -> "1")
+    log.commit(tbl, c1)
+    val c2 = addPartitions(log, p("2024-01-01") -> v())
+    val c3 = carrying("f" -> "3")
+    log.commit(tbl, c3)
+    log.metadataAt(tbl, "f") shouldBe MetadataFold(Some("3"), Some("1"))
+    log.metadataAt(tbl, "f", Some(c2.metadata.id)) shouldBe MetadataFold(Some("1"), Some("1"))
+    log.metadataAt(tbl, "f", Some(init)) shouldBe MetadataFold(None, Some("1"))
+    log.metadataAt(tbl, "g") shouldBe MetadataFold(None, None)
+    log.metadataAt(tbl, "f", Some(CommitId("elsewhere"))).inForce shouldBe None
+
+    // rollback: the pointer's lineage ends at c2; the head still carries 3
+    log.setCurrentVersion(tbl, c2.metadata.id)
+    log.metadataAt(tbl, "f").inForce shouldBe Some("1")
+    log.metadataAtHead(tbl, "f").inForce shouldBe Some("3")
+    // a commit after the rollback resurrects c3 into the lineage, as it
+    // does c3's operations
+    addPartitions(log, p("2024-01-02") -> v())
+    log.metadataAt(tbl, "f").inForce shouldBe Some("3")
+  }
+
+  test(s"$implName: the metadata fold ignores a detached commit until it is published") {
+    val log = newLog()
+    initPartitioned(log)
+    log.commit(tbl, carrying("f" -> "main"))
+    val staged = carrying("f" -> "staged", "g" -> "staged")
+    log.commitDetached(tbl, staged)
+    log.metadataAt(tbl, "f") shouldBe MetadataFold(Some("main"), Some("main"))
+    log.metadataAt(tbl, "g") shouldBe MetadataFold(None, None)
+    // the audit read of the staged commit sees it, like its data
+    log.metadataAt(tbl, "f", Some(staged.metadata.id)).inForce shouldBe Some("staged")
+    log.publish(tbl, staged.metadata.id)
+    log.metadataAt(tbl, "f").inForce shouldBe Some("staged")
+    log.metadataAt(tbl, "g") shouldBe MetadataFold(Some("staged"), Some("staged"))
+  }
 }
 
 class InMemoryTableVersionsSpec extends AnyFunSuite with TableVersionsContract {
@@ -706,6 +763,83 @@ class JsonFileTableVersionsSpec extends AnyFunSuite with TableVersionsContract {
     val reopened = new JsonFileTableVersions(dir)
     reopened.currentVersion(tbl) shouldBe SnapshotTableVersion(v1)
     an[Exception] should be thrownBy reopened.versionAt(tbl, CommitId("phantom"))
+  }
+
+  test("JsonFileTableVersions: a line without table metadata replays unchanged, and none is written") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_log_meta_fmt")
+    val tbl = TableName("db", "fmt")
+    // the commit-line shape written before commits carried table metadata
+    val ver = Version(Instant.EPOCH, new UUID(1L, 2L))
+    java.nio.file.Files.writeString(dir.resolve("db.fmt.jsonl"),
+      """{"record":"commit","id":"c0","user":"u","message":"init","timestamp":"1970-01-01T00:00:00Z",""" +
+        """"operations":[{"op":"init","table":"db.fmt","snapshot":false}]}""" + "\n" +
+        """{"record":"commit","id":"c1","user":"u","message":"v1","timestamp":"1970-01-01T00:00:01Z",""" +
+        s""""operations":[{"op":"add-partition-version","partition":"d=1","version":"${ver.label}"}]}""" +
+        "\n")
+    val log = new JsonFileTableVersions(dir)
+    log.updates(tbl).map(u => (u.id.id, u.tableMetadata)) shouldBe
+      List("c1" -> Map.empty, "c0" -> Map.empty)
+    log.currentVersion(tbl) shouldBe PartitionedTableVersion(
+      Map(Partition(PartitionColumn("d"), "1") -> ver))
+    log.metadataAt(tbl, "f") shouldBe MetadataFold(None, None)
+    // a commit without metadata writes no field; one with metadata does
+    log.commit(tbl, TableUpdate(UserId("u"), UpdateMessage("plain"), Instant.now(), Nil))
+    log.commit(tbl, TableUpdate(UserId("u"), UpdateMessage("meta"), Instant.now(), Nil)
+      .withTableMetadata(Map("f" -> "[1]")))
+    val lines = java.nio.file.Files.readAllLines(dir.resolve("db.fmt.jsonl")).asScala.toList
+    lines.map(_.contains("tableMetadata")) shouldBe List(false, false, false, true)
+    new JsonFileTableVersions(dir).metadataAt(tbl, "f").inForce shouldBe Some("[1]")
+  }
+
+  test("JsonFileTableVersions: a checkpoint base carries the newest value of each metadata family") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_log_meta_ckpt")
+    val log = new JsonFileTableVersions(dir)
+    val tbl = TableName("db", "metackpt")
+    log.init(tbl, isSnapshot = false, UserId("u"), UpdateMessage("init"), Instant.now())
+    def commit(values: (String, String)*): CommitId = {
+      val u = TableUpdate(UserId("u"), UpdateMessage("c"), Instant.now(),
+        List(TableOperation.AddPartitionVersion(
+          Partition(PartitionColumn("d"), UUID.randomUUID().toString),
+          Version(Instant.now(), UUID.randomUUID())))).withTableMetadata(values.toMap)
+      log.commit(tbl, u)
+      u.metadata.id
+    }
+    commit("f" -> "f1", "g" -> "g1")
+    commit("f" -> "f2")
+    val base = commit()
+    val head = commit("h" -> "h4")
+    log.checkpoint(tbl, keepLast = 1) shouldBe true
+
+    val reopened = new JsonFileTableVersions(dir)
+    reopened.updates(tbl).map(_.id) shouldBe List(head, base)
+    reopened.updates(tbl).last.tableMetadata shouldBe Map("f" -> "f2", "g" -> "g1")
+    reopened.metadataAt(tbl, "f", Some(base)) shouldBe MetadataFold(Some("f2"), Some("f2"))
+    reopened.metadataAt(tbl, "g").inForce shouldBe Some("g1")
+    reopened.metadataAt(tbl, "h", Some(base)) shouldBe MetadataFold(None, Some("h4"))
+    reopened.metadataAt(tbl, "h").inForce shouldBe Some("h4")
+  }
+
+  test("JsonFileTableVersions: a torn final line carrying table metadata is ignored") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_log_meta_torn")
+    val log = new JsonFileTableVersions(dir)
+    val tbl = TableName("db", "metatorn")
+    log.init(tbl, isSnapshot = true, UserId("u"), UpdateMessage("init"), Instant.now())
+    log.commit(tbl, TableUpdate(UserId("u"), UpdateMessage("m1"), Instant.now(), Nil)
+      .withTableMetadata(Map("f" -> "one")))
+    val file = dir.resolve("db.metatorn.jsonl")
+    val intact = java.nio.file.Files.readString(file)
+    // a crash left a whole commit line carrying a new value, minus its newline
+    val torn = intact.trim.linesIterator.toList.last
+      .replaceAll(""""id":"[^"]+"""", "\"id\":\"torn\"").replace("\"one\"", "\"two\"")
+    torn should include("two")
+    java.nio.file.Files.writeString(file, intact + torn)
+    val reopened = new JsonFileTableVersions(dir)
+    reopened.metadataAt(tbl, "f") shouldBe MetadataFold(Some("one"), Some("one"))
+    reopened.updates(tbl) should have size 2
+    // the next append repairs the tail: the torn value never lands
+    reopened.commit(tbl, TableUpdate(UserId("u"), UpdateMessage("m2"), Instant.now(), Nil))
+    reopened.metadataAt(tbl, "f").inForce shouldBe Some("one")
+    java.nio.file.Files.readString(file) should not include "two"
   }
 
   test("JsonFileTableVersions: checkpoint folds old history, keeps the retained tail replayable") {

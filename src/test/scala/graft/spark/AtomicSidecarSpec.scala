@@ -16,7 +16,9 @@ import graft.spark.VersionContext.DatasetVersionOps
 
 /** The metadata-file store ([[MetadataFiles]]): crash safety of its
   * atomic publish, the on-disk shapes every family reads, the legacy
-  * location-global fallback, and the locked update.
+  * location-global fallback, and the locked update. The commit-carried
+  * families (column mapping, partition eras) crash as a torn final log
+  * line, and their legacy sidecar files are refused.
   *
   * The crash this guards against: a writer that dies between truncating
   * a metadata file and finishing the new content leaves torn JSON, and
@@ -108,15 +110,46 @@ class AtomicSidecarSpec extends AnyFunSuite with Matchers {
 
   // ---------------- per-module crash tests ----------------
 
+  /** A durable-log table: its commit-carried metadata lives in the log. */
+  private def durableTable(name: String): (VersionContext, JsonFileTableVersions, TableDefinition, java.nio.file.Path) = {
+    val logDir = Files.createTempDirectory(s"graft_${name}_log")
+    val log = new JsonFileTableVersions(logDir)
+    val ctx = VersionContext(VersionedMetastore(log, new InMemoryMetastore))
+    val table = TableDefinition(
+      TableName("test", name),
+      Files.createTempDirectory(s"graft_$name").toUri,
+      PartitionSchema(List(PartitionColumn("date"))), FileFormat.Parquet)
+    ctx.init(table, user, UpdateMessage("init"))
+    (ctx, log, table, logDir.resolve(s"${table.name.fullyQualifiedName}.jsonl"))
+  }
+
+  /** A crash mid-append of a commit carrying `family`: the log ends in a
+    * whole commit line with a new value for it, minus the newline. */
+  private def tornCommit(logFile: java.nio.file.Path, family: String, value: String): Unit = {
+    val torn = TableVersions.TableUpdate(user, UpdateMessage("torn"), java.time.Instant.now(), Nil)
+      .withTableMetadata(Map(family -> value))
+    val line = json.createObjectNode()
+      .put("record", "commit").put("id", torn.metadata.id.id).put("user", user.value)
+      .put("message", "torn").put("timestamp", torn.metadata.timestamp.toString)
+    line.putObject("tableMetadata").put(family, value)
+    line.putArray("operations")
+    Files.write(logFile, json.writeValueAsString(line).getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
+  }
+
   test("column mapping survives a torn update: previous rename still resolves") {
-    val (ctx, log, table) = freshTable("atomic_map")
+    val (ctx, log, table, logFile) = durableTable("atomic_map")
     Seq((1L, "k1", "2024-01-01")).toDF("id", "kind", "date")
       .versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
     ColumnMapping.rename(spark, ctx, table, "kind", "category", user)
-    crashWrite(sidecarPath(table, "_column_mapping.json"))
-    val st = ColumnMapping.stateAt(spark, log, table, None)
+    tornCommit(logFile, MetadataFiles.columnMapping.name,
+      """[{"logical":"label","physical":"kind","dropped":false}]""")
+    val st = ColumnMapping.entriesAt(spark, log, table, None)
     st.isDefined shouldBe true
-    st.get.entries.exists(e => e.logical == "category" && e.physical == "kind") shouldBe true
+    st.get.exists(e => e.logical == "category" && e.physical == "kind") shouldBe true
+    // the next commit repairs the tail; the torn rename never lands
+    ColumnMapping.rename(spark, ctx, table, "category", "kind2", user)
+    ColumnMapping.read(spark, log, table).columns.toSeq shouldBe Seq("id", "kind2", "date")
   }
 
   test("constraints survive a torn update") {
@@ -141,15 +174,17 @@ class AtomicSidecarSpec extends AnyFunSuite with Matchers {
   }
 
   test("partition-scheme era registry survives a torn update") {
-    val (_, log, table) = freshTable("atomic_evo")
-    val anchor = log.currentCommit(table.name)
-    PartitionEvolution.cloneStateTo(
-      spark, table,
-      PartitionEvolution.SchemeState("src-commit", List("region"), None),
-      anchor, table.name)
-    crashWrite(sidecarPath(table, "_partitioning.json"))
-    val st = PartitionEvolution.states(spark, table)
-    st.map(_.columns) shouldBe List(List("region"))
+    val (ctx, log, table, logFile) = durableTable("atomic_evo")
+    Seq((1L, "k1", "2024-01-01")).toDF("id", "kind", "date")
+      .versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
+    val evolved = PartitionEvolution.evolveMetadataOnly(
+      spark, ctx, table, PartitionSchema(List(PartitionColumn("kind"))), user)
+    tornCommit(logFile, MetadataFiles.partitioning.name,
+      """{"before":["kind"],"after":["id"]}""")
+    PartitionEvolution.schemeAt(spark, log, table, None).columns.map(_.name) shouldBe List("kind")
+    Seq((2L, "k2", "2024-01-02")).toDF("id", "kind", "date")
+      .versionedInsertInto(ctx, evolved, user, UpdateMessage("v2"))
+    PartitionEvolution.schemeAt(spark, log, table, None).columns.map(_.name) shouldBe List("kind")
   }
 
   test("materialized-view definition survives a torn update") {
@@ -201,25 +236,6 @@ class AtomicSidecarSpec extends AnyFunSuite with Matchers {
       (ctx, _, t) => TableProperties.set(
         spark, ctx, t, Map(TableProperties.MergeOnRead -> "true"), user),
       t => TableProperties.list(spark, t)),
-    Row(MetadataFiles.schemaStates,
-      (_, log, t) => {
-        val at = log.currentCommit(t.name)
-        val narrow = new StructType().add("id", LongType)
-        SchemaStates.record(spark, t, narrow, at, narrow.add("kind", StringType), at)
-      },
-      t => SchemaStates.list(spark, t)),
-    Row(MetadataFiles.columnMapping,
-      (ctx, _, t) => {
-        Seq((1L, "k1", "2024-01-01")).toDF("id", "kind", "date")
-          .versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
-        ColumnMapping.rename(spark, ctx, t, "kind", "category", user)
-      },
-      t => ColumnMapping.states(spark, t)),
-    Row(MetadataFiles.partitioning,
-      (_, log, t) => PartitionEvolution.cloneStateTo(
-        spark, t, PartitionEvolution.SchemeState("src", List("region")),
-        log.currentCommit(t.name), t.name),
-      t => PartitionEvolution.states(spark, t)),
     Row(MetadataFiles.mv,
       (_, _, t) => { MetadataFiles.mv.update(spark, t)(_ => json.readTree(mvJson)); () },
       t => MaterializedView.readDef(spark, t)))
@@ -269,25 +285,6 @@ class AtomicSidecarSpec extends AnyFunSuite with Matchers {
     (MetadataFiles.tblProperties, """{"graft.dml.mergeOnRead":"true","team":"ads"}""",
       t => TableProperties.list(spark, t),
       Map(TableProperties.MergeOnRead -> "true", "team" -> "ads")),
-    (MetadataFiles.schemaStates,
-      s"""[{"commit":"c1","schema":${json.writeValueAsString(schemaJson)}}]""",
-      t => SchemaStates.list(spark, t), List(SchemaStates.State("c1", schemaJson))),
-    (MetadataFiles.columnMapping,
-      """[{"commit":"c1","table":"test.fmt","entries":[{"logical":"category","physical":"kind","dropped":false},""" +
-        """{"logical":"n","physical":"n","dropped":true,"widened":"bigint"}]},{"commit":"c2","entries":[]}]""",
-      t => ColumnMapping.states(spark, t),
-      List(
-        ColumnMapping.State("c1", List(
-          ColumnMapping.Entry("category", "kind", dropped = false),
-          ColumnMapping.Entry("n", "n", dropped = true, Some("bigint"))), Some("test.fmt")),
-        ColumnMapping.State("c2", Nil))),
-    (MetadataFiles.partitioning,
-      """[{"commit":"c1","table":"test.fmt","pending":true,"columns":["region"]},""" +
-        """{"commit":"c2","columns":["date","region"]}]""",
-      t => PartitionEvolution.states(spark, t),
-      List(
-        PartitionEvolution.SchemeState("c1", List("region"), Some("test.fmt"), pending = true),
-        PartitionEvolution.SchemeState("c2", List("date", "region")))),
     (MetadataFiles.mv, mvJson,
       t => MaterializedView.readDef(spark, t),
       MaterializedView.MvDef(
@@ -313,6 +310,34 @@ class AtomicSidecarSpec extends AnyFunSuite with Matchers {
         }
         rewrite(family)
         json.readTree(readText(p)) shouldBe json.readTree(literal)
+      }
+    }
+  }
+
+  test("every commit-carried family refuses a legacy sidecar file, naming it") {
+    val schemaJson = new StructType().add("id", LongType).json
+    // the files and shapes the earlier sidecar store wrote
+    val legacy: List[(MetadataFiles.CommitCarried[_], TableDefinition => String, String,
+        (InMemoryTableVersions, TableDefinition) => Any)] = List(
+      (MetadataFiles.columnMapping, _ => "_column_mapping.json",
+        """[{"commit":"c1","table":"test.fmt","entries":[{"logical":"category","physical":"kind","dropped":false}]}]""",
+        (log, t) => ColumnMapping.hasMapping(spark, log, t, None)),
+      (MetadataFiles.partitioning, _ => "_partitioning.json",
+        """[{"commit":"c1","columns":["region"]}]""",
+        (log, t) => PartitionEvolution.schemeAt(spark, log, t, None)),
+      (MetadataFiles.schemaStates, t => s"_schema_states/${t.name.fullyQualifiedName}.json",
+        s"""[{"commit":"c1","schema":${json.writeValueAsString(schemaJson)}}]""",
+        (log, t) => SchemaStates.at(spark, log, t, log.currentCommit(t.name))))
+    legacy.map(_._1.name).toSet shouldBe Set("column_mapping", "partitioning", "schema_states")
+    legacy.foreach { case (family, rel, literal, resolve) =>
+      withClue(family.name) {
+        val (_, log, t) = freshTable(s"legacy_${family.name}")
+        resolve(log, t) // no file, no value: resolves to nothing
+        val p = sidecarPath(t, rel(t))
+        plant(p, literal)
+        val e = intercept[IllegalStateException](resolve(log, t))
+        e.getMessage should include(p.toString)
+        e.getMessage should include("no longer reads")
       }
     }
   }

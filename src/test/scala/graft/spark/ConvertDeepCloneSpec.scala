@@ -376,20 +376,16 @@ class ConvertDeepCloneSpec extends AnyFunSuite with Matchers {
       PartitionSchema(List(PartitionColumn("date"))), FileFormat.Parquet)
     ctx.init(src, user, UpdateMessage("init"))
     events.toDS().versionedInsertInto(ctx, src, user, UpdateMessage("v1"))
-    val pre = log.currentCommit(src.name)
     // a recorded schema state marks heterogeneous file generations — a
     // raw copy registered without a carried schema could let a narrow
     // footer win the inference and drop evolved fields
+    val narrow = VersionedReader(spark, log).read(src).schema
+    val evolved = org.apache.spark.sql.types.StructType(
+      narrow.fields :+ org.apache.spark.sql.types.StructField(
+        "note", org.apache.spark.sql.types.StringType))
     ctx.metastore.commit(src.name, graft.core.TableVersions.TableUpdate(
       user, UpdateMessage("ALTER TABLE ADD COLUMNS (note)"),
-      java.time.Instant.now(), Nil))
-    val evolved = org.apache.spark.sql.types.StructType(
-      VersionedReader(spark, log).read(src).schema.fields :+
-        org.apache.spark.sql.types.StructField(
-          "note", org.apache.spark.sql.types.StringType))
-    SchemaStates.record(
-      spark, src, VersionedReader(spark, log).read(src).schema, pre,
-      evolved, log.currentCommit(src.name))
+      java.time.Instant.now(), Nil).withTableMetadata(SchemaStates.entry(narrow, evolved)))
 
     val clone = DeepClone.clone(
       spark, ctx, src, TableName("test", "deep_ss_dst"),

@@ -259,10 +259,22 @@ class PartitionEvolutionSpec extends AnyFunSuite with Matchers {
       (events :+ Event(11, "zz", "2024-03-03")).toArray
   }
 
-  // ---- intent-then-commit crash/race coverage (round 15) ----
+  // ---- crash/race coverage: the boundary commit is the era flip ----
 
-  private def registryPath(t: TableDefinition) =
-    Paths.get(t.location).resolve("_partitioning.json")
+  /** A table on a durable log, so a crash can tear the log's final line. */
+  private def durable(name: String): (VersionContext, JsonFileTableVersions, TableDefinition, java.nio.file.Path) = {
+    val dir = Files.createTempDirectory(s"graft_evolve_log_$name")
+    val log = new JsonFileTableVersions(dir)
+    val ctx = VersionContext(VersionedMetastore(log, new InMemoryMetastore))
+    val t = table(name, "date")
+    ctx.init(t, user, UpdateMessage("init"))
+    (ctx, log, t, dir.resolve(s"${t.name.fullyQualifiedName}.jsonl"))
+  }
+
+  /** The commits of `t` that carry a partition-era flip. */
+  private def boundaries(log: TableVersions, t: TableDefinition): List[String] =
+    log.updates(t.name).filter(_.tableMetadata.contains(MetadataFiles.partitioning.name))
+      .map(_.message.content)
 
   test("a writer that STAGED before the boundary cannot COMMIT after it (commit-time guard)") {
     val (ctx, log) = fresh()
@@ -292,45 +304,51 @@ class PartitionEvolutionSpec extends AnyFunSuite with Matchers {
   }
 
   test("a crash between the boundary commit and the registry finalize still resolves the new era") {
-    val (ctx, log) = fresh()
+    // a failure AFTER the boundary's log append (here: the catalog sync
+    // that follows it) cannot un-flip the era — the appended commit is it
+    val log = new InMemoryTableVersions
+    val catalog = new HookedMetastore
+    val ctx = VersionContext(VersionedMetastore(log, catalog))
     val t = table("evo_crash_finalize", "date")
     ctx.init(t, user, UpdateMessage("init"))
     Seq(Event(1, "x", "2024-01-01"), Event(2, "y", "2024-01-02")).toDS()
       .versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
-    PartitionEvolution.evolve(
-      spark, ctx, t, PartitionSchema(List(PartitionColumn("kind"))), user)
+    catalog.afterUpdate = _ => throw new RuntimeException("crash after the append")
+    (the[RuntimeException] thrownBy PartitionEvolution.evolve(
+      spark, ctx, t, PartitionSchema(List(PartitionColumn("kind"))), user))
+      .getMessage shouldBe "crash after the append"
+    catalog.afterUpdate = _ => ()
 
-    // simulate the crash: un-finalize the boundary entry (pending=true is
-    // exactly the on-disk state between commit and finalize)
-    val text = new String(Files.readAllBytes(registryPath(t)), "UTF-8")
-    text should not include "pending"
-    val unfinalized = text.replace("{\"commit\"", "{\"pending\":true,\"commit\"")
-    Files.write(registryPath(t), unfinalized.getBytes("UTF-8"))
-
-    // a landed pending state governs — and resolution finalizes the file
+    boundaries(log, t) shouldBe List("EVOLVE PARTITIONING to (kind) from (date)")
     PartitionEvolution.schemeAt(spark, log, t, None)
       .columns.map(_.name) shouldBe List("kind")
-    new String(Files.readAllBytes(registryPath(t)), "UTF-8") should not include "pending"
+    val evolved = PartitionEvolution.definitionAt(spark, log, t)
+    VersionedReader(spark, log).read(evolved).count() shouldBe 2L
+    (the[IllegalStateException] thrownBy {
+      Seq(Event(3, "z", "2024-01-03")).toDS()
+        .versionedInsertInto(ctx, t, user, UpdateMessage("stale"))
+    }).getMessage should include("stale scheme")
   }
 
   test("a dangling pending intent (crash before the boundary commit) never governs") {
-    val (ctx, log) = fresh()
-    val t = table("evo_dangling", "date")
-    ctx.init(t, user, UpdateMessage("init"))
+    // a crash BEFORE the boundary's append completes leaves at most a torn
+    // final log line — replay ignores it, so the old era governs
+    val (ctx, log, t, logFile) = durable("evo_dangling")
     Seq(Event(1, "x", "2024-01-01")).toDS()
       .versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
-
-    // what a crashed evolve leaves: a pending state whose anchor never landed
-    val intent = "[{\"commit\":\"never-landed-commit\",\"table\":\"test.evo_dangling\"," +
-      "\"pending\":true,\"columns\":[\"kind\"]}]"
-    Files.write(registryPath(t), intent.getBytes("UTF-8"))
+    val torn = """{"record":"commit","id":"never-landed","user":"u","message":"EVOLVE",""" +
+      """"timestamp":"2024-01-01T00:00:00Z","tableMetadata":{"partitioning":""" +
+      """"{\"before\":[\"date\"],\"after\":[\"kind\"]}"},"operations":[]}"""
+    Files.write(logFile, torn.getBytes("UTF-8"), java.nio.file.StandardOpenOption.APPEND)
 
     PartitionEvolution.schemeAt(spark, log, t, None)
       .columns.map(_.name) shouldBe List("date")
-    // ordinary writes keep working under the real scheme
+    // ordinary writes keep working under the real scheme (and repair the tail)
     Seq(Event(2, "y", "2024-01-02")).toDS()
       .versionedInsertInto(ctx, t, user, UpdateMessage("v2"))
     VersionedReader(spark, log).read(t).count() shouldBe 2L
+    boundaries(log, t) shouldBe Nil
+    new String(Files.readAllBytes(logFile), "UTF-8") should not include "never-landed"
   }
 
   test("evolve conflicts with ANY intervening commit — disjoint new partitions included — and rolls back its intent") {
@@ -359,12 +377,11 @@ class PartitionEvolutionSpec extends AnyFunSuite with Matchers {
     }
     boom.getMessage should include("overlaps this write's scope")
 
-    // intent rolled back: the registry never flips the scheme, no pending
-    // entry survives, and BOTH rows live under the old scheme
+    // nothing landed: no boundary commit, the scheme never flips, and
+    // BOTH rows live under the old scheme
+    boundaries(log, t) shouldBe Nil
     PartitionEvolution.schemeAt(spark, log, t, None)
       .columns.map(_.name) shouldBe List("date")
-    if (Files.exists(registryPath(t)))
-      new String(Files.readAllBytes(registryPath(t)), "UTF-8") should not include "pending"
     VersionedReader(spark, log).read(t).count() shouldBe 2L
     // and a clean evolve afterwards succeeds, carrying every row across
     val evolved = PartitionEvolution.evolve(
@@ -545,11 +562,10 @@ class PartitionEvolutionSpec extends AnyFunSuite with Matchers {
         spark, racy, t, PartitionSchema(List(PartitionColumn("kind"))), user)
     }
 
-    // the WINNER's era governs; the loser's surgical rollback left no
-    // pending garbage and did not drop the winner's registry state
+    // the WINNER's boundary is the only one in the log, and its era governs
+    boundaries(log, t) shouldBe List("EVOLVE PARTITIONING to (kind) from (date)")
     PartitionEvolution.schemeAt(spark, log, t, None)
       .columns.map(_.name) shouldBe List("kind")
-    new String(Files.readAllBytes(registryPath(t)), "UTF-8") should not include "pending"
     val evolved = t.copy(partitionSchema = PartitionSchema(List(PartitionColumn("kind"))))
     VersionedReader(spark, log).read(evolved).count() shouldBe 8L
     // and the table keeps evolving normally afterwards
@@ -632,35 +648,34 @@ class PartitionEvolutionSpec extends AnyFunSuite with Matchers {
     (1L to 6L).map(i => Event(i, if (i % 2 == 0) "x" else "y", "2024-01-01")).toDS()
       .versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
 
-    // what a concurrent evolve (or a shared-location clone mid-commit)
-    // leaves in the file the instant before OUR evolve rewrites it: a
-    // pending intent whose anchor is not in OUR log. The old registry
-    // writer pruned these wholesale — permanently erasing a racer's
-    // committed-but-unfinalized state; the merged writer must carry it.
-    val foreign = "[{\"commit\":\"racer-in-flight-commit\",\"table\":\"test.someone_else\"," +
-      "\"pending\":true,\"columns\":[\"region\"]}]"
-    Files.write(registryPath(t), foreign.getBytes("UTF-8"))
+    // a racer's STAGED (detached) boundary appended just before ours: our
+    // append never rewrites it away, and it never governs the mainline
+    val racer = TableVersions.TableUpdate(
+      UserId("racer"), UpdateMessage("racer staged boundary"), java.time.Instant.now(), Nil)
+      .withTableMetadata(MetadataFiles.partitioning.entry(
+        MetadataFiles.Change(List("date"), List("region"))))
+    log.commitDetached(t.name, racer)
 
     val evolved = PartitionEvolution.evolve(
       spark, ctx, t, PartitionSchema(List(PartitionColumn("kind"))), user)
     VersionedReader(spark, log).read(evolved).count() shouldBe 6L
     PartitionEvolution.schemeAt(spark, log, t, None)
       .columns.map(_.name) shouldBe List("kind")
-
-    // the racer's intent SURVIVED every registry rewrite of the evolve
-    // (intent append, finalize) — and still never governs this lineage
-    val text = new String(Files.readAllBytes(registryPath(t)), "UTF-8")
-    text should include("racer-in-flight-commit")
-    text should include("test.someone_else")
+    log.updates(t.name).map(_.id) should contain(racer.metadata.id)
+    boundaries(log, t) shouldBe List(
+      "EVOLVE PARTITIONING to (kind) from (date)", "racer staged boundary")
+    // the staged era resolves only for an audit read of its own commit
+    PartitionEvolution.schemeAt(spark, log, t, Some(racer.metadata.id))
+      .columns.map(_.name) shouldBe List("region")
   }
 
   test("an EMPTY table evolves twice at the same commit: the second boundary still lands") {
     val (ctx, log) = fresh()
     val t = table("evo_empty_twice", "date")
     ctx.init(t, user, UpdateMessage("init"))
-    // no data commits: both boundaries are registry-only, anchored at the
-    // SAME read commit — the idempotence check must match on (anchor,
-    // columns), not anchor alone, or the second evolve silently no-ops
+    // no data commits: each boundary is an empty-ops commit of its own,
+    // so a second evolve (and a cycle back) can never be mistaken for an
+    // idempotent retry of the first
     val toKind = PartitionEvolution.evolve(
       spark, ctx, t, PartitionSchema(List(PartitionColumn("kind"))), user)
     PartitionEvolution.schemeAt(spark, log, t, None)
@@ -669,14 +684,13 @@ class PartitionEvolutionSpec extends AnyFunSuite with Matchers {
       spark, ctx, toKind, PartitionSchema(List(PartitionColumn("id"))), user)
     PartitionEvolution.schemeAt(spark, log, t, None)
       .columns.map(_.name) shouldBe List("id")
-    // a CYCLE back to the ORIGINAL scheme at the same anchor: the seed
-    // entry already says (date) but (id) still governs — the idempotence
-    // check must compare the GOVERNING (last) entry at the anchor, not
-    // any historical one, or this evolve silently no-ops
+    // a CYCLE back to the ORIGINAL scheme: (date) was the scheme before
+    // the first boundary, but (id) governs until a new boundary lands
     val backToDate = PartitionEvolution.evolve(
       spark, ctx, toId, PartitionSchema(List(PartitionColumn("date"))), user)
     PartitionEvolution.schemeAt(spark, log, t, None)
       .columns.map(_.name) shouldBe List("date")
+    boundaries(log, t).size shouldBe 3
     // writes under the final scheme work; the stale handles refuse
     Seq(Event(1, "x", "2024-01-01")).toDS()
       .versionedInsertInto(ctx, backToDate, user, UpdateMessage("v1"))
@@ -688,95 +702,63 @@ class PartitionEvolutionSpec extends AnyFunSuite with Matchers {
   }
 
   test("registry lock: a racer's FULL write+verify cycle inside our read→rename window blocks; both edits survive") {
-    // the round-16 `weak`: without mutual exclusion, a racer that
-    // completes its whole cycle (write + verify-own-edit passes) inside
-    // our re-read→rename gap is silently clobbered by our rename. The
-    // MetadataLock serializes whole cycles, so the injected racer BLOCKS
-    // until ours releases — then lands, and both edits survive.
+    // the racer shares our LOCATION (a shallow clone — the case that once
+    // shared one era file) and runs a whole evolve inside our read→commit
+    // window; each lineage's boundary lands in its own log, so both edits
+    // survive and neither era leaks into the other
     val (ctx, log) = fresh()
     val t = table("evo_registry_lock", "date")
     ctx.init(t, user, UpdateMessage("init"))
     (1L to 6L).map(i => Event(i, if (i % 2 == 0) "x" else "y", "2024-01-01")).toDS()
       .versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
+    val fork = ShallowClone.clone(spark, ctx, t, TableName("test", "evo_registry_lock_fork"), user)
 
-    val racerDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-    var racer: Thread = null
-    var blockedWhileHeld = false
-    var fired = false
-    val inject: () => Unit = () => {
-      if (!fired) {
-        fired = true
-        racer = new Thread {
-          override def run(): Unit = {
-            // a full registry update of its own (cloneStateTo goes
-            // through the store's locked update): must serialize behind
-            // our lock
-            PartitionEvolution.cloneStateTo(
-              spark, t,
-              PartitionEvolution.SchemeState("racer-anchor", List("region"), None),
-              graft.core.TableVersions.CommitId("racer-anchor"),
-              TableName("test", "other"))
-            racerDone.set(true)
-          }
-        }
-        racer.start()
-        Thread.sleep(300) // give the racer time to reach the lock
-        blockedWhileHeld = !racerDone.get() // still waiting = excluded
+    var racerDone = false
+    val racy = ctx.copy(newVersion = () => {
+      if (!racerDone) {
+        PartitionEvolution.evolve(
+          spark, ctx, fork, PartitionSchema(List(PartitionColumn("id"))), user)
+        racerDone = true
       }
-    }
-    val evolved = MetadataFiles.beforePublishForTest.withValue(_ => inject()) {
-      PartitionEvolution.evolve(
-        spark, ctx, t, PartitionSchema(List(PartitionColumn("kind"))), user)
-    }
-    racer.join(60000)
-    racerDone.get() shouldBe true
-    blockedWhileHeld shouldBe true
+      Version.generateVersion()
+    })
+    val evolved = PartitionEvolution.evolve(
+      spark, racy, t, PartitionSchema(List(PartitionColumn("kind"))), user)
+    racerDone shouldBe true
 
-    // both edits survived: the evolve governs, the racer's entry persists
     PartitionEvolution.schemeAt(spark, log, t, None)
       .columns.map(_.name) shouldBe List("kind")
+    PartitionEvolution.schemeAt(spark, log, fork, None)
+      .columns.map(_.name) shouldBe List("id")
     VersionedReader(spark, log).read(evolved).count() shouldBe 6L
-    val text = new String(Files.readAllBytes(registryPath(t)), "UTF-8")
-    text should include("racer-anchor")
-    // the lock file released
-    Files.exists(
-      registryPath(t).getParent.resolve("._partitioning.json.lock")) shouldBe false
+    VersionedReader(spark, log).read(
+      PartitionEvolution.definitionAt(spark, log, fork)).count() shouldBe 6L
+    boundaries(log, t) shouldBe List("EVOLVE PARTITIONING to (kind) from (date)")
+    boundaries(log, fork) shouldBe List("EVOLVE PARTITIONING to (id) from (date)")
   }
 
   test("a racer's rename landing AFTER our registry publish is detected and re-merged (verify-retry)") {
-    val (ctx, log) = fresh()
+    // the metadata store's verify-retry, on a family it still keeps: a
+    // racer bypassing the lock replaces the constraints file right after
+    // each of our publishes, from a read that predates our write
+    val (ctx, _) = fresh()
     val t = table("evo_registry_retry", "date")
     ctx.init(t, user, UpdateMessage("init"))
-    (1L to 6L).map(i => Event(i, if (i % 2 == 0) "x" else "y", "2024-01-01")).toDS()
-      .versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
-
-    // the racer: a whole-file rename landing in the publish→verify window,
-    // built from a read that PREDATES our write — the atomic-rename loser
-    // scenario the merge-by-union retry exists for. Fire once per distinct
-    // registry rewrite (the evolve performs several), clobbering each.
-    val racer = "{\"commit\":\"racer-clobber-commit\",\"table\":\"test.other\"," +
-      "\"pending\":true,\"columns\":[\"region\"]}"
+    val racer = """[{"name":"racer_check","kind":"check","expr":"id > 0"}]"""
+    val file = Paths.get(MetadataFiles.constraints.path(t).toUri)
     var fired = 0
     val clobber: () => Unit = () => {
-      // overwrite with ONLY the racer's content: our just-published edit
-      // is gone, exactly as if the racer's rename landed second
       if (fired < 3) {
         fired += 1
-        Files.write(registryPath(t), s"[$racer]".getBytes("UTF-8"))
+        Files.write(file, racer.getBytes("UTF-8"))
       }
     }
-    val evolved = MetadataFiles.afterPublishForTest.withValue(_ => clobber()) {
-      PartitionEvolution.evolve(
-        spark, ctx, t, PartitionSchema(List(PartitionColumn("kind"))), user)
+    MetadataFiles.afterPublishForTest.withValue(_ => clobber()) {
+      Constraints.add(spark, ctx, t, Constraints.notNull("id"), user)
     }
     fired should be >= 1
 
-    // our edits were re-merged against the racer's content: the new era
-    // governs AND the racer's entry survived
-    PartitionEvolution.schemeAt(spark, log, t, None)
-      .columns.map(_.name) shouldBe List("kind")
-    VersionedReader(spark, log).read(evolved).count() shouldBe 6L
-    val text = new String(Files.readAllBytes(registryPath(t)), "UTF-8")
-    text should include("racer-clobber-commit")
+    // our edit was re-merged against the racer's content: both survive
+    Constraints.list(spark, t).map(_.name).toSet shouldBe Set("racer_check", "id_not_null")
   }
 }

@@ -25,6 +25,36 @@ class RenameTravelCloneSpec extends AnyFunSuite with Matchers {
 
   private val user = UserId("rename-travel")
 
+  test("VERSION AS OF a RENAME commit serves the new name when another commit lands right after it") {
+    val log = new InMemoryTableVersions
+    val catalog = new HookedMetastore
+    val ctx = VersionContext(VersionedMetastore(log, catalog))
+    val table = TableDefinition(
+      TableName("test", "rt_interleave"),
+      Files.createTempDirectory("graft_rt_interleave").toUri,
+      PartitionSchema(List(PartitionColumn("date"))), FileFormat.Parquet)
+    ctx.init(table, user, UpdateMessage("init"))
+    (1L to 3L).map(i => Event(i, s"k$i", "a"))
+      .toDS().versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
+    // another writer's commit lands after the RENAME's log append and
+    // before the rename returns (its catalog sync runs in between)
+    var fired = false
+    catalog.afterUpdate = t => if (!fired) {
+      fired = true
+      log.commit(t, TableVersions.TableUpdate(
+        UserId("other"), UpdateMessage("other writer"), java.time.Instant.now(), Nil))
+    }
+    ColumnMapping.rename(spark, ctx, table, "kind", "category", user)
+    fired shouldBe true
+    val history = log.updates(table.name).map(_.message.content)
+    history.take(2) shouldBe List("other writer", "ALTER TABLE RENAME COLUMN kind TO category")
+    val renameCommit = log.updates(table.name)(1).id
+    ColumnMapping.read(spark, log, table, Some(renameCommit)).columns should contain("category")
+    ColumnMapping.read(spark, log, table, Some(renameCommit)).columns should not contain "kind"
+    ColumnMapping.read(spark, log, table).select("category").as[String].collect().sorted shouldBe
+      Array("k1", "k2", "k3")
+  }
+
   test("AS OF reads and both clone kinds serve real values across a later rename + reorder") {
     val log = new InMemoryTableVersions
     val ctx = VersionContext(VersionedMetastore(log, new InMemoryMetastore))

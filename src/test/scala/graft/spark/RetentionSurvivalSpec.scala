@@ -15,10 +15,9 @@ import graft.spark.VersionContext.DatasetVersionOps
  * commits — and the anchors/marks riding them — out of the retained
  * history. Resolution must not silently revert when its anchor ages out:
  *
- *  - mapping / evolution registries fall back to the newest state whose
- *    anchor predates the whole retained history (everything retained is
- *    at-or-after it), filtered to THIS table's own states (shared-file
- *    clone states carry their owner's name);
+ *  - commit-carried metadata (column mapping, partition era, nested
+ *    schema state) rides the checkpoint base, which carries the newest
+ *    value of each family the folded commits carried;
  *  - the identity write path falls back to the max id physically present
  *    in the files when no mark survives — ids never restart.
  */
@@ -61,6 +60,42 @@ class RetentionSurvivalSpec extends AnyFunSuite with Matchers {
     ColumnMapping.applyLogical(
       VersionedReader(spark, log).read(t), spark, log, t, None)
       .columns should contain("label")
+  }
+
+  test("a nested struct shape survives checkpointing its anchor away") {
+    import org.apache.spark.sql.functions.{lit, struct}
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
+    val (ctx, log, t) = durable("nested_ckpt")
+    def batch(id: Long, date: String, wide: Boolean) = {
+      val rows = Seq((id, "en", date)).toDF("id", "lang", "date")
+      val meta = if (wide) struct(col("lang"), lit("c").as("cust")) else struct(col("lang"))
+      rows.select(col("id"), meta.as("meta"), col("date"))
+    }
+    batch(1, "2024-01-01", wide = false)
+      .versionedInsertInto(ctx, t, user, UpdateMessage("c1"))
+    spark.conf.set("spark.sql.catalog.graftret", classOf[GraftTableCatalog].getName)
+    GraftTableCatalog.bind("graftret", log)
+    GraftTableCatalog.register("graftret", t, Some(new StructType()
+      .add("id", LongType).add("meta", new StructType().add("lang", StringType))
+      .add("date", StringType)))
+    spark.sql("ALTER TABLE graftret.db.nested_ckpt ADD COLUMN meta.cust STRING") // c2
+    batch(3, "2024-01-03", wide = true).versionedInsertInto(ctx, t, user, UpdateMessage("c3"))
+    val c3 = log.currentCommit(t.name)
+    batch(4, "2024-01-04", wide = true).versionedInsertInto(ctx, t, user, UpdateMessage("c4"))
+    val c4 = log.currentCommit(t.name)
+    // fold everything but c4 into a base at c3: the ADD's commit goes
+    log.checkpoint(t.name, keepLast = 1) shouldBe true
+    log.updates(t.name).map(_.id) shouldBe List(c4, c3)
+
+    Seq(c3 -> 3L, c4 -> 4L).foreach { case (c, id) =>
+      withClue(c.id) {
+        val travelled = spark.sql(s"SELECT * FROM graftret.db.nested_ckpt VERSION AS OF '${c.id}'")
+        travelled.schema("meta").dataType.asInstanceOf[StructType].fieldNames.toSeq shouldBe
+          Seq("lang", "cust")
+        travelled.where(col("id") === id).select("meta.cust").as[String].collect().toSeq shouldBe
+          Seq("c")
+      }
+    }
   }
 
   test("an evolved scheme survives checkpointing the boundary away; stale writers still refuse") {

@@ -182,7 +182,7 @@ class VacuumSpec extends AnyFunSuite with Matchers {
     ctx.init(table, user, UpdateMessage("init"))
     Seq(User(1L, "v1")).toDS().versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
     val keyedDirs = List("_constraints", "_generated", "_identity", "_defaults",
-      "_comments", "_tblproperties", "_schema_states")
+      "_comments", "_tblproperties")
     MetadataFiles.families.filter(_.keyed).map("_" + _.name) shouldBe keyedDirs
     val root = Paths.get(table.location)
     val hourAgo = java.nio.file.attribute.FileTime.fromMillis(
