@@ -162,11 +162,12 @@ object Bench {
     // BENCH_FULL additionally carries the full per-query ratio map (too
     // large for the driver's stdout tail) so a regression hunt can rank
     // queries by ratio without re-deriving the reference join.
+    val ratioOf = common.map { case (k, v) => k -> v / math.max(ref(k), 1e-9) }
     val fullRecord =
       if (common.isEmpty) record
       else {
-        val ratios = common
-          .map { case (k, v) => f""""$k":${v / math.max(ref(k), 1e-9)}%.2f""" }
+        val ratios = ratioOf
+          .map { case (k, r) => f""""$k":$r%.2f""" }
           .mkString("{", ",", "}")
         record.dropRight(1) + s""","ref_ratios":$ratios}"""
       }
@@ -180,7 +181,19 @@ object Bench {
     // No "queries" field and a distinct metric name: a consumer that sums
     // "total" records must not double-count, and a last-record-wins parser
     // must not mistake this safety line for the full per-query record.
-    println(s"""{"metric":"total_tail","value":$total,"unit":"sec","sf":"$sfDir"$refSuffix}""")
+    // It also summarizes the per-query ratios the tail cannot hold: their
+    // geometric mean, how many queries run at >= 1.2x the reference, and
+    // the five worst by name (tools/bench_diff.py diffs two full records).
+    val ratioSummary =
+      if (ratioOf.isEmpty) ""
+      else {
+        val geomean =
+          math.exp(ratioOf.map { case (_, r) => math.log(math.max(r, 1e-9)) }.sum / ratioOf.size)
+        val worst = ratioOf.sortBy { case (k, r) => (-r, k) }.take(5)
+          .map { case (k, r) => f""""$k":$r%.2f""" }.mkString("{", ",", "}")
+        f""","ref_geomean":$geomean%.3f,"ref_slow_n":${ratioOf.count(_._2 >= 1.2)},"ref_worst":$worst"""
+      }
+    println(s"""{"metric":"total_tail","value":$total,"unit":"sec","sf":"$sfDir"$refSuffix$ratioSummary}""")
     spark.stop()
   }
 }

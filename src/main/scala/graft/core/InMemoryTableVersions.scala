@@ -171,12 +171,15 @@ final class InMemoryTableVersions extends TableVersions {
       }
     }
 
-  override protected def tableState(table: TableName): TableState =
+  override protected[core] def tableState(table: TableName): TableState =
     ref.get().getOrElse(table, throw unknownTableError(table))
 
-  override protected def handleInit(table: TableName)(newTableState: => TableState): Unit =
+  override protected[core] def handleInit(table: TableName)(newTableState: => TableState): Boolean = {
+    var created = false
     modify { states =>
-      if (states.contains(table)) Right(states)
-      else Right(states + (table -> newTableState))
+      created = !states.contains(table)
+      if (created) Right(states + (table -> newTableState)) else Right(states)
     }
+    created
+  }
 }

@@ -2,6 +2,7 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import java.time.Instant
 
 import scala.jdk.CollectionConverters._
@@ -38,7 +39,7 @@ import TableVersions._
  * broken.
  */
 final class JsonFileTableVersions(logDir: Path) extends TableVersions {
-  import JsonFileTableVersions.{LockBreakRecheckMs, LockRetryMs, LockTimeoutMs}
+  import JsonFileTableVersions._
 
   Files.createDirectories(logDir)
   private val mapper = new ObjectMapper()
@@ -131,78 +132,155 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
 
   // -------------------------------------------------------------- replay
 
+  private def parseLine(line: String): Rec = {
+    val node = mapper.readTree(line).asInstanceOf[ObjectNode]
+    node.get("record").asText() match {
+      case "commit" =>
+        val meta = TableUpdateMetadata(
+          CommitId(node.get("id").asText()),
+          UserId(node.get("user").asText()),
+          UpdateMessage(node.get("message").asText()),
+          Instant.parse(node.get("timestamp").asText()),
+          // optional stream-txn marker (absent in pre-r11 logs)
+          txn = Option(node.get("txnApp")).map(app =>
+            StreamTxn(app.asText(), node.get("txnBatch").asLong())),
+          detached = Option(node.get("detached")).exists(_.asBoolean()),
+          // optional commit-carried table metadata (absent when none)
+          tableMetadata = Option(node.get("tableMetadata")).map(_.properties.asScala
+            .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty))
+        val ops = node.get("operations").asInstanceOf[ArrayNode]
+        CommitRec(
+          TableUpdate(meta, (0 until ops.size()).toList
+            .map(i => opFromJson(ops.get(i).asInstanceOf[ObjectNode]))),
+          Option(node.get("txnPending")).map(_.asText()))
+      case "checkout"   => CheckoutRec(CommitId(node.get("id").asText()))
+      case "attach"     => AttachRec(CommitId(node.get("id").asText()))
+      case "ref"        =>
+        RefRec(node.get("name").asText(),
+          RefEntry(CommitId(node.get("id").asText()), node.get("tag").asBoolean()))
+      case "ref-delete" => RefDeleteRec(node.get("name").asText())
+      case other        => sys.error(s"unknown log record: $other")
+    }
+  }
+
+  /** A commit line of a multi-table transaction whose commit point never
+    * landed: pending or aborted — invisible to every fold, not
+    * addressable, exactly as if the append never happened. */
+  private def pendingTxn(r: Rec): Boolean = r match {
+    case CommitRec(_, Some(t)) => !txnCommitted(t)
+    case _                     => false
+  }
+
+  /** Fold parsed lines into (updates, pointer, refs); None while no
+    * visible commit moved the pointer. */
+  private def fold(records: Vector[Rec]): Option[TableState] = {
+    val updates = scala.collection.mutable.ListBuffer.empty[TableUpdate]
+    var pointer: Option[CommitId] = None
+    var refs = Map.empty[String, RefEntry]
+    records.foreach {
+      case r if pendingTxn(r) => ()
+      case CommitRec(u, _) =>
+        updates += u
+        // a DETACHED commit (branch write) is history without a pointer
+        // move — main readers never see it until published
+        if (!u.metadata.detached) pointer = Some(u.metadata.id)
+      case CheckoutRec(id) => pointer = Some(id)
+      case AttachRec(id) =>
+        // publish cleared a staged commit's detached mark in place
+        val i = updates.indexWhere(_.metadata.id == id)
+        if (i >= 0) {
+          val u = updates(i)
+          updates(i) = u.copy(metadata = u.metadata.copy(detached = false))
+        }
+      case RefRec(name, e)    => refs += name -> e
+      case RefDeleteRec(name) => refs -= name
+    }
+    pointer.map(p => TableState(p, updates.toList, refs))
+  }
+
+  /** The parsed lines of one log file as of its `(fileKey, size, mtime)`
+    * stat: `consumed` bytes (through the last newline) parsed into
+    * `records`, `head` the file's first line. */
+  private final class Parsed(
+      val fileKey: AnyRef, val size: Long, val mtime: FileTime, val consumed: Long,
+      val head: Array[Byte], val records: Vector[Rec]) {
+    private val mayHidePending = records.exists {
+      case CommitRec(_, Some(_)) => true
+      case _                     => false
+    }
+    private lazy val stable = fold(records)
+    /** The folded state. Lines of a multi-table transaction re-check its
+      * marker on every fold; without them the fold cannot change until
+      * the file does. */
+    def state: Option[TableState] = if (mayHidePending) fold(records) else stable
+  }
+
+  /** THE LOG CACHE: each file's parsed lines, exact against the file.
+    * One stat per read; an unchanged `(fileKey, size, mtime)` serves the
+    * cached lines. A grown file with the same key and first line parses
+    * only the newline-terminated bytes after `consumed`. Anything else — a
+    * checkpoint or init rewrite (an atomic rename, which may reuse an
+    * inode number of an older generation, but always writes a new first
+    * line), a truncated or a vanished file — parses from scratch. */
+  private val parsed = new java.util.concurrent.ConcurrentHashMap[TableName, Parsed]()
+
   /** Replay the file into (updates, pointer). Missing file → None.
     *
     * Only NEWLINE-TERMINATED lines are trusted: an unterminated tail is the
-    * torn remainder of a crashed append, which `truncateTornTail` will
-    * remove before the next write. Parsing it when it happens to be
+    * torn remainder of a crashed append, which [[appendLines]] removes
+    * before the next write. Parsing it when it happens to be
     * complete JSON would let readers observe a commit the repair then
     * deletes — non-monotonic history. A malformed TERMINATED line is real
     * corruption and throws. */
-  private def loadState(table: TableName): Option[TableState] = {
+  private def loadState(table: TableName): Option[TableState] =
+    load(table).flatMap(_.state)
+
+  private def load(table: TableName): Option[Parsed] = {
     val f = fileFor(table)
-    if (!Files.exists(f)) None
-    else {
-      val raw = Files.readAllBytes(f)
-      val visibleEnd = raw.lastIndexOf('\n'.toByte)
-      if (visibleEnd < 0) None // nothing durable yet — only a torn tail
-      else {
-        val lines = new String(raw, 0, visibleEnd + 1, StandardCharsets.UTF_8)
-          .split("\n").iterator.filter(_.nonEmpty)
-        val updates = scala.collection.mutable.ListBuffer.empty[TableUpdate]
-        var pointer: Option[CommitId] = None
-        var refs = Map.empty[String, RefEntry]
-        lines.foreach { line =>
-          val node = mapper.readTree(line).asInstanceOf[ObjectNode]
-          node.get("record").asText() match {
-            case "commit" if Option(node.get("txnPending")).exists(t =>
-                !txnCommitted(t.asText())) =>
-              // a multi-table transaction member whose commit point never
-              // landed: pending or aborted — invisible to every fold, not
-              // addressable, exactly as if the append never happened
-              ()
-            case "commit" =>
-              val detached = Option(node.get("detached")).exists(_.asBoolean())
-              val meta = TableUpdateMetadata(
-                CommitId(node.get("id").asText()),
-                UserId(node.get("user").asText()),
-                UpdateMessage(node.get("message").asText()),
-                Instant.parse(node.get("timestamp").asText()),
-                // optional stream-txn marker (absent in pre-r11 logs)
-                txn = Option(node.get("txnApp")).map(app =>
-                  StreamTxn(app.asText(), node.get("txnBatch").asLong())),
-                detached = detached,
-                // optional commit-carried table metadata (absent when none)
-                tableMetadata = Option(node.get("tableMetadata")).map(_.properties.asScala
-                  .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty))
-              val ops = node.get("operations").asInstanceOf[ArrayNode]
-              val parsed = (0 until ops.size()).toList
-                .map(i => opFromJson(ops.get(i).asInstanceOf[ObjectNode]))
-              updates += TableUpdate(meta, parsed)
-              // a DETACHED commit (branch write) is history without a
-              // pointer move — main readers never see it until published
-              if (!detached) pointer = Some(meta.id)
-            case "checkout" =>
-              pointer = Some(CommitId(node.get("id").asText()))
-            case "attach" =>
-              // publish cleared a staged commit's detached mark in place
-              val id = CommitId(node.get("id").asText())
-              val i = updates.indexWhere(_.metadata.id == id)
-              if (i >= 0) {
-                val u = updates(i)
-                updates(i) = u.copy(metadata = u.metadata.copy(detached = false))
-              }
-            case "ref" =>
-              refs += node.get("name").asText() ->
-                RefEntry(CommitId(node.get("id").asText()), node.get("tag").asBoolean())
-            case "ref-delete" =>
-              refs -= node.get("name").asText()
-            case other => sys.error(s"unknown log record: $other")
-          }
+    val attrs =
+      try Some(Files.readAttributes(f, classOf[BasicFileAttributes]))
+      catch { case _: java.nio.file.NoSuchFileException => None }
+    attrs match {
+      case None =>
+        parsed.remove(table)
+        None
+      case Some(a) =>
+        val cached = Option(parsed.get(table))
+        cached match {
+          case Some(c) if c.fileKey == a.fileKey && c.size == a.size &&
+              c.mtime == a.lastModifiedTime => cached
+          case _ =>
+            val next = reparse(f, a, cached)
+            if (next.consumed == 0) parsed.remove(table) else parsed.put(table, next)
+            Some(next)
         }
-        pointer.map(p => TableState(p, updates.toList, refs))
-      }
     }
+  }
+
+  private def reparse(f: Path, a: BasicFileAttributes, cached: Option[Parsed]): Parsed = {
+    val ch = java.nio.channels.FileChannel.open(f, java.nio.file.StandardOpenOption.READ)
+    try {
+      def read(from: Long, until: Long): Array[Byte] = {
+        val buf = java.nio.ByteBuffer.allocate((until - from).toInt)
+        var p = from
+        var n = 0
+        while (buf.hasRemaining && n >= 0) {
+          n = ch.read(buf, p)
+          if (n > 0) p += n
+        }
+        java.util.Arrays.copyOf(buf.array(), buf.position())
+      }
+      val grown = cached.filter(c => c.fileKey == a.fileKey && a.size >= c.consumed &&
+        java.util.Arrays.equals(read(0, c.head.length), c.head))
+      val from = grown.fold(0L)(_.consumed)
+      val raw = read(from, a.size)
+      val end = raw.lastIndexOf('\n'.toByte) + 1
+      val lines = new String(raw, 0, end, StandardCharsets.UTF_8)
+        .split("\n").iterator.filter(_.nonEmpty).map(parseLine).toVector
+      val head = grown.fold(raw.take(raw.indexOf('\n'.toByte) + 1))(_.head)
+      new Parsed(a.fileKey, a.size, a.lastModifiedTime, from + end, head,
+        grown.fold(lines)(_.records ++ lines))
+    } finally ch.close()
   }
 
   /** Best-effort directory fsync: without it a crash can lose the DIRECTORY
@@ -210,10 +288,10 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
     * would reboot as "not tracked" with its acknowledged commits gone.
     * Opening a directory read-only works on Linux; platforms that refuse
     * simply skip (same best-effort posture as Lucene/Kafka). */
-  private def fsyncDir(): Unit =
+  private def fsyncDir(dir: Path = logDir): Unit =
     try {
       val ch = java.nio.channels.FileChannel.open(
-        logDir, java.nio.file.StandardOpenOption.READ)
+        dir, java.nio.file.StandardOpenOption.READ)
       try ch.force(true) finally ch.close()
     } catch { case _: java.io.IOException => () }
 
@@ -234,68 +312,24 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
     fsyncDir()
   }
 
-  /** True append: O(lines) bytes per commit, fsync'd before returning. If
-    * the previous writer crashed mid-append, first truncate its torn tail so
-    * our lines start on a clean boundary. */
+  /** True append: O(lines) bytes per commit, fsync'd before returning.
+    * Runs under the table lock after the caller's read, which parsed the
+    * file through its last newline: bytes past that are the torn tail of
+    * a crashed append, truncated first so our lines start on a clean
+    * boundary. */
   private def appendLines(table: TableName, lines: Seq[String]): Unit = {
-    val f = fileFor(table)
-    val existed = Files.exists(f)
-    truncateTornTail(f)
+    val clean = load(table).fold(0L)(_.consumed)
     val bytes = lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)
     val ch = java.nio.channels.FileChannel.open(
-      f,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE,
-      java.nio.file.StandardOpenOption.APPEND)
+      fileFor(table), java.nio.file.StandardOpenOption.WRITE)
     try {
-      ch.write(java.nio.ByteBuffer.wrap(bytes))
+      if (ch.size() > clean) ch.truncate(clean)
+      val buf = java.nio.ByteBuffer.wrap(bytes)
+      var at = clean
+      while (buf.hasRemaining) at += ch.write(buf, at)
       ch.force(true)
     } finally ch.close()
-    if (!existed) fsyncDir() // the new file's directory entry must survive too
   }
-
-  /** If the file doesn't end in '\n' a previous append was cut short —
-    * drop the partial line (runs under the table lock). */
-  private def truncateTornTail(f: Path): Unit =
-    if (Files.exists(f) && Files.size(f) > 0) {
-      val ch = java.nio.channels.FileChannel.open(
-        f, java.nio.file.StandardOpenOption.READ, java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val size = ch.size()
-        // positional reads may return short — loop until the requested range
-        // is fully consumed, else the backward scan would walk stale/zero
-        // bytes left in the reused buffer and truncate committed lines
-        def readFully(buf: java.nio.ByteBuffer, from: Long): Unit = {
-          var p = from
-          while (buf.hasRemaining) {
-            val n = ch.read(buf, p)
-            if (n < 0) sys.error(s"unexpected EOF reading $f at offset $p")
-            p += n
-          }
-        }
-        val one = java.nio.ByteBuffer.allocate(1)
-        readFully(one, size - 1)
-        if (one.get(0) != '\n') {
-          // scan back to the last newline (or start of file)
-          var pos = size - 1
-          var found = -1L
-          val buf = java.nio.ByteBuffer.allocate(8192)
-          while (found < 0 && pos > 0) {
-            val from = math.max(0L, pos - buf.capacity)
-            buf.clear(); buf.limit((pos - from).toInt)
-            readFully(buf, from)
-            var i = buf.limit() - 1
-            while (i >= 0 && found < 0) {
-              if (buf.get(i) == '\n') found = from + i
-              i -= 1
-            }
-            pos = from
-          }
-          ch.truncate(found + 1)
-          ch.force(true)
-        }
-      } finally ch.close()
-    }
 
   /** Serialize a read-modify-rename cycle under a create-exclusive lock
     * file carrying a unique owner token.
@@ -387,15 +421,21 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
 
   // ------------------------------------------------------------ contract
 
+  /** The table's state, refusing `id` if it already names a commit: ids
+    * resolve by FIRST occurrence in the fold, so a duplicate (e.g. a blind
+    * retry reusing the same TableUpdate) would make the pointer silently
+    * resolve to the OLD commit, hiding everything after it. */
+  private def freshState(table: TableName, id: CommitId): TableState = {
+    val state = tableState(table)
+    if (state.updates.exists(_.metadata.id == id))
+      throw new IllegalArgumentException(
+        s"commit id ${id.id} already exists in the history of ${table.fullyQualifiedName}")
+    state
+  }
+
   override def commit(table: TableName, update: TableUpdate): Unit =
     withTableLock(table) {
-      val state = loadState(table).getOrElse(throw unknownTableError(table))
-      // commit ids resolve by FIRST occurrence in the fold — a duplicate
-      // (e.g. a blind retry reusing the same TableUpdate) would make the
-      // pointer silently resolve to the OLD commit, hiding everything after
-      if (state.updates.exists(_.metadata.id == update.metadata.id))
-        throw new IllegalArgumentException(
-          s"commit id ${update.metadata.id.id} already exists in the history of ${table.fullyQualifiedName}")
+      freshState(table, update.metadata.id)
       appendLines(table,
         Seq(commitLine(update.copy(metadata = update.metadata.copy(detached = false)))))
     }
@@ -427,19 +467,11 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
     * between prepare and commit point). Returns the transaction id. */
   private[core] def txnPrepare(commits: Seq[(TableName, TableUpdate)]): String = {
     // validate everything first — a failed transaction should leave nothing
-    commits.foreach { case (t, u) =>
-      val state = loadState(t).getOrElse(throw unknownTableError(t))
-      if (state.updates.exists(_.metadata.id == u.metadata.id))
-        throw new IllegalArgumentException(
-          s"commit id ${u.metadata.id.id} already exists in the history of ${t.fullyQualifiedName}")
-    }
+    commits.foreach { case (t, u) => freshState(t, u.metadata.id) }
     val txnId = java.util.UUID.randomUUID().toString
     commits.sortBy(_._1.fullyQualifiedName).foreach { case (t, u) =>
       withTableLock(t) {
-        val state = loadState(t).getOrElse(throw unknownTableError(t))
-        if (state.updates.exists(_.metadata.id == u.metadata.id))
-          throw new IllegalArgumentException(
-            s"commit id ${u.metadata.id.id} already exists in the history of ${t.fullyQualifiedName}")
+        freshState(t, u.metadata.id)
         appendLines(t, Seq(commitLine(
           u.copy(metadata = u.metadata.copy(detached = false)), txnPending = Some(txnId))))
       }
@@ -454,11 +486,7 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
     Files.write(txnDir.resolve(s"$txnId.committed"), Array.emptyByteArray,
       java.nio.file.StandardOpenOption.CREATE_NEW)
     // the marker's directory entry must survive a crash, like the log's
-    try {
-      val ch = java.nio.channels.FileChannel.open(
-        txnDir, java.nio.file.StandardOpenOption.READ)
-      try ch.force(true) finally ch.close()
-    } catch { case _: java.io.IOException => () }
+    fsyncDir(txnDir)
   }
 
   private def txnDir: Path = logDir.resolve("_txns")
@@ -472,55 +500,27 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
       yes
     }
 
-  /** Does the raw file hold pending-transaction lines (marker absent)?
+  /** Does the log hold pending-transaction lines (marker absent)?
     * Replay skips them, so [[checkpoint]] must refuse rather than rewrite
     * them away — a marker landing later would otherwise resurrect the
     * transaction on SOME tables only. */
-  private def hasPendingTxnLines(table: TableName): Boolean = {
-    val f = fileFor(table)
-    Files.exists(f) && {
-      val raw = Files.readAllBytes(f)
-      val end = raw.lastIndexOf('\n'.toByte)
-      end >= 0 && new String(raw, 0, end + 1, StandardCharsets.UTF_8)
-        .split("\n").iterator.filter(_.nonEmpty).exists { line =>
-          val node = mapper.readTree(line).asInstanceOf[ObjectNode]
-          node.get("record").asText() == "commit" &&
-            Option(node.get("txnPending")).exists(t => !txnCommitted(t.asText()))
-        }
-    }
-  }
+  private def hasPendingTxnLines(table: TableName): Boolean =
+    load(table).exists(_.records.exists(pendingTxn))
 
   /** The ops of every pending-transaction line (marker absent) — the
     * version dirs they reference are live-in-waiting; see
     * [[TableVersions.pendingOperations]]. */
-  override def pendingOperations(table: TableName): List[TableOperation] = {
-    val f = fileFor(table)
-    if (!Files.exists(f)) Nil
-    else {
-      val raw = Files.readAllBytes(f)
-      val end = raw.lastIndexOf('\n'.toByte)
-      if (end < 0) Nil
-      else new String(raw, 0, end + 1, StandardCharsets.UTF_8)
-        .split("\n").iterator.filter(_.nonEmpty).flatMap { line =>
-          val node = mapper.readTree(line).asInstanceOf[ObjectNode]
-          if (node.get("record").asText() == "commit" &&
-            Option(node.get("txnPending")).exists(t => !txnCommitted(t.asText()))) {
-            val ops = node.get("operations").asInstanceOf[ArrayNode]
-            (0 until ops.size()).map(i => opFromJson(ops.get(i).asInstanceOf[ObjectNode]))
-          } else Nil
-        }.toList
-    }
-  }
+  override def pendingOperations(table: TableName): List[TableOperation] =
+    load(table).toList.flatMap(_.records.collect {
+      case r @ CommitRec(u, _) if pendingTxn(r) => u.operations
+    }.flatten)
 
   override def commitIf(
       table: TableName, update: TableUpdate, expected: CommitId): Boolean =
     withTableLock(table) {
       // state re-loads INSIDE the lock, so the pointer check and the append
       // are one serialized step against every other mutating writer
-      val state = loadState(table).getOrElse(throw unknownTableError(table))
-      if (state.updates.exists(_.metadata.id == update.metadata.id))
-        throw new IllegalArgumentException(
-          s"commit id ${update.metadata.id.id} already exists in the history of ${table.fullyQualifiedName}")
+      val state = freshState(table, update.metadata.id)
       if (state.currentVersion != expected) false
       else {
         appendLines(table,
@@ -531,7 +531,7 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
 
   override def setCurrentVersion(table: TableName, id: CommitId): Unit =
     withTableLock(table) {
-      val state = loadState(table).getOrElse(throw unknownTableError(table))
+      val state = tableState(table)
       state.updates.find(_.metadata.id == id) match {
         case None => throw unknownCommitId(id)
         case Some(u) if u.metadata.detached =>
@@ -543,17 +543,14 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
 
   override def commitDetached(table: TableName, update: TableUpdate): Unit =
     withTableLock(table) {
-      val state = loadState(table).getOrElse(throw unknownTableError(table))
-      if (state.updates.exists(_.metadata.id == update.metadata.id))
-        throw new IllegalArgumentException(
-          s"commit id ${update.metadata.id.id} already exists in the history of ${table.fullyQualifiedName}")
+      freshState(table, update.metadata.id)
       appendLines(table,
         Seq(commitLine(update.copy(metadata = update.metadata.copy(detached = true)))))
     }
 
   override def publish(table: TableName, id: CommitId): Unit =
     withTableLock(table) {
-      val state = loadState(table).getOrElse(throw unknownTableError(table))
+      val state = tableState(table)
       val idx = state.updates.indexWhere(_.metadata.id == id)
       if (idx < 0) throw unknownCommitId(id)
       // one fsync'd append: attach records for the at-or-before staged set,
@@ -569,14 +566,14 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
 
   override def setRef(table: TableName, name: String, id: CommitId, isTag: Boolean): Unit =
     withTableLock(table) {
-      val state = loadState(table).getOrElse(throw unknownTableError(table))
+      val state = tableState(table)
       validateRef(state, name, id, isTag)
       appendLines(table, Seq(refLine(name, id, isTag)))
     }
 
   override def deleteRef(table: TableName, name: String): Unit =
     withTableLock(table) {
-      val state = loadState(table).getOrElse(throw unknownTableError(table))
+      val state = tableState(table)
       if (!state.refs.contains(name))
         throw new IllegalArgumentException(
           s"table ${table.fullyQualifiedName} has no ref named '$name'")
@@ -612,7 +609,7 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
       throw new IllegalStateException(
         s"table ${table.fullyQualifiedName} holds commit lines of a PENDING " +
           "multi-table transaction; commit or abandon it (vacuum) before checkpointing")
-    val state = loadState(table).getOrElse(throw unknownTableError(table))
+    val state = tableState(table)
     val n = state.updates.size
     if (n <= keepLast + 1) false
     else {
@@ -661,23 +658,36 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
     }
   }
 
-  override protected def tableState(table: TableName): TableState =
+  override protected[core] def tableState(table: TableName): TableState =
     loadState(table).getOrElse(throw unknownTableError(table))
 
-  override protected def handleInit(table: TableName)(newTableState: => TableState): Unit =
+  override protected[core] def handleInit(table: TableName)(newTableState: => TableState): Boolean =
     withTableLock(table) {
-      if (loadState(table).isEmpty) {
+      loadState(table).isEmpty && {
         val state = newTableState
         // init creates the file whole (appends are single-line afterwards)
         atomicWrite(table, state.updates.map(commitLine(_)).mkString("", "\n", "\n"))
+        true
       }
     }
 }
 
 object JsonFileTableVersions {
+  import TableVersions._
+
   private[core] val LockTimeoutMs = 30000L
   private[core] val LockRetryMs = 5L
   private[core] val LockBreakRecheckMs = 50L
+
+  /** One parsed log line. A commit keeps its multi-table transaction id
+    * while it carries one: whether the line is visible depends on the
+    * transaction's marker, which is re-checked on every fold. */
+  private sealed trait Rec
+  private final case class CommitRec(update: TableUpdate, txnPending: Option[String]) extends Rec
+  private final case class CheckoutRec(id: CommitId) extends Rec
+  private final case class AttachRec(id: CommitId) extends Rec
+  private final case class RefRec(name: String, entry: RefEntry) extends Rec
+  private final case class RefDeleteRec(name: String) extends Rec
 
   /** Positive-only marker cache shared across instances (a committed
     * transaction never un-commits; negatives are re-checked on disk). */

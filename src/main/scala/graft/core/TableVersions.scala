@@ -23,16 +23,21 @@ trait TableVersions {
   import TableVersions._
 
   /** Start tracking version information for the given table.
-   * Must be called before any other operation on the table. Idempotent. */
+   * Must be called before any other operation on the table. Idempotent.
+   * `tableMetadata` rides the init commit (the table's declarations at
+   * creation). Returns false — landing nothing — when the table was
+   * already tracked. */
   def init(
       table: TableName,
       isSnapshot: Boolean,
       userId: UserId,
       message: UpdateMessage,
-      timestamp: Instant): Unit =
+      timestamp: Instant,
+      tableMetadata: Map[String, String] = Map.empty): Boolean =
     handleInit(table) {
       val initialUpdate =
         TableUpdate(userId, message, timestamp, operations = List(TableOperation.InitTable(table, isSnapshot)))
+          .withTableMetadata(tableMetadata)
       TableState(currentVersion = initialUpdate.metadata.id, updates = List(initialUpdate))
     }
 
@@ -307,10 +312,11 @@ trait TableVersions {
   // Internal operations provided by implementations
 
   /** Full persisted state of the table; throws `unknownTableError` if untracked. */
-  protected def tableState(table: TableName): TableState
+  protected[core] def tableState(table: TableName): TableState
 
-  /** Initialise a new table unless it already exists (idempotent). */
-  protected def handleInit(table: TableName)(newTableState: => TableState): Unit
+  /** Initialise a new table unless it already exists (idempotent);
+    * true when this call created it. */
+  protected[core] def handleInit(table: TableName)(newTableState: => TableState): Boolean
 }
 
 object TableVersions {

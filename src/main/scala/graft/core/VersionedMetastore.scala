@@ -16,14 +16,16 @@ import TableVersions._
  */
 final case class VersionedMetastore(tableVersions: TableVersions, metastore: Metastore) {
 
-  /** Start tracking version information for the given table. Idempotent. */
+  /** Start tracking version information for the given table. Idempotent;
+    * see [[TableVersions.init]]. */
   def init(
       table: TableName,
       isSnapshot: Boolean,
       userId: UserId,
       message: UpdateMessage,
-      timestamp: Instant): Unit =
-    tableVersions.init(table, isSnapshot, userId, message, timestamp)
+      timestamp: Instant,
+      tableMetadata: Map[String, String] = Map.empty): Boolean =
+    tableVersions.init(table, isSnapshot, userId, message, timestamp, tableMetadata)
 
   def currentVersion(table: TableName): TableVersion =
     tableVersions.currentVersion(table)

@@ -803,8 +803,8 @@ object Registry {
 
     "q112_column_comments" -> Entry(
       Versioned.q112ColumnComments,
-      // COLUMN COMMENTS: CREATE-time + ALTER-time comments persist in a
-      // name-keyed sidecar, audit as commits, decorate DESCRIBE, and
+      // COLUMN COMMENTS: CREATE-time + ALTER-time comments ride their
+      // audit commits, decorate DESCRIBE, and
       // replay from the SHOW CREATE script onto a second table — all
       // pinned in-query; the declared set rides the output as a literal
       Some("""SELECT c_mktsegment, count(*) AS n,

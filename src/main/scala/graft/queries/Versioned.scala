@@ -2334,7 +2334,7 @@ object Versioned {
 
   /** Q83b: the SQL IDENTITY lifecycle — `ALTER TABLE … ADD COLUMN row_id
     * BIGINT GENERATED ALWAYS AS IDENTITY` declares the engine-owned id
-    * column (schema evolution + the `_identity.json` registration), then
+    * column (schema evolution + the identity declaration), then
     * plain SQL `INSERT INTO … (user columns)` statements stamp unique,
     * batch-monotone ids with the advanced high-water mark riding each
     * write commit. In-query requires pin global uniqueness and
@@ -3594,19 +3594,19 @@ object Versioned {
       TableName("g", "cust_ddl"), new java.net.URI(emittedLoc), parts, FileFormat.Parquet)
     val dstDefn = TableDefinition(
       TableName("g", "cust_ddl2"), dstLoc, parts, FileFormat.Parquet)
-    require(graft.spark.TableProperties.list(s, dstDefn) ==
-      graft.spark.TableProperties.list(s, srcDefn),
+    require(graft.spark.TableProperties.list(s, log, dstDefn) ==
+      graft.spark.TableProperties.list(s, log, srcDefn),
       "TBLPROPERTIES must round-trip")
-    require(graft.spark.Constraints.list(s, dstDefn).map(c => (c.name, c.expr)) ==
-      graft.spark.Constraints.list(s, srcDefn).map(c => (c.name, c.expr)),
+    require(graft.spark.Constraints.list(s, log, dstDefn).map(c => (c.name, c.expr)) ==
+      graft.spark.Constraints.list(s, log, srcDefn).map(c => (c.name, c.expr)),
       "constraints must round-trip")
-    require(graft.spark.GeneratedColumns.list(s, dstDefn).map(g => (g.column, g.expr)) ==
-      graft.spark.GeneratedColumns.list(s, srcDefn).map(g => (g.column, g.expr)),
+    require(graft.spark.GeneratedColumns.list(s, log, dstDefn).map(g => (g.column, g.expr)) ==
+      graft.spark.GeneratedColumns.list(s, log, srcDefn).map(g => (g.column, g.expr)),
       "generation rules must round-trip")
-    require(graft.spark.ColumnDefaults.list(s, dstDefn) ==
-      graft.spark.ColumnDefaults.list(s, srcDefn),
+    require(graft.spark.ColumnDefaults.list(s, log, dstDefn) ==
+      graft.spark.ColumnDefaults.list(s, log, srcDefn),
       "column defaults must round-trip")
-    require(graft.spark.IdentityColumns.declared(s, dstDefn).contains("rid"),
+    require(graft.spark.IdentityColumns.declared(s, log, dstDefn).contains("rid"),
       "the identity declaration must round-trip")
 
     // load the RECREATED table through its carried declarations: identity
@@ -4514,8 +4514,8 @@ object Versioned {
 
   /** Q112: COLUMN COMMENTS — durable free-text documentation as table
     * metadata: CREATE-time (`c BIGINT COMMENT '…'`) and ALTER-time
-    * (`ALTER COLUMN c COMMENT '…'`) comments persist in a name-keyed
-    * sidecar, land as auditable commits, decorate DESCRIBE, and replay
+    * (`ALTER COLUMN c COMMENT '…'`) comments ride their auditable
+    * commits, decorate DESCRIBE, and replay
     * from the SHOW CREATE script re-pointed onto a second table — all
     * pinned in-query; the declared comments ride the output as a literal
     * so the oracle hash pins them. */
@@ -4563,14 +4563,14 @@ object Versioned {
       List(graft.core.PartitionColumn("c_mktsegment")))
     val defn2 = graft.core.TableDefinition(
       TableName("g", "cust_cm2"), loc2, part, graft.core.FileFormat.Parquet)
-    val replayed = graft.spark.Comments.list(s, defn2)
+    val replayed = graft.spark.Comments.list(s, log, defn2)
     require(replayed == Map(
       "c_custkey" -> "customer surrogate key",
       "c_acctbal" -> "account balance, USD"),
       s"the replayed table must reproduce the comments (got $replayed)")
 
     val declared = graft.spark.Comments.list(
-      s, graft.core.TableDefinition(tn, loc, part, graft.core.FileFormat.Parquet))
+      s, log, graft.core.TableDefinition(tn, loc, part, graft.core.FileFormat.Parquet))
       .toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("; ")
     s.sql(
       s"""SELECT c_mktsegment, count(*) AS n,

@@ -113,7 +113,7 @@ object ChangeFeed {
       table: TableDefinition,
       from: Option[CommitId],
       to: CommitId): DataFrame = {
-    val idCol = RowTracking.trackingColumn(spark, table).getOrElse(sys.error(
+    val idCol = RowTracking.trackingColumn(spark, log, table).getOrElse(sys.error(
       s"table ${table.name.fullyQualifiedName} has no row tracking — " +
         "RowTracking.enable (or declare an identity column) first"))
     val raw = read(spark, log, table, from, to)

@@ -27,17 +27,19 @@ import graft.core.TableVersions.{UpdateMessage, UserId}
  *
  * The expression must be foldable (a constant — `current_date()` style
  * functions fold at write time, which is exactly SQL's CURRENT DEFAULT
- * semantics per-batch). Defaults live in [[MetadataFiles.defaults]] (the
- * [[GeneratedColumns]] discipline: name-keyed under the possibly-shared
- * location, so shallow clones own independent defaults; one driver-side
- * read per write).
+ * semantics per-batch). Defaults ride their metadata-only audit commit
+ * ([[MetadataFiles.defaults]], the [[GeneratedColumns]] discipline:
+ * resolved at the log head, so shallow clones own independent defaults;
+ * one fold of the cached log per write).
  */
 object ColumnDefaults {
 
   final case class ColumnDefault(column: String, expr: String)
 
-  def list(spark: org.apache.spark.sql.SparkSession, table: TableDefinition): List[ColumnDefault] =
-    MetadataFiles.defaults.read(spark, table)
+  def list(
+      spark: org.apache.spark.sql.SparkSession, log: TableVersions,
+      table: TableDefinition): List[ColumnDefault] =
+    MetadataFiles.defaults.current(spark, log, table)
 
   /** Declare (or replace) a column's default. The column must not be
     * GENERATED or IDENTITY (those own their fill rules), and the
@@ -51,10 +53,10 @@ object ColumnDefaults {
       defaultExpr: String,
       user: UserId): Unit = {
     val log = ctx.metastore.tableVersions
-    GeneratedColumns.list(spark, table).foreach(g =>
+    GeneratedColumns.list(spark, log, table).foreach(g =>
       require(!g.column.equalsIgnoreCase(column),
         s"column $column is GENERATED ALWAYS AS (${g.expr}) — it cannot also carry a DEFAULT"))
-    IdentityColumns.declared(spark, table).foreach(c =>
+    IdentityColumns.declared(spark, log, table).foreach(c =>
       require(!c.equalsIgnoreCase(column),
         s"column $column is GENERATED ALWAYS AS IDENTITY — it cannot also carry a DEFAULT"))
     // the expression must analyze standalone and fold to a constant —
@@ -65,11 +67,9 @@ object ColumnDefaults {
     require(!parsed.exists(_.isInstanceOf[
       org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute]),
       s"DEFAULT for $column must be a constant expression, got: $defaultExpr")
-    MetadataFiles.defaults.update(spark, table)(ds =>
+    MetadataFiles.defaults.commit(spark, ctx.metastore, table,
+        UpdateMessage(s"ALTER TABLE ALTER COLUMN $column SET DEFAULT $defaultExpr"), user)(ds =>
       ds.filterNot(_.column.equalsIgnoreCase(column)) :+ ColumnDefault(column, defaultExpr))
-    log.commit(table.name, TableVersions.TableUpdate(
-      user, UpdateMessage(s"ALTER TABLE ALTER COLUMN $column SET DEFAULT $defaultExpr"),
-      java.time.Instant.now(), Nil))
     ()
   }
 
@@ -81,19 +81,19 @@ object ColumnDefaults {
       table: TableDefinition,
       column: String,
       user: UserId): Unit = {
-    if (!list(spark, table).exists(_.column.equalsIgnoreCase(column))) return
-    MetadataFiles.defaults.update(spark, table)(_.filterNot(_.column.equalsIgnoreCase(column)))
-    ctx.metastore.tableVersions.commit(table.name, TableVersions.TableUpdate(
-      user, UpdateMessage(s"ALTER TABLE ALTER COLUMN $column DROP DEFAULT"),
-      java.time.Instant.now(), Nil))
+    if (!list(spark, ctx.metastore.tableVersions, table)
+        .exists(_.column.equalsIgnoreCase(column))) return
+    MetadataFiles.defaults.commit(spark, ctx.metastore, table,
+        UpdateMessage(s"ALTER TABLE ALTER COLUMN $column DROP DEFAULT"), user)(
+      _.filterNot(_.column.equalsIgnoreCase(column)))
     ()
   }
 
   /** The write-path fill: compute ABSENT defaulted columns; supplied
     * columns pass through verbatim (NULLs included). Rides the shared
     * pre-write pipeline next to [[GeneratedColumns.applied]]. */
-  def applied(df: DataFrame, table: TableDefinition): DataFrame = {
-    val ds = list(df.sparkSession, table)
+  def applied(df: DataFrame, log: TableVersions, table: TableDefinition): DataFrame = {
+    val ds = list(df.sparkSession, log, table)
     if (ds.isEmpty) return df
     val names = df.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     ds.foldLeft(df) { (acc, d) =>
@@ -109,9 +109,10 @@ object ColumnDefaults {
     * surfacing NULL — defaults never rewrite (or re-read) history. */
   private[spark] def decorate(
       spark: org.apache.spark.sql.SparkSession,
+      log: TableVersions,
       table: TableDefinition,
       schema: StructType): StructType = {
-    val ds = list(spark, table)
+    val ds = list(spark, log, table)
     if (ds.isEmpty) return schema
     val byName = ds.map(d => d.column.toLowerCase(java.util.Locale.ROOT) -> d.expr).toMap
     StructType(schema.map { f =>

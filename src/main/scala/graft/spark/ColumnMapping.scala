@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.core._
-import graft.core.TableVersions.{CommitId, TableUpdate, UpdateMessage, UserId}
+import graft.core.TableVersions.{CommitId, UpdateMessage, UserId}
 
 /**
  * COLUMN-MAPPING schema evolution (rename / drop) — the Delta
@@ -84,11 +84,11 @@ object ColumnMapping {
     // their registrations; renaming out from under them would silently
     // desynchronize stamping/derivation/enforcement — checked FIRST (the
     // registration exists even before any file carries the column)
-    IdentityColumns.declared(spark, table).foreach(c =>
+    IdentityColumns.declared(spark, log, table).foreach(c =>
       require(!c.equalsIgnoreCase(from),
         s"cannot rename $from: it is the table's identity (row-tracking) " +
           "column — the engine stamps it by name"))
-    val gens = GeneratedColumns.list(spark, table)
+    val gens = GeneratedColumns.list(spark, log, table)
     gens.foreach { g =>
       require(!g.column.equalsIgnoreCase(from),
         s"cannot rename $from: it carries a generation rule (${g.expr}) — " +
@@ -97,7 +97,7 @@ object ColumnMapping {
         s"cannot rename $from: generation rule for ${g.column} references " +
           s"it (${g.expr}) — drop and re-declare the rule first")
     }
-    Constraints.list(spark, table).foreach { c =>
+    Constraints.list(spark, log, table).foreach { c =>
       val refs = c.kind match {
         case "notnull" => c.expr.equalsIgnoreCase(from)
         case _         => exprReferences(spark, c.expr, from)
@@ -106,24 +106,24 @@ object ColumnMapping {
         s"cannot rename $from: constraint ${c.name} references it " +
           s"(${c.kind} ${c.expr}) — drop and re-add the constraint first")
     }
-    val current = effectiveEntries(spark, log, table, None)
-    val entry = current.find(_.logical.equalsIgnoreCase(from)).getOrElse(
-      throw new IllegalArgumentException(
-        s"no column $from on ${table.name.fullyQualifiedName}"))
-    require(!entry.dropped, s"column $from was dropped")
-    require(!current.exists(e => !e.dropped && e.logical.equalsIgnoreCase(to)),
-      s"column $to already exists on ${table.name.fullyQualifiedName}")
-    val next = current.map {
-      case e if !e.isNested && e.logical.equalsIgnoreCase(from) => e.copy(logical = to)
-      // nested entries' LOGICAL prefixes follow the parent's rename
-      // (their physical paths stay frozen)
-      case e if e.isNested &&
-          e.logical.toLowerCase.startsWith(from.toLowerCase + ".") =>
-        e.copy(logical = to + e.logical.drop(from.length))
-      case e => e
+    commitState(spark, ctx, table,
+        UpdateMessage(s"ALTER TABLE RENAME COLUMN $from TO $to"), user) { current =>
+      val entry = current.find(_.logical.equalsIgnoreCase(from)).getOrElse(
+        throw new IllegalArgumentException(
+          s"no column $from on ${table.name.fullyQualifiedName}"))
+      require(!entry.dropped, s"column $from was dropped")
+      require(!current.exists(e => !e.dropped && e.logical.equalsIgnoreCase(to)),
+        s"column $to already exists on ${table.name.fullyQualifiedName}")
+      current.map {
+        case e if !e.isNested && e.logical.equalsIgnoreCase(from) => e.copy(logical = to)
+        // nested entries' LOGICAL prefixes follow the parent's rename
+        // (their physical paths stay frozen)
+        case e if e.isNested &&
+            e.logical.toLowerCase.startsWith(from.toLowerCase + ".") =>
+          e.copy(logical = to + e.logical.drop(from.length))
+        case e => e
+      }
     }
-    commitState(ctx, table, next,
-      UpdateMessage(s"ALTER TABLE RENAME COLUMN $from TO $to"), user)
   }
 
   /** Resolve a LOGICAL dotted path to its PHYSICAL path through the
@@ -171,21 +171,20 @@ object ColumnMapping {
         "rename the container column instead")
     require(!StructuralSegments.contains(to.toLowerCase),
       s"cannot rename to '$to': it is a reserved structural segment name")
-    val log = ctx.metastore.tableVersions
-    val current = effectiveEntries(spark, log, table, None)
     val lpath = path.mkString(".")
     val newLogical = (path.dropRight(1) :+ to).mkString(".")
-    require(!current.exists(e => e.isNested && !e.dropped &&
-      e.logical.equalsIgnoreCase(newLogical)),
-      s"field $newLogical already exists on ${table.name.fullyQualifiedName}")
-    val next = current.find(e => e.isNested && !e.dropped &&
-        e.logical.equalsIgnoreCase(lpath)) match {
-      case Some(e) => current.map(x => if (x eq e) x.copy(logical = newLogical) else x)
-      case None => current :+ Entry(
-        newLogical, physicalPathOf(current, path).mkString("."), dropped = false)
+    commitState(spark, ctx, table,
+        UpdateMessage(s"ALTER TABLE RENAME COLUMN $lpath TO $to"), user) { current =>
+      require(!current.exists(e => e.isNested && !e.dropped &&
+        e.logical.equalsIgnoreCase(newLogical)),
+        s"field $newLogical already exists on ${table.name.fullyQualifiedName}")
+      current.find(e => e.isNested && !e.dropped &&
+          e.logical.equalsIgnoreCase(lpath)) match {
+        case Some(e) => current.map(x => if (x eq e) x.copy(logical = newLogical) else x)
+        case None => current :+ Entry(
+          newLogical, physicalPathOf(current, path).mkString("."), dropped = false)
+      }
     }
-    commitState(ctx, table, next,
-      UpdateMessage(s"ALTER TABLE RENAME COLUMN $lpath TO $to"), user)
   }
 
   /** DROP a NESTED struct field (metadata-only; files keep the bytes —
@@ -208,17 +207,16 @@ object ColumnMapping {
     require(!path.dropRight(1).exists(_.equalsIgnoreCase("key")),
       s"cannot drop ${path.mkString(".")}: dropping a field inside map " +
         "KEYS could collapse distinct keys into duplicates")
-    val log = ctx.metastore.tableVersions
-    val current = effectiveEntries(spark, log, table, None)
     val lpath = path.mkString(".")
-    val next = current.find(e => e.isNested && !e.dropped &&
-        e.logical.equalsIgnoreCase(lpath)) match {
-      case Some(e) => current.map(x => if (x eq e) x.copy(dropped = true) else x)
-      case None => current :+ Entry(
-        lpath, physicalPathOf(current, path).mkString("."), dropped = true)
+    commitState(spark, ctx, table,
+        UpdateMessage(s"ALTER TABLE DROP COLUMN $lpath"), user) { current =>
+      current.find(e => e.isNested && !e.dropped &&
+          e.logical.equalsIgnoreCase(lpath)) match {
+        case Some(e) => current.map(x => if (x eq e) x.copy(dropped = true) else x)
+        case None => current :+ Entry(
+          lpath, physicalPathOf(current, path).mkString("."), dropped = true)
+      }
     }
-    commitState(ctx, table, next,
-      UpdateMessage(s"ALTER TABLE DROP COLUMN $lpath"), user)
   }
 
   /** A dropped nested entry whose PHYSICAL path matches — the nested
@@ -299,38 +297,39 @@ object ColumnMapping {
     val log = ctx.metastore.tableVersions
     val target = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
       .parseDataType(newType).catalogString
-    val current = effectiveEntries(spark, log, table, None)
-    val entry =
-      if (path.length == 1)
-        Some(current.find(e => !e.dropped && !e.isNested &&
-            e.logical.equalsIgnoreCase(lpath))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no column $lpath on ${table.name.fullyQualifiedName}")))
-      else current.find(e => e.isNested && !e.dropped &&
-        e.logical.equalsIgnoreCase(lpath))
     // the field's CURRENT effective type: the mapped read already serves
     // prior widens, and a recorded `widened` wins by construction
-    val fileType = fieldTypeAt(read(spark, log, table).schema, path)
+    lazy val fileType = fieldTypeAt(read(spark, log, table).schema, path)
       .map(_.catalogString)
       .getOrElse(throw new IllegalArgumentException(
         s"column $lpath has no readable type on ${table.name.fullyQualifiedName}"))
-    val from = entry.flatMap(_.widened).getOrElse(fileType)
-    require(from != target, s"column $lpath is already $target")
-    require(WideningAllowed.contains(from -> target),
-      s"ALTER COLUMN TYPE supports lossless widening only " +
-        s"(${WideningAllowed.map(p => s"${p._1}→${p._2}").mkString(", ")}); " +
-        s"got $from→$target for $lpath")
-    val next = entry match {
-      case Some(e) => current.map {
-        case x if x.physical == e.physical => x.copy(widened = Some(target))
-        case x                             => x
+    commitState(spark, ctx, table,
+        UpdateMessage(s"ALTER TABLE ALTER COLUMN $lpath TYPE $target"), user,
+        alsoCarried) { current =>
+      val entry =
+        if (path.length == 1)
+          Some(current.find(e => !e.dropped && !e.isNested &&
+              e.logical.equalsIgnoreCase(lpath))
+            .getOrElse(throw new IllegalArgumentException(
+              s"no column $lpath on ${table.name.fullyQualifiedName}")))
+        else current.find(e => e.isNested && !e.dropped &&
+          e.logical.equalsIgnoreCase(lpath))
+      val from = entry.flatMap(_.widened).getOrElse(fileType)
+      require(from != target, s"column $lpath is already $target")
+      require(WideningAllowed.contains(from -> target),
+        s"ALTER COLUMN TYPE supports lossless widening only " +
+          s"(${WideningAllowed.map(p => s"${p._1}→${p._2}").mkString(", ")}); " +
+          s"got $from→$target for $lpath")
+      entry match {
+        case Some(e) => current.map {
+          case x if x.physical == e.physical => x.copy(widened = Some(target))
+          case x                             => x
+        }
+        case None => current :+ Entry(
+          lpath, physicalPathOf(current, path).mkString("."),
+          dropped = false, widened = Some(target))
       }
-      case None => current :+ Entry(
-        lpath, physicalPathOf(current, path).mkString("."),
-        dropped = false, widened = Some(target))
     }
-    commitState(ctx, table, next,
-      UpdateMessage(s"ALTER TABLE ALTER COLUMN $lpath TYPE $target"), user, alsoCarried)
   }
 
   /** Pure pre-flight for [[widenPath]] against a DECLARED schema: the
@@ -497,31 +496,33 @@ object ColumnMapping {
       user: UserId): Unit = {
     require(!table.partitionSchema.columns.exists(_.name.equalsIgnoreCase(name)),
       s"cannot drop partition column $name")
-    val log = ctx.metastore.tableVersions
-    val current = effectiveEntries(spark, log, table, None)
-    val entry = current.find(e => !e.dropped && e.logical.equalsIgnoreCase(name))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no column $name on ${table.name.fullyQualifiedName}"))
-    val next = current.map {
-      case e if e.physical == entry.physical => e.copy(dropped = true)
-      case e                                 => e
+    commitState(spark, ctx, table,
+        UpdateMessage(s"ALTER TABLE DROP COLUMN $name"), user) { current =>
+      val entry = current.find(e => !e.dropped && e.logical.equalsIgnoreCase(name))
+        .getOrElse(throw new IllegalArgumentException(
+          s"no column $name on ${table.name.fullyQualifiedName}"))
+      current.map {
+        case e if e.physical == entry.physical => e.copy(dropped = true)
+        case e                                 => e
+      }
     }
-    commitState(ctx, table, next,
-      UpdateMessage(s"ALTER TABLE DROP COLUMN $name"), user)
   }
 
-  /** The audit commit IS the mapping change: it carries the new entries. */
+  /** The audit commit IS the mapping change: it carries the entries `next`
+    * derives from the mapping in force, through the CAS declaration commit
+    * ([[MetadataFiles.commitDerived]]) — a racing DDL makes `next` re-run
+    * on the fresh fold, so neither change is lost. */
   private def commitState(
+      spark: SparkSession,
       ctx: VersionContext,
       table: TableDefinition,
-      entries: List[Entry],
       message: UpdateMessage,
       user: UserId,
-      alsoCarried: Map[String, String] = Map.empty): Unit = {
-    ctx.metastore.commit(table.name, TableUpdate(user, message, java.time.Instant.now(), Nil)
-      .withTableMetadata(MetadataFiles.columnMapping.entry(entries) ++ alsoCarried))
-    ()
-  }
+      alsoCarried: Map[String, String] = Map.empty)(next: List[Entry] => List[Entry]): Unit =
+    MetadataFiles.commitDerived(ctx.metastore, table.name, message, user) {
+      MetadataFiles.columnMapping.entry(
+        next(effectiveEntries(spark, ctx.metastore.tableVersions, table, None))) ++ alsoCarried
+    }
 
   /** The mapping entries in force at `at`, seeded from the PHYSICAL schema
     * (current data columns) for columns with no recorded entry. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 import graft.core._
-import graft.core.TableVersions.{TableUpdate, UpdateMessage, UserId}
+import graft.core.TableVersions.{UpdateMessage, UserId}
 
 /**
  * COLUMN COMMENTS (the Delta/Iceberg `ALTER TABLE … ALTER COLUMN c
@@ -14,9 +14,10 @@ import graft.core.TableVersions.{TableUpdate, UpdateMessage, UserId}
  * documentation along with structure. Purely descriptive: no read or
  * write behavior changes.
  *
- * Comments live in [[MetadataFiles.comments]] (the [[ColumnDefaults]]
- * discipline: name-keyed under the possibly-shared location so shallow
- * clones own independent sets).
+ * Comments ride their metadata-only audit commit — CREATE-time ones the
+ * init commit ([[MetadataFiles.comments]], the [[ColumnDefaults]]
+ * discipline: resolved at the log head, so shallow clones own
+ * independent sets).
  * Keys are dotted field paths, so nested-field comments
  * (`ALTER COLUMN meta.lang COMMENT '…'`) store naturally; only
  * top-level comments decorate the served schema (DESCRIBE) and the
@@ -26,15 +27,14 @@ import graft.core.TableVersions.{TableUpdate, UpdateMessage, UserId}
  */
 object Comments {
 
-  /** Dotted field path → comment (empty when none declared). One
-    * driver-side metadata probe, memoized ([[MetadataFiles.comments]]). */
-  def list(spark: SparkSession, table: TableDefinition): Map[String, String] =
-    MetadataFiles.comments.read(spark, table)
+  /** Dotted field path → comment (empty when none declared). One fold
+    * of the cached log ([[MetadataFiles.comments]]). */
+  def list(spark: SparkSession, log: TableVersions, table: TableDefinition): Map[String, String] =
+    MetadataFiles.comments.current(spark, log, table)
 
-  /** Seed without a commit — CREATE-time comments. */
-  private[spark] def seed(
-      spark: SparkSession, table: TableDefinition, all: Map[String, String]): Unit =
-    if (all.nonEmpty) { MetadataFiles.comments.update(spark, table)(_ => all); () }
+  /** CREATE-time comments, as the init commit's entry. */
+  private[spark] def seed(all: Map[String, String]): Map[String, String] =
+    if (all.isEmpty) Map.empty else MetadataFiles.comments.entry(all)
 
   /** Set (or clear, `comment = None`) one field path's comment — a
     * metadata-only audit commit, like every other declaration change. */
@@ -45,26 +45,24 @@ object Comments {
       path: String,
       comment: Option[String],
       user: UserId): Unit = {
-    MetadataFiles.comments.update(spark, table)(existing => comment match {
+    MetadataFiles.comments.commit(spark, ctx.metastore, table,
+        UpdateMessage(comment match {
+          case Some(c) => s"ALTER COLUMN $path COMMENT '$c'"
+          case None    => s"ALTER COLUMN $path UNSET COMMENT"
+        }), user)(existing => comment match {
       case Some(c) => existing + (path -> c)
       case None    => existing - path
     })
-    ctx.metastore.commit(table.name, TableUpdate(
-      user,
-      UpdateMessage(comment match {
-        case Some(c) => s"ALTER COLUMN $path COMMENT '$c'"
-        case None    => s"ALTER COLUMN $path UNSET COMMENT"
-      }),
-      java.time.Instant.now(), Nil))
     ()
   }
 
   /** Attach declared top-level comments to the served schema so DESCRIBE
-    * and catalog introspection show them (one sidecar existence probe —
+    * and catalog introspection show them (one fold of the cached log —
     * the [[ColumnDefaults.decorate]] cost class). */
   def decorate(
-      spark: SparkSession, table: TableDefinition, schema: StructType): StructType = {
-    val all = list(spark, table)
+      spark: SparkSession, log: TableVersions, table: TableDefinition,
+      schema: StructType): StructType = {
+    val all = list(spark, log, table)
     if (all.isEmpty) schema
     else StructType(schema.fields.map { f =>
       all.get(f.name).orElse(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, expr, lit, raise_error, when}
 
 import graft.core._
-import graft.core.TableVersions.{TableUpdate, UpdateMessage, UserId}
+import graft.core.TableVersions.{UpdateMessage, UserId}
 
 /**
  * WRITE-PATH CONSTRAINTS (NOT NULL / CHECK) — the Delta `ALTER TABLE ADD
@@ -15,10 +15,9 @@ import graft.core.TableVersions.{TableUpdate, UpdateMessage, UserId}
  * is applied), rejecting violations loudly BEFORE the commit publishes.
  *
  * Mechanics:
- *  - constraints persist in the table's metadata files
- *    ([[MetadataFiles.constraints]], name-keyed so a shallow clone owns
- *    an independent set); adding/dropping also lands a metadata-only
- *    audit commit in the history;
+ *  - constraints ride the metadata-only audit commit that adds or drops
+ *    them ([[MetadataFiles.constraints]], resolved at the log head, so a
+ *    shallow clone owns an independent set);
  *  - enforcement costs ZERO extra scans: the check rides the write's own
  *    pass as a filter whose predicate calls `raise_error` on the first
  *    violating row (`CHECK` semantics are SQL-standard: NULL/unknown
@@ -42,9 +41,9 @@ object Constraints {
   def check(name: String, sqlExpr: String): Constraint = Constraint(name, "check", sqlExpr)
 
   /** The table's recorded constraints (empty when none were ever added).
-    * One driver-side metadata read ([[MetadataFiles.constraints]]). */
-  def list(spark: SparkSession, table: TableDefinition): List[Constraint] =
-    MetadataFiles.constraints.read(spark, table)
+    * One fold of the cached log ([[MetadataFiles.constraints]]). */
+  def list(spark: SparkSession, log: TableVersions, table: TableDefinition): List[Constraint] =
+    MetadataFiles.constraints.current(spark, log, table)
 
   /** Violation predicate (true = row violates `c`). */
   private def violation(c: Constraint): Column = c.kind match {
@@ -55,8 +54,7 @@ object Constraints {
 
   /** Add a constraint: existing rows are validated first (one scan of the
     * DV-applied current state — a constraint must not be born violated),
-    * the metadata file is rewritten, and a metadata-only audit commit
-    * lands in the history. */
+    * then the new set lands on a metadata-only audit commit. */
   def add(
       spark: SparkSession,
       ctx: VersionContext,
@@ -68,8 +66,8 @@ object Constraints {
         s"constraint ${c.name} already exists on ${table.name.fullyQualifiedName}")
       cs :+ c
     }
-    added(list(spark, table)) // refuse a duplicate before the scan
     val log = ctx.metastore.tableVersions
+    added(list(spark, log, table)) // refuse a duplicate before the scan
     val current = DeletionVectors.read(spark, log, table)
     if (current.columns.nonEmpty) {
       val violating = current.where(violation(c)).count()
@@ -77,10 +75,8 @@ object Constraints {
         s"cannot add constraint ${c.name} to ${table.name.fullyQualifiedName}: " +
           s"$violating existing row(s) violate ${c.kind} (${c.expr})")
     }
-    MetadataFiles.constraints.update(spark, table)(added)
-    ctx.metastore.commit(table.name, TableUpdate(
-      user, UpdateMessage(s"ADD CONSTRAINT ${c.name} ${c.kind} (${c.expr})"),
-      java.time.Instant.now(), Nil))
+    MetadataFiles.constraints.commit(spark, ctx.metastore, table,
+      UpdateMessage(s"ADD CONSTRAINT ${c.name} ${c.kind} (${c.expr})"), user)(added)
     ()
   }
 
@@ -92,13 +88,12 @@ object Constraints {
       table: TableDefinition,
       name: String,
       user: UserId): Unit = {
-    MetadataFiles.constraints.update(spark, table) { cs =>
+    MetadataFiles.constraints.commit(spark, ctx.metastore, table,
+        UpdateMessage(s"DROP CONSTRAINT $name"), user) { cs =>
       require(cs.exists(_.name == name),
         s"no constraint named $name on ${table.name.fullyQualifiedName}")
       cs.filterNot(_.name == name)
     }
-    ctx.metastore.commit(table.name, TableUpdate(
-      user, UpdateMessage(s"DROP CONSTRAINT $name"), java.time.Instant.now(), Nil))
     ()
   }
 
@@ -106,10 +101,10 @@ object Constraints {
     * its own write pass rejects the first violating row via `raise_error`
     * — zero extra scans, codegen-friendly, and the staged dirs of a failed
     * write stay invisible. Identity when the table has no constraints (one
-    * driver-side existence check); an unreadable constraint file fails the
+    * fold of the cached log); an unreadable constraints value fails the
     * write rather than skipping its checks. */
-  def enforced[T](ds: Dataset[T], table: TableDefinition): Dataset[T] = {
-    val cs = list(ds.sparkSession, table)
+  def enforced[T](ds: Dataset[T], log: TableVersions, table: TableDefinition): Dataset[T] = {
+    val cs = list(ds.sparkSession, log, table)
     if (cs.isEmpty) return ds
     val names = ds.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     val applicable = cs.filter {

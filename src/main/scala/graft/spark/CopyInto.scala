@@ -136,7 +136,7 @@ object CopyInto {
     lazy val currentLogical = ColumnMapping.applyLogical(
       DeletionVectors.read(spark, log, table), spark, log, table, None)
     val autoMerge =
-      TableProperties.effectiveFlag(spark, table, TableProperties.AutoMergeSchema)
+      TableProperties.effectiveFlag(spark, log, table, TableProperties.AutoMergeSchema)
     val reader0 = spark.read.format(format).options(options)
     val reader = format.toLowerCase match {
       case "csv" | "json" =>
@@ -173,7 +173,7 @@ object CopyInto {
     // override on the untouched partitions.
     val numWide: List[(Seq[String], String)] =
       if (selfDescribing && currentLogical.columns.nonEmpty &&
-          TableProperties.effectiveFlag(spark, table, TableProperties.TypeWidening))
+          TableProperties.effectiveFlag(spark, log, table, TableProperties.TypeWidening))
         ColumnMapping.numericWidenings(currentLogical.schema, batch.schema)
       else Nil
     val numWideMap = numWide.map { case (p, t) =>

@@ -26,13 +26,14 @@ import graft.spark.VersionContext.DatasetVersionOps
  * clone therefore starts with ZERO sidecar debt — deep-cloning a
  * DV/overlay-heavy table is also its compaction.
  *
- * Carried declarations (seeded into the clone's own metadata, owned
+ * Carried declarations (riding the clone's state commit, owned
  * independently from then on): CHECK constraints, generated-column rules,
- * column DEFAULTs, the identity declaration WITH the source's high-water
- * mark at the cloned state (clone writes never re-mint carried ids), and
- * the COPY INTO load history (the clone never re-ingests files whose rows
- * it already holds). Deletion vectors, overlays, and the column mapping
- * do NOT carry — their effects are materialized into the copied rows.
+ * column DEFAULTs, comments, TBLPROPERTIES, the identity declaration WITH
+ * the source's high-water mark at the cloned state (clone writes never
+ * re-mint carried ids), and the COPY INTO load history (the clone never
+ * re-ingests files whose rows it already holds). Deletion vectors,
+ * overlays, and the column mapping do NOT carry — their effects are
+ * materialized into the copied rows.
  *
  * A mixed-era source (metadata-only partition evolution) materializes
  * entirely under the CURRENT scheme of the cloned state: the copy job
@@ -85,22 +86,24 @@ object DeepClone {
       // evolved fields the resolved tier materializes as typed NULLs —
       // any recorded schema state falls back to the resolved-rows write
       SchemaStates.at(spark, log, src, at).isEmpty
+    // the source's declarations ride the clone's state commit
+    val declared = MetadataFiles.declared(spark, log, src)
     if (sidecarFree) {
       val ops = rawCopy(spark, src, dstLocation, tvAt)
-      if (ops.nonEmpty) {
+      if (ops.nonEmpty || declared.nonEmpty) {
         ctx.metastore.commit(dst, TableUpdate(
           user,
           UpdateMessage(s"deep clone (raw file copy) state of " +
             s"${src.name.fullyQualifiedName} @ ${at.id}"),
-          Instant.now(), ops))
+          Instant.now(), ops).withTableMetadata(declared))
         ()
       }
     } else {
       // one distributed write of the resolved rows (DV-applied, overlay-
-      // unioned, logically named). Declarations seed AFTER the write: a
-      // pre-seeded identity column would reject the batch (GENERATED
-      // ALWAYS refuses supplied ids) and a generated-column rule would
-      // re-derive values the rows already carry.
+      // unioned, logically named), staged BEFORE the declarations are in
+      // force: a declared identity column would reject the batch
+      // (GENERATED ALWAYS refuses supplied ids) and a generated-column
+      // rule would re-derive values the rows already carry.
       // The clone carries NO column mapping, so its files must hold the
       // CURRENT logical names (the names the clone registers and a
       // VERSION AS OF load of the source would declare) — a raw
@@ -108,18 +111,24 @@ object DeepClone {
       // renamed column under the clone's declared schema.
       val rows = ColumnMapping.applyLogical(
         DeletionVectors.read(spark, log, src, Some(at)), spark, log, src, None)
-      if (rows.columns.nonEmpty && !rows.isEmpty) {
-        rows.versionedInsertInto(ctx, dstDefn, user, UpdateMessage(
-          s"deep clone state of ${src.name.fullyQualifiedName} @ ${at.id}"))
+      val message = UpdateMessage(
+        s"deep clone state of ${src.name.fullyQualifiedName} @ ${at.id}")
+      val state =
+        if (rows.columns.nonEmpty && !rows.isEmpty)
+          Some(rows.versionedStage(ctx, dstDefn, user, message).update)
+        else if (declared.nonEmpty) Some(TableUpdate(user, message, Instant.now(), Nil))
+        else None
+      state.foreach { u =>
+        ctx.metastore.commit(dst, u.withTableMetadata(declared))
+        ()
       }
     }
 
-    MetadataFiles.carry(spark, src, dstDefn)
     // identity: the carried declaration plus the source's high-water mark
     // AT the cloned state, riding a metadata commit exactly like
     // ShallowClone — a clone write stamping from 0 would collide with
     // carried ids
-    IdentityColumns.declared(spark, src).foreach { c =>
+    IdentityColumns.declared(spark, log, src).foreach { c =>
       val mark = IdentityColumns.markText(
         c, IdentityColumns.effectiveHighWaterMarkAt(spark, log, src, c, Some(at)))
       ctx.metastore.commit(dst, TableUpdate(

@@ -354,7 +354,7 @@ object FileStats {
     if (table.isSnapshot) return
     // per-table TBLPROPERTY wins; session conf is the fallback
     if (!TableProperties.effectiveFlag(
-        spark, table, TableProperties.StatsAutoUpdate)) return
+        spark, log, table, TableProperties.StatsAutoUpdate)) return
     try {
       val fs = new org.apache.hadoop.fs.Path(
         Partition.normalizedDir(table.location).toString)

@@ -26,9 +26,9 @@ import graft.core.TableVersions.{UpdateMessage, UserId}
  * the right partitions — and partition pruning on the generated column
  * works unchanged (it IS an ordinary partition column at rest).
  *
- * Rules live in [[MetadataFiles.generated]] (the [[Constraints]]
- * pattern: name-keyed, one driver-side read per write, audited as a
- * metadata-only commit).
+ * Rules ride their metadata-only audit commit ([[MetadataFiles.generated]],
+ * the [[Constraints]] pattern: resolved at the log head, one fold of the
+ * cached log per write).
  */
 object GeneratedColumns {
 
@@ -48,8 +48,10 @@ object GeneratedColumns {
       column: String, expr: String, zone: Option[String] = None,
       @JsonProperty("type") tpe: Option[String] = None)
 
-  def list(spark: org.apache.spark.sql.SparkSession, table: TableDefinition): List[GeneratedColumn] =
-    MetadataFiles.generated.read(spark, table)
+  def list(
+      spark: org.apache.spark.sql.SparkSession, log: TableVersions,
+      table: TableDefinition): List[GeneratedColumn] =
+    MetadataFiles.generated.current(spark, log, table)
 
   /** Declare a generated column. Must be declared before the first write
     * that carries or needs it (a generation rule is never born violated:
@@ -71,8 +73,8 @@ object GeneratedColumns {
         s"column ${g.column} already has a generation rule on ${table.name.fullyQualifiedName}")
       gs :+ stamped
     }
-    added(list(spark, table)) // refuse a duplicate before the scan
     val log = ctx.metastore.tableVersions
+    added(list(spark, log, table)) // refuse a duplicate before the scan
     val current = DeletionVectors.read(spark, log, table)
     if (current.columns.nonEmpty) {
       // determinism is decidable once the expression resolves against the
@@ -89,10 +91,9 @@ object GeneratedColumns {
             s"$bad existing rows disagree")
       }
     }
-    MetadataFiles.generated.update(spark, table)(added)
-    log.commit(table.name, TableVersions.TableUpdate(
-      user, UpdateMessage(s"ALTER TABLE ADD GENERATED COLUMN ${g.column} AS (${g.expr})"),
-      java.time.Instant.now(), Nil))
+    MetadataFiles.generated.commit(spark, ctx.metastore, table,
+      UpdateMessage(s"ALTER TABLE ADD GENERATED COLUMN ${g.column} AS (${g.expr})"), user)(added)
+    ()
   }
 
   /** SQL-originated writes arrive with the analyzer's NULL fill for
@@ -118,8 +119,8 @@ object GeneratedColumns {
     * non-null rule raises. The plan shape is fixed here on the driver,
     * inside the entry point's dynamic scope — lazy execution later does
     * not re-read the flag. */
-  def applied(df: DataFrame, table: TableDefinition): DataFrame = {
-    val gs = list(df.sparkSession, table)
+  def applied(df: DataFrame, log: TableVersions, table: TableDefinition): DataFrame = {
+    val gs = list(df.sparkSession, log, table)
     if (gs.isEmpty) return df
     val fillNulls = sqlNullFill.get()
     val names = df.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet

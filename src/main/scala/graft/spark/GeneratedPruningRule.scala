@@ -100,7 +100,7 @@ final case class GraftGeneratedPruningRule(spark: SparkSession) extends Rule[Log
       t: GraftV2Table): Seq[Expression] = {
     val defn = t.tableDefinition
     val partCols = defn.partitionSchema.columns.map(_.name)
-    val gens = try GeneratedColumns.list(spark, defn) catch { case NonFatal(_) => Nil }
+    val gens = try GeneratedColumns.list(spark, t.tableBinding.log, defn) catch { case NonFatal(_) => Nil }
     val partGens = gens.filter(g => partCols.exists(_.equalsIgnoreCase(g.column)))
     if (partGens.isEmpty) return Nil
     val parts = conjuncts(cond)

@@ -75,7 +75,7 @@ final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
             keyPairs.forall { case (t, s) => t.equalsIgnoreCase(s) }
           if (plainKeys && isCanonicalStar(m) &&
             !TableProperties.effectiveFlag(
-              spark, table.tableDefinition, TableProperties.MergeOnRead))
+              spark, table.tableBinding.log, table.tableDefinition, TableProperties.MergeOnRead))
             // the classic upsert keeps its one-join fast path (no
             // table-wide discovery pass; source-partition-scoped contract).
             // Merge-on-read mode routes through the conditional engine
@@ -208,9 +208,11 @@ final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * instead of the impossible down-cast; anything else stays with
     * Spark's own analysis error. */
   private def wideningBlockedOnly(m: MergeIntoTable): Boolean =
-    graftRelation(m.targetTable).map(r => TableProperties.effectiveFlag(
-      spark, r.table.asInstanceOf[GraftV2Table].tableDefinition,
-      TableProperties.AutoMergeSchema)).getOrElse(
+    graftRelation(m.targetTable).map { r =>
+      val t = r.table.asInstanceOf[GraftV2Table]
+      TableProperties.effectiveFlag(
+        spark, t.tableBinding.log, t.tableDefinition, TableProperties.AutoMergeSchema)
+    }.getOrElse(
       spark.conf.get("spark.graft.dml.autoMergeSchema", "false").toBoolean) &&
       m.targetTable.resolved && m.sourceTable.resolved && m.mergeCondition.resolved &&
       m.notMatchedBySourceActions.isEmpty && {
@@ -416,7 +418,8 @@ final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
             rootAttr(a.key).foreach { k =>
               // merge-on-read migrates rows natively (hide + re-land)
               if (partCols.contains(k.name.toLowerCase) &&
-                !TableProperties.effectiveFlag(spark, defn, TableProperties.MergeOnRead))
+                !TableProperties.effectiveFlag(
+                  spark, table.tableBinding.log, defn, TableProperties.MergeOnRead))
                 unsupported(s"UPDATE of partition column ${k.name} in $clause (rows would " +
                   "migrate between partitions; SET spark.graft.dml.mergeOnRead=true to allow)")
             }
@@ -500,7 +503,7 @@ final case class GraftMergeCommand(
     // commit's struct shape ([[SchemaStates]]). Without the flag extra
     // source columns drop and struct sources cast down, as before.
     val autoMerge =
-      TableProperties.effectiveFlag(session, defn, TableProperties.AutoMergeSchema)
+      TableProperties.effectiveFlag(session, binding.log, defn, TableProperties.AutoMergeSchema)
     val extras =
       if (autoMerge && current.columns.nonEmpty)
         src.schema.filterNot(f => current.columns.exists(_.equalsIgnoreCase(f.name))).toSeq
@@ -517,7 +520,7 @@ final case class GraftMergeCommand(
     // the pre-existing cast-down alignment.
     val numWide: List[(Seq[String], String)] =
       if (current.columns.nonEmpty &&
-          TableProperties.effectiveFlag(session, defn, TableProperties.TypeWidening))
+          TableProperties.effectiveFlag(session, binding.log, defn, TableProperties.TypeWidening))
         ColumnMapping.numericWidenings(current.schema, src.schema)
       else Nil
     numWide.foreach { case (p, t) =>
@@ -639,7 +642,7 @@ final case class GraftUpdateCommand(
     // matched preimages behind deletion vectors and land the postimages as
     // a row overlay — O(matched rows) written, no partition rewritten, and
     // it works on MIXED folds where copy-on-write must refuse.
-    if (TableProperties.effectiveFlag(session, defn, TableProperties.MergeOnRead)) {
+    if (TableProperties.effectiveFlag(session, binding.log, defn, TableProperties.MergeOnRead)) {
       RowOverlay.update(
         VersionContext(GraftV2Table.metastoreFor(binding, defn)), defn,
         condition.map(d => GraftDml.column(d.expr))
@@ -788,7 +791,7 @@ final case class GraftDeleteCommand(
     // mixed fold that path would match only current-scheme dirs and leave
     // old-era rows alive). UPDATE stays copy-on-write: a DV expresses
     // hidden rows, not changed values.
-    if (TableProperties.effectiveFlag(session, defn, TableProperties.MergeOnRead)) {
+    if (TableProperties.effectiveFlag(session, binding.log, defn, TableProperties.MergeOnRead)) {
       DeletionVectors.delete(
         VersionContext(GraftV2Table.metastoreFor(binding, defn)), binding.log,
         defn, cond, UserId("sql"), UpdateMessage("DELETE (SQL, merge-on-read)"))

@@ -144,7 +144,7 @@ private[spark] object GraftMaintenanceSql {
     """(?is)\s*CONVERT\s+TO\s+GRAFT\s+((?:\w+|`[^`\n]+`)(?:\.(?:\w+|`[^`\n]+`))*)\s+FROM\s+'([^']+)'(?:\s+PARTITIONED\s+BY\s*\(([^()]*)\))?(?:\s+FORMAT\s+(\w+))?(\s+DRY\s+RUN)?\s*;?\s*""".r
   // SHOW CREATE TABLE cat.db.t — the full round-trippable DDL script:
   // CREATE (schema/format/partitioning/LOCATION/TBLPROPERTIES) plus the
-  // ALTER statements for every sidecar declaration (constraints,
+  // ALTER statements for every commit-carried declaration (constraints,
   // generated/identity/default columns, row tracking)
   private val ShowCreateStmt =
     """(?is)\s*SHOW\s+CREATE\s+TABLE\s+((?:\w+|`[^`\n]+`)(?:\.(?:\w+|`[^`\n]+`))*)(?:\s+VERSION\s+AS\s+OF\s+'([^'\n]+)')?\s*;?\s*""".r
@@ -529,7 +529,7 @@ final case class GraftOptimizeCommand(
     // operator stops re-typing the clustering every maintenance run
     val effZorder =
       if (zorderCols.nonEmpty) zorderCols
-      else TableProperties.get(session, defn, "graft.zorder.columns")
+      else TableProperties.get(session, binding.log, defn, "graft.zorder.columns")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     val op = (if (effZorder.isEmpty) "OPTIMIZE" else "OPTIMIZE ZORDER") +
       (if (whereScope.nonEmpty) " WHERE" else "")
@@ -563,7 +563,7 @@ final case class GraftOptimizeCommand(
     val targetBytes: Option[Long] =
       targetMb.map(_ * 1024L * 1024L).orElse(
         TableProperties.get(
-          session, defn, TableProperties.OptimizeTargetFileSize).map(v =>
+          session, binding.log, defn, TableProperties.OptimizeTargetFileSize).map(v =>
           // legacy values predating the typed-contract gate fail their
           // first consultation NAMING table/key/value (the TableProperties
           // discipline), never as a bare NumberFormatException
@@ -689,7 +689,7 @@ final case class GraftVacuumCommand(
     // statement arguments win; otherwise the TABLE's declared retention
     // (TBLPROPERTIES graft.vacuum.*) fills in before the built-in default
     def prop(key: String): Option[String] =
-      TableProperties.get(session, defn, key)
+      TableProperties.get(session, binding.log, defn, key)
     val effRetainHours =
       retainHours.orElse(
         if (keepLast.isDefined) None
@@ -771,7 +771,7 @@ final case class GraftAutoOptimizeCommand(
     val report = Compaction.autoCompact(
       session, ctx, defn, UserId("sql"),
       minFiles = minFiles.getOrElse(TableProperties.effectiveInt(
-        session, defn, TableProperties.AutoOptimizeMinFiles, 4)))
+        session, binding.log, defn, TableProperties.AutoOptimizeMinFiles, 4)))
     Seq(Row(
       report.partitions.size,
       if (report.snapshot) "snapshot"
@@ -942,7 +942,7 @@ final case class GraftConvertCommand(
 /** `SHOW CREATE TABLE cat.db.t` — the full ROUND-TRIPPABLE DDL for a graft
   * table, as a script: the CREATE TABLE statement (schema, USING format,
   * PARTITIONED BY, LOCATION, TBLPROPERTIES) followed by one ALTER
-  * statement per sidecar declaration, in their own declared spellings —
+  * statement per declaration, in their own declared spellings —
   * `ADD CONSTRAINT nm CHECK (...)` (NOT NULL constraints emit as the
   * equivalent `CHECK (c IS NOT NULL)`), `ADD COLUMN c t GENERATED ALWAYS
   * AS (expr)`, `ADD COLUMN c t GENERATED ALWAYS AS IDENTITY`,
@@ -988,11 +988,11 @@ final case class GraftShowCreateTableCommand(
         binding.tables.get(defn.name.fullyQualifiedName)
           .flatMap(_._2).getOrElse(session.table(full).schema)
     }
-    val generated = GeneratedColumns.list(session, defn)
-    val identity = IdentityColumns.declared(session, defn)
-    val defaults = ColumnDefaults.list(session, defn)
-    val constraints = Constraints.list(session, defn)
-    val props = TableProperties.list(session, defn)
+    val generated = GeneratedColumns.list(session, binding.log, defn)
+    val identity = IdentityColumns.declared(session, binding.log, defn)
+    val defaults = ColumnDefaults.list(session, binding.log, defn)
+    val constraints = Constraints.list(session, binding.log, defn)
+    val props = TableProperties.list(session, binding.log, defn)
 
     def esc(s: String): String = s.replace("'", "''")
     // identity columns are engine-stamped BIGINTs by construction, so the
@@ -1023,8 +1023,8 @@ final case class GraftShowCreateTableCommand(
             s"expression (${g.expr}) does not analyze against the table's " +
             "columns; re-declare the rule with an explicit type"))
     // declared column COMMENTs replay in the CREATE list (top-level;
-    // nested-field comments stay sidecar-only — CREATE cannot spell them)
-    val comments = Comments.list(session, defn)
+    // nested-field comments stay metadata-only — CREATE cannot spell them)
+    val comments = Comments.list(session, binding.log, defn)
     def commentOf(c: String): String =
       comments.get(c).orElse(
         comments.find(_._1.equalsIgnoreCase(c)).map(_._2))
@@ -1544,14 +1544,14 @@ final case class GraftDescribeDetailCommand(parts: Seq[String]) extends LeafRunn
       totalBytes,
       binding.log.updates(defn.name).size,
       binding.log.currentCommit(defn.name).id,
-      Constraints.list(session, defn).size,
-      GeneratedColumns.list(session, defn).size,
+      Constraints.list(session, binding.log, defn).size,
+      GeneratedColumns.list(session, binding.log, defn).size,
       ColumnMapping.hasMapping(session, binding.log, defn, None),
       ShallowClone.hasCloneLink(binding.log, defn.name),
       PartitionEvolution.schemeAt(session, binding.log, defn, None)
         .columns.map(_.name).mkString(","),
       math.max(1, PartitionEvolution.eraSignatures(state).size),
-      RowTracking.trackingColumn(session, defn).getOrElse(""),
+      RowTracking.trackingColumn(session, binding.log, defn).getOrElse(""),
       DeletionVectors.hasVectors(session, binding.log, defn, None),
       // contributing merge-on-read overlay dirs ([[RowOverlay]]) — when it
       // grows, OPTIMIZE (absorb) or RowOverlay.squash (fold) is due

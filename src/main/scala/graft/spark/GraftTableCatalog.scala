@@ -359,14 +359,12 @@ final class GraftTableCatalog extends TableCatalog {
     }
     // external tables still need their root to exist for the first insert
     fs.mkdirs(new org.apache.hadoop.fs.Path(uri))
-    // the Scala API's init sequence, reused verbatim: metastore registration
-    // (in-memory impls) + idempotent log init
-    VersionContext(GraftV2Table.metastoreFor(binding, defn))
-      .init(defn, UserId("sql"), UpdateMessage("CREATE TABLE (SQL)"))
-    binding.tables.put(tableName.fullyQualifiedName, (defn, Some(schema)))
     // CREATE TABLE … TBLPROPERTIES('k'='v'): user properties (everything
     // that isn't Spark's reserved location/provider/ownership plumbing)
-    // seed the table's own property file ([[TableProperties]])
+    // seed the table's own property set ([[TableProperties]]), and
+    // CREATE-time column comments (`c INT COMMENT '…'`, the schema's field
+    // metadata) seed its durable comments so they survive the session and
+    // emit from SHOW CREATE ([[Comments]]) — both ride the init commit
     val reserved = Set(
       TableCatalog.PROP_LOCATION, TableCatalog.PROP_PROVIDER,
       TableCatalog.PROP_OWNER, TableCatalog.PROP_EXTERNAL,
@@ -374,12 +372,13 @@ final class GraftTableCatalog extends TableCatalog {
     val userProps = properties.asScala.toMap.filterNot { case (k, _) =>
       reserved.contains(k) || k.startsWith("option.")
     }
-    TableProperties.seed(SparkSession.active, defn, userProps)
-    // CREATE-time column comments (`c INT COMMENT '…'`) ride the schema's
-    // field metadata — seed the durable sidecar so they survive the
-    // session and emit from SHOW CREATE ([[Comments]])
-    Comments.seed(SparkSession.active, defn,
-      schema.fields.flatMap(f => f.getComment().map(f.name -> _)).toMap)
+    val seeds = TableProperties.seed(defn, userProps) ++
+      Comments.seed(schema.fields.flatMap(f => f.getComment().map(f.name -> _)).toMap)
+    // the Scala API's init sequence, reused verbatim: metastore registration
+    // (in-memory impls) + idempotent log init
+    VersionContext(GraftV2Table.metastoreFor(binding, defn))
+      .init(defn, UserId("sql"), UpdateMessage("CREATE TABLE (SQL)"), seeds)
+    binding.tables.put(tableName.fullyQualifiedName, (defn, Some(schema)))
     loadTable(ident)
   }
 
@@ -584,7 +583,7 @@ final class GraftTableCatalog extends TableCatalog {
           Constraints.add(spark, ctx, defn, Constraints.notNull(n), UserId("sql"))
         else {
           val nm = s"${n}_not_null"
-          if (Constraints.list(spark, defn).exists(_.name == nm))
+          if (Constraints.list(spark, binding.log, defn).exists(_.name == nm))
             Constraints.drop(spark, ctx, defn, nm, UserId("sql"))
           else
             GraftV2Table.metastoreFor(binding, defn).commit(defn.name, TableUpdate(
@@ -597,7 +596,7 @@ final class GraftTableCatalog extends TableCatalog {
         // COLUMN COMMENT — durable free-text documentation ([[Comments]]):
         // audited, clone-carried, DESCRIBE-visible, SHOW CREATE-emitted.
         // Purely descriptive, so the declared schema is unchanged (the
-        // served schema decorates from the sidecar). The SQL path arrives
+        // served schema decorates from the log). The SQL path arrives
         // analyzer-resolved; a programmatic top-level typo still refuses.
         val path = cm.fieldNames().toSeq
         require(path.length > 1 ||
@@ -826,9 +825,9 @@ private[spark] final class GraftV2Table(
     // through the analyzer's own machinery; declared column COMMENTs
     // decorate too (DESCRIBE visibility)
     Comments.decorate(
-      org.apache.spark.sql.SparkSession.active, defn,
+      org.apache.spark.sql.SparkSession.active, binding.log, defn,
       ColumnDefaults.decorate(
-        org.apache.spark.sql.SparkSession.active, defn,
+        org.apache.spark.sql.SparkSession.active, binding.log, defn,
         StructType(delegate.schema().filterNot(
           _.name.equalsIgnoreCase(RowTracking.RowIdCol)))))
   override def partitioning(): Array[Transform] = delegate.partitioning()
@@ -836,7 +835,7 @@ private[spark] final class GraftV2Table(
     // table properties (TBLPROPERTIES) overlay the file table's own —
     // SHOW TBLPROPERTIES serves the declared set through the stock path
     val merged = new util.HashMap[String, String](delegate.properties())
-    TableProperties.list(org.apache.spark.sql.SparkSession.active, defn)
+    TableProperties.list(org.apache.spark.sql.SparkSession.active, binding.log, defn)
       .foreach { case (k, v) => merged.put(k, v) }
     merged
   }
@@ -1054,7 +1053,7 @@ private[spark] object GraftV2Table {
     // all-NULL — the analyzer's fill for an omitted column-list entry — a
     // supplied value rejects); the carried current rows below keep the ids
     // they already own
-    val identity = IdentityColumns.declared(spark, defn)
+    val identity = IdentityColumns.declared(spark, binding.log, defn)
     var hwmAtStamp = -1L
     val data0 = identity match {
       case None => data
@@ -1083,7 +1082,8 @@ private[spark] object GraftV2Table {
     // pointers) and not for the table's first write (nothing to carry —
     // the ordinary path is already O(batch) there).
     if (!overwrite &&
-        TableProperties.effectiveFlag(spark, defn, TableProperties.MergeOnRead) &&
+        TableProperties.effectiveFlag(
+          spark, binding.log, defn, TableProperties.MergeOnRead) &&
         currentOrNone(spark, binding, defn).isDefined) {
       RowOverlay.append(
         data0.toDF(), ctx, defn, UserId("sql"),

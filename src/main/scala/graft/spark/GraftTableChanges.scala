@@ -60,7 +60,7 @@ object GraftTableChanges {
       // identity tables keep the plain insert/delete feed — and only the
       // id-preserving write paths actually carry ids across rewrites)
       val feed =
-        if (RowTracking.engineTracked(spark, defn))
+        if (RowTracking.engineTracked(spark, binding.log, defn))
           ChangeFeed.readTracked(spark, binding.log, defn,
             Some(CommitId(String.valueOf(from))), CommitId(String.valueOf(to)))
         else

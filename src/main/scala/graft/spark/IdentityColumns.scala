@@ -44,10 +44,11 @@ object IdentityColumns {
 
   /** The table's DECLARED identity column, if any — the SQL
     * `GENERATED ALWAYS AS IDENTITY` registration ([[declare]]). One
-    * driver-side metadata read ([[MetadataFiles.identity]]). */
+    * fold of the cached log ([[MetadataFiles.identity]]). */
   def declared(
-      spark: org.apache.spark.sql.SparkSession, table: TableDefinition): Option[String] =
-    MetadataFiles.identity.read(spark, table).get("column")
+      spark: org.apache.spark.sql.SparkSession, log: TableVersions,
+      table: TableDefinition): Option[String] =
+    MetadataFiles.identity.current(spark, log, table).get("column")
 
   /** Declare `column` as the table's engine-assigned identity column
     * (the `ALTER TABLE … ADD COLUMN c BIGINT GENERATED ALWAYS AS
@@ -68,15 +69,14 @@ object IdentityColumns {
         s"table ${table.name.fullyQualifiedName} already has identity column $existing"))
       Map("column" -> column)
     }
-    declaredOnce(MetadataFiles.identity.read(spark, table))
+    val log = ctx.metastore.tableVersions
+    declaredOnce(MetadataFiles.identity.current(spark, log, table))
     require(!table.partitionSchema.columns.exists(_.name.equalsIgnoreCase(column)),
       s"identity column $column cannot be a partition column")
-    require(!GeneratedColumns.list(spark, table).exists(_.column.equalsIgnoreCase(column)),
+    require(!GeneratedColumns.list(spark, log, table).exists(_.column.equalsIgnoreCase(column)),
       s"column $column already has a generation rule")
-    MetadataFiles.identity.update(spark, table)(declaredOnce)
-    ctx.metastore.commit(table.name, graft.core.TableVersions.TableUpdate(
-      user, UpdateMessage(s"ALTER TABLE ADD IDENTITY COLUMN $column"),
-      java.time.Instant.now(), Nil))
+    MetadataFiles.identity.commit(spark, ctx.metastore, table,
+      UpdateMessage(s"ALTER TABLE ADD IDENTITY COLUMN $column"), user)(declaredOnce)
     ()
   }
 

@@ -26,8 +26,8 @@ import graft.spark.VersionContext.DatasetVersionOps
  *
  *  - the STATIC definition (source table, optional WHERE, group columns,
  *    aggregate list), extracted once at CREATE from the analyzed Catalyst
- *    plan of the defining SELECT and persisted in the MV's metadata
- *    files ([[MetadataFiles.mv]]);
+ *    plan of the defining SELECT and carried by the MV's init commit
+ *    ([[MetadataFiles.mv]]);
  *  - the dynamic REFRESH ANCHOR (the source commit the current MV state
  *    reflects), carried IN the MV commit's message (`anchor=<commit-id>`)
  *    so state and anchor move in ONE atomic commit — a crash between
@@ -146,8 +146,8 @@ object MaterializedView {
     val mvDefn = TableDefinition(mvName, location, PartitionSchema.snapshot, FileFormat.Parquet)
     val ctx = VersionContext(GraftV2Table.metastoreFor(binding, mvDefn))
     ctx.init(mvDefn, user, UpdateMessage(
-      s"CREATE MATERIALIZED VIEW over ${mvDef.sourceParts.mkString(".")}"))
-    writeDef(session, mvDefn, mvDef)
+      s"CREATE MATERIALIZED VIEW over ${mvDef.sourceParts.mkString(".")}"),
+      declared = MetadataFiles.mv.entry(defJson(mvDef)))
 
     // even the initial build commits with the rebase discipline, anchored
     // at the state observed here (the init commit): a concurrent
@@ -196,7 +196,7 @@ object MaterializedView {
       full: Boolean = false): (CommitId, CommitId, String) = {
     val binding = GraftTableCatalog.lookup(cat, mvDefn.name).map(_._1)
       .getOrElse(sys.error(s"$cat.${mvDefn.name.fullyQualifiedName} is not registered"))
-    val mvDef = readDef(session, mvDefn)
+    val mvDef = readDef(session, binding.log, mvDefn)
     val srcDefn = GraftTableCatalog.lookup(cat, TableName(
       mvDef.sourceParts(1), mvDef.sourceParts(2))).map(_._2)
       .getOrElse(sys.error(s"MV source ${mvDef.sourceParts.mkString(".")} is not registered"))
@@ -606,7 +606,7 @@ object MaterializedView {
     (mvDef, srcDefn, binding)
   }
 
-  private def writeDef(session: SparkSession, mv: TableDefinition, d: MvDef): Unit = {
+  private def defJson(d: MvDef): com.fasterxml.jackson.databind.JsonNode = {
     val n = mapper.createObjectNode()
     n.put("source", d.sourceParts.mkString("."))
     d.factAlias.foreach(n.put("factAlias", _))
@@ -628,12 +628,11 @@ object MaterializedView {
       }
       val gr = n.putArray("groupRefs"); d.refsForGroups.foreach(gr.add)
     }
-    MetadataFiles.mv.update(session, mv)(_ => n)
-    ()
+    n
   }
 
-  def readDef(session: SparkSession, mv: TableDefinition): MvDef = {
-    val node = MetadataFiles.mv.read(session, mv)
+  def readDef(session: SparkSession, log: TableVersions, mv: TableDefinition): MvDef = {
+    val node = MetadataFiles.mv.current(session, log, mv)
     require(!node.isMissingNode, s"${mv.name.fullyQualifiedName} is not a materialized view")
     MvDef(
       node.get("source").asText().split("\\.").toSeq,

@@ -84,7 +84,7 @@ object Merge {
       // the ENGINE-OWNED identity / row-tracking column is never the
       // source's to supply (GENERATED ALWAYS): it is exempt from the
       // every-column rule and rejected if present
-      val idCol = IdentityColumns.declared(spark, table)
+      val idCol = IdentityColumns.declared(spark, log, table)
       idCol.foreach(c => require(!source.columns.exists(_.equalsIgnoreCase(c)),
         s"identity column $c is GENERATED ALWAYS — the merge source must not supply it"))
       if (current.columns.nonEmpty) {
@@ -242,7 +242,7 @@ object Merge {
     // hide by file regardless of era; new rows land current-scheme), and
     // partition-column SETs migrate rows by hide + re-land.
     val morMode = mergeOnRead.getOrElse(TableProperties.effectiveFlag(
-      source.sparkSession, table, TableProperties.MergeOnRead))
+      source.sparkSession, log, table, TableProperties.MergeOnRead))
     // same refusal as mergeInto: the clause join's partition arithmetic
     // (touched-partition discovery, alsoRemove) assumes ONE layout — on a
     // mixed fold the rewrite would re-land old-era rows into new-scheme
@@ -448,7 +448,7 @@ object Merge {
       // an assignment naming a column the table doesn't have would be
       // silently ignored by the per-column projection — reject instead
       val outNames = outSchema.map(_.name.toLowerCase).toSet
-      val idColC = IdentityColumns.declared(spark, table)
+      val idColC = IdentityColumns.declared(spark, log, table)
       ((matched ++ notMatchedBySource).flatMap(_.set.toSeq.flatten) ++
         notMatched.flatMap(_.values)).foreach { case (n, _) =>
         require(outNames.contains(n.toLowerCase),

@@ -125,7 +125,8 @@ object ReplaceWhere {
     // partition rewrites — arbitrary-region backfill at O(changes). The
     // partition-scoped tier above stays copy-on-write in every mode (it
     // is already zero-read — pointer moves only).
-    if (TableProperties.effectiveFlag(session, defn, TableProperties.MergeOnRead)) {
+    if (TableProperties.effectiveFlag(
+        session, binding.log, defn, TableProperties.MergeOnRead)) {
       RowOverlay.replaceWhere(
         VersionContext(GraftV2Table.metastoreFor(binding, defn)),
         defn, pred, aligned, user, UpdateMessage(s"$msg (merge-on-read)"))

@@ -354,7 +354,7 @@ object RowOverlay {
     val (df0, identity0) = identity match {
       case some @ Some(_) => (df, some)
       case None =>
-        IdentityColumns.declared(spark, table) match {
+        IdentityColumns.declared(spark, log, table) match {
           case None => (df, None)
           case Some(c) =>
             val hwm = IdentityColumns.effectiveHighWaterMark(spark, log, table, c)
@@ -363,7 +363,8 @@ object RowOverlay {
     }
     val mapped = ColumnMapping.toPhysical(
       Constraints.enforced(
-        GeneratedColumns.applied(ColumnDefaults.applied(df0, table), table), table),
+        GeneratedColumns.applied(
+          ColumnDefaults.applied(df0, log, table), log, table), log, table),
       table, log).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the emptiness probe is folded into partitionValues for partitioned

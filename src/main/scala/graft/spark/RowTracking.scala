@@ -57,7 +57,7 @@ object RowTracking {
     require(empty,
       s"row tracking on ${table.name.fullyQualifiedName} must be enabled " +
         "before the first data commit (existing files would lack the id column)")
-    IdentityColumns.declared(spark, table).foreach(c => sys.error(
+    IdentityColumns.declared(spark, log, table).foreach(c => sys.error(
       s"table ${table.name.fullyQualifiedName} already has identity column $c — " +
         "it already provides stable row ids; use it directly"))
     IdentityColumns.declare(spark, ctx, table, RowIdCol, user)
@@ -66,11 +66,12 @@ object RowTracking {
   /** The column serving as this table's tracking id, if any: the engine's
     * own `_graft_row_id`, or a user-declared identity column (same
     * semantics: engine-stamped, unique, carried on rewrite). */
-  def trackingColumn(spark: SparkSession, table: TableDefinition): Option[String] =
-    IdentityColumns.declared(spark, table)
+  def trackingColumn(
+      spark: SparkSession, log: TableVersions, table: TableDefinition): Option[String] =
+    IdentityColumns.declared(spark, log, table)
 
-  def enabled(spark: SparkSession, table: TableDefinition): Boolean =
-    trackingColumn(spark, table).isDefined
+  def enabled(spark: SparkSession, log: TableVersions, table: TableDefinition): Boolean =
+    trackingColumn(spark, log, table).isDefined
 
   /** True only for an EXPLICIT `SET ROW TRACKING` opt-in (the engine's
     * own hidden id column) — the gate for surfaces whose output contract
@@ -78,8 +79,8 @@ object RowTracking {
     * user-declared identity column provides usable ids to callers who ask
     * for them, but must not silently re-shape a pre-existing table's
     * feed. */
-  def engineTracked(spark: SparkSession, table: TableDefinition): Boolean =
-    trackingColumn(spark, table).contains(RowIdCol)
+  def engineTracked(spark: SparkSession, log: TableVersions, table: TableDefinition): Boolean =
+    trackingColumn(spark, log, table).contains(RowIdCol)
 
   /** Write a batch to a tracked table. Rows carrying a non-null id KEEP
     * it (the read-modify-write rewrite: read with ids, modify values,
@@ -94,7 +95,7 @@ object RowTracking {
       user: UserId,
       message: UpdateMessage): (TableVersion, TableChanges) = {
     val spark = df.sparkSession
-    val c = trackingColumn(spark, table).getOrElse(sys.error(
+    val c = trackingColumn(spark, ctx.metastore.tableVersions, table).getOrElse(sys.error(
       s"table ${table.name.fullyQualifiedName} has no row tracking — " +
         "RowTracking.enable first"))
     IdentityColumns.insertPreserving(df, ctx, table, c, user, message)

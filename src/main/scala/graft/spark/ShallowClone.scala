@@ -45,11 +45,11 @@ import graft.core.TableVersions.{CommitId, TableOperation, TableUpdate, UpdateMe
  *    source's resolved values ride the clone's state commit, so
  *    renames/drops, the era and struct shapes survive the clone, and each
  *    side evolves them independently through its own log;
- *  - table CONSTRAINTS, GENERATED-COLUMN rules, and the IDENTITY
- *    declaration: the clone inherits the source's current set into its
- *    own name-keyed metadata files, owning them independently from then
- *    on; the identity HIGH-WATER MARK rides the clone-state commit
- *    message so clone writes never re-mint carried ids;
+ *  - the DECLARATIONS (constraints, generated columns, identity,
+ *    defaults, comments, TBLPROPERTIES): the source's current set rides
+ *    the same state commit, owned independently from then on; the
+ *    identity HIGH-WATER MARK rides the clone-state commit message so
+ *    clone writes never re-mint carried ids;
  *  - the COPY INTO load history: one metadata commit carries the
  *    source's loaded-file set so the clone never re-ingests rows it
  *    already holds.
@@ -99,7 +99,7 @@ object ShallowClone {
     // the cloned state rides the clone-state commit message — a clone
     // write stamping from a fresh mark of 0 would collide with the carried
     // rows' ids
-    val identityMark = IdentityColumns.declared(spark, src).map { c =>
+    val identityMark = IdentityColumns.declared(spark, log, src).map { c =>
       // resolve like the WRITE path (lineage mark, else max(id) over the
       // cloned state, DV-hidden rows included): a checkpoint that folded
       // the source's mark must not carry hwm=0 and re-mint carried ids
@@ -113,14 +113,16 @@ object ShallowClone {
     // CURRENT logical names over them; carrying the at-state mapping would
     // leave a post-`at` rename's registered name with no physical
     // resolution and NULL-blank real values. The era and the struct
-    // shapes carry as resolved at the cloned commit.
+    // shapes carry as resolved at the cloned commit, the declarations as
+    // in force at the source's head.
     val none = Map.empty[String, String]
     val carried =
       ColumnMapping.entriesAt(spark, log, src, None)
         .fold(none)(MetadataFiles.columnMapping.entry) ++
       MetadataFiles.governing(MetadataFiles.partitioning.fold(spark, log, src, Some(at)))
         .fold(none)(c => MetadataFiles.partitioning.entry(MetadataFiles.Change(c, c))) ++
-      SchemaStates.at(spark, log, src, at).fold(none)(s => SchemaStates.entry(s, s))
+      SchemaStates.at(spark, log, src, at).fold(none)(s => SchemaStates.entry(s, s)) ++
+      MetadataFiles.declared(spark, log, src)
     // the mark and the carried metadata must ride a commit even when the
     // cloned state has no ops (an empty-state clone still inherits the
     // never-reuse-ids contract and the source's metadata)
@@ -133,14 +135,13 @@ object ShallowClone {
     }
     // carry the remaining metadata into the clone's own namespace (see the
     // class doc): DV pairs and overlay rows re-anchored at the clone's
-    // state commit, and the current declarations
+    // state commit
     val cloneAnchor = log.currentCommit(dst)
     if (DeletionVectors.hasVectors(spark, log, src, Some(at)))
       DeletionVectors.cloneResolvedState(spark, log, src, at, cloneAnchor)
     // merge-on-read overlay rows: resolved (live, DV-applied) rows carry as
     // one complete overlay dir anchored at the clone's state commit
     RowOverlay.cloneResolvedState(spark, log, src, at, cloneAnchor)
-    MetadataFiles.carry(spark, src, dstDefn)
     // COPY INTO load history: the clone's data already contains the
     // source's ingested rows, so the loaded-file set must carry — without
     // it, a COPY INTO on the clone from the same landing dir would

@@ -1,11 +1,9 @@
 package graft.spark
 
-import java.time.Instant
-
 import org.apache.spark.sql.SparkSession
 
 import graft.core._
-import graft.core.TableVersions.{TableUpdate, UpdateMessage, UserId}
+import graft.core.TableVersions.{UpdateMessage, UserId}
 
 /**
  * Per-table properties — `ALTER TABLE t SET TBLPROPERTIES('k'='v', …)` /
@@ -40,10 +38,11 @@ import graft.core.TableVersions.{TableUpdate, UpdateMessage, UserId}
  *  - `graft.zorder.columns` — declared clustering: a bare `OPTIMIZE t`
  *    Z-orders by these columns (the statement's own ZORDER BY wins).
  *
- * Storage follows the [[Constraints]] convention: a name-keyed file
- * ([[MetadataFiles.tblProperties]]) under the (possibly shared)
- * location, so shallow clones own independent property sets; every
- * SET/UNSET lands a metadata-only audit commit in the history.
+ * Storage follows the [[Constraints]] convention: the property set rides
+ * the metadata-only audit commit of every SET/UNSET — CREATE's
+ * TBLPROPERTIES the init commit ([[MetadataFiles.tblProperties]],
+ * resolved at the log head, so shallow clones own independent property
+ * sets).
  */
 object TableProperties {
 
@@ -89,14 +88,16 @@ object TableProperties {
     }
 
   /** The table's recorded properties (empty when none were ever set).
-    * One driver-side metadata probe, memoized: the behavior keys are
-    * consulted inside analyzer rules, which run in fixed-point batches
+    * One fold of the cached log: the behavior keys are consulted inside
+    * analyzer rules, which run in fixed-point batches
     * ([[MetadataFiles.tblProperties]]). */
-  def list(spark: SparkSession, table: TableDefinition): Map[String, String] =
-    MetadataFiles.tblProperties.read(spark, table)
+  def list(spark: SparkSession, log: TableVersions, table: TableDefinition): Map[String, String] =
+    MetadataFiles.tblProperties.current(spark, log, table)
 
-  def get(spark: SparkSession, table: TableDefinition, key: String): Option[String] =
-    list(spark, table).get(key)
+  def get(
+      spark: SparkSession, log: TableVersions, table: TableDefinition,
+      key: String): Option[String] =
+    list(spark, log, table).get(key)
 
   private def parsed[A](
       table: TableDefinition, key: String, v: String, kind: String,
@@ -109,19 +110,21 @@ object TableProperties {
     * `default` — the single resolution rule every behavior key uses. */
   def effectiveFlag(
       spark: SparkSession,
+      log: TableVersions,
       table: TableDefinition,
       key: String,
       default: Boolean = false): Boolean =
-    get(spark, table, key).map(parsed(table, key, _, "boolean", _.toBooleanOption))
+    get(spark, log, table, key).map(parsed(table, key, _, "boolean", _.toBooleanOption))
       .getOrElse(spark.conf.get("spark." + key, default.toString).toBoolean)
 
   /** Int twin of [[effectiveFlag]]. */
   def effectiveInt(
       spark: SparkSession,
+      log: TableVersions,
       table: TableDefinition,
       key: String,
       default: Int): Int =
-    get(spark, table, key).map(parsed(table, key, _, "integer", _.toIntOption))
+    get(spark, log, table, key).map(parsed(table, key, _, "integer", _.toIntOption))
       .getOrElse(spark.conf.get("spark." + key, default.toString).toInt)
 
   /** Merge `props` into the table's set; one metadata-only audit commit. */
@@ -143,8 +146,8 @@ object TableProperties {
       user: UserId): Unit =
     applyChanges(spark, ctx, table, Map.empty, keys, user)
 
-  /** One statement's SETs and UNSETs as ONE sidecar write + ONE audit
-    * commit (a mixed `ALTER TABLE … SET … UNSET …` must not land as two
+  /** One statement's SETs and UNSETs as ONE audit commit carrying the
+    * new set (a mixed `ALTER TABLE … SET … UNSET …` must not land as two
     * half-applied commits). Values validate before anything writes. */
   def applyChanges(
       spark: SparkSession,
@@ -157,7 +160,6 @@ object TableProperties {
       "SET/UNSET TBLPROPERTIES needs at least one property")
     sets.keys.foreach(k => require(k.trim.nonEmpty, "empty property key"))
     validate(table, sets)
-    MetadataFiles.tblProperties.update(spark, table)(_ ++ sets -- unsets)
     val msg = List(
       if (sets.nonEmpty)
         Some("SET TBLPROPERTIES (" +
@@ -166,18 +168,17 @@ object TableProperties {
       if (unsets.nonEmpty)
         Some(s"UNSET TBLPROPERTIES (${unsets.sorted.mkString(", ")})")
       else None).flatten.mkString(" ")
-    ctx.metastore.commit(table.name, TableUpdate(
-      user, UpdateMessage(s"ALTER TABLE $msg"), Instant.now(), Nil))
+    MetadataFiles.tblProperties.commit(spark, ctx.metastore, table,
+      UpdateMessage(s"ALTER TABLE $msg"), user)(_ ++ sets -- unsets)
     ()
   }
 
-  /** Seed without a commit — the CREATE TABLE TBLPROPERTIES landing. */
-  private[spark] def seed(
-      spark: SparkSession, table: TableDefinition, props: Map[String, String]): Unit =
-    if (props.nonEmpty) {
+  /** CREATE TABLE's TBLPROPERTIES, validated, as the init commit's entry. */
+  private[spark] def seed(table: TableDefinition, props: Map[String, String]): Map[String, String] =
+    if (props.isEmpty) Map.empty
+    else {
       validate(table, props)
-      MetadataFiles.tblProperties.update(spark, table)(_ => props)
-      ()
+      MetadataFiles.tblProperties.entry(props)
     }
 
   // ---- post-write auto-optimize hook ------------------------------------
@@ -202,12 +203,13 @@ object TableProperties {
       table: TableDefinition,
       user: UserId): Unit = {
     if (inAutoOptimize.get()) return
-    if (!effectiveFlag(spark, table, AutoOptimize)) return
+    val log = ctx.metastore.tableVersions
+    if (!effectiveFlag(spark, log, table, AutoOptimize)) return
     inAutoOptimize.set(true)
     try {
       Compaction.autoCompact(
         spark, ctx, table, user,
-        minFiles = effectiveInt(spark, table, AutoOptimizeMinFiles, 4))
+        minFiles = effectiveInt(spark, log, table, AutoOptimizeMinFiles, 4))
       ()
     } catch {
       case e: Exception =>

@@ -331,24 +331,7 @@ object Vacuum {
         else Nil
       }
 
-    // crashed metadata-file writers ([[MetadataFiles.publish]]) leave
-    // `.<name>.tmp-<uuid>` staging files behind — harmless (a dangling
-    // temp never resolves) but immortal; reclaim the stale ones under
-    // the same mtime grace. An IN-FLIGHT writer's temp is younger than
-    // any sane grace window by construction.
-    val tmpOnDisk: List[(String, Boolean)] = MetadataFiles.tempDirs(root)
-      .filter(fs.exists(_)).flatMap { d =>
-        fs.listStatus(d).toList
-          .filter(st => st.isFile && MetadataFiles.isTempFile(st.getPath.getName))
-          .map { st =>
-            val rel =
-              if (d == root) st.getPath.getName
-              else s"${d.getName}/${st.getPath.getName}"
-            rel -> (st.getModificationTime < cutoff)
-          }
-      }
-
-    val doomed = (onDisk ++ statsOnDisk ++ deletesOnDisk ++ appendsOnDisk ++ tmpOnDisk).collect {
+    val doomed = (onDisk ++ statsOnDisk ++ deletesOnDisk ++ appendsOnDisk).collect {
       case (rel, oldEnough)
         if oldEnough && !referenced.contains(rel.stripPrefix("_stats/")) => rel
     }
@@ -356,16 +339,14 @@ object Vacuum {
     // operator's pre-flight check (Delta's VACUUM ... DRY RUN)
     if (dryRun)
       return Report(
-        examined = onDisk.size + statsOnDisk.size + deletesOnDisk.size +
-          appendsOnDisk.size + tmpOnDisk.size,
+        examined = onDisk.size + statsOnDisk.size + deletesOnDisk.size + appendsOnDisk.size,
         deleted = doomed.sorted, failed = Nil, dryRun = true)
     // honor the delete result: a false return (permissions, races) must not
     // be reported as reclaimed space
     val (deleted, failed) =
       doomed.partition(rel => fs.delete(new HPath(root, rel), true))
     Report(
-      examined = onDisk.size + statsOnDisk.size + deletesOnDisk.size +
-        appendsOnDisk.size + tmpOnDisk.size,
+      examined = onDisk.size + statsOnDisk.size + deletesOnDisk.size + appendsOnDisk.size,
       deleted = deleted.sorted, failed = failed.sorted)
   }
 }

@@ -36,10 +36,23 @@ final case class VersionContext(
     newVersion: () => Version = () => Version.generateVersion()) {
 
   /** Track the table in the commit log and register it with the metastore
-    * (the reference splits this between caller DDL and `init`). */
-  def init(table: TableDefinition, userId: UserId, message: UpdateMessage): Unit = {
+    * (the reference splits this between caller DDL and `init`).
+    * `declared` — commit-line table metadata, the table's declarations at
+    * creation — rides the init commit, over the empty value of every other
+    * declaration ([[MetadataFiles.undeclared]]); when the log already
+    * tracks the table it lands on one metadata-only commit instead of
+    * being dropped. */
+  def init(
+      table: TableDefinition, userId: UserId, message: UpdateMessage,
+      declared: Map[String, String] = Map.empty): Unit = {
     metastore.metastore.register(table) // no-op for catalog-backed metastores
-    metastore.init(table.name, table.isSnapshot, userId, message, Instant.now())
+    val created = metastore.init(table.name, table.isSnapshot, userId, message,
+      Instant.now(), MetadataFiles.undeclared ++ declared)
+    if (!created && declared.nonEmpty) {
+      metastore.commit(table.name,
+        TableUpdate(userId, message, Instant.now(), Nil).withTableMetadata(declared))
+      ()
+    }
   }
 }
 
@@ -293,19 +306,19 @@ object VersionContext {
       * [[Constraints.enforced]] (constraints speak LOGICAL names; the
       * gate rides the staging job's own pass via `raise_error`), then
       * the [[ColumnMapping]] logical→physical translation files store.
-      * All identity for plain tables, costing one driver-side metadata
-      * read each. */
+      * All identity for plain tables, costing one fold of the cached log
+      * each. */
     private def mappedForWrite(
         ds: Dataset[T],
         ctx: VersionContext,
         table: TableDefinition): Dataset[_] = {
-      PartitionEvolution.requireCurrentScheme(
-        ds.sparkSession, ctx.metastore.tableVersions, table)
+      val log = ctx.metastore.tableVersions
+      PartitionEvolution.requireCurrentScheme(ds.sparkSession, log, table)
       ColumnMapping.toPhysical(
         Constraints.enforced(
           GeneratedColumns.applied(
-            ColumnDefaults.applied(ds.toDF(), table), table), table),
-        table, ctx.metastore.tableVersions)
+            ColumnDefaults.applied(ds.toDF(), log, table), log, table), log, table),
+        table, log)
     }
   }
 

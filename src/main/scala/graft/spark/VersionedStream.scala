@@ -114,7 +114,7 @@ object VersionedStream {
       log: TableVersions,
       defn: TableDefinition,
       startingAt: Option[TableVersions.CommitId] = None): DataFrame = {
-    require(RowTracking.enabled(spark, defn),
+    require(RowTracking.enabled(spark, log, defn),
       s"table ${defn.name.fullyQualifiedName} has no row-tracking / identity " +
         "column — RowTracking.enable (or declare an identity column) first, " +
         "or consume readChangeFeed(keys = ...)")

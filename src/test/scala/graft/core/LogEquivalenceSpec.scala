@@ -36,6 +36,15 @@ class LogEquivalenceSpec extends AnyFunSuite with Matchers {
     json.versionAt(tbl, ju.last.id) shouldBe mem.versionAt(tbl, mu.last.id)
   }
 
+  /** A cold instance opened now folds exactly as the long-lived `warm`
+    * one, whose log cache has seen every earlier step. */
+  private def warmMatchesCold(warm: TableVersions, dir: String, tbl: TableName): Unit = {
+    val cold = JsonFileTableVersions(dir)
+    warm.updates(tbl) shouldBe cold.updates(tbl)
+    warm.currentVersion(tbl) shouldBe cold.currentVersion(tbl)
+    cold.updates(tbl).foreach(u => warm.versionAt(tbl, u.id) shouldBe cold.versionAt(tbl, u.id))
+  }
+
   test("seeded random op sequences fold identically in both impls; restart is invisible") {
     for (round <- 0 until 3) {
       val rnd = new scala.util.Random(20260813L + round)
@@ -46,6 +55,7 @@ class LogEquivalenceSpec extends AnyFunSuite with Matchers {
       val initInstant = Instant.ofEpochSecond(0)
       json.init(tbl, isSnapshot = false, who, UpdateMessage("init"), initInstant)
       mem.init(tbl, isSnapshot = false, who, UpdateMessage("init"), initInstant)
+      val warm = JsonFileTableVersions(dir)
       val parts = (1 to 6).map(i => Partition(PartitionColumn("date"), f"2026-01-$i%02d"))
 
       for (step <- 1 to 40) {
@@ -68,6 +78,7 @@ class LogEquivalenceSpec extends AnyFunSuite with Matchers {
             json = JsonFileTableVersions(dir)
         }
         assertEquivalent(mem, json, tbl)
+        warmMatchesCold(warm, dir, tbl)
       }
       mem.updates(tbl).size should be > 10 // the sequence really committed
     }
@@ -80,15 +91,18 @@ class LogEquivalenceSpec extends AnyFunSuite with Matchers {
     val tbl = TableName("db", "ct")
     log.init(tbl, isSnapshot = false, who, UpdateMessage("init"), Instant.ofEpochSecond(0))
     val p = Partition(PartitionColumn("date"), "2026-02-01")
-    for (step <- 1 to 12)
+    for (step <- 1 to 12) {
       log.commit(tbl, TableUpdate(who, UpdateMessage(s"s$step"), Instant.ofEpochSecond(step.toLong),
         List(TableOperation.AddPartitionVersion(
           p, Version(Instant.ofEpochSecond(step.toLong), new UUID(rnd.nextLong(), rnd.nextLong()))))))
+      warmMatchesCold(log, dir, tbl)
+    }
     val before = log.currentVersion(tbl)
     val retained = log.updates(tbl).take(3)
     val beforeAt = retained.map(u => u.id -> log.versionAt(tbl, u.id)).toMap
 
     log.checkpoint(tbl, keepLast = 3) shouldBe true
+    warmMatchesCold(log, dir, tbl)
 
     val reopened = JsonFileTableVersions(dir)
     reopened.currentVersion(tbl) shouldBe before
@@ -127,7 +141,9 @@ class LogEquivalenceSpec extends AnyFunSuite with Matchers {
           json.setCurrentVersion(tbl, json.updates(tbl)(idx).id)
       }
       assertEquivalent(mem, json, tbl)
+      warmMatchesCold(json, dir, tbl)
       foldsAt(JsonFileTableVersions(dir)) shouldBe foldsAt(mem)
+      foldsAt(json) shouldBe foldsAt(mem)
       current(json) shouldBe current(mem)
     }
     foldsAt(mem).flatten.exists(_.inForce.isDefined) shouldBe true
@@ -138,7 +154,9 @@ class LogEquivalenceSpec extends AnyFunSuite with Matchers {
     val retained = mem.updates(tbl).take(4).map(_.id)
     json.checkpoint(tbl, keepLast = 3) shouldBe true
     val reopened = JsonFileTableVersions(dir)
-    retained.foreach(id => families.foreach(f =>
-      reopened.metadataAt(tbl, f, Some(id)).inForce shouldBe mem.metadataAt(tbl, f, Some(id)).inForce))
+    retained.foreach(id => families.foreach { f =>
+      reopened.metadataAt(tbl, f, Some(id)).inForce shouldBe mem.metadataAt(tbl, f, Some(id)).inForce
+      json.metadataAt(tbl, f, Some(id)) shouldBe reopened.metadataAt(tbl, f, Some(id))
+    })
   }
 }

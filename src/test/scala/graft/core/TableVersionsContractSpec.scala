@@ -1054,4 +1054,103 @@ class JsonFileTableVersionsSpec extends AnyFunSuite with TableVersionsContract {
       case other                        => fail(s"unexpected $other")
     }
   }
+
+  // ---- the log cache: a warm instance must never serve a stale read ----
+
+  private def sameLog(warm: TableVersions, dir: java.nio.file.Path, tbl: TableName): Unit = {
+    val cold = new JsonFileTableVersions(dir)
+    warm.updates(tbl) shouldBe cold.updates(tbl)
+    warm.currentVersion(tbl) shouldBe cold.currentVersion(tbl)
+    warm.currentCommit(tbl) shouldBe cold.currentCommit(tbl)
+    warm.refs(tbl) shouldBe cold.refs(tbl)
+    warm.pendingOperations(tbl) shouldBe cold.pendingOperations(tbl)
+  }
+
+  private def addOne(log: TableVersions, tbl: TableName, day: Int): TableUpdate = {
+    val u = TableUpdate(UserId("u"), UpdateMessage(s"d$day"), Instant.now(),
+      List(TableOperation.AddPartitionVersion(
+        Partition(PartitionColumn("d"), s"$day"), Version(Instant.now(), UUID.randomUUID()))))
+    log.commit(tbl, u)
+    u
+  }
+
+  test("JsonFileTableVersions: a warm instance sees another instance's append") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cache_append")
+    val tbl = TableName("db", "cache_append")
+    val warm = new JsonFileTableVersions(dir)
+    warm.init(tbl, isSnapshot = false, UserId("u"), UpdateMessage("init"), Instant.now())
+    addOne(warm, tbl, 1)
+    sameLog(warm, dir, tbl) // warms the cache
+    val other = new JsonFileTableVersions(dir)
+    val u = addOne(other, tbl, 2)
+    warm.updates(tbl).head.id shouldBe u.metadata.id
+    other.setRef(tbl, "b", u.metadata.id)
+    warm.refs(tbl).keySet shouldBe Set("b")
+    sameLog(warm, dir, tbl)
+  }
+
+  test("JsonFileTableVersions: a warm instance sees another instance's checkpoint, run twice") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cache_ckpt")
+    val tbl = TableName("db", "cache_ckpt")
+    val warm = new JsonFileTableVersions(dir)
+    warm.init(tbl, isSnapshot = false, UserId("u"), UpdateMessage("init"), Instant.now())
+    (1 to 3).foreach(addOne(warm, tbl, _))
+    sameLog(warm, dir, tbl)
+    val other = new JsonFileTableVersions(dir)
+    // two rewrites with no read in between: the second temp file may take
+    // the inode number the warm instance cached, and the rewritten file
+    // outgrows the cached offset
+    (4 to 12).foreach(addOne(other, tbl, _))
+    other.checkpoint(tbl, keepLast = 6) shouldBe true
+    (13 to 20).foreach(addOne(other, tbl, _))
+    other.checkpoint(tbl, keepLast = 6) shouldBe true
+    warm.updates(tbl) should have size 7
+    sameLog(warm, dir, tbl)
+    // and a rewrite to a file SHORTER than the cached one
+    other.checkpoint(tbl, keepLast = 1) shouldBe true
+    warm.updates(tbl) should have size 2
+    sameLog(warm, dir, tbl)
+  }
+
+  test("JsonFileTableVersions: a warm instance tolerates a torn tail, then sees its repair by the next append") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cache_torn")
+    val tbl = TableName("db", "cache_torn")
+    val warm = new JsonFileTableVersions(dir)
+    warm.init(tbl, isSnapshot = false, UserId("u"), UpdateMessage("init"), Instant.now())
+    addOne(warm, tbl, 1)
+    val before = warm.updates(tbl)
+    val file = dir.resolve("db.cache_torn.jsonl")
+    java.nio.file.Files.write(file,
+      """{"record":"commit","id":"torn","user":"u","message":"torn","timestamp":"2026-01-01T00:00:00Z","operations":[]}"""
+        .getBytes("UTF-8"), java.nio.file.StandardOpenOption.APPEND)
+    warm.updates(tbl) shouldBe before
+    sameLog(warm, dir, tbl)
+    val u = addOne(new JsonFileTableVersions(dir), tbl, 2)
+    warm.updates(tbl).map(_.id) shouldBe u.metadata.id :: before.map(_.id)
+    sameLog(warm, dir, tbl)
+  }
+
+  test("JsonFileTableVersions: a warm instance sees a pending transaction's marker land") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cache_txn")
+    val ta = TableName("db", "cache_txn_a")
+    val tb = TableName("db", "cache_txn_b")
+    val warm = new JsonFileTableVersions(dir)
+    Seq(ta, tb).foreach(t =>
+      warm.init(t, isSnapshot = false, UserId("u"), UpdateMessage("init"), Instant.now()))
+    val other = new JsonFileTableVersions(dir)
+    def txnUpdate(day: Int) = TableUpdate(UserId("u"), UpdateMessage(s"txn $day"), Instant.now(),
+      List(TableOperation.AddPartitionVersion(
+        Partition(PartitionColumn("d"), s"$day"), Version(Instant.now(), UUID.randomUUID()))))
+    val txnId = other.txnPrepare(Seq(ta -> txnUpdate(1), tb -> txnUpdate(2)))
+    warm.updates(ta) should have size 1 // pending: invisible
+    warm.pendingOperations(ta) should have size 1
+    sameLog(warm, dir, ta)
+    // the marker lands: the log files do not change, the fold does
+    other.txnMarkerCreate(txnId)
+    warm.updates(ta) should have size 2
+    warm.updates(tb) should have size 2
+    warm.pendingOperations(ta) shouldBe Nil
+    sameLog(warm, dir, ta)
+    sameLog(warm, dir, tb)
+  }
 }

@@ -97,10 +97,10 @@ class ColumnDefaultsSpec extends AnyFunSuite with Matchers {
 
     val clone = ShallowClone.clone(
       spark, ctx, t, TableName("db", "defs_clone"), user)
-    ColumnDefaults.list(spark, clone).map(_.column) shouldBe List("kind")
+    ColumnDefaults.list(spark, log, clone).map(_.column) shouldBe List("kind")
     // the clone's defaults evolve independently of the source's
     ColumnDefaults.drop(spark, ctx, clone, "kind", user)
-    ColumnDefaults.list(spark, clone) shouldBe Nil
-    ColumnDefaults.list(spark, t).map(_.column) shouldBe List("kind")
+    ColumnDefaults.list(spark, log, clone) shouldBe Nil
+    ColumnDefaults.list(spark, log, t).map(_.column) shouldBe List("kind")
   }
 }

@@ -481,4 +481,22 @@ class ColumnMappingSpec extends AnyFunSuite with Matchers {
     noException should be thrownBy
       ColumnMapping.rename(spark, ctx, table, "note", "comment", user)
   }
+
+  test("two racing RENAMEs both resolve: the loser of the commit race re-derives from the fresh mapping") {
+    // the second rename lands between the first one's fold and its append
+    val hooked = new HookedTableVersions(new InMemoryTableVersions)
+    val ctx = VersionContext(VersionedMetastore(hooked, new InMemoryMetastore))
+    val table = TableDefinition(
+      TableName("test", "map_race"), Files.createTempDirectory("graft_map_race").toUri,
+      PartitionSchema(List(PartitionColumn("date"))), FileFormat.Parquet)
+    ctx.init(table, user, UpdateMessage("init"))
+    Seq((1L, "k1", "l1", "2024-01-01")).toDF("id", "kind", "label", "date")
+      .versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
+    hooked.beforeAppend = _ => ColumnMapping.rename(spark, ctx, table, "label", "tag", user)
+    ColumnMapping.rename(spark, ctx, table, "kind", "category", user)
+
+    val mapped = ColumnMapping.read(spark, hooked, table)
+    mapped.columns.toSeq shouldBe Seq("id", "category", "tag", "date")
+    mapped.select("category", "tag").as[(String, String)].collect() shouldBe Array(("k1", "l1"))
+  }
 }

@@ -165,14 +165,13 @@ class CompactionSpec extends AnyFunSuite with Matchers {
     intercept[Exception](spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES " +
       s"('${TableProperties.OptimizeTargetFileSize}' = 'huge')"))
 
-    // a LEGACY bad value (pre-validation sidecar) fails its first
-    // consultation with an error naming table/key/value — never a bare
-    // NumberFormatException
-    MetadataFiles.publish(
-      spark.sessionState.newHadoopConf(),
-      MetadataFiles.tblProperties.path(table),
-      s"""{"${TableProperties.OptimizeTargetFileSize}":"huge"}""")
-    MetadataFiles.invalidateMemo()
+    // a LEGACY bad value (committed before validation existed) fails its
+    // first consultation with an error naming table/key/value — never a
+    // bare NumberFormatException
+    log.commit(table.name, TableVersions.TableUpdate(
+      user, UpdateMessage("legacy"), java.time.Instant.now(), Nil)
+      .withTableMetadata(MetadataFiles.tblProperties.entry(
+        Map(TableProperties.OptimizeTargetFileSize -> "huge"))))
     val legacy = intercept[Exception](spark.sql(s"OPTIMIZE $name").collect())
     legacy.getMessage should include(TableProperties.OptimizeTargetFileSize)
     legacy.getMessage should include("'huge'")

@@ -75,7 +75,7 @@ class ConstraintsSpec extends AnyFunSuite with Matchers {
       Constraints.add(spark, ctx, table, Constraints.check("pos", "id > 0"), user)
     }
     ex.getMessage should include("existing row")
-    Constraints.list(spark, table) shouldBe Nil
+    Constraints.list(spark, ctx.metastore.tableVersions, table) shouldBe Nil
 
     Constraints.add(spark, ctx, table, Constraints.check("any", "id <> 0"), user)
     intercept[IllegalArgumentException] {
@@ -130,7 +130,7 @@ class ConstraintsSpec extends AnyFunSuite with Matchers {
       .toDS().versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
 
     spark.sql("ALTER TABLE graftddl.test.con_ddl ADD CONSTRAINT small CHECK (id < 100)")
-    Constraints.list(spark, table).map(_.name) shouldBe List("small")
+    Constraints.list(spark, log, table).map(_.name) shouldBe List("small")
     // enforced on the next SQL write
     intercept[Exception](
       spark.sql("INSERT INTO graftddl.test.con_ddl VALUES (500, 'x', 'a')"))
@@ -139,7 +139,7 @@ class ConstraintsSpec extends AnyFunSuite with Matchers {
     intercept[Exception](
       spark.sql("ALTER TABLE graftddl.test.con_ddl ADD CONSTRAINT neg CHECK (id < 3)"))
     spark.sql("ALTER TABLE graftddl.test.con_ddl DROP CONSTRAINT small")
-    Constraints.list(spark, table) shouldBe Nil
+    Constraints.list(spark, log, table) shouldBe Nil
     intercept[Exception](
       spark.sql("ALTER TABLE graftddl.test.con_ddl DROP CONSTRAINT no_such"))
 
@@ -154,7 +154,7 @@ class ConstraintsSpec extends AnyFunSuite with Matchers {
         .versionedInsertInto(ctx, table, user, UpdateMessage("bad"))
     }.getMessage should include("kind_nn")
     spark.sql("ALTER TABLE graftddl.test.con_ddl DROP CONSTRAINT kind_nn")
-    Constraints.list(spark, table) shouldBe Nil
+    Constraints.list(spark, log, table) shouldBe Nil
 
     // the programmatic DSv2 SET NOT NULL reaches the catalog (SQL cannot:
     // Spark's analyzer refuses it on any nullable column, hence the CHECK
@@ -166,7 +166,7 @@ class ConstraintsSpec extends AnyFunSuite with Matchers {
     cat.alterTable(ident,
       org.apache.spark.sql.connector.catalog.TableChange.updateColumnNullability(
         Array("kind"), false))
-    Constraints.list(spark, table).map(_.name) shouldBe List("kind_not_null")
+    Constraints.list(spark, log, table).map(_.name) shouldBe List("kind_not_null")
     // the DECLARED slot carries the nullability (the served relation is
     // everything-nullable, the file-scan posture) — SHOW CREATE proves it
     spark.sql("SHOW CREATE TABLE graftddl.test.con_ddl").head().getString(0) should
@@ -174,7 +174,7 @@ class ConstraintsSpec extends AnyFunSuite with Matchers {
 
     // DROP NOT NULL flips the declared slot and removes the constraint
     spark.sql("ALTER TABLE graftddl.test.con_ddl ALTER COLUMN kind DROP NOT NULL")
-    Constraints.list(spark, table) shouldBe Nil
+    Constraints.list(spark, log, table) shouldBe Nil
     spark.sql("SHOW CREATE TABLE graftddl.test.con_ddl").head().getString(0) should
       not include ("`kind` STRING NOT NULL")
     log.updates(table.name).head.message.content should include("DROP CONSTRAINT kind_not_null")
@@ -192,14 +192,17 @@ class ConstraintsSpec extends AnyFunSuite with Matchers {
     Constraints.add(spark, ctx, table, Constraints.check("id_positive", "id > 0"), user)
     Seq(Event(1L, "k", "2024-01-01")).toDS()
       .versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
+    // a constraints value the log carries but cannot be parsed (a
+    // hand-edited or corrupted commit line)
+    log.commit(table.name, TableVersions.TableUpdate(
+      user, UpdateMessage("corrupt"), java.time.Instant.now(), Nil)
+      .withTableMetadata(Map(MetadataFiles.constraints.name -> "{\"torn\":")))
     val before = log.currentVersion(table.name)
-    val file = java.nio.file.Paths.get(MetadataFiles.constraints.path(table).toUri)
-    Files.write(file, "{\"torn\":".getBytes("UTF-8"))
     val e = intercept[Exception] {
       Seq(Event(-5L, "k", "2024-01-01")).toDS()
         .versionedInsertInto(ctx, table, user, UpdateMessage("unchecked"))
     }
-    e.getMessage should include(file.getFileName.toString)
+    e.getMessage should include("unreadable constraints")
     log.currentVersion(table.name) shouldBe before
     VersionedReader(spark, log).read(table).count() shouldBe 1L
   }

@@ -78,7 +78,7 @@ class GeneratedColumnsSpec extends AnyFunSuite with Matchers {
     // the Delta DDL spelling lands a rule existing rows satisfy
     spark.sql("ALTER TABLE graftgen.db.gen2 ADD COLUMN band STRING GENERATED ALWAYS AS (concat('b', CAST(id % 1 AS STRING)))")
       .collect()(0).getString(1) should include("generated always")
-    GeneratedColumns.list(spark, t).map(_.column) shouldBe List("band")
+    GeneratedColumns.list(spark, log, t).map(_.column) shouldBe List("band")
     // and the declaration audit commit is in the history
     log.updates(t.name).head.message.content should include("GENERATED COLUMN band")
   }

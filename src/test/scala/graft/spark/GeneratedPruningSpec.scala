@@ -163,8 +163,8 @@ class GeneratedPruningSpec extends AnyFunSuite with Matchers {
       hourFilters(spark.sql(eq)) shouldBe empty
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
     // metadata predating the zone stamp: writer zone unknown — refuse
-    MetadataFiles.generated.update(spark, t)(_ => List(
-      GeneratedColumns.GeneratedColumn("ehour", "date_format(ets, 'yyyy-MM-dd HH')")))
+    MetadataFiles.generated.commit(spark, ctx.metastore, t, UpdateMessage("pre-zone"), user)(_ =>
+      List(GeneratedColumns.GeneratedColumn("ehour", "date_format(ets, 'yyyy-MM-dd HH')")))
     hourFilters(spark.sql(range)) shouldBe empty
     hourFilters(spark.sql(eq)) shouldBe empty
   }

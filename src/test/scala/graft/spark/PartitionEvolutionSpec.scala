@@ -738,27 +738,23 @@ class PartitionEvolutionSpec extends AnyFunSuite with Matchers {
   }
 
   test("a racer's rename landing AFTER our registry publish is detected and re-merged (verify-retry)") {
-    // the metadata store's verify-retry, on a family it still keeps: a
-    // racer bypassing the lock replaces the constraints file right after
-    // each of our publishes, from a read that predates our write
-    val (ctx, _) = fresh()
+    // the declaration commit's CAS retry: a racer's constraint add lands
+    // after our fold and before our append; our pointer CAS fails, and
+    // the retry re-merges our edit onto the racer's
+    val hooked = new HookedTableVersions(new InMemoryTableVersions)
+    val ctx = VersionContext(VersionedMetastore(hooked, new InMemoryMetastore))
     val t = table("evo_registry_retry", "date")
     ctx.init(t, user, UpdateMessage("init"))
-    val racer = """[{"name":"racer_check","kind":"check","expr":"id > 0"}]"""
-    val file = Paths.get(MetadataFiles.constraints.path(t).toUri)
     var fired = 0
-    val clobber: () => Unit = () => {
-      if (fired < 3) {
-        fired += 1
-        Files.write(file, racer.getBytes("UTF-8"))
-      }
+    hooked.beforeAppend = _ => {
+      fired += 1
+      Constraints.add(spark, ctx, t, Constraints.check("racer_check", "id > 0"), user)
     }
-    MetadataFiles.afterPublishForTest.withValue(_ => clobber()) {
-      Constraints.add(spark, ctx, t, Constraints.notNull("id"), user)
-    }
-    fired should be >= 1
+    Constraints.add(spark, ctx, t, Constraints.notNull("id"), user)
+    fired shouldBe 1
 
     // our edit was re-merged against the racer's content: both survive
-    Constraints.list(spark, t).map(_.name).toSet shouldBe Set("racer_check", "id_not_null")
+    Constraints.list(spark, hooked, t).map(_.name).toSet shouldBe Set("racer_check", "id_not_null")
   }
+
 }

@@ -183,7 +183,7 @@ class RetentionSurvivalSpec extends AnyFunSuite with Matchers {
     val dstDefn = ShallowClone.clone(spark, ctx, t, dst, user)
     // the declaration carried, and the mark rode a commit (hwm=0 is real
     // state, not an accident of a missing commit)
-    IdentityColumns.declared(spark, dstDefn) shouldBe Some("row_id")
+    IdentityColumns.declared(spark, log, dstDefn) shouldBe Some("row_id")
     log.updates(dst).map(_.message.content)
       .exists(_.contains("identity:row_id hwm=0")) shouldBe true
     IdentityColumns.insertWithIdentity(

@@ -203,22 +203,22 @@ class RowTrackingSpec extends AnyFunSuite with Matchers {
         org.apache.spark.sql.types.StructField("date", org.apache.spark.sql.types.StringType)))))
     spark.sql("ALTER TABLE graftrtddl.test.rt_ddl SET ROW TRACKING")
       .collect().head.getString(0) shouldBe RowTracking.RowIdCol
-    RowTracking.enabled(spark, t) shouldBe true
+    RowTracking.enabled(spark, log, t) shouldBe true
     spark.sql("INSERT INTO graftrtddl.test.rt_ddl (id, kind, date) VALUES (1, 'a', '2024-01-01')")
     rows(t, log).select(RowTracking.RowIdCol).as[Long].collect() shouldBe Array(1L)
 
-    // a crashed sidecar writer's staging temp reclaims under vacuum
-    val boom = intercept[RuntimeException] {
-      MetadataFiles.beforePublishForTest.withValue(_ => throw new RuntimeException("crash")) {
-        MetadataFiles.publish(
-          spark.sessionState.newHadoopConf(), MetadataFiles.identity.path(t), "{}")
-      }
+    // a crashed writer's staged version dir (written, never committed)
+    // reclaims under vacuum
+    val staged = Seq((2L, "b", "2024-01-02")).toDF("id", "kind", "date")
+      .versionedStage(ctx, t, user, UpdateMessage("crashed before commit"))
+    val orphan = staged.update.operations.collect {
+      case TableVersions.TableOperation.AddPartitionVersion(p, v) => s"${p.hivePath}/${v.label}"
     }
-    boom.getMessage shouldBe "crash"
+    orphan should not be empty
     val report = Vacuum.vacuum(t, log, spark.sessionState.newHadoopConf(), graceMs = 0)
-    report.deleted.exists(_.contains(".tmp-")) shouldBe true
-    // the declaration itself survives (only the orphaned temp went)
-    RowTracking.enabled(spark, t) shouldBe true
+    orphan.foreach(dir => report.deleted should contain(dir))
+    // the declaration itself survives (only the orphaned dir went)
+    RowTracking.enabled(spark, log, t) shouldBe true
   }
 
   test("SQL table_changes on a tracked table serves the keyless CDF vocabulary") {
@@ -259,8 +259,8 @@ class RowTrackingSpec extends AnyFunSuite with Matchers {
     // schema (the id column surfaces) and net rows written by id-agnostic
     // paths
     IdentityColumns.declare(spark, ctx, t, "seq_no", user)
-    RowTracking.enabled(spark, t) shouldBe true // identity provides ids...
-    RowTracking.engineTracked(spark, t) shouldBe false // ...but was not opted in
+    RowTracking.enabled(spark, log, t) shouldBe true // identity provides ids...
+    RowTracking.engineTracked(spark, log, t) shouldBe false // ...but was not opted in
 
     IdentityColumns.insertWithIdentity(
       (1L to 4L).map(i => (i, s"v$i", "2024-01-01")).toDF("id", "payload", "date"),

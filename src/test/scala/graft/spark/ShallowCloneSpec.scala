@@ -137,7 +137,7 @@ class ShallowCloneSpec extends AnyFunSuite with Matchers {
     // carried: the renamed logical column projects; constraints inherited
     logicalIds(clone) shouldBe Array(2L, 3L)
     logicalCols(clone) should contain("category")
-    Constraints.list(spark, clone).map(_.name) shouldBe List("id_not_null")
+    Constraints.list(spark, log, clone).map(_.name) shouldBe List("id_not_null")
 
     // source-side delete after the fork never leaks into the clone
     DeletionVectors.delete(ctx, log, src, col("id") === 2, user, UpdateMessage("dv2 src"))
@@ -158,8 +158,8 @@ class ShallowCloneSpec extends AnyFunSuite with Matchers {
     // constraint sets diverge independently: a clone-side drop leaves the
     // source enforcing
     Constraints.drop(spark, ctx, clone, "id_not_null", user)
-    Constraints.list(spark, clone) shouldBe Nil
-    Constraints.list(spark, src).map(_.name) shouldBe List("id_not_null")
+    Constraints.list(spark, log, clone) shouldBe Nil
+    Constraints.list(spark, log, src).map(_.name) shouldBe List("id_not_null")
   }
 
   test("SQL: CREATE TABLE ... SHALLOW CLONE ... VERSION AS OF forks and reads through the catalog") {
@@ -210,7 +210,7 @@ class ShallowCloneSpec extends AnyFunSuite with Matchers {
       spark, ctx, src, TableName("test", "clone_ident_dst"), user)
     // the declaration carried into the clone's own keyed file, and the
     // mark resolves from the clone-state commit — not a fresh 0
-    IdentityColumns.declared(spark, clone) shouldBe Some("row_id")
+    IdentityColumns.declared(spark, log, clone) shouldBe Some("row_id")
     IdentityColumns.currentHighWaterMark(log, clone.name, "row_id") shouldBe srcHwm
 
     // a clone write stamps ABOVE the carried rows' ids — no collision

@@ -73,11 +73,11 @@ class ShowCreateTableSpec extends AnyFunSuite with Matchers {
     spark.table(dst).schema.fields.map(f => f.name -> f.dataType).toMap shouldBe
       spark.table(src).schema.fields.map(f => f.name -> f.dataType).toMap
     dstDefn.partitionSchema shouldBe srcDefn.partitionSchema
-    TableProperties.list(spark, dstDefn) shouldBe TableProperties.list(spark, srcDefn)
-    GeneratedColumns.list(spark, dstDefn).map(g => (g.column, g.expr)) shouldBe
-      GeneratedColumns.list(spark, srcDefn).map(g => (g.column, g.expr))
-    ColumnDefaults.list(spark, dstDefn) shouldBe ColumnDefaults.list(spark, srcDefn)
-    IdentityColumns.declared(spark, dstDefn) shouldBe Some("rid")
+    TableProperties.list(spark, log, dstDefn) shouldBe TableProperties.list(spark, log, srcDefn)
+    GeneratedColumns.list(spark, log, dstDefn).map(g => (g.column, g.expr)) shouldBe
+      GeneratedColumns.list(spark, log, srcDefn).map(g => (g.column, g.expr))
+    ColumnDefaults.list(spark, log, dstDefn) shouldBe ColumnDefaults.list(spark, log, srcDefn)
+    IdentityColumns.declared(spark, log, dstDefn) shouldBe Some("rid")
 
     // the reproduced declarations ENFORCE: constraint, default, identity,
     // generation all behave on the new table's own writes
@@ -197,18 +197,18 @@ class ShowCreateTableSpec extends AnyFunSuite with Matchers {
     spark.sql(replay)
     val (_, defn2) =
       GraftTableCatalog.lookup("graftsct", TableName("db", "sct_cm2")).get
-    Comments.list(spark, defn2) shouldBe Map(
+    Comments.list(spark, log, defn2) shouldBe Map(
       "id" -> "row id (stable)", "amount" -> "gross, USD")
 
     // a clone carries the source's comments
     spark.sql(s"CREATE TABLE graftsct.db.sct_cm3 SHALLOW CLONE $name")
     val (_, defn3) =
       GraftTableCatalog.lookup("graftsct", TableName("db", "sct_cm3")).get
-    Comments.list(spark, defn3).keySet shouldBe Set("id", "amount")
+    Comments.list(spark, log, defn3).keySet shouldBe Set("id", "amount")
 
     // UNSET clears (empty comment) and audits
     spark.sql(s"ALTER TABLE $name ALTER COLUMN amount COMMENT ''")
     val (_, defn1) = GraftTableCatalog.lookup("graftsct", tn).get
-    Comments.list(spark, defn1).keySet shouldBe Set("id")
+    Comments.list(spark, log, defn1).keySet shouldBe Set("id")
   }
 }

@@ -39,7 +39,7 @@ class TablePropertiesSpec extends AnyFunSuite with Matchers {
 
     TableProperties.set(spark, ctx, t,
       Map("graft.dml.mergeOnRead" -> "true", "team" -> "ingest"), user)
-    TableProperties.list(spark, t) shouldBe Map(
+    TableProperties.list(spark, log, t) shouldBe Map(
       "graft.dml.mergeOnRead" -> "true", "team" -> "ingest")
     // one audit commit, metadata-only
     log.updates(t.name).size shouldBe before + 1
@@ -48,17 +48,17 @@ class TablePropertiesSpec extends AnyFunSuite with Matchers {
     // precedence: table property wins over session conf
     spark.conf.set("spark.graft.dml.mergeOnRead", "false")
     try TableProperties.effectiveFlag(
-      spark, t, TableProperties.MergeOnRead) shouldBe true
+      spark, log, t, TableProperties.MergeOnRead) shouldBe true
     finally spark.conf.unset("spark.graft.dml.mergeOnRead")
     // session conf is the fallback when the table says nothing
-    TableProperties.effectiveFlag(spark, t, TableProperties.AutoOptimize) shouldBe false
+    TableProperties.effectiveFlag(spark, log, t, TableProperties.AutoOptimize) shouldBe false
     spark.conf.set("spark.graft.autoOptimize", "true")
     try TableProperties.effectiveFlag(
-      spark, t, TableProperties.AutoOptimize) shouldBe true
+      spark, log, t, TableProperties.AutoOptimize) shouldBe true
     finally spark.conf.unset("spark.graft.autoOptimize")
 
     TableProperties.unset(spark, ctx, t, Seq("team", "never_existed"), user)
-    TableProperties.list(spark, t) shouldBe Map("graft.dml.mergeOnRead" -> "true")
+    TableProperties.list(spark, log, t) shouldBe Map("graft.dml.mergeOnRead" -> "true")
     log.updates(t.name).size shouldBe before + 2
   }
 
@@ -186,15 +186,15 @@ class TablePropertiesSpec extends AnyFunSuite with Matchers {
 
     val shallow = ShallowClone.clone(
       spark, ctx, src, TableName("test", "props_clone_sh"), user)
-    TableProperties.list(spark, shallow) shouldBe Map("team" -> "ingest")
+    TableProperties.list(spark, log, shallow) shouldBe Map("team" -> "ingest")
     val deep = DeepClone.clone(
       spark, ctx, src, TableName("test", "props_clone_dp"),
       Files.createTempDirectory("graft_props_deep").toUri, user)
-    TableProperties.list(spark, deep) shouldBe Map("team" -> "ingest")
+    TableProperties.list(spark, log, deep) shouldBe Map("team" -> "ingest")
 
     // independence: mutating the clone's set never touches the source's
     TableProperties.set(spark, ctx, shallow, Map("team" -> "ads"), user)
-    TableProperties.list(spark, src) shouldBe Map("team" -> "ingest")
+    TableProperties.list(spark, log, src) shouldBe Map("team" -> "ingest")
   }
 
   test("behavior-key values validate at SET/CREATE time; legacy bad values fail with a named error") {
@@ -215,7 +215,7 @@ class TablePropertiesSpec extends AnyFunSuite with Matchers {
     }
     e2.getMessage should include("'lots'")
     // nothing landed: no property stored, no audit commit
-    TableProperties.list(spark, t) shouldBe Map.empty
+    TableProperties.list(spark, log, t) shouldBe Map.empty
     log.updates(t.name).size shouldBe 1 // init only
 
     // SQL CREATE ... TBLPROPERTIES refuses the same way
@@ -230,14 +230,13 @@ class TablePropertiesSpec extends AnyFunSuite with Matchers {
     }
     bad.getMessage should include("'maybe'")
 
-    // a LEGACY bad value (written before validation existed) fails its
+    // a LEGACY bad value (committed before validation existed) fails its
     // consultation with an error naming table, key, and value
-    MetadataFiles.publish(
-      spark.sessionState.newHadoopConf(), MetadataFiles.tblProperties.path(t),
-      """{"graft.dml.mergeOnRead":"yes"}""")
-    MetadataFiles.invalidateMemo()
+    log.commit(t.name, TableVersions.TableUpdate(
+      user, UpdateMessage("legacy"), java.time.Instant.now(), Nil)
+      .withTableMetadata(MetadataFiles.tblProperties.entry(Map("graft.dml.mergeOnRead" -> "yes"))))
     val e3 = intercept[IllegalArgumentException] {
-      TableProperties.effectiveFlag(spark, t, TableProperties.MergeOnRead)
+      TableProperties.effectiveFlag(spark, log, t, TableProperties.MergeOnRead)
     }
     e3.getMessage should include(t.name.fullyQualifiedName)
     e3.getMessage should include("graft.dml.mergeOnRead")
@@ -271,14 +270,14 @@ class TablePropertiesSpec extends AnyFunSuite with Matchers {
         TableChange.addColumn(
           Array("id"), org.apache.spark.sql.types.StringType))
     }
-    TableProperties.list(spark, defn) shouldBe Map("team" -> "a")
+    TableProperties.list(spark, log2, defn) shouldBe Map("team" -> "a")
 
     // a SET+UNSET batch lands as ONE write + ONE audit commit
     val commitsBefore = log2.updates(tn).size
     catalog.alterTable(ident,
       TableChange.setProperty("x", "1"),
       TableChange.removeProperty("team"))
-    TableProperties.list(spark, defn) shouldBe Map("x" -> "1")
+    TableProperties.list(spark, log2, defn) shouldBe Map("x" -> "1")
     log2.updates(tn).size shouldBe commitsBefore + 1
     val msg = log2.updates(tn).head.message.content
     msg should include("SET TBLPROPERTIES (x=1)")
@@ -286,19 +285,22 @@ class TablePropertiesSpec extends AnyFunSuite with Matchers {
   }
 
   test("property reads memoize: repeated behavior-key consultations hit the filesystem once") {
-    val (ctx, _) = freshContext()
+    val (ctx, log) = freshContext()
     val t = table("props_cache")
     ctx.init(t, user, UpdateMessage("init"))
     TableProperties.set(spark, ctx, t, Map(TableProperties.MergeOnRead -> "true"), user)
 
-    // count filesystem opens by swapping in a counting scheme? simpler:
-    // delete the sidecar BEHIND the cache — a memoized read still serves
-    // the cached map until invalidated, proving no per-consult IO
-    val f = MetadataFiles.tblProperties.path(t)
-    val fs = f.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(f, false)
-    TableProperties.effectiveFlag(spark, t, TableProperties.MergeOnRead) shouldBe true
-    MetadataFiles.invalidateMemo()
-    TableProperties.effectiveFlag(spark, t, TableProperties.MergeOnRead) shouldBe false
+    // once the log carries the property set, a consultation reads only
+    // the log: a (legacy) property file planted BEHIND it is never opened
+    // — not even probed, or its mere presence would refuse the read
+    val f = java.nio.file.Paths.get(t.location).resolve(
+      s"_tblproperties/${t.name.fullyQualifiedName}.json")
+    Files.createDirectories(f.getParent)
+    Files.write(f, """{"graft.dml.mergeOnRead":"false"}""".getBytes("UTF-8"))
+    (1 to 3).foreach { _ =>
+      TableProperties.effectiveFlag(spark, log, t, TableProperties.MergeOnRead) shouldBe true
+    }
+    TableProperties.unset(spark, ctx, t, Seq(TableProperties.MergeOnRead), user)
+    TableProperties.effectiveFlag(spark, log, t, TableProperties.MergeOnRead) shouldBe false
   }
 }

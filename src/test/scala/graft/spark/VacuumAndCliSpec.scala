@@ -171,42 +171,6 @@ class VacuumSpec extends AnyFunSuite with Matchers {
       keepLast = 1, graceMs = 0)
     waived.deleted should have size 2
   }
-
-  test("vacuum reclaims stale metadata temp files in every keyed family dir and keeps fresh ones") {
-    val log = new InMemoryTableVersions
-    val ctx = VersionContext(VersionedMetastore(log, new InMemoryMetastore))
-    val table = TableDefinition(
-      TableName("test", "vac_tmp"),
-      Files.createTempDirectory("graft_vac_tmp").toUri,
-      PartitionSchema.snapshot, FileFormat.Parquet)
-    ctx.init(table, user, UpdateMessage("init"))
-    Seq(User(1L, "v1")).toDS().versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
-    val keyedDirs = List("_constraints", "_generated", "_identity", "_defaults",
-      "_comments", "_tblproperties")
-    MetadataFiles.families.filter(_.keyed).map("_" + _.name) shouldBe keyedDirs
-    val root = Paths.get(table.location)
-    val hourAgo = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - 3600000L)
-    // a crashed writer's staging temp (stale) and an in-flight one (fresh)
-    val (stale, fresh) = keyedDirs.map { d =>
-      Files.createDirectories(root.resolve(d))
-      val old = root.resolve(s"$d/.test.vac_tmp.json.tmp-old")
-      val young = root.resolve(s"$d/.test.vac_tmp.json.tmp-young")
-      Files.write(old, "{".getBytes("UTF-8"))
-      Files.setLastModifiedTime(old, hourAgo)
-      Files.write(young, "{".getBytes("UTF-8"))
-      (s"$d/${old.getFileName}", young)
-    }.unzip
-    val graceMs = 600000L
-    val dry = Vacuum.vacuum(table, log, spark.sessionState.newHadoopConf(),
-      graceMs = graceMs, dryRun = true)
-    dry.deleted shouldBe stale.sorted
-    stale.foreach(rel => Files.exists(root.resolve(rel)) shouldBe true)
-    val report = Vacuum.vacuum(table, log, spark.sessionState.newHadoopConf(), graceMs = graceMs)
-    report.deleted shouldBe stale.sorted
-    stale.foreach(rel => Files.exists(root.resolve(rel)) shouldBe false)
-    fresh.foreach(f => Files.exists(f) shouldBe true)
-  }
 }
 
 class VacuumEscapingSpec extends AnyFunSuite with Matchers {
