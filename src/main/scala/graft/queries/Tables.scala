@@ -14,6 +14,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     // events.parquet has carried TIMESTAMP(NANOS) (which Spark 4 rejects
     // unless nanos are read back as LONG) and, in regenerated drops,
@@ -27,8 +30,7 @@ object Tables {
     // `spark.read.parquet` pays one footer-inference Spark job, and the
     // bench re-loads these tables hundreds of times per session
     val path = s"$sfDir/$table.parquet"
-    val schema = graft.spark.SchemaCache.getOrInfer("parquet", false, Seq(path))(
-      spark.read.parquet(path).schema)
+    val schema = schemas.computeIfAbsent(path, p => spark.read.parquet(p).schema)
     val df = spark.read.schema(schema).parquet(path)
     if (table == "events") normalizeEvents(df) else df
   }

@@ -240,7 +240,7 @@ object ChangeFeed {
     val widenedTo = ColumnMapping.widenedTypesAt(spark, log, table, Some(to))
     val overlayInserts: Option[DataFrame] = {
       val frames = contribsTo.filterNot(c => fromAnchors.contains(c.anchor)).map(c =>
-        RowOverlay.loadLeaves(spark, table, c.dir, c.leaves, Some((FileCol, PosCol)), widenedTo))
+        RowOverlay.loadLeaves(spark, log, table, c, c.leaves, Some((FileCol, PosCol)), widenedTo))
       if (frames.isEmpty) None
       else {
         val unioned = frames.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -275,7 +275,7 @@ object ChangeFeed {
             if (died.isEmpty) None
             else {
               val d = RowOverlay.loadLeaves(
-                spark, table, c.dir, died, Some((FileCol, PosCol)), widenedFrom)
+                spark, log, table, c, died, Some((FileCol, PosCol)), widenedFrom)
               Some(pairsFrom match {
                 case None => d
                 case Some(dv) =>
@@ -286,7 +286,7 @@ object ChangeFeed {
             case (Nil, _) | (_, None) => None
             case (ks, Some(nh)) =>
               val k = RowOverlay.loadLeaves(
-                spark, table, c.dir, ks, Some((FileCol, PosCol)), widenedFrom)
+                spark, log, table, c, ks, Some((FileCol, PosCol)), widenedFrom)
               Some(k.join(
                 nh, k(FileCol) === nh("file") && k(PosCol) === nh("pos"), "left_semi"))
           }
@@ -335,11 +335,11 @@ object ChangeFeed {
         val inserts =
           if (changedNew.isEmpty) None
           else Some(tag(
-            dvApply(reader.materializeSubset(table, changedNew), pairsTo), Insert))
+            dvApply(reader.materializeSubset(table, changedNew, to), pairsTo), Insert))
         val deletesOld =
           if (changedOld.isEmpty) None
-          else Some(tag(
-            dvApply(reader.materializeSubset(table, changedOld), pairsFrom), Delete))
+          else Some(tag(dvApply(
+            reader.materializeSubset(table, changedOld, from.getOrElse(to)), pairsFrom), Delete))
         // rows newly hidden in partitions that did NOT move: prune to the
         // partitions that own an affected file (driver-side on the
         // metadata-sized distinct-file list), then semi-join
@@ -354,7 +354,7 @@ object ChangeFeed {
             }
             if (affected.isEmpty) None
             else Some(tag(
-              hiddenRows(reader.materializeSubset(table, affected), nh), Delete))
+              hiddenRows(reader.materializeSubset(table, affected, to), nh), Delete))
           }
         }
         (deletesOld.toList ++ dvDeletes.toList ++ inserts.toList ++

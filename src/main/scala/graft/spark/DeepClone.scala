@@ -91,11 +91,13 @@ object DeepClone {
     if (sidecarFree) {
       val ops = rawCopy(spark, src, dstLocation, tvAt)
       if (ops.nonEmpty || declared.nonEmpty) {
+        // byte copies: the files keep the source state's data schema
         ctx.metastore.commit(dst, TableUpdate(
           user,
           UpdateMessage(s"deep clone (raw file copy) state of " +
             s"${src.name.fullyQualifiedName} @ ${at.id}"),
-          Instant.now(), ops).withTableMetadata(declared))
+          Instant.now(), ops)
+          .withTableMetadata(declared ++ DataSchema.carried(spark, log, src, at)))
         ()
       }
     } else {

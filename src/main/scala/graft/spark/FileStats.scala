@@ -657,7 +657,7 @@ object FileStats {
       val leaves = prunedLeaves(c)
       if (leaves.isEmpty) None
       else Some(partitionFilter.foldLeft(
-        RowOverlay.loadLeaves(spark, table, c.dir, leaves, ptrCols, widened))(_.where(_)))
+        RowOverlay.loadLeaves(spark, log, table, c, leaves, ptrCols, widened))(_.where(_)))
     }
     val scanHasPtr = keep.isEmpty && scan.columns.nonEmpty
     val basePtr =

@@ -131,9 +131,7 @@ final case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // folds route to the row-level command, where merge-on-read
           // handles them and copy-on-write refuses with the
           // consolidation escape hatch named.
-          val uniform = PartitionEvolution.eraSignatures(
-            table.tableBinding.log.currentVersion(defn.name)).size <= 1
-          if (!defn.isSnapshot && uniform && partitionOnly(cond, partCols)) d
+          if (!defn.isSnapshot && !table.isMixedFold && partitionOnly(cond, partCols)) d
           else
             GraftDeleteCommand(
               defn, table.tableBinding,

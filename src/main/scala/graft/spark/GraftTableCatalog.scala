@@ -111,10 +111,10 @@ final class GraftTableCatalog extends TableCatalog {
   override def tableExists(ident: Identifier): Boolean =
     tableNameOf(ident).exists(n => binding.tables.contains(n.fullyQualifiedName))
 
-  /** `REFRESH TABLE`: drop the cached version-dir listings and schemas
-    * ([[SchemaCache]]). Never needed for correctness — published dirs are
+  /** `REFRESH TABLE`: drop the cached version-dir listings
+    * ([[ListingCache]]). Never needed for correctness — published dirs are
     * immutable — it is the operator's reset for hand-edited storage. */
-  override def invalidateTable(ident: Identifier): Unit = SchemaCache.invalidateAll()
+  override def invalidateTable(ident: Identifier): Unit = ListingCache.invalidateAll()
 
   override def loadTable(ident: Identifier): Table = {
     val (defn, schema) = definitionOf(ident)
@@ -132,21 +132,14 @@ final class GraftTableCatalog extends TableCatalog {
     * Read-only by construction: SQL has no INSERT-into-the-past. Wrapped
     * like the current-state load (with the resolved commit pinned) so
     * [[GraftDvScanRule]] can apply that STATE's deletion vectors — a
-    * post-delete state time-traveled to must keep hiding its rows. */
+    * post-delete state time-traveled to must keep hiding its rows.
+    * Accepts a REF NAME (branch/tag), an all-digits DESCRIBE HISTORY
+    * commit_index (1-based, oldest = 1), or a raw commit id — the shared
+    * resolution of every AS OF surface. */
   override def loadTable(ident: Identifier, version: String): Table = {
     val (defn, schema) = definitionOf(ident)
-    // `VERSION AS OF` accepts a REF NAME (branch/tag), an all-digits
-    // DESCRIBE HISTORY commit_index (1-based, oldest = 1), or a raw
-    // commit id — the shared resolution of every AS OF surface
-    val resolved =
-      GraftMaintenanceSql.resolveVersionTarget(binding.log, defn.name, version)
-    val tv = binding.log.versionAt(defn.name, resolved)
-    // nested evolution: declare the addressed commit's struct shapes
-    val schemaAt = SchemaStates.schemaFor(
-      SparkSession.active, binding.log, defn, schema, resolved)
-    new GraftV2Table(defn, binding,
-      fileTable(defn, tv, schemaAt, Some(resolved)),
-      Some(resolved), mixedFold = isMixed(tv))
+    travel(defn, schema,
+      GraftMaintenanceSql.resolveVersionTarget(binding.log, defn.name, version))
   }
 
   /** `TIMESTAMP AS OF <ts>` — resolves to the LAST commit at or before the
@@ -154,17 +147,16 @@ final class GraftTableCatalog extends TableCatalog {
     * travels to it; before the first commit there is nothing to read. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val (defn, schema) = definitionOf(ident)
-    val asOf = java.time.Instant.EPOCH.plusNanos(timestampMicros * 1000L)
-    val commit = binding.log.updates(defn.name) // most recent first
-      .find(!_.timestamp.isAfter(asOf))
-      .getOrElse(throw new IllegalArgumentException(
-        s"table ${defn.name.fullyQualifiedName} has no commit at or before $asOf"))
-    val tvAt = binding.log.versionAt(defn.name, commit.id)
-    val schemaAt = SchemaStates.schemaFor(
-      SparkSession.active, binding.log, defn, schema, commit.id)
+    travel(defn, schema, VersionedReader(SparkSession.active, binding.log)
+      .commitAtOrBefore(defn, java.time.Instant.EPOCH.plusNanos(timestampMicros * 1000L)))
+  }
+
+  private def travel(defn: TableDefinition, schema: Option[StructType], at: CommitId): Table = {
+    val tv = binding.log.versionAt(defn.name, at)
+    // nested evolution: declare the addressed commit's struct shapes
+    val schemaAt = SchemaStates.schemaFor(SparkSession.active, binding.log, defn, schema, at)
     new GraftV2Table(defn, binding,
-      fileTable(defn, tvAt, schemaAt, Some(commit.id)),
-      Some(commit.id), mixedFold = isMixed(tvAt))
+      fileTable(defn, tv, schemaAt, Some(at)), Some(at), mixedFold = isMixed(tv))
   }
 
   private def fileTable(
@@ -201,17 +193,22 @@ final class GraftTableCatalog extends TableCatalog {
         }
       }
     val (paths, opts) = pathsFor(defn, servedTv)
-    // a schema source for states with no files to infer from (never-written
-    // snapshot, all-partitions-deleted, time travel to init): the
-    // registered schema, else the newest data-bearing version in history
-    val schema = registered.orElse(if (paths.isEmpty) schemaFromHistory(defn) else None)
+    // the registered declaration, else the state's [[DataSchema]] record;
+    // a mixed fold's eras hold different data columns, and a log without
+    // a record infers them
+    val (spark, log) = (SparkSession.active, binding.log)
+    val schema = registered.orElse(
+      if (sigs.size > 1) None
+      else DataSchema.at(spark, log, defn, at).orElse(
+        // a file-less state (time travel to init): the newest record
+        if (paths.isEmpty) DataSchema.at(spark, log, defn, Some(log.updates(defn.name).head.id))
+        else None))
     // TYPE WIDENING: the relation must DECLARE the wide type — files from
     // before the widen carry the narrow physical type, and a narrow
     // declaration would make consumers (and the scan-rule re-alias cast)
     // truncate post-widen values. Same override as
     // VersionedReader.withWidening; zero cost when nothing is widened.
-    val widenMap = ColumnMapping.widenedTypesAt(
-      SparkSession.active, binding.log, defn, at)
+    val widenMap = ColumnMapping.widenedTypesAt(spark, log, defn, at)
     val finalSchema =
       if (widenMap.isEmpty) schema
       else {
@@ -247,24 +244,6 @@ final class GraftTableCatalog extends TableCatalog {
         (pvs.toSeq.map { case (p, v) => SparkPaths.dirFor(defn.location, p, v) }.sorted,
           Map("basePath" -> defn.location.toString))
     }
-
-  /** Schema of the newest version that actually holds data — walked from
-    * the commit history, read from that version's own files. Only consulted
-    * for file-less states, so the extra footer read never lands on the hot
-    * path. */
-  private def schemaFromHistory(defn: TableDefinition): Option[StructType] = {
-    val name = defn.name
-    binding.log.updates(name).iterator
-      .map(u => binding.log.versionAt(name, u.id))
-      .collectFirst {
-        case tv @ SnapshotTableVersion(v) if v != Version.Unversioned =>
-          val (paths, opts) = pathsFor(defn, tv)
-          buildFileTable(defn, paths, opts, None).schema()
-        case tv @ PartitionedTableVersion(pvs) if pvs.nonEmpty =>
-          val (paths, opts) = pathsFor(defn, tv)
-          buildFileTable(defn, paths, opts, None).schema()
-      }
-  }
 
   private def buildFileTable(
       defn: TableDefinition,
@@ -662,7 +641,7 @@ final class GraftTableCatalog extends TableCatalog {
 }
 
 /** Spark's own file table over a state's version dirs, with the listing
-  * served through [[SchemaCache]]'s shared cache: the stock `fileIndex`
+  * served through [[ListingCache]]'s shared cache: the stock `fileIndex`
   * lists every dir again on each load (one Spark job above 32 dirs). The
   * existence check of the stock index still runs on every load. */
 private[spark] trait GraftFileTable extends FileTable {
@@ -673,7 +652,7 @@ private[spark] trait GraftFileTable extends FileTable {
   def userSpecifiedSchema: Option[StructType]
 
   override lazy val fileIndex: PartitioningAwareFileIndex =
-    SchemaCache.fileIndex(
+    ListingCache.fileIndex(
       sparkSession, paths, options.asCaseSensitiveMap.asScala.toMap, userSpecifiedSchema)
 
   // no files and no declared schema: nothing can type the table (the

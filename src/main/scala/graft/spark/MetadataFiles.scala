@@ -34,11 +34,15 @@ import graft.core.TableVersions.{CommitId, ConcurrentWriteException, MetadataFol
   * | `column_mapping` | RENAME / DROP / widen commits                | the addressed commit |
   * | `partitioning`   | EVOLVE PARTITIONING boundary commits         | the addressed commit |
   * | `schema_states`  | a schema-changing ALTER's last commit        | the addressed commit |
+  * | `schema`         | a data write changing the files' columns     | the addressed commit |
+  * | `format`         | the init commit of a table this version made | (presence only)    |
   *
   * Each entry holds the family's whole new value. The first seven are
   * CURRENT DECLARATIONS: they resolve at the log head, so a rollback,
   * RESTORE or `VERSION AS OF` never changes which rules are in force; the
-  * last three resolve at the commit a read addresses. Each table's log is
+  * next four resolve at the commit a read addresses ([[DataSchema]] owns
+  * `schema`). `format` is not a family: it marks a log whose table was
+  * created by a writer that never wrote metadata files. Each table's log is
   * its own lineage, so a clone owns its values (a clone's state commit
   * carries the source's, all but the MV definition), and a log checkpoint
   * keeps every family's value on its base commit.
@@ -51,8 +55,9 @@ import graft.core.TableVersions.{CommitId, ConcurrentWriteException, MetadataFol
   * LEGACY FILES: an earlier store kept these families in files beside the
   * data. A table whose log carries no value for a family but whose
   * location still holds that family's file is REFUSED with an error
-  * naming the file (one probe per file, only while the log carries none):
-  * reading it would resurrect declarations this log never recorded.
+  * naming the file (one probe per file, only while the log carries none
+  * and no `format` entry): reading it would resurrect declarations this
+  * log never recorded.
   */
 object MetadataFiles {
 
@@ -85,12 +90,12 @@ object MetadataFiles {
     def fold(
         spark: SparkSession, log: TableVersions, table: TableDefinition,
         at: Option[CommitId]): MetadataFold[A] =
-      decode(spark, table, log.metadataAt(table.name, name, at))
+      decode(spark, log, table, log.metadataAt(table.name, name, at))
 
     /** The family folded at the log head. */
     def foldAtHead(
         spark: SparkSession, log: TableVersions, table: TableDefinition): MetadataFold[A] =
-      decode(spark, table, log.metadataAtHead(table.name, name))
+      decode(spark, log, table, log.metadataAtHead(table.name, name))
 
     /** The declaration in force: the value at the log head, else [[empty]]. */
     def current(spark: SparkSession, log: TableVersions, table: TableDefinition): A =
@@ -110,8 +115,10 @@ object MetadataFiles {
     }
 
     private def decode(
-        spark: SparkSession, table: TableDefinition, f: MetadataFold[String]): MetadataFold[A] = {
-      if (f.oldest.isEmpty) {
+        spark: SparkSession, log: TableVersions, table: TableDefinition,
+        f: MetadataFold[String]): MetadataFold[A] = {
+      if (f.oldest.isEmpty &&
+          !log.metadataAtHead(table.name, Format).oldest.contains(FormatVersion)) {
         val conf = spark.sessionState.newHadoopConf()
         legacy(table).find(p => p.getFileSystem(conf).exists(p)).foreach { p =>
           throw new IllegalStateException(
@@ -173,7 +180,15 @@ object MetadataFiles {
   val cloned: List[Family[_]] =
     List(constraints, generated, identity, defaults, comments, tblProperties)
 
+  /** The families an earlier store kept in files. */
   val families: List[Family[_]] = cloned ++ List(mv, columnMapping, partitioning, schemaStates)
+
+  /** The data-column schema of the state's files ([[DataSchema]]). */
+  val schema: Family[JsonNode] = family[JsonNode]("schema", MissingNode.getInstance())
+
+  /** On the init commit of every table this version creates: no probe. */
+  private[spark] val Format = "format"
+  private val FormatVersion = "1"
 
   /** The value governing a [[Change]] family's fold: the in-force
     * carrier's `after`, or — before the first carrier — the oldest
@@ -189,10 +204,10 @@ object MetadataFiles {
     cloned.flatMap(f => one(f)).toMap
   }
 
-  /** Every [[cloned]] family's empty value, as commit-line entries: a
-    * table this version creates records on its init commit that it
-    * declares nothing, so it never pays the legacy-file probe. */
-  val undeclared: Map[String, String] = cloned.flatMap(_.emptyEntry).toMap
+  /** What a table this version creates records on its init commit: the
+    * [[Format]] entry and every [[cloned]] family's empty value. */
+  val undeclared: Map[String, String] =
+    cloned.flatMap(_.emptyEntry).toMap + (Format -> FormatVersion)
 
   /** THE DECLARATION COMMIT: read the pointer, `derive` the commit-line
     * entries from the state it names, and `commitIf` on that pointer; a

@@ -287,25 +287,27 @@ object RowOverlay {
 
   /** Load one contribution's leaves as a DataFrame: the dir's own layout
     * (partition columns from its `k=v` subdirs, string-pinned like every
-    * versioned read), optional `(file, pos)` pointer capture per scan, and
-    * type-widening casts. Shared by [[VersionedReader]]'s state union and
-    * the change feed's range-scoped overlay scans. */
+    * versioned read), the [[DataSchema]] record at the dir's anchor commit
+    * (footer inference without one), optional `(file, pos)` pointer
+    * capture per scan, and type-widening casts. Shared by
+    * [[VersionedReader]]'s state union and the change feed's range-scoped
+    * overlay scans. */
   private[spark] def loadLeaves(
       spark: SparkSession,
+      log: TableVersions,
       table: TableDefinition,
-      dir: String,
+      c: Contribution,
       leaves: List[(Option[Partition], String)],
       pointers: Option[(String, String)],
       widened: Map[String, org.apache.spark.sql.types.DataType]): DataFrame = {
     val partitioned = leaves.head._1.isDefined
     val df0 = SessionConf.withConf(
       spark, "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
-      // listing and schema cached per immutable overlay-leaf set
-      // ([[SchemaCache]]) — every read of an overlay-carrying table unions
-      // these leaves, and a stock load re-lists and re-infers them per read
-      SchemaCache.load(
+      // listings cached per immutable overlay leaf ([[ListingCache]])
+      ListingCache.load(
         spark, table.format, leaves.map(_._2),
-        if (partitioned) Map("basePath" -> dir) else Map.empty[String, String])
+        if (partitioned) Map("basePath" -> c.dir) else Map.empty[String, String],
+        DataSchema.at(spark, log, table, Some(c.anchor)))
     }
     val pointed = pointers.fold(df0) { case (f, p) =>
       df0.select(
@@ -484,6 +486,7 @@ object RowOverlay {
       }
       val update = TableUpdate(
         TableUpdateMetadata(commitId, user, finalMessage, java.time.Instant.now(), txn), ops)
+        .withTableMetadata(DataSchema.written(spark, log, table, mapped.schema))
       def cleanupSidecars(): Unit =
         try {
           fs.delete(new HPath(dir), true)
@@ -661,7 +664,7 @@ object RowOverlay {
     val fileCol = "__ro_file"; val posCol = "__ro_pos"
     val widened = ColumnMapping.widenedTypesAt(spark, log, table, Some(anchor))
     val unioned = contribs
-      .map(c => loadLeaves(spark, table, c.dir, c.leaves, Some((fileCol, posCol)), widened))
+      .map(c => loadLeaves(spark, log, table, c, c.leaves, Some((fileCol, posCol)), widened))
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val live = (DeletionVectors.resolvePairs(spark, log, table, Some(anchor)) match {
       case None => unioned
@@ -687,6 +690,7 @@ object RowOverlay {
     interleaveSquashForTest.foreach(f => f())
     val update = TableUpdate(
       TableUpdateMetadata(commitId, user, message, java.time.Instant.now(), None), Nil)
+      .withTableMetadata(DataSchema.written(spark, log, table, live.schema))
     if (ctx.metastore.commitIf(table.name, update, anchor).isEmpty) {
       try { fs.delete(new HPath(dir), true); () }
       catch { case _: java.io.IOException => () }
@@ -749,7 +753,7 @@ object RowOverlay {
     val fileCol = "__ro_file"; val posCol = "__ro_pos"
     val widened = ColumnMapping.widenedTypesAt(spark, log, src, Some(at))
     val unioned = contribs
-      .map(c => loadLeaves(spark, src, c.dir, c.leaves, Some((fileCol, posCol)), widened))
+      .map(c => loadLeaves(spark, log, src, c, c.leaves, Some((fileCol, posCol)), widened))
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val live = (DeletionVectors.resolvePairs(spark, log, src, Some(at)) match {
       case None => unioned

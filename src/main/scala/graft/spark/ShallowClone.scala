@@ -112,9 +112,9 @@ object ShallowClone {
     // AS OF` load of the source (the pinned SQL posture) — serves the
     // CURRENT logical names over them; carrying the at-state mapping would
     // leave a post-`at` rename's registered name with no physical
-    // resolution and NULL-blank real values. The era and the struct
-    // shapes carry as resolved at the cloned commit, the declarations as
-    // in force at the source's head.
+    // resolution and NULL-blank real values. The era, the struct shapes
+    // and the files' data schema carry as resolved at the cloned commit,
+    // the declarations as in force at the source's head.
     val none = Map.empty[String, String]
     val carried =
       ColumnMapping.entriesAt(spark, log, src, None)
@@ -122,6 +122,7 @@ object ShallowClone {
       MetadataFiles.governing(MetadataFiles.partitioning.fold(spark, log, src, Some(at)))
         .fold(none)(c => MetadataFiles.partitioning.entry(MetadataFiles.Change(c, c))) ++
       SchemaStates.at(spark, log, src, at).fold(none)(s => SchemaStates.entry(s, s)) ++
+      DataSchema.carried(spark, log, src, at) ++
       MetadataFiles.declared(spark, log, src)
     // the mark and the carried metadata must ride a commit even when the
     // cloned state has no ops (an empty-state clone still inherits the

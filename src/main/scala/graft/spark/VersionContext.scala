@@ -137,12 +137,7 @@ object VersionContext {
         table: TableDefinition,
         userId: UserId,
         message: UpdateMessage): StagedCommit = {
-      val version = ctx.newVersion()
-      val mapped = mappedForWrite(ds, ctx, table)
-      val written =
-        if (table.isSnapshot) List(writeSnapshot(mapped, table, version))
-        else writePartitioned(mapped, table, version)
-      StagedCommit(table, TableUpdate(userId, message, Instant.now(), written))
+      StagedCommit(table, writeVersion(ds, ctx, table, userId, message))
     }
 
     /** Write this dataset as a new version of `table`, then commit + sync.
@@ -154,22 +149,12 @@ object VersionContext {
         message: UpdateMessage,
         txn: Option[TableVersions.StreamTxn] = None,
         alsoRemove: Seq[Partition] = Nil): (TableVersion, TableChanges) = {
-      val version = ctx.newVersion()
-      val mapped = mappedForWrite(ds, ctx, table)
-      val written =
-        if (table.isSnapshot) List(writeSnapshot(mapped, table, version))
-        else writePartitioned(mapped, table, version)
       // alsoRemove: partitions to drop in the SAME commit unless the job
       // wrote them (static INSERT OVERWRITE's stale set, a DELETE's fully
       // emptied partitions) — one atomic commit instead of a write +
       // follow-up-prune pair with its transient merged-state window
-      val present = written.collect {
-        case TableOperation.AddPartitionVersion(p, _) => p
-      }.toSet
-      val removes = alsoRemove.distinct.filterNot(present)
-        .map(TableOperation.RemovePartition(_)).toList
-      val update = TableUpdate(userId, message, Instant.now(), written ++ removes, txn)
-      commitSchemeGuarded(ds.sparkSession, ctx, table, update)
+      commitSchemeGuarded(ds.sparkSession, ctx, table,
+        writeVersion(ds, ctx, table, userId, message, txn, alsoRemove))
     }
 
     /** MERGE-ON-READ append ([[RowOverlay.append]]): land this dataset's
@@ -213,12 +198,7 @@ object VersionContext {
         userId: UserId,
         message: UpdateMessage,
         branch: String): TableVersions.CommitId = {
-      val version = ctx.newVersion()
-      val mapped = mappedForWrite(ds, ctx, table)
-      val ops =
-        if (table.isSnapshot) List(writeSnapshot(mapped, table, version))
-        else writePartitioned(mapped, table, version)
-      val update = TableUpdate(userId, message, Instant.now(), ops)
+      val update = writeVersion(ds, ctx, table, userId, message)
       val log = ctx.metastore.tableVersions
       log.commitDetached(table.name, update)
       log.setRef(table.name, branch, update.metadata.id)
@@ -252,21 +232,10 @@ object VersionContext {
         readCommit: TableVersions.CommitId,
         txn: Option[TableVersions.StreamTxn] = None,
         alsoRemove: Seq[Partition] = Nil): TableVersions.CommitId = {
-      val version = ctx.newVersion()
-      val mapped = mappedForWrite(ds, ctx, table)
-      val written =
-        if (table.isSnapshot) List(writeSnapshot(mapped, table, version))
-        else writePartitioned(mapped, table, version)
-      val present = written.collect {
-        case TableOperation.AddPartitionVersion(p, _) => p
-      }.toSet
-      val removes = alsoRemove.distinct.filterNot(present)
-        .map(TableOperation.RemovePartition(_)).toList
-      val ops = written ++ removes
+      val update = writeVersion(ds, ctx, table, userId, message, txn, alsoRemove)
       // nothing written, nothing removed: committing an EMPTY-ops update
       // would be a junk history entry with whole-table conflict scope
-      if (ops.isEmpty) return readCommit
-      val update = TableUpdate(userId, message, Instant.now(), ops, txn)
+      if (update.operations.isEmpty) return readCommit
       // the sidecar refresh anchors on the pre-commit head, not readCommit:
       // a rebase may compose over commits that landed after the read
       val preHead = ctx.metastore.tableVersions.currentCommit(table.name)
@@ -286,40 +255,46 @@ object VersionContext {
         userId: UserId,
         message: UpdateMessage,
         expected: TableVersions.CommitId): Option[(TableVersion, TableChanges)] = {
-      val version = ctx.newVersion()
-      val mapped = mappedForWrite(ds, ctx, table)
-      val ops =
-        if (table.isSnapshot) List(writeSnapshot(mapped, table, version))
-        else writePartitioned(mapped, table, version)
+      val update = writeVersion(ds, ctx, table, userId, message)
       // scheme re-validation at commit time: an evolution landing after
       // this check necessarily moved the head, so the commitIf below
       // refuses — validate-then-commit has no stale-scheme window
       PartitionEvolution.requireCurrentScheme(
         ds.sparkSession, ctx.metastore.tableVersions, table)
-      ctx.metastore.commitIf(
-        table.name, TableUpdate(userId, message, Instant.now(), ops), expected)
+      ctx.metastore.commitIf(table.name, update, expected)
     }
 
-    /** The shared pre-write pipeline of all three commit variants: the
-      * [[PartitionEvolution]] stale-scheme guard first (a writer holding
-      * a pre-evolution definition must not land old-scheme dirs), then
-      * [[Constraints.enforced]] (constraints speak LOGICAL names; the
-      * gate rides the staging job's own pass via `raise_error`), then
-      * the [[ColumnMapping]] logical→physical translation files store.
-      * All identity for plain tables, costing one fold of the cached log
-      * each. */
-    private def mappedForWrite(
-        ds: Dataset[T],
-        ctx: VersionContext,
-        table: TableDefinition): Dataset[_] = {
-      val log = ctx.metastore.tableVersions
-      PartitionEvolution.requireCurrentScheme(ds.sparkSession, log, table)
-      ColumnMapping.toPhysical(
-        Constraints.enforced(
-          GeneratedColumns.applied(
-            ColumnDefaults.applied(ds.toDF(), log, table), log, table), log, table),
-        table, log)
-    }
+  }
+
+  /** The write step every versioned insert shares: the pre-write pipeline
+    * ([[PartitionEvolution]]'s stale-scheme guard — a writer holding a
+    * pre-evolution definition must not land old-scheme dirs — then
+    * [[Constraints.enforced]] over the filled defaults and generated
+    * columns, in LOGICAL names, its gate riding the write job's own pass
+    * via `raise_error`, then the [[ColumnMapping]] logical→physical
+    * translation files store), one write job into fresh version dirs, and
+    * the update to commit: the written dirs, `alsoRemove`'s unwritten
+    * partitions and the [[DataSchema]] entry (driver-side, no job). */
+  private def writeVersion(
+      ds: Dataset[_], ctx: VersionContext, table: TableDefinition,
+      userId: UserId, message: UpdateMessage,
+      txn: Option[TableVersions.StreamTxn] = None,
+      alsoRemove: Seq[Partition] = Nil): TableUpdate = {
+    val version = ctx.newVersion()
+    val log = ctx.metastore.tableVersions
+    PartitionEvolution.requireCurrentScheme(ds.sparkSession, log, table)
+    val mapped = ColumnMapping.toPhysical(
+      Constraints.enforced(
+        GeneratedColumns.applied(
+          ColumnDefaults.applied(ds.toDF(), log, table), log, table), log, table),
+      table, log)
+    val schema = DataSchema.written(ds.sparkSession, log, table, mapped.schema)
+    val written =
+      if (table.isSnapshot) List(writeSnapshot(mapped, table, version))
+      else writePartitioned(mapped, table, version)
+    val present = written.collect { case TableOperation.AddPartitionVersion(p, _) => p }.toSet
+    val removes = alsoRemove.distinct.filterNot(present).map(TableOperation.RemovePartition(_))
+    TableUpdate(userId, message, Instant.now(), written ++ removes, txn).withTableMetadata(schema)
   }
 
   /** OPTIMIZED WRITE (guide §6 file sizing; the Iceberg
@@ -395,7 +370,7 @@ object VersionContext {
   }
 
   /** V18: whole-dataset write to `<location>/<label>/`. The caller
-    * (`mappedForWrite`) has already applied the [[Constraints]] gate —
+    * (`writeVersion`) has already applied the [[Constraints]] gate —
     * it rides this write's own pass, failing the job before any commit
     * publishes — and the [[ColumnMapping]] logical→physical translation. */
   private def writeSnapshot[T](

@@ -67,7 +67,7 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
         val wanted = partitions.toSet
         val subset = pvs.filter { case (p, _) => wanted.contains(p) }
         if (subset.nonEmpty) materialize(table, PartitionedTableVersion(subset))
-        else emptyLike(table, PartitionedTableVersion(pvs))
+        else emptyLike(table, PartitionedTableVersion(pvs), None)
       case _ =>
         sys.error(
           s"readRawDirsPartitions requires a partitioned table: ${table.name.fullyQualifiedName}")
@@ -86,7 +86,7 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
         val subset = pvs.filter { case (p, _) => wanted.contains(p) }
         val base =
           if (subset.nonEmpty) materialize(table, PartitionedTableVersion(subset))
-          else emptyLike(table, PartitionedTableVersion(pvs))
+          else emptyLike(table, PartitionedTableVersion(pvs), None)
         overlayUnion(table, base, None, None, only = Some(wanted))
       case _ =>
         sys.error(
@@ -131,11 +131,12 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
     requireNoHiddenRows(table, from, to)
     val base = (vFrom, vTo) match {
       case (SnapshotTableVersion(a), SnapshotTableVersion(b)) =>
-        if (a == b) emptyLike(table, vTo) else materialize(table, vTo)
+        if (a == b) emptyLike(table, vTo, Some(to))
+        else materialize(table, vTo, schemaAt = Some(to))
       case (PartitionedTableVersion(pa), PartitionedTableVersion(pb)) =>
         val changed = pb.filter { case (p, v) => !pa.get(p).contains(v) }
-        if (changed.isEmpty) emptyLike(table, vTo)
-        else materialize(table, PartitionedTableVersion(changed))
+        if (changed.isEmpty) emptyLike(table, vTo, Some(to))
+        else materialize(table, PartitionedTableVersion(changed), schemaAt = Some(to))
       case _ =>
         sys.error(
           s"table ${table.name.fullyQualifiedName} changed partitioning shape between commits")
@@ -178,23 +179,24 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
           "ChangeFeed.read / table_changes (emits _change_type='delete' rows) instead")
   }
 
-  /** Materialize an explicit partition→version subset — the change feed's
-    * endpoint-scoped scans ([[ChangeFeed]]) and nothing else; keeping it
-    * package-private preserves the invariant that public reads always
-    * resolve through the commit log. */
+  /** Materialize an explicit partition→version subset of the state at
+    * `at` — the change feed's endpoint-scoped scans ([[ChangeFeed]]) and
+    * nothing else; keeping it package-private preserves the invariant that
+    * public reads always resolve through the commit log. */
   private[spark] def materializeSubset(
-      table: TableDefinition, pvs: Map[Partition, Version]): DataFrame =
+      table: TableDefinition, pvs: Map[Partition, Version], at: CommitId): DataFrame =
     if (pvs.isEmpty) spark.emptyDataFrame
-    else materialize(table, PartitionedTableVersion(pvs))
+    else materialize(table, PartitionedTableVersion(pvs), schemaAt = Some(at))
 
   /** Zero rows WITH the table's schema — an incremental consumer's selects
     * and aggregations must keep resolving on quiet intervals (the steady
     * state), not crash on a schema-less frame. Only a never-written table,
     * which has no schema anywhere, degrades to the schema-less empty. */
-  private def emptyLike(table: TableDefinition, tv: TableVersion): DataFrame = tv match {
+  private def emptyLike(
+      table: TableDefinition, tv: TableVersion, schemaAt: Option[CommitId]): DataFrame = tv match {
     case SnapshotTableVersion(v) if v == Version.Unversioned => spark.emptyDataFrame
     case PartitionedTableVersion(m) if m.isEmpty             => spark.emptyDataFrame
-    case _ => materialize(table, tv).limit(0)
+    case _ => materialize(table, tv, schemaAt = schemaAt).limit(0)
   }
 
   private def materialize(
@@ -202,7 +204,8 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
       tv: TableVersion,
       mergeSchema: Boolean = false,
       at: Option[CommitId] = None,
-      pointers: Option[(String, String)] = None): DataFrame = {
+      pointers: Option[(String, String)] = None,
+      schemaAt: Option[CommitId] = None): DataFrame = {
     // partition values are strings in the version model; pin Spark's
     // partition-dir parsing to strings so values round-trip verbatim
     // (SURVEY.md §2.3 Q1 note: otherwise hour="01" reads back as "1").
@@ -211,7 +214,7 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
     // exists for partition inference).
     SessionConf.withConf(
       spark, "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
-      doMaterialize(table, tv, mergeSchema, at, pointers)
+      doMaterialize(table, tv, mergeSchema, at, pointers, schemaAt.orElse(at))
     }
   }
 
@@ -260,7 +263,7 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
         case Some(want) => c.leaves.filter { case (p, _) => p.forall(want.contains) }
       }
       if (leaves.isEmpty) None
-      else Some(RowOverlay.loadLeaves(spark, table, c.dir, leaves, pointers, widened))
+      else Some(RowOverlay.loadLeaves(spark, log, table, c, leaves, pointers, widened))
     }
     frames.foldLeft(base)(_.unionByName(_, allowMissingColumns = true))
   }
@@ -308,12 +311,9 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
 
   /** TYPE WIDENING override ([[ColumnMapping.widen]]): when the state at
     * `at` widens columns, the scan must REQUEST the wide schema — files
-    * from before the widen carry the narrow physical type, and without an
-    * explicit schema a mixed-width load would resolve to whichever footer
-    * inference sampled (upcast-or-crash by luck). Base columns come from
-    * the same single-footer inference a plain load does; only the widened
-    * fields' types change. Zero cost when nothing is widened (one
-    * metadata-file probe). */
+    * from before the widen carry the narrow physical type. Base columns
+    * come from the plain load; only the widened fields' types change.
+    * Zero cost when nothing is widened (one fold of the cached log). */
   private def withWidening(
       table: TableDefinition,
       at: Option[CommitId],
@@ -329,7 +329,11 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
       tv: TableVersion,
       mergeSchema: Boolean,
       at: Option[CommitId],
-      pointers: Option[(String, String)] = None): DataFrame =
+      pointers: Option[(String, String)],
+      schemaAt: Option[CommitId]): DataFrame = {
+    // the state's data columns; a mergeSchema read unions the footers
+    lazy val record =
+      if (mergeSchema) None else DataSchema.at(spark, log, table, schemaAt)
     tv match {
       case SnapshotTableVersion(v) if v == Version.Unversioned =>
         // the Unversioned sentinel maps to the BARE table location, which
@@ -340,11 +344,11 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
         spark.emptyDataFrame
       case SnapshotTableVersion(v) =>
         val path = VersionPaths.pathFor(table.location, v).toString
-        // listing and schema cached per immutable version dir ([[SchemaCache]])
+        // listing cached per immutable version dir ([[ListingCache]])
         def loadWith(schema: Option[org.apache.spark.sql.types.StructType]) =
-          SchemaCache.load(
+          ListingCache.load(
             spark, table.format, Seq(path), Map("mergeSchema" -> mergeSchema.toString), schema)
-        point(withWidening(table, at, s => loadWith(Some(s)), loadWith(None)), pointers)
+        point(withWidening(table, at, s => loadWith(Some(s)), loadWith(record)), pointers)
       case PartitionedTableVersion(pvs) if pvs.nonEmpty =>
         // one scan per partition-column SIGNATURE: a metadata-only
         // partition evolution ([[PartitionEvolution.evolveMetadataOnly]])
@@ -363,17 +367,16 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
             (if (sig == currentSig) 0 else 1, sig.mkString(","))
           }
           .map(_._2)
-        // listings and schema cached per immutable version-dir set
-        // ([[SchemaCache]]): a stock load lists every dir (one Spark job
-        // above 32 dirs) and infers footers on every call, and lifecycle
-        // queries re-resolve the same states dozens of times
+        // listings cached per immutable version dir ([[ListingCache]]): a
+        // stock load lists every dir (one Spark job above 32 dirs), and
+        // lifecycle queries re-resolve the same states dozens of times
         def loadGroup(
             entries: Seq[(Partition, Version)],
             schema: Option[org.apache.spark.sql.types.StructType]) = {
           val paths = entries
             .map { case (p, v) => SparkPaths.dirFor(table.location, p, v) }
             .sorted
-          SchemaCache.load(
+          ListingCache.load(
             spark, table.format, paths,
             Map("basePath" -> table.location.toString, "mergeSchema" -> mergeSchema.toString),
             schema)
@@ -382,11 +385,11 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
           point(withWidening(
             table, at,
             s => loadGroup(groups.head, Some(s)),
-            loadGroup(groups.head, None)), pointers)
+            loadGroup(groups.head, record)), pointers)
         else {
-          // widening derives from the POINTER-FREE union schema (pointer
-          // columns are computed, never in files), then every era loads
-          // the same explicit wide schema so the union needs no resolution
+          // eras hold different data columns, so each infers its own;
+          // widening derives from the POINTER-FREE union schema, then every
+          // era loads the same explicit wide schema
           val widened = ColumnMapping.widenedTypesAt(spark, log, table, at)
           val schemaOpt =
             if (widened.isEmpty) None
@@ -402,4 +405,5 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
       case PartitionedTableVersion(_) =>
         spark.emptyDataFrame
     }
+  }
 }

@@ -25,6 +25,11 @@ object GraftSqlShim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `private[spark]` StructType.asNullable: every field, element and
+    * value nullable at any depth — what a file relation serves. */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** The existence check and globbing every stock file read runs on its
     * paths (`DataSource.checkAndGlobPathIfNecessary`, files must exist). */
   def checkedPaths(

@@ -11,7 +11,7 @@ import graft.core.TableVersions.{UpdateMessage, UserId}
 import graft.spark.VersionContext.DatasetVersionOps
 
 /** Version-dir listings are listed once and then served from the shared
-  * file-status cache ([[SchemaCache]]): counted with Spark's own listing
+  * file-status cache ([[ListingCache]]): counted with Spark's own listing
   * metrics, and never at the cost of reading a reclaimed dir. */
 class ListingCacheSpec extends AnyFunSuite with Matchers {
   import ListingCacheSpec.Listing
