@@ -140,6 +140,11 @@ trait TableVersions {
    *  - DETACHED intervening commits don't conflict (no pointer-based fold
    *    sees them until publish).
    *
+   * `metadata` adds commit-line metadata derived INSIDE each attempt,
+   * after `revalidate` and before the CAS: a value that depends on the
+   * state the commit lands on is computed against exactly the state the
+   * CAS swaps, never a stale read.
+   *
    * Returns the new head commit id on success. O(intervening) metadata
    * work per attempt; `maxRetries` bounds CAS contention loops. Throws
    * [[TableVersions.ConcurrentWriteException]] on a semantic conflict and
@@ -152,7 +157,8 @@ trait TableVersions {
       maxRetries: Int = 8,
       wholeTableScope: Boolean = false,
       revalidate: () => Unit = () => (),
-      scopeOverride: Option[TableVersions.ConflictScope] = None): CommitId = {
+      scopeOverride: Option[TableVersions.ConflictScope] = None,
+      metadata: () => Map[String, String] = () => Map.empty): CommitId = {
     import TableVersions._
     // `wholeTableScope` widens THIS update's scope to the whole table
     // regardless of its ops — a restructuring commit (partition-scheme
@@ -210,7 +216,7 @@ trait TableVersions {
               s"on table ${table.fullyQualifiedName} overlaps this write's scope " +
               s"($mine); derived from ${readCommit.id} — re-read and re-derive")
       }
-      if (commitIf(table, update, head)) return update.metadata.id
+      if (commitIf(table, update.withTableMetadata(metadata()), head)) return update.metadata.id
       attempts += 1
       if (attempts > maxRetries)
         throw new ConcurrentWriteException(

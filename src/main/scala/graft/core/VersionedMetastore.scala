@@ -75,11 +75,12 @@ final case class VersionedMetastore(tableVersions: TableVersions, metastore: Met
       readCommit: CommitId,
       wholeTableScope: Boolean = false,
       revalidate: () => Unit = () => (),
-      scopeOverride: Option[TableVersions.ConflictScope] = None): (TableVersion, TableChanges) = {
+      scopeOverride: Option[TableVersions.ConflictScope] = None,
+      metadata: () => Map[String, String] = () => Map.empty): (TableVersion, TableChanges) = {
     tableVersions.commitRebase(
       table, update, readCommit,
       wholeTableScope = wholeTableScope, revalidate = revalidate,
-      scopeOverride = scopeOverride)
+      scopeOverride = scopeOverride, metadata = metadata)
     syncCatalog(table)
   }
 

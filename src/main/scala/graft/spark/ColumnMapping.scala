@@ -245,7 +245,7 @@ object ColumnMapping {
 
   /** The widening pairs the parquet/ORC readers upcast natively — the
     * set is deliberately LOSSLESS-only. */
-  private val WideningAllowed: Set[(String, String)] =
+  private[spark] val WideningAllowed: Set[(String, String)] =
     Set("int" -> "bigint", "float" -> "double", "int" -> "double")
 
   /** ALTER COLUMN TYPE — lossless TYPE WIDENING (int→bigint, float→double,

@@ -134,17 +134,32 @@ object Compaction {
           else parts :+ pmod(spark_partition_id(), lit(filesPerPartition))
         current.repartition(keys: _*)
       }
+    commitRewrite(spark, ctx, table, packed, readCommit, userId, message)
+  }
+
+  /** Stage `packed` — the rewrite of state `readCommit` — as invisible
+    * version dirs and commit it with the Q72 rebase discipline anchored at
+    * the read state (never plain last-writer-wins: a maintenance rewrite
+    * must not clobber a concurrent writer), then settle the deletion
+    * vectors it absorbed. Shared by OPTIMIZE and Z-ORDER. */
+  private[spark] def commitRewrite(
+      spark: SparkSession,
+      ctx: VersionContext,
+      table: TableDefinition,
+      packed: org.apache.spark.sql.DataFrame,
+      readCommit: TableVersions.CommitId,
+      userId: UserId,
+      message: UpdateMessage): (TableVersion, TableChanges) = {
+    val log = ctx.metastore.tableVersions
     val before: Map[Partition, Version] = log.versionAt(table.name, readCommit) match {
       case PartitionedTableVersion(pvs) => pvs
       case _                            => Map.empty
     }
-    // stage the packed files (invisible version dirs), then commit with the
-    // Q72 rebase discipline anchored at the read state — never plain
-    // last-writer-wins: OPTIMIZE must not clobber a concurrent writer
     val staged = packed.versionedStage(ctx, table, userId, message)
     if (staged.update.operations.isEmpty) // empty table: nothing to rewrite
       return (log.currentVersion(table.name), TableChanges(Nil))
-    val result = ctx.metastore.commitRebase(table.name, staged.update, readCommit)
+    val result = ctx.metastore.commitRebase(
+      table.name, staged.update, readCommit, metadata = () => staged.schemaEntry(log))
     // when the rewrite replaced EVERY live partition (or the snapshot), the
     // old deletion vectors are fully absorbed into the new files — record
     // that with an `_absorbed` marker so reads (and the SQL catalog guard)

@@ -117,7 +117,7 @@ object DeepClone {
         s"deep clone state of ${src.name.fullyQualifiedName} @ ${at.id}")
       val state =
         if (rows.columns.nonEmpty && !rows.isEmpty)
-          Some(rows.versionedStage(ctx, dstDefn, user, message).update)
+          Some(rows.versionedStage(ctx, dstDefn, user, message).landing(ctx.metastore.tableVersions))
         else if (declared.nonEmpty) Some(TableUpdate(user, message, Instant.now(), Nil))
         else None
       state.foreach { u =>

@@ -650,11 +650,7 @@ final case class GraftRestoreCommand(
                 .parse(target.trim.replace(' ', 'T'))
                 .toInstant(java.time.ZoneOffset.UTC)
           }
-        binding.log.updates(defn.name) // most recent first
-          .find(!_.timestamp.isAfter(asOf))
-          .map(_.id)
-          .getOrElse(throw new IllegalArgumentException(
-            s"table ${defn.name.fullyQualifiedName} has no commit at or before $asOf"))
+        VersionedReader(session, binding.log).commitAtOrBefore(defn, asOf)
       } else
         GraftMaintenanceSql.resolveVersionTarget(binding.log, defn.name, target)
     GraftV2Table.metastoreFor(binding, defn).checkout(defn.name, resolved)

@@ -200,8 +200,12 @@ final class GraftTableCatalog extends TableCatalog {
     val schema = registered.orElse(
       if (sigs.size > 1) None
       else DataSchema.at(spark, log, defn, at).orElse(
-        // a file-less state (time travel to init): the newest record
-        if (paths.isEmpty) DataSchema.at(spark, log, defn, Some(log.updates(defn.name).head.id))
+        // a file-less state (time travel to init, every partition
+        // deleted): the newest record, else — a log without one — the
+        // footers of the newest state holding data
+        if (paths.isEmpty)
+          DataSchema.at(spark, log, defn, log.updates(defn.name).find(!_.detached).map(_.id))
+            .orElse(schemaFromHistory(defn))
         else None))
     // TYPE WIDENING: the relation must DECLARE the wide type — files from
     // before the widen carry the narrow physical type, and a narrow
@@ -244,6 +248,23 @@ final class GraftTableCatalog extends TableCatalog {
         (pvs.toSeq.map { case (p, v) => SparkPaths.dirFor(defn.location, p, v) }.sorted,
           Map("basePath" -> defn.location.toString))
     }
+
+  /** Schema of the newest version that actually holds data — walked from
+    * the commit history, read from that version's own files. Only consulted
+    * for file-less states of a log without a [[DataSchema]] record. */
+  private def schemaFromHistory(defn: TableDefinition): Option[StructType] = {
+    val name = defn.name
+    binding.log.updates(name).iterator
+      .map(u => binding.log.versionAt(name, u.id))
+      .collectFirst {
+        case tv @ SnapshotTableVersion(v) if v != Version.Unversioned =>
+          val (paths, opts) = pathsFor(defn, tv)
+          buildFileTable(defn, paths, opts, None).schema()
+        case tv @ PartitionedTableVersion(pvs) if pvs.nonEmpty =>
+          val (paths, opts) = pathsFor(defn, tv)
+          buildFileTable(defn, paths, opts, None).schema()
+      }
+  }
 
   private def buildFileTable(
       defn: TableDefinition,

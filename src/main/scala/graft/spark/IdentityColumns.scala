@@ -248,7 +248,7 @@ object IdentityColumns {
       rebaseAt: Option[TableVersions.CommitId] = None,
       txn: Option[TableVersions.StreamTxn] = None): (TableVersion, TableChanges) = {
     val log = ctx.metastore.tableVersions
-    val staged = df.versionedStage(ctx, table, userId, message)
+    val staged = df.versionedStage(ctx, table, userId, message, alsoRemove)
     val spark = df.sparkSession
     val dirs = staged.update.operations.collect {
       case TableVersions.TableOperation.AddTableVersion(v) =>
@@ -270,16 +270,10 @@ object IdentityColumns {
       if (hwmAtStamp >= 0L) hwmAtStamp
       else effectiveHighWaterMark(spark, log, table, column)
     val newHwm = assignedMax.map(math.max(_, stampBase)).getOrElse(stampBase)
-    val present = staged.update.operations.collect {
-      case TableVersions.TableOperation.AddPartitionVersion(p, _) => p
-    }.toSet
-    val removes = alsoRemove.distinct.filterNot(present)
-      .map(TableVersions.TableOperation.RemovePartition(_)).toList
-    val update = staged.update.copy(
+    val marked = staged.copy(update = staged.update.copy(
       metadata = staged.update.metadata.copy(
         message = UpdateMessage(s"${message.content} ${markText(column, newHwm)}"),
-        txn = txn.orElse(staged.update.metadata.txn)),
-      operations = staged.update.operations ++ removes)
+        txn = txn.orElse(staged.update.metadata.txn))))
     // MERGE's commit discipline: REBASE anchored at the rewrite's read
     // state (partition conflicts throw, disjoint commits compose), with
     // the hwm check and the scheme guard run INSIDE the rebase's CAS
@@ -289,7 +283,8 @@ object IdentityColumns {
     rebaseAt match {
       case Some(rc) =>
         return ctx.metastore.commitRebase(
-          table.name, update, rc,
+          table.name, marked.update, rc,
+          metadata = () => marked.schemaEntry(log),
           revalidate = () => {
             PartitionEvolution.requireCurrentScheme(spark, log, table)
             val hwmNow = effectiveHighWaterMark(spark, log, table, column)
@@ -315,7 +310,7 @@ object IdentityColumns {
             s"concurrent writer advanced the high-water mark ($stampBase -> " +
             s"$hwmNow) after this batch's ids were stamped — the ids would " +
             "overlap; re-run the insert (it re-reads the mark and re-stamps)")
-      ctx.metastore.commitIf(table.name, update, expected) match {
+      ctx.metastore.commitIf(table.name, marked.landing(log), expected) match {
         case Some(r) => return r
         case None =>
           attempts += 1

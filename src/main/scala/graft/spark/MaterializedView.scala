@@ -178,7 +178,8 @@ object MaterializedView {
       mvDefn: TableDefinition,
       staged: VersionContext.StagedCommit,
       readCommit: CommitId): Unit = {
-    ctx.metastore.commitRebase(mvDefn.name, staged.update, readCommit)
+    ctx.metastore.commitRebase(mvDefn.name, staged.update, readCommit,
+      metadata = () => staged.schemaEntry(ctx.metastore.tableVersions))
     ()
   }
 

@@ -190,17 +190,12 @@ object PartitionEvolution {
           org.apache.spark.sql.functions.spark_partition_id(),
           org.apache.spark.sql.functions.lit(filesPerPartition))
       val packed = rows.repartition(keys: _*)
-      val staged = evolving.withValue(true) {
-        packed.versionedStage(ctx, newDefn, user, message)
-      }
-      val present = staged.update.operations.collect {
-        case TableOperation.AddPartitionVersion(p, _) => p
-      }.toSet
       // adds + removes in ONE atomic commit: no fold ever mixes eras
-      val removes = before.keys.toList.filterNot(present)
-        .map(TableOperation.RemovePartition(_))
-      commitBoundary(ctx, table, current, newSchema,
-        staged.update.copy(operations = staged.update.operations ++ removes), readCommit)
+      val rewrite = evolving.withValue(true) {
+        packed.versionedStage(ctx, newDefn, user, message, before.keys.toList)
+      }
+      commitBoundary(ctx, table, current, newSchema, rewrite.update, readCommit,
+        () => rewrite.schemaEntry(ctx.metastore.tableVersions))
     }
 
     // the boundary rewrite physically absorbed any deletion vectors
@@ -324,17 +319,11 @@ object PartitionEvolution {
     val message = UpdateMessage(
       s"CONSOLIDATE PARTITION ERAS under " +
         s"(${table.partitionSchema.columns.map(_.name).mkString(", ")})")
-    val staged =
-      rows.repartition(keys: _*).versionedStage(ctx, table, user, message)
-    val present = staged.update.operations.collect {
-      case TableOperation.AddPartitionVersion(p, _) => p
-    }.toSet
-    val removes = before.keys.toList.filterNot(present)
-      .map(TableOperation.RemovePartition(_))
-    val update = staged.update.copy(
-      operations = staged.update.operations ++ removes)
+    val rewrite = rows.repartition(keys: _*)
+      .versionedStage(ctx, table, user, message, before.keys.toList)
     ctx.metastore.commitRebase(
-      table.name, update, readCommit, wholeTableScope = true)
+      table.name, rewrite.update, readCommit, wholeTableScope = true,
+      metadata = () => rewrite.schemaEntry(log))
     DeletionVectors.markAbsorbed(spark, log, table)
     ()
   }
@@ -352,12 +341,13 @@ object PartitionEvolution {
       current: PartitionSchema,
       newSchema: PartitionSchema,
       update: TableVersions.TableUpdate,
-      readCommit: CommitId): Unit = {
+      readCommit: CommitId,
+      metadata: () => Map[String, String] = () => Map.empty): Unit = {
     val change = MetadataFiles.Change(
       current.columns.map(_.name), newSchema.columns.map(_.name))
     ctx.metastore.commitRebase(
       table.name, update.withTableMetadata(MetadataFiles.partitioning.entry(change)),
-      readCommit, wholeTableScope = true)
+      readCommit, wholeTableScope = true, metadata = metadata)
     ()
   }
 }

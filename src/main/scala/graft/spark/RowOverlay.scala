@@ -486,7 +486,9 @@ object RowOverlay {
       }
       val update = TableUpdate(
         TableUpdateMetadata(commitId, user, finalMessage, java.time.Instant.now(), txn), ops)
-        .withTableMetadata(DataSchema.written(spark, log, table, mapped.schema))
+      // derived inside whichever commit critical section runs below
+      def schemaEntry(): Map[String, String] =
+        DataSchema.written(spark, log, table, mapped.schema, ops)
       def cleanupSidecars(): Unit =
         try {
           fs.delete(new HPath(dir), true)
@@ -574,6 +576,7 @@ object RowOverlay {
           ctx.metastore.commitRebase(
             table.name, update, expected,
             scopeOverride = Some(declaredScope),
+            metadata = () => schemaEntry(),
             revalidate = () => {
               PartitionEvolution.requireCurrentScheme(spark, log, table)
               requireStampStillValid()
@@ -612,7 +615,8 @@ object RowOverlay {
           case e: TableVersions.ConcurrentWriteException =>
             cleanupSidecars(); throw e
         }
-        val committed = ctx.metastore.commitIf(table.name, update, expected)
+        val committed = ctx.metastore.commitIf(
+          table.name, update.withTableMetadata(schemaEntry()), expected)
         if (committed.isEmpty) {
           // loser cleans its never-referenced sidecars; fresh version dirs
           // stay orphaned for vacuum (the versioned write path's posture)
@@ -690,7 +694,7 @@ object RowOverlay {
     interleaveSquashForTest.foreach(f => f())
     val update = TableUpdate(
       TableUpdateMetadata(commitId, user, message, java.time.Instant.now(), None), Nil)
-      .withTableMetadata(DataSchema.written(spark, log, table, live.schema))
+      .withTableMetadata(DataSchema.written(spark, log, table, live.schema, Nil))
     if (ctx.metastore.commitIf(table.name, update, anchor).isEmpty) {
       try { fs.delete(new HPath(dir), true); () }
       catch { case _: java.io.IOException => () }

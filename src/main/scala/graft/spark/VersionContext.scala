@@ -59,8 +59,21 @@ final case class VersionContext(
 object VersionContext {
 
   /** A write whose data landed (invisible version dirs) but whose commit
-    * is deferred to [[commitTransaction]]. */
-  final case class StagedCommit(table: TableDefinition, update: TableUpdate)
+    * is deferred to [[commitTransaction]]. `data` is the written frame's
+    * schema: its [[DataSchema]] entry depends on the state the commit lands
+    * on, so each commit attempt derives it ([[landing]]). */
+  final case class StagedCommit(
+      table: TableDefinition, update: TableUpdate, data: org.apache.spark.sql.types.StructType) {
+
+    /** The [[DataSchema]] entry of this write landing on the table's state
+      * now. */
+    def schemaEntry(log: TableVersions): Map[String, String] =
+      DataSchema.written(
+        org.apache.spark.sql.SparkSession.active, log, table, data, update.operations)
+
+    /** The update to commit on the table's state now. */
+    def landing(log: TableVersions): TableUpdate = update.withTableMetadata(schemaEntry(log))
+  }
 
   /** ATOMIC MULTI-TABLE TRANSACTION commit: every staged table's pointer
     * moves in one atomic step of the shared commit log
@@ -77,9 +90,12 @@ object VersionContext {
     // commits AFTER this transaction — the remaining exposure is an
     // evolve racing a multi-table txn at microsecond granularity.
     val spark = org.apache.spark.sql.SparkSession.active
-    staged.foreach(s => PartitionEvolution.requireCurrentScheme(
-      spark, ctx.metastore.tableVersions, s.table))
-    ctx.metastore.commitAll(staged.map(s => s.table.name -> s.update))
+    val log = ctx.metastore.tableVersions
+    staged.foreach(s => PartitionEvolution.requireCurrentScheme(spark, log, s.table))
+    // the schema entries derive here too: a write landing in between
+    // composes (plain-commit posture), and a column only it adds may miss
+    // this transaction's entry
+    ctx.metastore.commitAll(staged.map(s => s.table.name -> s.landing(log)))
     ()
   }
 
@@ -97,13 +113,13 @@ object VersionContext {
       spark: org.apache.spark.sql.SparkSession,
       ctx: VersionContext,
       table: TableDefinition,
-      update: TableUpdate): (TableVersion, TableChanges) = {
+      staged: StagedCommit): (TableVersion, TableChanges) = {
     val log = ctx.metastore.tableVersions
     var attempts = 0
     while (true) {
       val head = log.currentCommit(table.name)
       PartitionEvolution.requireCurrentScheme(spark, log, table)
-      ctx.metastore.commitIf(table.name, update, head) match {
+      ctx.metastore.commitIf(table.name, staged.landing(log), head) match {
         case Some(r) =>
           // post-write maintenance (property/conf-gated, no-ops by
           // default): a stats-enabled table refreshes its sidecar off the
@@ -111,7 +127,7 @@ object VersionContext {
           // a `graft.autoOptimize` table folds small-file pressure
           FileStats.maybeAutoUpdate(spark, log, table, head)
           TableProperties.maybeAutoOptimize(
-            spark, ctx, table, update.metadata.userId)
+            spark, ctx, table, staged.update.metadata.userId)
           return r
         case None =>
           attempts += 1
@@ -131,14 +147,15 @@ object VersionContext {
       * transaction: the write job runs NOW (constraints enforced, column
       * mapping applied — the ordinary pre-write pipeline), the data lands
       * as never-referenced version dirs, and the commit is deferred to
-      * [[VersionContext.commitTransaction]]. */
+      * [[VersionContext.commitTransaction]]. `alsoRemove`: partitions the
+      * commit drops unless the job wrote them. */
     def versionedStage(
         ctx: VersionContext,
         table: TableDefinition,
         userId: UserId,
-        message: UpdateMessage): StagedCommit = {
-      StagedCommit(table, writeVersion(ds, ctx, table, userId, message))
-    }
+        message: UpdateMessage,
+        alsoRemove: Seq[Partition] = Nil): StagedCommit =
+      writeVersion(ds, ctx, table, userId, message, alsoRemove = alsoRemove)
 
     /** Write this dataset as a new version of `table`, then commit + sync.
       * Returns the resulting table version and the catalog ops applied. */
@@ -198,8 +215,8 @@ object VersionContext {
         userId: UserId,
         message: UpdateMessage,
         branch: String): TableVersions.CommitId = {
-      val update = writeVersion(ds, ctx, table, userId, message)
       val log = ctx.metastore.tableVersions
+      val update = writeVersion(ds, ctx, table, userId, message).landing(log)
       log.commitDetached(table.name, update)
       log.setRef(table.name, branch, update.metadata.id)
       update.metadata.id
@@ -232,21 +249,21 @@ object VersionContext {
         readCommit: TableVersions.CommitId,
         txn: Option[TableVersions.StreamTxn] = None,
         alsoRemove: Seq[Partition] = Nil): TableVersions.CommitId = {
-      val update = writeVersion(ds, ctx, table, userId, message, txn, alsoRemove)
+      val staged = writeVersion(ds, ctx, table, userId, message, txn, alsoRemove)
       // nothing written, nothing removed: committing an EMPTY-ops update
       // would be a junk history entry with whole-table conflict scope
-      if (update.operations.isEmpty) return readCommit
+      if (staged.update.operations.isEmpty) return readCommit
       // the sidecar refresh anchors on the pre-commit head, not readCommit:
       // a rebase may compose over commits that landed after the read
-      val preHead = ctx.metastore.tableVersions.currentCommit(table.name)
+      val log = ctx.metastore.tableVersions
+      val preHead = log.currentCommit(table.name)
       ctx.metastore.commitRebase(
-        table.name, update, readCommit,
-        revalidate = () => PartitionEvolution.requireCurrentScheme(
-          ds.sparkSession, ctx.metastore.tableVersions, table))
-      FileStats.maybeAutoUpdate(
-        ds.sparkSession, ctx.metastore.tableVersions, table, preHead)
+        table.name, staged.update, readCommit,
+        revalidate = () => PartitionEvolution.requireCurrentScheme(ds.sparkSession, log, table),
+        metadata = () => staged.schemaEntry(log))
+      FileStats.maybeAutoUpdate(ds.sparkSession, log, table, preHead)
       TableProperties.maybeAutoOptimize(ds.sparkSession, ctx, table, userId)
-      update.metadata.id
+      staged.update.metadata.id
     }
 
     def versionedInsertIntoIf(
@@ -255,13 +272,13 @@ object VersionContext {
         userId: UserId,
         message: UpdateMessage,
         expected: TableVersions.CommitId): Option[(TableVersion, TableChanges)] = {
-      val update = writeVersion(ds, ctx, table, userId, message)
+      val staged = writeVersion(ds, ctx, table, userId, message)
       // scheme re-validation at commit time: an evolution landing after
       // this check necessarily moved the head, so the commitIf below
       // refuses — validate-then-commit has no stale-scheme window
-      PartitionEvolution.requireCurrentScheme(
-        ds.sparkSession, ctx.metastore.tableVersions, table)
-      ctx.metastore.commitIf(table.name, update, expected)
+      val log = ctx.metastore.tableVersions
+      PartitionEvolution.requireCurrentScheme(ds.sparkSession, log, table)
+      ctx.metastore.commitIf(table.name, staged.landing(log), expected)
     }
 
   }
@@ -273,13 +290,14 @@ object VersionContext {
     * columns, in LOGICAL names, its gate riding the write job's own pass
     * via `raise_error`, then the [[ColumnMapping]] logical→physical
     * translation files store), one write job into fresh version dirs, and
-    * the update to commit: the written dirs, `alsoRemove`'s unwritten
-    * partitions and the [[DataSchema]] entry (driver-side, no job). */
+    * the update to commit: the written dirs and `alsoRemove`'s unwritten
+    * partitions, with the written schema its [[DataSchema]] entry derives
+    * from at commit time. */
   private def writeVersion(
       ds: Dataset[_], ctx: VersionContext, table: TableDefinition,
       userId: UserId, message: UpdateMessage,
       txn: Option[TableVersions.StreamTxn] = None,
-      alsoRemove: Seq[Partition] = Nil): TableUpdate = {
+      alsoRemove: Seq[Partition] = Nil): StagedCommit = {
     val version = ctx.newVersion()
     val log = ctx.metastore.tableVersions
     PartitionEvolution.requireCurrentScheme(ds.sparkSession, log, table)
@@ -288,13 +306,13 @@ object VersionContext {
         GeneratedColumns.applied(
           ColumnDefaults.applied(ds.toDF(), log, table), log, table), log, table),
       table, log)
-    val schema = DataSchema.written(ds.sparkSession, log, table, mapped.schema)
     val written =
       if (table.isSnapshot) List(writeSnapshot(mapped, table, version))
       else writePartitioned(mapped, table, version)
     val present = written.collect { case TableOperation.AddPartitionVersion(p, _) => p }.toSet
     val removes = alsoRemove.distinct.filterNot(present).map(TableOperation.RemovePartition(_))
-    TableUpdate(userId, message, Instant.now(), written ++ removes, txn).withTableMetadata(schema)
+    StagedCommit(table,
+      TableUpdate(userId, message, Instant.now(), written ++ removes, txn), mapped.schema)
   }
 
   /** OPTIMIZED WRITE (guide §6 file sizing; the Iceberg

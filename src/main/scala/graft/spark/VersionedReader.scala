@@ -132,11 +132,11 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
     val base = (vFrom, vTo) match {
       case (SnapshotTableVersion(a), SnapshotTableVersion(b)) =>
         if (a == b) emptyLike(table, vTo, Some(to))
-        else materialize(table, vTo, schemaAt = Some(to))
+        else materialize(table, vTo, at = Some(to))
       case (PartitionedTableVersion(pa), PartitionedTableVersion(pb)) =>
         val changed = pb.filter { case (p, v) => !pa.get(p).contains(v) }
         if (changed.isEmpty) emptyLike(table, vTo, Some(to))
-        else materialize(table, PartitionedTableVersion(changed), schemaAt = Some(to))
+        else materialize(table, PartitionedTableVersion(changed), at = Some(to))
       case _ =>
         sys.error(
           s"table ${table.name.fullyQualifiedName} changed partitioning shape between commits")
@@ -186,17 +186,17 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
   private[spark] def materializeSubset(
       table: TableDefinition, pvs: Map[Partition, Version], at: CommitId): DataFrame =
     if (pvs.isEmpty) spark.emptyDataFrame
-    else materialize(table, PartitionedTableVersion(pvs), schemaAt = Some(at))
+    else materialize(table, PartitionedTableVersion(pvs), at = Some(at))
 
   /** Zero rows WITH the table's schema — an incremental consumer's selects
     * and aggregations must keep resolving on quiet intervals (the steady
     * state), not crash on a schema-less frame. Only a never-written table,
     * which has no schema anywhere, degrades to the schema-less empty. */
   private def emptyLike(
-      table: TableDefinition, tv: TableVersion, schemaAt: Option[CommitId]): DataFrame = tv match {
+      table: TableDefinition, tv: TableVersion, at: Option[CommitId]): DataFrame = tv match {
     case SnapshotTableVersion(v) if v == Version.Unversioned => spark.emptyDataFrame
     case PartitionedTableVersion(m) if m.isEmpty             => spark.emptyDataFrame
-    case _ => materialize(table, tv, schemaAt = schemaAt).limit(0)
+    case _ => materialize(table, tv, at = at).limit(0)
   }
 
   private def materialize(
@@ -204,8 +204,7 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
       tv: TableVersion,
       mergeSchema: Boolean = false,
       at: Option[CommitId] = None,
-      pointers: Option[(String, String)] = None,
-      schemaAt: Option[CommitId] = None): DataFrame = {
+      pointers: Option[(String, String)] = None): DataFrame = {
     // partition values are strings in the version model; pin Spark's
     // partition-dir parsing to strings so values round-trip verbatim
     // (SURVEY.md §2.3 Q1 note: otherwise hour="01" reads back as "1").
@@ -214,7 +213,7 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
     // exists for partition inference).
     SessionConf.withConf(
       spark, "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
-      doMaterialize(table, tv, mergeSchema, at, pointers, schemaAt.orElse(at))
+      doMaterialize(table, tv, mergeSchema, at, pointers)
     }
   }
 
@@ -329,11 +328,10 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
       tv: TableVersion,
       mergeSchema: Boolean,
       at: Option[CommitId],
-      pointers: Option[(String, String)],
-      schemaAt: Option[CommitId]): DataFrame = {
+      pointers: Option[(String, String)]): DataFrame = {
     // the state's data columns; a mergeSchema read unions the footers
     lazy val record =
-      if (mergeSchema) None else DataSchema.at(spark, log, table, schemaAt)
+      if (mergeSchema) None else DataSchema.at(spark, log, table, at)
     tv match {
       case SnapshotTableVersion(v) if v == Version.Unversioned =>
         // the Unversioned sentinel maps to the BARE table location, which

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.core._
 import graft.core.Metastore.TableChanges
 import graft.core.TableVersions.{UpdateMessage, UserId}
-import graft.spark.VersionContext.DatasetVersionOps
 
 /**
  * Z-order clustering compaction — the multi-dimensional OPTIMIZE: rewrite
@@ -163,23 +162,6 @@ object ZOrder {
               .drop("__z")
         }
       }
-    val before: Map[Partition, Version] = log.versionAt(table.name, readCommit) match {
-      case PartitionedTableVersion(pvs) => pvs
-      case _                            => Map.empty
-    }
-    val staged = packed.versionedStage(ctx, table, userId, message)
-    if (staged.update.operations.isEmpty) // empty table: nothing to rewrite
-      return (log.currentVersion(table.name), TableChanges(Nil))
-    val result = ctx.metastore.commitRebase(table.name, staged.update, readCommit)
-    // same absorb rule as Compaction: a rewrite that replaced every live
-    // (at the read state) partition physically absorbed any deletion vectors
-    val written = staged.update.operations.collect {
-      case graft.core.TableVersions.TableOperation.AddPartitionVersion(p, _) => p
-    }.toSet
-    val fullRewrite = table.isSnapshot || before.keySet.subsetOf(written)
-    if (fullRewrite) DeletionVectors.markAbsorbed(spark, log, table)
-    // partial rewrites shed the replaced files' vectors (see Compaction)
-    else DeletionVectors.absorbStale(spark, log, table)
-    result
+    Compaction.commitRewrite(spark, ctx, table, packed, readCommit, userId, message)
   }
 }

@@ -316,6 +316,124 @@ class SchemaRecordSpec extends AnyFunSuite with Matchers {
     // the counter sees the probes of a log an earlier version wrote
     CountingLocalFs.counting(spark)(resolveAll(legacy)) should be > 0
   }
+
+  /** A table on its own log whose next commit `race` can pre-empt. */
+  private def hookedTable(
+      name: String, parts: Seq[String]): (HookedTableVersions, VersionContext, TableDefinition) = {
+    val hooked = new HookedTableVersions(new InMemoryTableVersions)
+    val hctx = VersionContext(VersionedMetastore(hooked, new InMemoryMetastore))
+    val t = TableDefinition(
+      TableName("db", name), Files.createTempDirectory(s"graft_record_$name").toUri,
+      if (parts.isEmpty) PartitionSchema.snapshot
+      else PartitionSchema(parts.map(PartitionColumn(_)).toList),
+      FileFormat.Parquet)
+    hctx.init(t, user, UpdateMessage("init"))
+    (hooked, hctx, t)
+  }
+
+  test("a write that loses the commit race derives its record entry again on the state it lands on") {
+    // snapshot: B compared {id, label} against the old record, A replaced
+    // it with {id, score} first; B's files are what the head serves
+    val (hs, sctx, snap) = hookedTable("race_snap", Nil)
+    Seq((1L, "a")).toDF("id", "label").versionedInsertInto(sctx, snap, user, UpdateMessage("v1"))
+    hs.beforeAppend = _ => {
+      Seq((2L, 2.0)).toDF("id", "score").versionedInsertInto(sctx, snap, user, UpdateMessage("A"))
+      ()
+    }
+    Seq((3L, "c")).toDF("id", "label").versionedInsertInto(sctx, snap, user, UpdateMessage("B"))
+    DataSchema.at(spark, hs, snap, None).map(_.fieldNames.toList) shouldBe Some(List("id", "label"))
+    VersionedReader(spark, hs).read(snap).as[(Long, String)].collect() shouldBe Array((3L, "c"))
+
+    // partitioned: two writes that each add a column both land, through
+    // the head-CAS loop and through the rebase commit
+    Seq(false, true).foreach { rebase =>
+      val (hp, pctx, t) = hookedTable(s"race_part_$rebase", Seq("p"))
+      Seq((1L, "a", "x")).toDF("id", "label", "p")
+        .versionedInsertInto(pctx, t, user, UpdateMessage("v1"))
+      hp.beforeAppend = _ => {
+        Seq((2L, "b", "y", 2.0)).toDF("id", "label", "p", "a")
+          .versionedInsertInto(pctx, t, user, UpdateMessage("A"))
+        ()
+      }
+      val b = Seq((3L, "c", "z", 3.0)).toDF("id", "label", "p", "b")
+      if (rebase)
+        b.versionedInsertIntoRebase(pctx, t, user, UpdateMessage("B"), hp.currentCommit(t.name))
+      else b.versionedInsertInto(pctx, t, user, UpdateMessage("B"))
+      withClue(s"rebase = $rebase: ") {
+        DataSchema.at(spark, hp, t, None).map(_.fieldNames.toList) shouldBe
+          Some(List("id", "label", "a", "b"))
+        VersionedReader(spark, hp).read(t).select("id", "a", "b")
+          .as[(Long, Option[Double], Option[Double])].collect().sortBy(_._1) shouldBe
+          Array((1L, None, None), (2L, Some(2.0), None), (3L, None, Some(3.0)))
+      }
+    }
+  }
+
+  test("a merge-on-read append and a squash on a snapshot table grow its record, keeping the base columns") {
+    val t = table("mor_snap", Nil)
+    Seq((1L, "a", 1.5)).toDF("id", "label", "score")
+      .versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
+    Seq((2L, "b")).toDF("id", "label").versionedAppendInto(ctx, t, user, UpdateMessage("mor 1"))
+    record(t).fieldNames shouldBe Array("id", "label", "score")
+    Seq((3L, "c", "x")).toDF("id", "label", "note")
+      .versionedAppendInto(ctx, t, user, UpdateMessage("mor 2"))
+    record(t).fieldNames shouldBe Array("id", "label", "score", "note")
+    RowOverlay.squash(spark, ctx, t, user, UpdateMessage("squash")) shouldBe true
+    record(t).fieldNames shouldBe Array("id", "label", "score", "note")
+    VersionedReader(spark, log).read(t).select("id", "score", "note")
+      .as[(Long, Option[Double], Option[String])].collect().sortBy(_._1) shouldBe
+      Array((1L, Some(1.5), None), (2L, None, None), (3L, None, Some("x")))
+  }
+
+  test("the record widens a type but never narrows it, matches names as the session resolves them, and a full overwrite resets it") {
+    val t = table("types", Seq("p"))
+    Seq((1, "a", "x")).toDF("n", "label", "p").versionedInsertInto(ctx, t, user, UpdateMessage("int"))
+    Seq((2L, "b", "y")).toDF("n", "label", "p").versionedInsertInto(ctx, t, user, UpdateMessage("bigint"))
+    record(t)("n").dataType.typeName shouldBe "long"
+    // a narrower write keeps the wide type: every dir still reads
+    Seq((3, "c", "z")).toDF("n", "label", "p").versionedInsertInto(ctx, t, user, UpdateMessage("narrow"))
+    record(t)("n").dataType.typeName shouldBe "long"
+    // a name differing only in case is the same column
+    Seq((4L, "d", "w")).toDF("N", "LABEL", "p").versionedInsertInto(ctx, t, user, UpdateMessage("case"))
+    record(t).fieldNames shouldBe Array("n", "label")
+    VersionedReader(spark, log).read(t).select("n", "label").as[(Long, String)]
+      .collect().sortBy(_._1) shouldBe Array((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
+    spark.table(sqlName(t)).select("n").as[Long].collect().sorted shouldBe Array(1L, 2L, 3L, 4L)
+    // a write replacing every live partition records exactly its columns
+    Seq((5L, "x"), (6L, "y"), (7L, "z"), (8L, "w")).toDF("id", "p")
+      .versionedInsertInto(ctx, t, user, UpdateMessage("overwrite"))
+    record(t).fieldNames shouldBe Array("id")
+    // (a footer union over the INT and BIGINT dirs above refuses to merge)
+    shape(record(t)) shouldBe shape(dataCols(t, inferred(t, head(t), typed = false, merge = true)))
+  }
+
+  test("a file-less state of a log with no record serves the schema of the newest data-bearing state") {
+    val t = table("legacy_empty", Seq("p"))
+    Seq((1L, "a", "x")).toDF("id", "label", "p").versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
+    val legacy = new InMemoryTableVersions
+    legacy.init(t.name, isSnapshot = false, user, UpdateMessage("init"), Instant.now())
+    val init = legacy.currentCommit(t.name)
+    val ops = log.currentVersion(t.name) match {
+      case PartitionedTableVersion(pvs) =>
+        pvs.toList.map { case (p, v) => TableOperation.AddPartitionVersion(p, v) }
+      case other => fail(s"not partitioned: $other")
+    }
+    legacy.commit(t.name, TableUpdate(user, UpdateMessage("adopt"), Instant.now(), ops))
+    val legacyCat = "recordlegacyempty"
+    spark.conf.set(s"spark.sql.catalog.$legacyCat", classOf[GraftTableCatalog].getName)
+    GraftTableCatalog.bind(legacyCat, legacy)
+    GraftTableCatalog.register(legacyCat, t)
+    val name = s"$legacyCat.db.legacy_empty"
+    val want = shape(spark.table(name).schema)
+    val atInit = spark.sql(s"SELECT * FROM $name VERSION AS OF '${init.id}'")
+    shape(atInit.schema) shouldBe want
+    atInit.count() shouldBe 0L
+    // every partition deleted
+    legacy.commit(t.name, TableUpdate(user, UpdateMessage("drop all"), Instant.now(),
+      ops.collect { case TableOperation.AddPartitionVersion(p, _) => TableOperation.RemovePartition(p) }))
+    shape(spark.table(name).schema) shouldBe want
+    spark.table(name).count() shouldBe 0L
+  }
 }
 
 /** A local file system counting `exists` probes of metadata `.json` files. */
