@@ -232,6 +232,24 @@ class SchemaRecordSpec extends AnyFunSuite with Matchers {
     checkEveryCommit(clone, uniform = false)
   }
 
+  test("a deep clone records its files' schema, by byte copy and by rewriting its rows") {
+    val t = table("deep_src", Seq("p"))
+    Seq((1L, "a", "x")).toDF("id", "label", "p").versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
+    Seq((2L, "b", "y", 2.0)).toDF("id", "label", "p", "score")
+      .versionedInsertInto(ctx, t, user, UpdateMessage("v2"))
+    val raw = DeepClone.clone(spark, ctx, t, TableName("db", "deep_raw"),
+      Files.createTempDirectory("graft_record_deep_raw").toUri, user)
+    record(raw) shouldBe record(t)
+    // an overlay row sends the clone down the row-rewriting path
+    Seq((3L, "c", "x", 3.0)).toDF("id", "label", "p", "score")
+      .versionedAppendInto(ctx, t, user, UpdateMessage("mor"))
+    val rows = DeepClone.clone(spark, ctx, t, TableName("db", "deep_rows"),
+      Files.createTempDirectory("graft_record_deep_rows").toUri, user)
+    GraftTableCatalog.register(cat, rows)
+    record(rows).fieldNames shouldBe Array("id", "label", "score")
+    checkEveryCommit(rows)
+  }
+
   test("over heterogeneous files a plain read serves every column some file holds; a mergeSchema read still unions the footers") {
     val t = table("hetero", Seq("p"))
     Seq((1L, "a", "x")).toDF("id", "a", "p").versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
