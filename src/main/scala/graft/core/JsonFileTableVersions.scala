@@ -595,7 +595,8 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
     * sit at or after the base — keeps resolving. The base also carries the
     * newest value of every table-metadata family the folded prefix
     * carried, so [[TableVersions.foldMetadata]] resolves the same at every
-    * retained commit. The rewrite is temp + fsync + atomic rename under
+    * retained commit; of the [[TableVersions.CommitFacts]] it keeps only
+    * its own. The rewrite is temp + fsync + atomic rename under
     * the table lock; readers replay either the old file or the new one,
     * never a mix.
     *
@@ -644,7 +645,10 @@ final class JsonFileTableVersions(logDir: Path) extends TableVersions {
           s"ref '$name' names commit ${r.id.id}, older than the checkpoint base; " +
             "delete or advance the ref, or raise keepLast")
       }
-      val carried = prefix.flatMap(_.metadata.tableMetadata).toMap // newest wins
+      // newest wins; a folded commit's own facts would name sidecars at the
+      // base commit that do not exist
+      val carried = prefix.flatMap(_.metadata.tableMetadata)
+        .filterNot { case (k, _) => CommitFacts(k) }.toMap ++ base.metadata.tableMetadata
       val rewritten = TableUpdate(base.metadata.copy(tableMetadata = carried), ops) :: tail
       // commits re-emit with their TRUE detached flags (a staged tail
       // commit must stay staged through a checkpoint) and one explicit

@@ -364,6 +364,17 @@ object TableVersions {
       TableUpdateMetadata(CommitId(UUID.randomUUID().toString), userId, message, timestamp)
   }
 
+  /** Commit-line entries that describe their OWN commit — the data
+    * sidecars it publishes (`deletes`, `appends`) and a full rewrite's
+    * `absorbed` flag — rather than a value in force: a checkpoint keeps
+    * them only on the commit that carries them. */
+  object CommitFacts {
+    val Deletes = "deletes"
+    val Appends = "appends"
+    val Absorbed = "absorbed"
+    def apply(key: String): Boolean = key == Deletes || key == Appends || key == Absorbed
+  }
+
   /** A set of operations applied and tracked as one atomic commit. */
   final case class TableUpdate(metadata: TableUpdateMetadata, operations: List[TableOperation]) {
     def withTableMetadata(values: Map[String, String]): TableUpdate =

@@ -1680,7 +1680,7 @@ object Versioned {
   /** Q70: the DELETION-VECTOR MAINTENANCE lifecycle — the round-13
     * scale-story end-to-end, oracle-checked: scattered DV deletes land in
     * per-file-grouped sidecars; a PARTITION-SCOPED OPTIMIZE of 'R' sheds
-    * exactly its vectors ([[graft.spark.DeletionVectors.absorbStale]]
+    * exactly its vectors ([[graft.spark.DeletionVectors.stageTombstones]]
     * tombstones — asserted: the resolved pair set shrinks to the
     * untouched partitions'); `squashSidecars` folds the remaining groups
     * into ONE contributing dir (asserted) so reads open O(1) sidecars; a
@@ -1717,9 +1717,7 @@ object Versioned {
     // squash: one contributing dir serves every subsequent read
     require(DeletionVectors.squashSidecars(s, ctx, table, user, UpdateMessage("squash sidecars")),
       "multiple sidecar dirs expected before the squash")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      table.location, s.sessionState.newHadoopConf())
-    require(DeletionVectors.liveSidecarDirs(fs, log, table, None).sizeIs == 1,
+    require(DeletionVectors.liveSidecarDirs(s, log, table, None).sizeIs == 1,
       "squash must fold the contributing dirs to one")
 
     // a further delete composes on the squashed layout

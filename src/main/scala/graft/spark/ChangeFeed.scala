@@ -192,7 +192,7 @@ object ChangeFeed {
     val pairsFrom = from.flatMap(f => DeletionVectors.resolvePairs(spark, log, table, Some(f)))
     val pairsTo = DeletionVectors.resolvePairs(spark, log, table, Some(to))
     // pairs newly hidden inside the range; vector ABSORPTION (tombstones,
-    // markers, rewrites) only removes pairs and never re-exposes rows, so
+    // absorbing rewrites) only removes pairs and never re-exposes rows, so
     // the except direction is the whole story
     val newHidden = pairsTo.map(t => pairsFrom.fold(t)(f => t.exceptAll(f)))
 

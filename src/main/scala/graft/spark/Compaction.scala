@@ -44,7 +44,7 @@ object Compaction {
     * those partitions are read and rewritten (the 100 TB posture: OPTIMIZE
     * the hot partitions, not the table). Untouched partitions keep their
     * version pointers; the rewritten partitions' deletion vectors are shed
-    * via [[DeletionVectors.absorbStale]].
+    * via [[DeletionVectors.stageTombstones]].
     *
     * `splitsByPartition`: BYTES-AWARE bin-packing ([[compactToSize]]'s
     * policy output) — a per-partition writer count overriding the global
@@ -140,8 +140,8 @@ object Compaction {
   /** Stage `packed` — the rewrite of state `readCommit` — as invisible
     * version dirs and commit it with the Q72 rebase discipline anchored at
     * the read state (never plain last-writer-wins: a maintenance rewrite
-    * must not clobber a concurrent writer), then settle the deletion
-    * vectors it absorbed. Shared by OPTIMIZE and Z-ORDER. */
+    * must not clobber a concurrent writer); the commit itself records the
+    * deletion vectors it absorbed. Shared by OPTIMIZE and Z-ORDER. */
   private[spark] def commitRewrite(
       spark: SparkSession,
       ctx: VersionContext,
@@ -158,28 +158,41 @@ object Compaction {
     val staged = packed.versionedStage(ctx, table, userId, message)
     if (staged.update.operations.isEmpty) // empty table: nothing to rewrite
       return (log.currentVersion(table.name), TableChanges(Nil))
-    val result = ctx.metastore.commitRebase(
-      table.name, staged.update, readCommit, metadata = () => staged.schemaEntry(log))
-    // when the rewrite replaced EVERY live partition (or the snapshot), the
-    // old deletion vectors are fully absorbed into the new files — record
-    // that with an `_absorbed` marker so reads (and the SQL catalog guard)
-    // stop resolving the stale pair sidecars for the new state. A partition
-    // whose version did not move (e.g. every row DV-hidden → no rows to
-    // write) still needs the old pairs, so the marker is skipped. Scope is
-    // judged against the READ state and OUR staged ops: a disjoint commit
-    // the rebase composed with neither adds vectors (DV commits conflict)
-    // nor keeps stale ones (its own overwrite already orphaned them).
+    // when the rewrite replaces EVERY live partition (or the snapshot), the
+    // old deletion vectors are fully absorbed into the new files — the
+    // commit carries the `absorbed` entry so reads (and the SQL catalog
+    // guard) stop resolving the stale pair sidecars for the new state. A
+    // partition whose version did not move (e.g. every row DV-hidden → no
+    // rows to write) still needs the old pairs, so the entry is skipped.
+    // Scope is judged against the READ state and OUR staged ops: a disjoint
+    // commit the rebase composes with neither adds vectors (DV commits
+    // conflict) nor keeps stale ones (its own overwrite already orphaned
+    // them).
     val written = staged.update.operations.collect {
       case TableOperation.AddPartitionVersion(p, _) => p
     }.toSet
     val fullRewrite = table.isSnapshot || before.keySet.subsetOf(written)
-    if (fullRewrite) DeletionVectors.markAbsorbed(spark, log, table)
     // a PARTIAL rewrite (partition-scoped, or a partition whose rows were
     // all DV-hidden and so kept its old version) still sheds the vectors
-    // of the files it DID replace — tombstone the now-dead groups
-    else DeletionVectors.absorbStale(spark, log, table)
-    result
+    // of the files it DOES replace — tombstones staged under its own id
+    val shed =
+      if (fullRewrite) Map.empty[String, String]
+      else DeletionVectors.stageTombstones(
+        spark, log, table, readCommit, staged.update.operations, staged.update.metadata.id)
+    try
+      ctx.metastore.commitRebase(
+        table.name, staged.update.withTableMetadata(shed), readCommit,
+        metadata = () => staged.schemaEntry(log) ++
+          (if (fullRewrite) DeletionVectors.absorbedEntry(spark, log, table) else Map.empty))
+    catch {
+      case e: TableVersions.ConcurrentWriteException if shed.nonEmpty =>
+        // a lost rewrite removes its own unnamed tombstone dir
+        DeletionVectors.removeUnnamed(
+          spark, table, DeletionVectors.deletesDir(table, staged.update.metadata.id))
+        throw e
+    }
   }
+
 
   /** SIZE-TARGETED compaction (`OPTIMIZE t TARGET n MB`, the Delta/Iceberg
     * binpack contract): rewrite to files of roughly `targetBytes` each

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{broadcast, col, lit, max}
 
 import graft.core._
-import graft.core.TableVersions.{CommitId, TableUpdate, TableUpdateMetadata, UpdateMessage, UserId}
+import graft.core.TableVersions.{CommitId, TableOperation, TableUpdate, TableUpdateMetadata, UpdateMessage, UserId}
 
 /**
  * MERGE-ON-READ deletes (deletion vectors) — the scattered-row DELETE that
@@ -16,8 +16,7 @@ import graft.core.TableVersions.{CommitId, TableUpdate, TableUpdateMetadata, Upd
  * copy-on-write DML path ([[GraftDeleteCommand]]); here it writes a
  * metadata-sized sidecar and ZERO data files. The Delta deletion-vector /
  * Iceberg positional-delete pattern, expressed on this engine's
- * per-commit-sidecar layout (the same `_stats/commit-<id>` lifecycle
- * [[FileStats]] uses):
+ * per-commit-sidecar layout:
  *
  *  - a DV DELETE scans the current state WITH parquet's `_metadata`
  *    columns, collects the matching rows' `(file, pos)` pairs as a
@@ -31,21 +30,21 @@ import graft.core.TableVersions.{CommitId, TableUpdate, TableUpdateMetadata, Upd
  *  - the commit itself carries NO operations: no version pointer moves, no
  *    data file is written — it just advances the pointer so the delete is
  *    an ordinary time-travelable history entry;
+ *  - the commit that publishes a sidecar NAMES it on its commit line (the
+ *    `deletes` entry of [[MetadataFiles]]); the dir is written before that
+ *    commit and never touched after it, so a crash leaves only an
+ *    unnamed orphan for [[Vacuum]];
  *  - a merge-on-read scan resolves the vectors PER FILE, LATEST WINS: of
- *    every at-or-before sidecar (walking back until a full-rewrite
- *    `_absorbed` marker), the newest sidecar mentioning a file owns that
- *    file's pair set. One union + one windowed latest-wins filter + one
- *    `(file, pos)` anti-join against the scan's own `_metadata` columns.
+ *    every at-or-before sidecar the log names (walking back until a
+ *    commit that absorbed every older vector, or a complete sidecar), the
+ *    newest sidecar mentioning a file owns that file's pair set. The walk
+ *    folds the cached commit lines; it makes no file-system call. One
+ *    union + one windowed latest-wins filter + one `(file, pos)` anti-join
+ *    against the scan's own `_metadata` columns.
  *    Version dirs are immutable, so row positions are stable by
  *    construction. A row with `pos = -1` is a per-file TOMBSTONE: "this
  *    file's vectors are absorbed as of this commit" — how partition-scoped
- *    rewrites shed dead vectors ([[absorbStale]]) without a full-rewrite
- *    marker.
- *
- * Backward compatibility: the previous format wrote CUMULATIVE sidecars
- * (all live pairs at each delete). A cumulative sidecar carries the full
- * pair set for every file it mentions, so per-file latest-wins resolves
- * mixed histories correctly with no migration.
+ *    rewrites shed dead vectors ([[stageTombstones]]).
  *
  * Interplay with the rest of the engine:
  *  - TIME TRAVEL: a read as-of a pre-delete commit resolves only the
@@ -53,100 +52,39 @@ import graft.core.TableVersions.{CommitId, TableUpdate, TableUpdateMetadata, Upd
  *    Tombstones written by later rewrites are equally invisible to it.
  *  - OPTIMIZE / copy-on-write DML: a rewrite commits new version dirs with
  *    new file paths; DV pairs referencing the replaced files become
- *    dead no-ops (the anti-join misses). A FULL rewrite records an
- *    `_absorbed` marker ([[markAbsorbed]]) that stops the resolution walk;
- *    a PARTIAL rewrite tombstones just the files it replaced
- *    ([[absorbStale]]). NOTE: rewrite planners must read through [[read]]
- *    (not the raw [[VersionedReader]]) or they would resurrect DV-hidden
- *    rows into the rewritten files.
- *  - VACUUM: sidecars follow their commit's lifecycle like `_stats`
- *    sidecars; an orphaned sidecar (commit never landed) is reclaimable.
+ *    dead no-ops (the anti-join misses). A FULL rewrite carries the
+ *    `absorbed` entry on its own commit, which stops the resolution walk;
+ *    a PARTIAL rewrite tombstones just the files it replaced, in a sidecar
+ *    its own commit names ([[stageTombstones]]). NOTE: rewrite planners
+ *    must read through [[read]] (not the raw [[VersionedReader]]) or they
+ *    would resurrect DV-hidden rows into the rewritten files.
+ *  - VACUUM: keeps every sidecar a retained state's walk names; a dir no
+ *    commit names (the commit never landed) is reclaimable.
  *  - Sidecar-dir count grows with delete commits until a full rewrite;
- *    [[squashSidecars]] folds every live group into one sidecar so reads
- *    open O(1) dirs again — the DV analogue of log checkpointing.
+ *    [[squashSidecars]] folds every live group into one COMPLETE sidecar
+ *    so reads open O(1) dirs again — the DV analogue of log checkpointing.
  */
 object DeletionVectors {
 
   private val FileCol = "__dv_file"
   private val PosCol = "__dv_pos"
   private val SeqCol = "__dv_seq"
-  private val AbsorbedMarker = "_absorbed"
-
-  /** Marks a sidecar as carrying the COMPLETE vector state for its commit
-    * (written by [[squashSidecars]]): the resolution walk includes it and
-    * stops, so reads open O(1) sidecar dirs however many delete commits
-    * preceded it. Parquet scans ignore `_`-prefixed files, so the marker
-    * is invisible to the pair read itself. */
-  private val SquashedMarker = "_squashed"
 
   /** Per-file tombstone position: after latest-wins resolution, a group
     * whose rows are all `< 0` contributes no vectors. */
   private val Tombstone = -1L
 
-  private def deletesDir(table: TableDefinition, id: CommitId): String =
-    Partition.normalizedDir(table.location).toString + "_deletes/commit-" + id.id
+  private[spark] def deletesDir(table: TableDefinition, id: CommitId): String =
+    MetadataFiles.sidecarDir(table, MetadataFiles.Deletes, id)
 
-  private[spark] def deletesDirFor(table: TableDefinition, id: CommitId): String =
-    deletesDir(table, id)
-
-  /** Write `(file, pos)` pairs into the sidecar anchored at `anchor` — the
-    * merge-on-read UPDATE/append path ([[RowOverlay.append]]) stages its
-    * preimage-hiding vectors at its own commit id BEFORE that commit lands
-    * (invisible until referenced, orphaned-for-vacuum on a lost race). The
-    * caller is responsible for the per-file completeness contract: pairs
-    * for a file this sidecar mentions must be that file's FULL live set
-    * (latest-wins resolution makes the newest mention authoritative). */
-  private[spark] def writePairsAt(
-      spark: SparkSession,
-      table: TableDefinition,
-      pairs: DataFrame,
-      anchor: CommitId): Unit =
-    writeSidecar(spark, table, pairs, anchor)
-
-  /** The commits at or before `at` (default: the CURRENT POINTER — not the
-    * log head; after a rollback the head's deletes are not visible), most
-    * recent first. */
-  private def lineage(
-      log: TableVersions, table: TableDefinition, at: Option[CommitId]): List[TableUpdateMetadata] = {
-    val pointer = at.getOrElse(log.currentCommit(table.name))
-    log.updates(table.name).dropWhile(_.id != pointer)
-  }
-
-  /** Every sidecar dir CONTRIBUTING to the state at `at`, oldest first:
-    * the existing at-or-before dirs, walking back until a full-rewrite
-    * `_absorbed` marker (excluded — no vectors apply past it) or a
-    * `_squashed` sidecar (included — it carries the complete state). The
-    * walk is O(#commits) driver-side existence checks — metadata-scale,
-    * same bound as partition discovery. */
+  /** Every sidecar dir CONTRIBUTING to the state at `at` (default: the
+    * current pointer), oldest first — the log's sidecar fold
+    * ([[MetadataFiles.sidecars]]), no file-system call on a format-2 log. */
   private[graft] def liveSidecarDirs(
-      fs: org.apache.hadoop.fs.FileSystem,
-      log: TableVersions,
-      table: TableDefinition,
+      spark: SparkSession, log: TableVersions, table: TableDefinition,
       at: Option[CommitId]): List[String] =
-    rawSidecarDirs(fs, log, table, at)
-      .filterNot(dir => fs.exists(new org.apache.hadoop.fs.Path(dir, AbsorbedMarker)))
-      .reverse
-
-  /** The RAW at-or-before sidecar dirs, most recent first, stopping AT
-    * (inclusive) the first `_absorbed` or `_squashed` marker. Vacuum
-    * retention and the checkpoint guard share this with resolution: a
-    * marker dir is as load-bearing as a pair sidecar — reclaiming or
-    * folding it would re-expose the older pairs it shields to every
-    * current read. */
-  private[spark] def rawSidecarDirs(
-      fs: org.apache.hadoop.fs.FileSystem,
-      log: TableVersions,
-      table: TableDefinition,
-      at: Option[CommitId]): List[String] = {
-    val existing = lineage(log, table, at).iterator
-      .map(m => deletesDir(table, m.id))
-      .filter(dir => fs.exists(new org.apache.hadoop.fs.Path(dir)))
-    val (before, rest) = existing.span { dir =>
-      !fs.exists(new org.apache.hadoop.fs.Path(dir, AbsorbedMarker)) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(dir, SquashedMarker))
-    }
-    before.toList ++ rest.toList.take(1)
-  }
+    MetadataFiles.sidecars(spark.sessionState.newHadoopConf(), log, table, MetadataFiles.Deletes, at)
+      .map { case (id, _) => deletesDir(table, id) }.reverse
 
   /** Whether any deletion-vector sidecar applies to the state at `at` —
     * the cheap probe the SQL catalog / scan rule use to decide whether a
@@ -157,11 +95,8 @@ object DeletionVectors {
       spark: SparkSession,
       log: TableVersions,
       table: TableDefinition,
-      at: Option[CommitId]): Boolean = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = org.apache.hadoop.fs.FileSystem.get(table.location, conf)
-    liveSidecarDirs(fs, log, table, at).nonEmpty
-  }
+      at: Option[CommitId]): Boolean =
+    liveSidecarDirs(spark, log, table, at).nonEmpty
 
   /** The resolved live `(file, pos)` pair set for the state at `at`:
     * per-file latest-wins across every contributing sidecar, tombstones
@@ -174,9 +109,7 @@ object DeletionVectors {
       log: TableVersions,
       table: TableDefinition,
       at: Option[CommitId]): Option[DataFrame] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = org.apache.hadoop.fs.FileSystem.get(table.location, conf)
-    val dirs = liveSidecarDirs(fs, log, table, at) // oldest first
+    val dirs = liveSidecarDirs(spark, log, table, at) // oldest first
     if (dirs.isEmpty) None
     else if (dirs.sizeIs == 1)
       Some(
@@ -197,84 +130,74 @@ object DeletionVectors {
     }
   }
 
-  /** Record that a FULL rewrite (every partition's version moved, or a
-    * snapshot replace) just landed as the current commit: any previously
-    * live vectors are physically absorbed — the rewritten files carry only
-    * surviving rows — so an `_absorbed` marker sidecar at the rewrite
-    * commit stops the resolution walk there. Callers must NOT invoke this
-    * after a PARTIAL rewrite (untouched partitions still need the old
-    * pairs) — use [[absorbStale]] there. No-op when no vectors were
-    * live. */
-  def markAbsorbed(
-      spark: SparkSession,
-      log: TableVersions,
-      table: TableDefinition): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = org.apache.hadoop.fs.FileSystem.get(table.location, conf)
-    if (liveSidecarDirs(fs, log, table, None).isEmpty) return // nothing live
-    val dir = new org.apache.hadoop.fs.Path(
-      deletesDir(table, log.currentCommit(table.name)))
-    fs.mkdirs(dir)
-    fs.create(new org.apache.hadoop.fs.Path(dir, AbsorbedMarker), true).close()
-  }
+  /** The entry a FULL rewrite's commit carries — every partition's
+    * version moved, or a snapshot replace, so the rewritten files hold only
+    * surviving rows and every older vector is absorbed: the resolution walk
+    * stops there. Derived inside the commit attempt (the `metadata` hook
+    * of [[graft.core.TableVersions.commitRebase]]): present only while
+    * vectors are live at the head it lands on. A PARTIAL rewrite must not
+    * carry it (untouched partitions still need the old pairs) — see
+    * [[stageTombstones]]. */
+  private[spark] def absorbedEntry(
+      spark: SparkSession, log: TableVersions, table: TableDefinition): Map[String, String] =
+    if (hasVectors(spark, log, table, None)) MetadataFiles.absorbed else Map.empty
 
-  /** PARTIAL-rewrite absorption: tombstone every sidecar file group whose
-    * file is no longer referenced by the CURRENT table version (its
-    * version dir was replaced by a partition-scoped OPTIMIZE / Z-order /
-    * copy-on-write rewrite). The dead groups' pairs were already harmless
-    * no-ops (the anti-join misses replaced paths); tombstoning stops every
-    * future read from carrying them through the union — a DV-heavy
-    * partition's vectors are SHED the moment it is compacted, not only at
-    * the next full rewrite. Tombstones anchor to the current (rewrite)
-    * commit, so time travel to pre-rewrite states still resolves the old
-    * pairs. Returns the number of file groups tombstoned.
+  /** PARTIAL-rewrite absorption, staged BEFORE the rewrite commit `id`
+    * lands: tombstone every sidecar file group (resolved at `readCommit`)
+    * whose file the state after the rewrite's `ops` no longer references —
+    * its version dir is replaced by a partition-scoped OPTIMIZE / Z-order
+    * rewrite, or it is an overlay leaf of a replaced partition. The dead
+    * groups' pairs were already harmless no-ops (the anti-join misses
+    * replaced paths); tombstoning stops every future read from carrying
+    * them through the union — a DV-heavy partition's vectors are SHED the
+    * moment it is compacted, not only at the next full rewrite. The
+    * tombstones sit in the rewrite's own sidecar, so time travel to
+    * pre-rewrite states still resolves the old pairs. Returns the entry
+    * the rewrite commit must carry (empty: nothing to shed).
     *
-    * Like [[markAbsorbed]], assumes no concurrent rollback: "dead" is
-    * judged against the current version's referenced dirs at call time.
     * The distinct-file collect is file-list-scale — the same driver-side
     * bound as [[FileStats]] scan planning. */
-  def absorbStale(
+  private[spark] def stageTombstones(
       spark: SparkSession,
       log: TableVersions,
-      table: TableDefinition): Long = {
-    val pairs = resolvePairs(spark, log, table, None).getOrElse(return 0L)
+      table: TableDefinition,
+      readCommit: CommitId,
+      ops: List[TableOperation],
+      id: CommitId): Map[String, String] = {
+    val before = log.versionAt(table.name, readCommit) match {
+      case PartitionedTableVersion(pvs) => pvs
+      case _                            => return Map.empty
+    }
+    val after = ops.foldLeft(before) {
+      case (acc, TableOperation.AddPartitionVersion(p, v)) => acc.updated(p, v)
+      case (acc, TableOperation.RemovePartition(p))        => acc - p
+      case (acc, _)                                        => acc
+    }
+    val pairs = resolvePairs(spark, log, table, Some(readCommit)).getOrElse(return Map.empty)
     val files = pairs.select(col("file")).distinct()
       .collect().map(_.getString(0)).toList
-    if (files.isEmpty) return 0L
     // a sidecar file is LIVE iff its path sits under a version dir the
-    // current state references — match on the `<escapedPartition>/<label>`
-    // segment, the same rendering Vacuum retention uses (labels embed a
-    // timestamp + random id, so segment collision is not a concern)
-    val referenced: Set[String] = log.currentVersion(table.name) match {
-      case SnapshotTableVersion(v) => Set(v.label)
-      case PartitionedTableVersion(pvs) =>
-        pvs.map { case (p, v) =>
-          s"${SparkPaths.escapedPartitionPath(p)}/${v.label}"
-        }.toSet
+    // post-rewrite state references — match on the
+    // `<escapedPartition>/<label>` segment, the same rendering Vacuum
+    // retention uses (labels embed a timestamp + random id, so segment
+    // collision is not a concern) — or under an overlay leaf whose
+    // partition the rewrite leaves in place ([[RowOverlay]] liveness):
+    // tombstoning those would resurrect merge-on-read-deleted overlay rows
+    val referenced = after.map { case (p, v) =>
+      s"/${SparkPaths.escapedPartitionPath(p)}/${v.label}/"
     }
-    // row-overlay files ([[RowOverlay]]) sit under `_appends`, never under
-    // a version dir — but their pairs are LIVE as long as the dir's
-    // (anchor, partition) contribution is: tombstoning them would
-    // resurrect merge-on-read-deleted overlay rows into every read
-    val overlayLive: List[String] = RowOverlay.contributions(spark, log, table, None)
-      .flatMap { c =>
-        c.leaves.map {
-          case (Some(p), _) =>
-            s"_appends/commit-${c.anchor.id}/${SparkPaths.escapedPartitionPath(p)}/"
-          case (None, _) =>
-            s"_appends/commit-${c.anchor.id}/"
-        }
-      }
+    val overlayLive = RowOverlay.contributions(spark, log, table, Some(readCommit))
+      .flatMap(c => c.leaves.collect {
+        case (Some(p), _) if after.get(p) == before.get(p) =>
+          s"/_appends/commit-${c.anchor.id}/${SparkPaths.escapedPartitionPath(p)}/"
+      })
     val dead = files.filterNot(f =>
-      referenced.exists(r => f.contains(s"/$r/")) ||
-        overlayLive.exists(seg => f.contains(s"/$seg")))
-    if (dead.isEmpty) return 0L
+      referenced.exists(f.contains) || overlayLive.exists(f.contains))
+    if (dead.isEmpty) return Map.empty
+    val entry = MetadataFiles.published(spark, log, table, MetadataFiles.Deletes)
     import spark.implicits._
-    writeSidecar(
-      spark, table,
-      dead.map(f => (f, Tombstone)).toDF("file", "pos"),
-      log.currentCommit(table.name))
-    dead.size.toLong
+    writeSidecar(spark, table, dead.map(f => (f, Tombstone)).toDF("file", "pos"), id)
+    entry
   }
 
   /** DV maintenance: fold every contributing sidecar into ONE sidecar at
@@ -287,8 +210,8 @@ object DeletionVectors {
     *
     * CONCURRENCY ([[RowOverlay.squash]] posture): the fold resolves at an
     * anchor captured on entry and publishes through a strict `commitIf`
-    * CAS against it — the sidecar is keyed by the NEW commit id (invisible
-    * until the commit lands), no existing sidecar is touched, and any
+    * CAS against it — the sidecar is keyed by the NEW commit id and named
+    * only by that commit, no existing sidecar is touched, and any
     * concurrent delete/append/replace makes the CAS lose: the
     * never-referenced sidecar is removed and the squash refuses loudly. */
   def squashSidecars(
@@ -298,10 +221,8 @@ object DeletionVectors {
       user: UserId,
       message: UpdateMessage): Boolean = {
     val log = ctx.metastore.tableVersions
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = org.apache.hadoop.fs.FileSystem.get(table.location, conf)
     val anchor = log.currentCommit(table.name)
-    val dirs = liveSidecarDirs(fs, log, table, Some(anchor))
+    val dirs = liveSidecarDirs(spark, log, table, Some(anchor))
     if (dirs.sizeIs <= 1) return false
     // every mentioned file must appear in the squash: a live group by its
     // pairs, a dead/tombstoned group by a tombstone — otherwise the older
@@ -310,20 +231,19 @@ object DeletionVectors {
       .map(d => spark.read.parquet(d).select(col("file")))
       .reduce(_ union _)
       .distinct()
-    val live = resolvePairs(spark, log, table, Some(anchor))
+    val livePairs = resolvePairs(spark, log, table, Some(anchor))
       .getOrElse(return false)
     val tombstones = mentioned
-      .join(live.select(col("file")).distinct(), Seq("file"), "left_anti")
+      .join(livePairs.select(col("file")).distinct(), Seq("file"), "left_anti")
       .withColumn("pos", lit(Tombstone))
     val commitId = CommitId(UUID.randomUUID().toString)
-    writeSidecar(
-      spark, table, live.unionByName(tombstones), commitId, squash = true)
+    val entry = MetadataFiles.published(spark, log, table, MetadataFiles.Deletes, complete = true)
+    writeSidecar(spark, table, livePairs.unionByName(tombstones), commitId)
     RowOverlay.interleaveSquashForTest.foreach(f => f())
     val update = TableUpdate(
       TableUpdateMetadata(commitId, user, message, java.time.Instant.now(), None), Nil)
-    if (ctx.metastore.commitIf(table.name, update, anchor).isEmpty) {
-      try { fs.delete(new org.apache.hadoop.fs.Path(deletesDirFor(table, commitId)), true); () }
-      catch { case _: java.io.IOException => () }
+    if (ctx.metastore.commitIf(table.name, update.withTableMetadata(entry), anchor).isEmpty) {
+      removeUnnamed(spark, table, deletesDir(table, commitId))
       throw new TableVersions.ConcurrentWriteException(
         s"concurrent commit moved ${table.name.fullyQualifiedName} past ${anchor.id} " +
           "during a deletion-vector squash — nothing changed, re-run")
@@ -343,75 +263,62 @@ object DeletionVectors {
       user: UserId,
       maxDirs: Int = 16): Boolean = {
     require(maxDirs >= 1, "autoSquash maxDirs must be >= 1")
-    val log = ctx.metastore.tableVersions
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      table.location, spark.sessionState.newHadoopConf())
-    if (liveSidecarDirs(fs, log, table, None).sizeIs <= maxDirs) false
+    if (liveSidecarDirs(spark, ctx.metastore.tableVersions, table, None).sizeIs <= maxDirs) false
     else squashSidecars(spark, ctx, table, user,
       UpdateMessage(s"AUTO SQUASH deletion vectors (>$maxDirs sidecars)"))
   }
 
   /** SHALLOW-CLONE carry: materialize the RESOLVED live pair state of
-    * `table` at `at` as one COMPLETE (`_squashed`) sidecar anchored at
-    * `anchor` — the clone's first state commit. The clone's lineage holds
-    * none of the source's sidecar anchors, so it gets its own
+    * `src` at `at` as one COMPLETE sidecar at `anchor` — the clone `dst`'s
+    * state commit, which must carry the returned entry. The clone's
+    * lineage holds none of the source's sidecar anchors, so it gets its own
     * consolidated sidecar under its own commit id; the shared `_deletes`
-    * namespace keys by uuid commit ids, so the new dir is invisible to
-    * the source's resolution walk (and vice versa) — fork isolation by
-    * construction. No-op when the state carries no vectors. */
+    * namespace keys by uuid commit ids and each log names only its own, so
+    * the fork is isolated by construction. Empty when the state carries no
+    * vectors. */
   private[spark] def cloneResolvedState(
       spark: SparkSession,
       log: TableVersions,
-      table: TableDefinition,
+      src: TableDefinition,
       at: CommitId,
-      anchor: CommitId): Unit =
-    resolvePairs(spark, log, table, Some(at)).foreach { live =>
+      dst: TableDefinition,
+      anchor: CommitId): Map[String, String] =
+    resolvePairs(spark, log, src, Some(at)).fold(Map.empty[String, String]) { pairs =>
+      val entry = MetadataFiles.published(spark, log, dst, MetadataFiles.Deletes, complete = true)
       // pairs on ROW-OVERLAY files are dropped: the clone carries the
       // RESOLVED overlay rows ([[RowOverlay.cloneResolvedState]] — hidden
       // rows already excluded there), and the carried pairs would point at
       // source overlay files the clone's overlay resolution never unions
-      writeSidecar(
-        spark, table,
-        live.where(!col("file").contains("/_appends/")), anchor, squash = true)
+      writeSidecar(spark, src, pairs.where(!col("file").contains("/_appends/")), anchor)
+      entry
     }
 
-  /** Write (or fold into) the sidecar at `anchor` — a delete and a
-    * same-commit absorb compose by union rather than clobbering, and a
-    * pre-existing `_squashed` marker survives the fold (the union of a
-    * complete state with more pairs is still complete). */
-  private def writeSidecar(
+  /** Write the pair sidecar of the not-yet-landed commit `anchor` — the
+    * one write its dir ever gets. The caller keeps the per-file
+    * completeness contract: pairs for a file this sidecar mentions must be
+    * that file's FULL live set (latest-wins resolution makes the newest
+    * mention authoritative; see [[foldedPairs]]). Sidecars are
+    * metadata-sized but RESOLVED ON EVERY READ (union + latest-wins window
+    * over every contributing dir): land them as few AQE-sized files, not
+    * one per upstream shuffle partition. Hash by `file` — deterministic,
+    * and AQE coalesces to ~1 file at metadata scale / splits if a
+    * pathological pair set ever gets big. */
+  private[spark] def writeSidecar(
       spark: SparkSession,
       table: TableDefinition,
       pairs: DataFrame,
-      anchor: CommitId,
-      squash: Boolean = false): Unit = {
-    val dir = deletesDir(table, anchor)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = org.apache.hadoop.fs.FileSystem.get(table.location, conf)
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val existed = fs.exists(dirPath)
-    val out =
-      if (existed) spark.read.parquet(dir).unionByName(pairs).distinct()
-      else pairs
-    val keepSquash = squash ||
-      (existed && fs.exists(new org.apache.hadoop.fs.Path(dirPath, SquashedMarker)))
-    // stage + rename: `overwrite` into a dir a concurrent reader may be
-    // unioning would serve it a partial sidecar
-    val staged = new org.apache.hadoop.fs.Path(
-      dir + "-staging-" + UUID.randomUUID().toString)
-    // sidecars are metadata-sized but RESOLVED ON EVERY READ (union +
-    // latest-wins window over every contributing dir): land them as few
-    // AQE-sized files, not one per upstream shuffle partition. Hash by
-    // `file` — deterministic, and AQE coalesces to ~1 file at metadata
-    // scale / splits if a pathological pair set ever gets big
-    VersionContext.distributeForWrite(out, Seq("file"))
-      .write.mode("overwrite").parquet(staged.toString)
-    if (keepSquash)
-      fs.create(new org.apache.hadoop.fs.Path(staged, SquashedMarker), true).close()
-    fs.delete(dirPath, true)
-    if (!fs.rename(staged, dirPath))
-      throw new java.io.IOException(s"failed to publish deletion sidecar $dir")
-  }
+      anchor: CommitId): Unit =
+    VersionContext.distributeForWrite(pairs, Seq("file"))
+      .write.parquet(deletesDir(table, anchor))
+
+  /** Best-effort removal of a sidecar dir whose commit lost its race: no
+    * commit names it, and [[Vacuum]] reclaims it regardless. */
+  private[spark] def removeUnnamed(spark: SparkSession, table: TableDefinition, dir: String): Unit =
+    try {
+      org.apache.hadoop.fs.FileSystem.get(table.location, spark.sessionState.newHadoopConf())
+        .delete(new org.apache.hadoop.fs.Path(dir), true)
+      ()
+    } catch { case _: java.io.IOException => () }
 
   /** The VISIBLE state (vectors applied, logical column names) with the
     * `(file, pos)` pointers still attached under the engine's internal
@@ -529,18 +436,19 @@ object DeletionVectors {
   }
 
   /** Guard to run BEFORE [[TableVersions]] log checkpointing on a table
-    * that may carry deletion vectors. Sidecars anchor to COMMIT IDS, and a
-    * checkpoint folds old ids out of the history — if an id a retained
-    * state resolves its sidecars through is folded away, the at-or-before
-    * walk misses that sidecar and its DV-deleted rows silently reappear.
-    * This refuses loudly when any retained state (the base, the tail, or
-    * the current pointer) resolves through a sidecar whose anchor would
-    * fold; the remedies are the message's: OPTIMIZE first (compaction
-    * absorbs the vectors, after which the old anchors age out of every
-    * retained lineage), [[squashSidecars]] (re-anchors every live group at
-    * the current commit), or raise keepLast. The core log layer cannot run
-    * this check itself — it has no filesystem access to the table
-    * location — which is why it lives here. */
+    * that may carry deletion vectors or overlay rows. Sidecars anchor to
+    * COMMIT IDS, and a checkpoint folds old ids out of the history — if an
+    * id a retained state resolves its sidecars through is folded away, the
+    * walk misses that sidecar and its DV-deleted rows silently reappear
+    * (an overlay's rows vanish: its liveness rule also needs
+    * `versionAt(anchor)`). This refuses loudly when any retained state (the
+    * base, the tail, or the current pointer) resolves through a sidecar
+    * whose anchor would fold; the remedies are the message's: OPTIMIZE
+    * first (compaction absorbs the vectors and overlay rows, after which
+    * the old anchors age out of every retained lineage), a squash
+    * (re-anchors every live group at the current commit), or raise
+    * keepLast. A fold of the log: it lives here only because the core log
+    * layer cannot run the legacy refusal, which needs the table location. */
   def requireCheckpointKeepsVectors(
       spark: SparkSession,
       log: TableVersions,
@@ -548,30 +456,20 @@ object DeletionVectors {
       keepLast: Int): Unit = {
     val updates = log.updates(table.name) // most recent first
     if (updates.size <= keepLast + 1) return // checkpoint would no-op
-    val retained = updates.take(keepLast + 1)
-    val retainedIds = retained.map(_.id).toSet
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = org.apache.hadoop.fs.FileSystem.get(table.location, conf)
-    (log.currentCommit(table.name) :: retained.map(_.id)).distinct.foreach { c =>
-      rawSidecarDirs(fs, log, table, Some(c)).foreach { dir =>
-        val anchor = dir.substring(dir.lastIndexOf("commit-") + "commit-".length)
-        if (!retainedIds.contains(CommitId(anchor)))
-          throw new IllegalStateException(
-            s"checkpoint(keepLast=$keepLast) would fold away commit $anchor, which " +
-              s"anchors the deletion-vector sidecar $dir still serving retained " +
-              "states; run OPTIMIZE or DeletionVectors.squashSidecars to re-anchor " +
-              "the vectors first, or raise keepLast")
-      }
-      // row-overlay dirs ([[RowOverlay]]) have the same anchor-resolution
-      // dependency, PLUS their liveness rule needs `versionAt(anchor)` —
-      // folding an overlay anchor away breaks both
-      RowOverlay.rawOverlayDirs(fs, log, table, Some(c)).foreach { case (anchor, dir) =>
-        if (!retainedIds.contains(anchor))
-          throw new IllegalStateException(
-            s"checkpoint(keepLast=$keepLast) would fold away commit ${anchor.id}, " +
-              s"which anchors the row-overlay sidecar $dir still serving retained " +
-              "states; run OPTIMIZE (absorbs the overlay) or RowOverlay.squash to " +
-              "re-anchor the rows first, or raise keepLast")
+    val retainedIds = updates.take(keepLast + 1).map(_.id).toSet
+    val states = (log.currentCommit(table.name) :: updates.take(keepLast + 1).map(_.id)).distinct
+    List(
+      MetadataFiles.Deletes -> ("deletion-vector sidecar", "OPTIMIZE or DeletionVectors.squashSidecars to re-anchor the vectors"),
+      MetadataFiles.Appends -> ("row-overlay sidecar", "OPTIMIZE (absorbs the overlay) or RowOverlay.squash to re-anchor the rows")
+    ).foreach { case (family, (what, remedy)) =>
+      states.foreach { c =>
+        MetadataFiles.sidecars(spark.sessionState.newHadoopConf(), log, table, family, Some(c)).foreach { case (anchor, _) =>
+          if (!retainedIds.contains(anchor))
+            throw new IllegalStateException(
+              s"checkpoint(keepLast=$keepLast) would fold away commit ${anchor.id}, which " +
+                s"anchors the $what ${MetadataFiles.sidecarDir(table, family, anchor)} " +
+                s"still serving retained states; run $remedy first, or raise keepLast")
+        }
       }
     }
   }
@@ -584,10 +482,9 @@ object DeletionVectors {
     * latest-wins resolution keeps untouched files' older groups live, so
     * the write is O(deletes in touched files), never O(all deletes ever).
     * Returns the number of newly deleted row positions; a no-match delete
-    * commits nothing. The sidecar is written BEFORE the commit that
-    * publishes it — a crash in between leaves an orphaned,
-    * never-referenced sidecar (the versioned write path's own staging
-    * posture). */
+    * commits nothing. The sidecar is written BEFORE the commit that names
+    * it — a crash in between leaves an orphaned, never-named sidecar (the
+    * versioned write path's own staging posture). */
   def delete(
       ctx: VersionContext,
       log: TableVersions,
@@ -631,34 +528,18 @@ object DeletionVectors {
     try {
       val n = newPairs.count()
       if (n == 0L) return 0L
-      val touched = newPairs.select(col("file")).distinct()
-      val sidecar = resolvePairs(spark, log, table, None) match {
-        case None => newPairs
-        case Some(prev) =>
-          prev
-            .join(broadcast(touched), Seq("file"), "left_semi")
-            .unionByName(newPairs)
-            .distinct()
-      }
       val id = CommitId(UUID.randomUUID().toString)
-      val dir = deletesDir(table, id)
-      // few AQE-sized sidecar files, not one per shuffle partition — every
-      // subsequent read unions this dir (see writeSidecar)
-      VersionContext.distributeForWrite(sidecar, Seq("file"))
-        .write.mode("overwrite").parquet(dir)
+      val entry = MetadataFiles.published(spark, log, table, MetadataFiles.Deletes)
+      writeSidecar(spark, table, foldedPairs(spark, log, table, newPairs), id)
       val committed = ctx.metastore.commitIf(
         table.name,
-        TableUpdate(TableUpdateMetadata(id, user, message, java.time.Instant.now()), Nil),
+        TableUpdate(TableUpdateMetadata(id, user, message, java.time.Instant.now()), Nil)
+          .withTableMetadata(entry),
         expected)
       if (committed.isEmpty) {
-        // loser cleans its never-referenced sidecar (best-effort — vacuum
-        // reclaims it regardless) and refuses loudly; the caller retries
-        // against the new state
-        try {
-          val conf = spark.sessionState.newHadoopConf()
-          val fs = org.apache.hadoop.fs.FileSystem.get(table.location, conf)
-          fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-        } catch { case _: java.io.IOException => () }
+        // loser cleans its never-named sidecar and refuses loudly; the
+        // caller retries against the new state
+        removeUnnamed(spark, table, deletesDir(table, id))
         throw new java.util.ConcurrentModificationException(
           s"concurrent commit moved ${table.name.fullyQualifiedName} past ${expected.id} " +
             "during a deletion-vector delete; retry the delete against the new state")

@@ -25,8 +25,8 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
  * relation's attribute ids, so parent operators keep resolving untouched.
  * A declared column present in NO data file yet (post-`ALTER TABLE ADD
  * COLUMN`, pre-backfill) projects as a typed NULL — the q37/q62 evolution
- * contract. Zero cost when no vectors apply: the sidecar probe is the
- * same O(#commits) driver-side existence walk `loadTable` always paid.
+ * contract. Zero cost when no vectors apply: the sidecar probe is a fold
+ * of the cached log, with no file-system call.
  *
  * DML statements are deliberately NOT rewritten at the top level: graft
  * UPDATE/DELETE/MERGE targets are routed by [[GraftDmlRule]] (injected

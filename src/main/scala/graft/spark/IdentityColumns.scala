@@ -209,6 +209,21 @@ object IdentityColumns {
       hwmAtStamp = hwm)
   }
 
+  /** Refuse when a concurrent writer advanced `column`'s high-water mark
+    * past `stampBase`, the mark this `what`'s ids were stamped from: the
+    * ids would overlap. Run inside each commit attempt. */
+  private[spark] def requireMarkUnmoved(
+      spark: org.apache.spark.sql.SparkSession, log: TableVersions, table: TableDefinition,
+      column: String, stampBase: Long, what: String): Unit = {
+    val hwmNow = effectiveHighWaterMark(spark, log, table, column)
+    if (hwmNow != stampBase)
+      throw new TableVersions.ConcurrentWriteException(
+        s"identity column $column of ${table.name.fullyQualifiedName}: a " +
+          s"concurrent writer advanced the high-water mark ($stampBase -> " +
+          s"$hwmNow) after this $what's ids were stamped — the ids would " +
+          "overlap; re-run (it re-reads the mark and re-stamps)")
+  }
+
   /** Stage a batch whose `column` ids are already stamped, derive the
     * committed high-water mark from the STAGED OUTPUT, and commit — the
     * shared core of [[insertWithIdentity]] and the SQL INSERT path.
@@ -287,12 +302,7 @@ object IdentityColumns {
           metadata = () => marked.schemaEntry(log),
           revalidate = () => {
             PartitionEvolution.requireCurrentScheme(spark, log, table)
-            val hwmNow = effectiveHighWaterMark(spark, log, table, column)
-            if (hwmNow != stampBase)
-              throw new TableVersions.ConcurrentWriteException(
-                s"identity column $column of ${table.name.fullyQualifiedName}: a " +
-                  s"concurrent writer advanced the high-water mark ($stampBase -> " +
-                  s"$hwmNow) after this merge's ids were stamped — re-run")
+            requireMarkUnmoved(spark, log, table, column, stampBase, "merge")
           })
       case None => ()
     }
@@ -303,13 +313,7 @@ object IdentityColumns {
       // partition-scheme boundary landing after this guard moves the
       // head, so the commitIf refuses and the guard re-runs
       PartitionEvolution.requireCurrentScheme(spark, log, table)
-      val hwmNow = effectiveHighWaterMark(spark, log, table, column)
-      if (hwmNow != stampBase)
-        throw new TableVersions.ConcurrentWriteException(
-          s"identity column $column of ${table.name.fullyQualifiedName}: a " +
-            s"concurrent writer advanced the high-water mark ($stampBase -> " +
-            s"$hwmNow) after this batch's ids were stamped — the ids would " +
-            "overlap; re-run the insert (it re-reads the mark and re-stamps)")
+      requireMarkUnmoved(spark, log, table, column, stampBase, "batch")
       ctx.metastore.commitIf(table.name, marked.landing(log), expected) match {
         case Some(r) => return r
         case None =>

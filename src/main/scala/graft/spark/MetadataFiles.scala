@@ -9,11 +9,12 @@ import com.fasterxml.jackson.annotation.JsonInclude
 import com.fasterxml.jackson.databind.{DeserializationFeature, JavaType, JsonNode, ObjectMapper, SerializationFeature}
 import com.fasterxml.jackson.databind.node.MissingNode
 import com.fasterxml.jackson.module.scala.{DefaultScalaModule, JavaTypeable}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.core.{Partition, TableDefinition, TableName, TableVersions, VersionedMetastore}
-import graft.core.TableVersions.{CommitId, ConcurrentWriteException, MetadataFold, TableUpdate, UpdateMessage, UserId}
+import graft.core.TableVersions.{CommitFacts, CommitId, ConcurrentWriteException, MetadataFold, TableUpdate, UpdateMessage, UserId}
 
 /** THE TABLE of table metadata: every declaration graft keeps about a
   * table is one of the families below, and its value rides the commit
@@ -35,17 +36,24 @@ import graft.core.TableVersions.{CommitId, ConcurrentWriteException, MetadataFol
   * | `partitioning`   | EVOLVE PARTITIONING boundary commits         | the addressed commit |
   * | `schema_states`  | a schema-changing ALTER's last commit        | the addressed commit |
   * | `schema`         | a data write changing the files' columns     | the addressed commit |
-  * | `format`         | the init commit of a table this version made | (presence only)    |
+  * | `deletes`        | a commit publishing `_deletes/commit-<id>`   | walked back from the addressed commit |
+  * | `appends`        | a commit publishing `_appends/commit-<id>`   | walked back from the addressed commit |
+  * | `format`         | the init commit of a table this version made | the log head       |
   *
   * Each entry holds the family's whole new value. The first seven are
   * CURRENT DECLARATIONS: they resolve at the log head, so a rollback,
   * RESTORE or `VERSION AS OF` never changes which rules are in force; the
   * next four resolve at the commit a read addresses ([[DataSchema]] owns
-  * `schema`). `format` is not a family: it marks a log whose table was
-  * created by a writer that never wrote metadata files. Each table's log is
-  * its own lineage, so a clone owns its values (a clone's state commit
-  * carries the source's, all but the MV definition), and a log checkpoint
-  * keeps every family's value on its base commit.
+  * `schema`). `deletes` and `appends` are not values in force but facts of
+  * their own commit — it published that sidecar dir, `{"complete": …}`
+  * — and a full rewrite's `absorbed` entry is one too: [[sidecars]] walks
+  * them back. `format` is not a family: 1 marks a log whose table was
+  * created by a writer that never wrote metadata files, 2 one whose every
+  * data sidecar is named by its commit. Each table's log is its own
+  * lineage, so a clone owns its values (a clone's state commit carries the
+  * source's, all but the MV definition), and a log checkpoint keeps every
+  * family's value on its base commit, but no older commit's sidecar
+  * facts ([[graft.core.TableVersions.CommitFacts]]).
   *
   * CHANGE: [[Family.commit]] — fold at the head, apply the statement's
   * pure transform (which re-checks its preconditions), then `commitIf` on
@@ -114,20 +122,21 @@ object MetadataFiles {
       next
     }
 
+    private[MetadataFiles] def refuseLegacyFile(spark: SparkSession, table: TableDefinition): Unit = {
+      val conf = spark.sessionState.newHadoopConf()
+      legacy(table).find(p => p.getFileSystem(conf).exists(p)).foreach { p =>
+        throw new IllegalStateException(
+          s"table ${table.name.fullyQualifiedName} has a legacy metadata file $p, " +
+            s"which this version no longer reads: its $name now rides the commit " +
+            "log. Move the file away, then redo the change (or recreate the " +
+            "table) with this version")
+      }
+    }
+
     private def decode(
         spark: SparkSession, log: TableVersions, table: TableDefinition,
         f: MetadataFold[String]): MetadataFold[A] = {
-      if (f.oldest.isEmpty &&
-          !log.metadataAtHead(table.name, Format).oldest.contains(FormatVersion)) {
-        val conf = spark.sessionState.newHadoopConf()
-        legacy(table).find(p => p.getFileSystem(conf).exists(p)).foreach { p =>
-          throw new IllegalStateException(
-            s"table ${table.name.fullyQualifiedName} has a legacy metadata file $p, " +
-              s"which this version no longer reads: its $name now rides the commit " +
-              "log. Move the file away, then redo the change (or recreate the " +
-              "table) with this version")
-        }
-      }
+      if (f.oldest.isEmpty && formatOf(log, table) < 1) refuseLegacyFile(spark, table)
       try f.map(v => mapper.readValue[A](v, javaType))
       catch {
         case NonFatal(e) =>
@@ -186,9 +195,13 @@ object MetadataFiles {
   /** The data-column schema of the state's files ([[DataSchema]]). */
   val schema: Family[JsonNode] = family[JsonNode]("schema", MissingNode.getInstance())
 
-  /** On the init commit of every table this version creates: no probe. */
+  /** On the init commit of every table this version creates: no probe.
+    * 1: no metadata files; 2: every data sidecar is named by its commit. */
   private[spark] val Format = "format"
-  private val FormatVersion = "1"
+  private val FormatVersion = "2"
+
+  private def formatOf(log: TableVersions, table: TableDefinition): Int =
+    log.metadataAtHead(table.name, Format).inForce.flatMap(_.toIntOption).getOrElse(0)
 
   /** The value governing a [[Change]] family's fold: the in-force
     * carrier's `after`, or — before the first carrier — the oldest
@@ -208,6 +221,111 @@ object MetadataFiles {
     * [[Format]] entry and every [[cloned]] family's empty value. */
   val undeclared: Map[String, String] =
     cloned.flatMap(_.emptyEntry).toMap + (Format -> FormatVersion)
+
+  // ---- data sidecars ------------------------------------------------------
+
+  /** The deletion-vector (`_deletes/commit-<id>`) and row-overlay
+    * (`_appends/commit-<id>`) sidecar families. */
+  val Deletes: String = CommitFacts.Deletes
+  val Appends: String = CommitFacts.Appends
+
+  /** `<table>/_deletes/` or `<table>/_appends/`. */
+  private[spark] def sidecarRoot(table: TableDefinition, family: String): String =
+    root(table) + "_" + family
+
+  /** The dir of `family`'s sidecar published by commit `id`. */
+  private[spark] def sidecarDir(table: TableDefinition, family: String, id: CommitId): String =
+    sidecarRoot(table, family) + "/commit-" + id.id
+
+  /** The entries a commit carries when it publishes its `family` sidecar
+    * dir. `complete`: the dir holds the family's whole live state at its
+    * commit (a squash, a clone carry), so resolution stops there. Call it
+    * BEFORE the dir is written: on a log below format 2 it runs the legacy
+    * probe of both roots (see [[requireNamedSidecars]]) and the same
+    * commit lifts the log to format 2. */
+  private[spark] def published(
+      spark: SparkSession, log: TableVersions, table: TableDefinition,
+      family: String, complete: Boolean = false): Map[String, String] = {
+    val entry = Map(family -> s"""{"complete":$complete}""")
+    val format = formatOf(log, table)
+    if (format >= 2) entry
+    else {
+      if (format < 1) families.foreach(_.refuseLegacyFile(spark, table))
+      requireNamedSidecars(spark.sessionState.newHadoopConf(), log, table)
+      entry + (Format -> FormatVersion)
+    }
+  }
+
+  /** The entry a full rewrite carries: every older deletion vector is
+    * absorbed into the files it wrote. */
+  private[spark] val absorbed: Map[String, String] = Map(CommitFacts.Absorbed -> "true")
+
+  /** Whether `m` publishes a sidecar of `family`, and whether it is complete. */
+  private[spark] def sidecarOf(m: TableVersions.TableUpdateMetadata, family: String): Option[Boolean] =
+    m.tableMetadata.get(family).map(v => mapper.readTree(v).path("complete").asBoolean(false))
+
+  /** The commits at or before `at` (default: the current pointer — after
+    * a rollback the head's sidecars are not visible), most recent first,
+    * behind the legacy refusal of a log below format 2 (`conf` is read
+    * only for such a log). */
+  private[spark] def lineage(
+      conf: => Configuration, log: TableVersions, table: TableDefinition,
+      at: Option[CommitId]): List[TableVersions.TableUpdateMetadata] = {
+    requireNamedSidecars(conf, log, table)
+    val pointer = at.getOrElse(log.currentCommit(table.name))
+    log.updates(table.name).dropWhile(_.id != pointer)
+  }
+
+  /** THE SIDECAR FOLD: the `family` sidecars serving the state at `at`, most
+    * recent first, as (anchor commit, complete). One walk back over the
+    * cached commit lines ([[lineage]]; no file-system call on a format-2
+    * log), stopping after the first complete sidecar and, for deletion
+    * vectors, at a commit that absorbed every older one. */
+  private[spark] def sidecars(
+      conf: => Configuration, log: TableVersions, table: TableDefinition, family: String,
+      at: Option[CommitId]): List[(CommitId, Boolean)] = {
+    val out = List.newBuilder[(CommitId, Boolean)]
+    val it = lineage(conf, log, table, at).iterator
+    var stop = false
+    while (!stop && it.hasNext) {
+      val m = it.next()
+      sidecarOf(m, family).foreach { complete =>
+        out += (m.id -> complete)
+        stop = complete
+      }
+      stop ||= family == Deletes && m.tableMetadata.contains(CommitFacts.Absorbed)
+    }
+    out.result()
+  }
+
+  /** LEGACY SIDECARS: an earlier version found a table's sidecars by
+    * probing for `commit-<id>` dirs at its own commits' ids and kept
+    * `_absorbed` / `_squashed` marker files in them. A log below format 2
+    * whose `_deletes` or `_appends` root holds such a dir is REFUSED with
+    * an error naming the root (one listing per root, only for such logs):
+    * its sidecars are not named by its commits, and reading around them
+    * would resurrect deleted rows or drop appended ones. Dirs at other ids
+    * — a shallow clone's, which shares the location, or a lost writer's
+    * orphan — were never this table's and stay out of the check. */
+  private[spark] def requireNamedSidecars(
+      conf: => Configuration, log: TableVersions, table: TableDefinition): Unit =
+    if (formatOf(log, table) < 2) {
+      lazy val c = conf
+      val own = log.updates(table.name).iterator.map("commit-" + _.id.id).toSet
+      List(Deletes, Appends).foreach { family =>
+        val dir = new Path(sidecarRoot(table, family))
+        val held =
+          try dir.getFileSystem(c).listStatus(dir).exists(st => own(st.getPath.getName))
+          catch { case _: java.io.FileNotFoundException => false }
+        if (held)
+          throw new IllegalStateException(
+            s"table ${table.name.fullyQualifiedName} has sidecars under $dir that " +
+              "its commit log does not name; this version finds them only through " +
+              "the log. Compact the table with the version that wrote them " +
+              "(OPTIMIZE absorbs every vector and overlay row), move the dir " +
+              "away, then use the table with this version")
+      }
+    }
 
   /** THE DECLARATION COMMIT: read the pointer, `derive` the commit-line
     * entries from the state it names, and `commitIf` on that pointer; a

@@ -179,7 +179,8 @@ object PartitionEvolution {
       // boundary)
       val removes = before.keys.toList.map(TableOperation.RemovePartition(_))
       commitBoundary(ctx, table, current, newSchema,
-        TableVersions.TableUpdate(user, message, java.time.Instant.now(), removes), readCommit)
+        TableVersions.TableUpdate(user, message, java.time.Instant.now(), removes), readCommit,
+        () => DeletionVectors.absorbedEntry(spark, log, table))
     } else {
       // one shuffle keyed by the new partition columns (salted when one
       // new partition exceeds a single writer's comfort)
@@ -195,13 +196,8 @@ object PartitionEvolution {
         packed.versionedStage(ctx, newDefn, user, message, before.keys.toList)
       }
       commitBoundary(ctx, table, current, newSchema, rewrite.update, readCommit,
-        () => rewrite.schemaEntry(ctx.metastore.tableVersions))
+        () => rewrite.schemaEntry(log) ++ DeletionVectors.absorbedEntry(spark, log, table))
     }
-
-    // the boundary rewrite physically absorbed any deletion vectors
-    // (every surviving row was re-written); mark so reads stop resolving
-    // the stale pair sidecars
-    DeletionVectors.markAbsorbed(spark, log, table)
     newDefn
   }
 
@@ -323,8 +319,7 @@ object PartitionEvolution {
       .versionedStage(ctx, table, user, message, before.keys.toList)
     ctx.metastore.commitRebase(
       table.name, rewrite.update, readCommit, wholeTableScope = true,
-      metadata = () => rewrite.schemaEntry(log))
-    DeletionVectors.markAbsorbed(spark, log, table)
+      metadata = () => rewrite.schemaEntry(log) ++ DeletionVectors.absorbedEntry(spark, log, table))
     ()
   }
 

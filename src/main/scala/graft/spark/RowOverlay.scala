@@ -22,8 +22,10 @@ import graft.core.TableVersions.{CommitId, TableOperation, TableUpdate, TableUpd
  *    `<table>/_appends/commit-<id>/` (Hive `k=v` subdirs for partitioned
  *    tables — one overlay file belongs to exactly ONE partition — flat
  *    for snapshots), then commits an update whose only ops are the
- *    version dirs for rows landing in partitions that did not exist yet.
- *    The dir is keyed by the commit id, so it is invisible until the
+ *    version dirs for rows landing in partitions that did not exist yet,
+ *    and NAMES the dir on its commit line (the `appends` entry of
+ *    [[MetadataFiles]]). The dir is keyed by the commit id and written
+ *    before that commit, never after it, so it is invisible until the
  *    commit lands — the DV-sidecar staging posture ([[DeletionVectors]]);
  *  - reads union the overlay rows into the state ([[VersionedReader]]
  *    does this for every state-resolving read), and deletion vectors
@@ -68,15 +70,18 @@ import graft.core.TableVersions.{CommitId, TableOperation, TableUpdate, TableUpd
  * posture). Callers that declare nothing keep the strict
  * compare-and-swap ([[graft.core.VersionedMetastore.commitIf]]).
  *
+ * Resolution folds the cached commit lines ([[MetadataFiles.sidecars]]):
+ * the named dirs at or before the addressed commit, back to the nearest
+ * COMPLETE one — no file-system probe finds a dir.
+ *
  * Maintenance: sidecar-dir count grows with append commits until a
  * rewrite of the touched partitions (OPTIMIZE absorbs overlay rows into
- * real dirs) or [[squash]] (folds live overlay rows into one dir so reads
- * open O(1) dirs — the DV-squash analogue). Vacuum reclaims orphaned and
- * expired dirs on the `_deletes` lifecycle.
+ * real dirs) or [[squash]] (folds live overlay rows into one complete dir
+ * so reads open O(1) dirs — the DV-squash analogue). Vacuum keeps every
+ * dir a retained state's walk names and reclaims the rest, on the
+ * `_deletes` lifecycle.
  */
 object RowOverlay {
-
-  private[spark] val SquashedMarker = "_squashed"
 
   /** Test seam ([[graft.spark.MaterializedView]] discipline): runs inside
     * [[append]] after the sidecars are staged and before the commit's
@@ -90,40 +95,18 @@ object RowOverlay {
   private[spark] var interleaveSquashForTest: Option[() => Unit] = None
 
   private[spark] def appendsDir(table: TableDefinition, id: CommitId): String =
-    Partition.normalizedDir(table.location).toString + "_appends/commit-" + id.id
+    MetadataFiles.sidecarDir(table, MetadataFiles.Appends, id)
 
-  /** The commits at or before `at` (default: the current pointer — after a
-    * rollback the head's appends are not visible), most recent first. */
-  private def lineage(
-      log: TableVersions, table: TableDefinition, at: Option[CommitId]): List[TableUpdateMetadata] = {
-    val pointer = at.getOrElse(log.currentCommit(table.name))
-    log.updates(table.name).dropWhile(_.id != pointer)
-  }
-
-  /** The at-or-before overlay dirs with their anchor commits, most recent
-    * first, stopping AT (inclusive) the first `_squashed` dir — it carries
-    * the complete live overlay state of its anchor. Same driver-side
-    * existence-walk bound as [[DeletionVectors.rawSidecarDirs]]. */
-  private[spark] def rawOverlayDirs(
-      fs: FileSystem,
+  /** The overlay dirs the log names for the state at `at`, most recent
+    * first, as (anchor, dir, complete) — behind the legacy refusal of a log
+    * below format 2. */
+  private def overlayDirs(
+      spark: SparkSession,
       log: TableVersions,
       table: TableDefinition,
-      at: Option[CommitId]): List[(CommitId, String)] = {
-    // tables that never used the overlay pay ONE existence check, not a
-    // per-commit walk — every read path probes through here
-    if (!fs.exists(new HPath(
-        Partition.normalizedDir(table.location).toString + "_appends")))
-      return Nil
-    val existing = lineage(log, table, at).iterator
-      .map(m => (m.id, appendsDir(table, m.id)))
-      .filter { case (_, d) => fs.exists(new HPath(d)) }
-    val (before, rest) = existing.span { case (_, d) =>
-      !fs.exists(new HPath(d, SquashedMarker))
-    }
-    // consume lazily so the walk TRULY stops at the squashed dir — forcing
-    // `rest` would fs.exists-probe every remaining lineage commit
-    val kept = before.toList
-    kept ++ rest.take(1).toList
+      at: Option[CommitId]): List[(CommitId, String, Boolean)] = {
+    MetadataFiles.sidecars(spark.sessionState.newHadoopConf(), log, table, MetadataFiles.Appends, at)
+      .map { case (id, complete) => (id, appendsDir(table, id), complete) }
   }
 
   /** Whether any overlay dir contributes to the state at `at` — the cheap
@@ -134,10 +117,8 @@ object RowOverlay {
       spark: SparkSession,
       log: TableVersions,
       table: TableDefinition,
-      at: Option[CommitId]): Boolean = {
-    val fs = FileSystem.get(table.location, spark.sessionState.newHadoopConf())
-    rawOverlayDirs(fs, log, table, at).nonEmpty
-  }
+      at: Option[CommitId]): Boolean =
+    overlayDirs(spark, log, table, at).nonEmpty
 
   /** One overlay dir's live contribution: the dir, its anchor, and the
     * leaf paths to load (each with the partition its rows belong to;
@@ -157,7 +138,7 @@ object RowOverlay {
       val subs = fs.listStatus(dir).toList
         .filter(s => s.isDirectory && s.getPath.getName.contains("="))
       if (subs.isEmpty) {
-        if (acc.isEmpty) Nil // no k=v level: not a partitioned leaf (marker files etc.)
+        if (acc.isEmpty) Nil // no k=v level: not a partitioned leaf
         else List((Partition(acc.reverse), dir))
       } else
         subs.flatMap { s =>
@@ -177,30 +158,29 @@ object RowOverlay {
     * Liveness is the log-derived rule in the class doc: a leaf survives
     * iff its partition's version is UNCHANGED between the dir's anchor
     * and `at`. Metadata-scale: one lineage walk + one `versionAt` fold +
-    * one listing per contributing dir. */
+    * one listing per contributing partitioned dir. */
   private[graft] def contributions(
       spark: SparkSession,
       log: TableVersions,
       table: TableDefinition,
       at: Option[CommitId]): List[Contribution] = {
-    val fs = FileSystem.get(table.location, spark.sessionState.newHadoopConf())
-    val dirs = rawOverlayDirs(fs, log, table, at)
+    val dirs = overlayDirs(spark, log, table, at)
     if (dirs.isEmpty) return Nil
     val vAt = at.map(log.versionAt(table.name, _)).getOrElse(log.currentVersion(table.name))
-    resolveContributions(fs, log, table, vAt, dirs)
+    resolveContributions(spark, log, table, vAt, dirs)
   }
 
   /** The log-derived liveness mapping shared by [[contributions]] and
     * [[contributionsAcrossSquash]]: oldest-first contributions of the
     * given (anchor, dir) list against the state `vAt`. */
   private def resolveContributions(
-      fs: FileSystem,
+      spark: SparkSession,
       log: TableVersions,
       table: TableDefinition,
       vAt: TableVersion,
-      dirs: List[(CommitId, String)]): List[Contribution] =
-    dirs.reverse.flatMap { case (anchor, dir) =>
-      val squashed = fs.exists(new HPath(dir, SquashedMarker))
+      dirs: List[(CommitId, String, Boolean)]): List[Contribution] = {
+    lazy val fs = FileSystem.get(table.location, spark.sessionState.newHadoopConf())
+    dirs.reverse.flatMap { case (anchor, dir, squashed) =>
       val vThen = log.versionAt(table.name, anchor)
       (vThen, vAt) match {
         case (SnapshotTableVersion(a), SnapshotTableVersion(b)) =>
@@ -216,6 +196,7 @@ object RowOverlay {
         case _ => None // partitioning-shape change between anchor and at: nothing survives
       }
     }
+  }
 
   /** RANGE resolution for the change feed ([[ChangeFeed]],
     * [[VersionedReader.readChanges]]): the contributions at `at` with the
@@ -241,13 +222,9 @@ object RowOverlay {
       table: TableDefinition,
       at: CommitId,
       stopAnchors: Set[CommitId]): (List[Contribution], Option[CommitId]) = {
-    val fs = FileSystem.get(table.location, spark.sessionState.newHadoopConf())
-    if (!fs.exists(new HPath(
-        Partition.normalizedDir(table.location).toString + "_appends")))
-      return (Nil, None)
-    val line = lineage(log, table, Some(at))
+    val line = MetadataFiles.lineage(spark.sessionState.newHadoopConf(), log, table, Some(at))
     // a maintenance squash commit is OP-LESS (moves no pointer); a
-    // shallow-clone CARRY dir is `_squashed` too but rides the clone's
+    // shallow-clone CARRY dir is complete too but rides the clone's
     // STATE-bearing commit — it re-homes nothing (the clone's lineage has
     // no earlier overlay dirs) and must count as a plain contribution
     def opLess(anchor: CommitId): Boolean = {
@@ -255,33 +232,34 @@ object RowOverlay {
       idx >= 0 && idx + 1 < line.length &&
         log.versionAt(table.name, anchor) == log.versionAt(table.name, line(idx + 1).id)
     }
-    val existing = line.iterator
-      .map(m => (m.id, appendsDir(table, m.id)))
-      .filter { case (_, d) => fs.exists(new HPath(d)) }
-    val dirs = scala.collection.mutable.ListBuffer[(CommitId, String)]()
+    val named = line.iterator.flatMap(m =>
+      MetadataFiles.sidecarOf(m, MetadataFiles.Appends).map(c => (m.id, appendsDir(table, m.id), c)))
+    val dirs = scala.collection.mutable.ListBuffer[(CommitId, String, Boolean)]()
+    val pastSkip = scala.collection.mutable.ListBuffer[String]()
     var skippedSquash: Option[CommitId] = None
-    var sawPastSkip = false
     var stop = false
-    while (!stop && existing.hasNext) {
-      val (anchor, d) = existing.next()
-      val squashed = fs.exists(new HPath(d, SquashedMarker))
+    while (!stop && named.hasNext) {
+      val (anchor, d, squashed) = named.next()
       if (squashed && !stopAnchors.contains(anchor) && opLess(anchor)) {
         if (skippedSquash.isEmpty) skippedSquash = Some(anchor)
       } else {
-        if (skippedSquash.isDefined) sawPastSkip = true
-        dirs += ((anchor, d))
-        if (squashed) stop = true
+        if (skippedSquash.isDefined) pastSkip += d
+        dirs += ((anchor, d, squashed))
+        stop = squashed
       }
     }
+    // the range resolves through the pre-squash dirs, which the log names
+    // but vacuum may have reclaimed once no retained state used them
     skippedSquash.foreach { s =>
-      if (!sawPastSkip)
+      lazy val fs = FileSystem.get(table.location, spark.sessionState.newHadoopConf())
+      if (pastSkip.isEmpty || !pastSkip.forall(d => fs.exists(new HPath(d))))
         throw new IllegalStateException(
           s"change-feed range on ${table.name.fullyQualifiedName} crosses the " +
             s"row-overlay squash ${s.id} and its pre-squash source dirs were " +
             "reclaimed by vacuum — re-anchor the consumer at-or-after the " +
             "squash commit")
     }
-    (resolveContributions(fs, log, table, log.versionAt(table.name, at), dirs.toList),
+    (resolveContributions(spark, log, table, log.versionAt(table.name, at), dirs.toList),
       skippedSquash)
   }
 
@@ -374,7 +352,11 @@ object RowOverlay {
       if (table.isSnapshot && mapped.isEmpty && extraPairs.isEmpty) return expected
       val commitId = CommitId(UUID.randomUUID().toString)
       val dir = appendsDir(table, commitId)
-      val fs = FileSystem.get(table.location, spark.sessionState.newHadoopConf())
+      // the entries naming this commit's sidecars, derived before either is
+      // written (see MetadataFiles.published)
+      val overlayEntry = MetadataFiles.published(spark, log, table, MetadataFiles.Appends)
+      val pairsEntry = extraPairs.fold(Map.empty[String, String])(_ =>
+        MetadataFiles.published(spark, log, table, MetadataFiles.Deletes))
       var wroteOverlay = false
       // the observed state — CONSISTENT with `expected` (versionAt, not a
       // second currentVersion read): the append-compose commit's revalidate
@@ -450,7 +432,9 @@ object RowOverlay {
             VersionContext.writePartitioned(dirRows, table, ctx.newVersion())
           else Nil
         }
-      extraPairs.foreach(p => DeletionVectors.writePairsAt(spark, table, p, commitId))
+      // preimage-hiding vectors; the caller keeps the per-file completeness
+      // contract (DeletionVectors.foldedPairs)
+      extraPairs.foreach(p => DeletionVectors.writeSidecar(spark, table, p, commitId))
       // overlay-aware data skipping: stage per-file zone maps inside the
       // not-yet-visible dir so pruned reads can drop non-matching leaves;
       // no-op unless the table keeps a main stats sidecar
@@ -486,25 +470,20 @@ object RowOverlay {
       }
       val update = TableUpdate(
         TableUpdateMetadata(commitId, user, finalMessage, java.time.Instant.now(), txn), ops)
+        .withTableMetadata((if (wroteOverlay) overlayEntry else Map.empty[String, String]) ++ pairsEntry)
       // derived inside whichever commit critical section runs below
       def schemaEntry(): Map[String, String] =
         DataSchema.written(spark, log, table, mapped.schema, ops)
-      def cleanupSidecars(): Unit =
-        try {
-          fs.delete(new HPath(dir), true)
-          fs.delete(new HPath(DeletionVectors.deletesDirFor(table, commitId)), true)
-          ()
-        } catch { case _: java.io.IOException => () }
+      def cleanupSidecars(): Unit = {
+        DeletionVectors.removeUnnamed(spark, table, dir)
+        DeletionVectors.removeUnnamed(spark, table, DeletionVectors.deletesDir(table, commitId))
+      }
       // a concurrent identity writer advancing the mark AFTER this batch's
       // ids were stamped means the ids overlap — checked inside whichever
       // commit critical section runs below
       def requireStampStillValid(): Unit = stampInfo.foreach { case (column, stampBase) =>
-        val hwmNow = IdentityColumns.effectiveHighWaterMark(spark, log, table, column)
-        if (hwmNow != stampBase)
-          throw new TableVersions.ConcurrentWriteException(
-            s"identity column $column of ${table.name.fullyQualifiedName}: a " +
-              s"concurrent writer advanced the high-water mark ($stampBase -> " +
-              s"$hwmNow) after this merge-on-read append's ids were stamped — re-run")
+        IdentityColumns.requireMarkUnmoved(
+          spark, log, table, column, stampBase, "merge-on-read append")
       }
       // deterministic race injection for the append-compose specs: fires
       // between sidecar staging and the commit's critical section
@@ -544,24 +523,23 @@ object RowOverlay {
         // back from the just-staged sidecar (metadata-scale, one job)
         val pairFiles: Set[String] =
           if (extraPairs.isEmpty) Set.empty
-          else spark.read.parquet(DeletionVectors.deletesDirFor(table, commitId))
+          else spark.read.parquet(DeletionVectors.deletesDir(table, commitId))
             .select(col("file")).distinct().collect().map(_.getString(0)).toSet
-        // commits that landed after `expected` carrying sidecars that
+        // commits that landed after `expected` naming sidecars that
         // interleave with ours: same-file pair folds or an overlay squash
         def requireInterveningSidecarsSafe(): Unit =
           if (pairScope.isDefined) {
             val intervening = log.updates(table.name)
               .takeWhile(_.id != expected).filterNot(_.id == commitId)
             intervening.foreach { m =>
-              if (fs.exists(new HPath(appendsDir(table, m.id), SquashedMarker)))
+              if (MetadataFiles.sidecarOf(m, MetadataFiles.Appends).contains(true))
                 throw new TableVersions.ConcurrentWriteException(
                   s"a row-overlay squash (${m.id.id}) landed on " +
                     s"${table.name.fullyQualifiedName} during a merge-on-read " +
                     "update — its fold re-landed rows this write's pairs never " +
                     "reference; re-run against the new state")
-              val dvDir = DeletionVectors.deletesDirFor(table, m.id)
-              if (pairFiles.nonEmpty && fs.exists(new HPath(dvDir))) {
-                val theirs = spark.read.parquet(dvDir)
+              if (pairFiles.nonEmpty && MetadataFiles.sidecarOf(m, MetadataFiles.Deletes).isDefined) {
+                val theirs = spark.read.parquet(DeletionVectors.deletesDir(table, m.id))
                   .select(col("file")).distinct().collect().map(_.getString(0))
                 if (theirs.exists(pairFiles))
                   throw new TableVersions.ConcurrentWriteException(
@@ -631,7 +609,7 @@ object RowOverlay {
   }
 
   /** Overlay maintenance: fold every live overlay contribution into ONE
-    * `_squashed` dir anchored at a fresh squash COMMIT — subsequent reads
+    * COMPLETE dir anchored at a fresh squash COMMIT — subsequent reads
     * open O(1) overlay dirs however many append commits preceded (the
     * [[DeletionVectors.squashSidecars]] analogue). Only LIVE rows are
     * carried (DV-hidden overlay rows drop physically; their pairs become
@@ -644,8 +622,8 @@ object RowOverlay {
     *
     * CONCURRENCY: the fold is computed at an anchor captured ON ENTRY and
     * published through a strict `commitIf` CAS against that anchor — the
-    * squashed dir is keyed by the NEW commit id, so it is invisible until
-    * the commit lands (the append-sidecar staging posture) and NO existing
+    * squashed dir is keyed by the NEW commit id and named only by that
+    * commit (the append-sidecar staging posture) and NO existing
     * dir is ever deleted or renamed. A concurrent append, DV delete,
     * replacement or rollback landing anywhere in the window moves the
     * pointer, the CAS loses, the never-referenced dir is removed and the
@@ -678,7 +656,7 @@ object RowOverlay {
     }).drop(fileCol, posCol)
     val commitId = CommitId(UUID.randomUUID().toString)
     val dir = appendsDir(table, commitId) // invisible until the commit lands
-    val fs = FileSystem.get(table.location, spark.sessionState.newHadoopConf())
+    val entry = MetadataFiles.published(spark, log, table, MetadataFiles.Appends, complete = true)
     // optimized write: the union of many small overlay leaves would land
     // one output file per input file otherwise — the squash exists to CUT
     // read amplification, so its own output must be size-packed
@@ -688,16 +666,14 @@ object RowOverlay {
       .write.format(table.format.name)
     if (table.isSnapshot) writer.save(dir)
     else writer.partitionBy(partCols: _*).save(dir)
-    fs.create(new HPath(dir, SquashedMarker), true).close()
     // the fold replaces every older dir's stats coverage with its own
     FileStats.writeOverlayStats(spark, log, table, dir)
     interleaveSquashForTest.foreach(f => f())
     val update = TableUpdate(
       TableUpdateMetadata(commitId, user, message, java.time.Instant.now(), None), Nil)
-      .withTableMetadata(DataSchema.written(spark, log, table, live.schema, Nil))
+      .withTableMetadata(DataSchema.written(spark, log, table, live.schema, Nil) ++ entry)
     if (ctx.metastore.commitIf(table.name, update, anchor).isEmpty) {
-      try { fs.delete(new HPath(dir), true); () }
-      catch { case _: java.io.IOException => () }
+      DeletionVectors.removeUnnamed(spark, table, dir)
       throw new TableVersions.ConcurrentWriteException(
         s"concurrent commit moved ${table.name.fullyQualifiedName} past ${anchor.id} " +
           "during a row-overlay squash — nothing changed, re-run")
@@ -707,8 +683,8 @@ object RowOverlay {
 
   /** AUTO-SQUASH — the merge-on-read analogue of
     * [[Compaction.autoCompact]]: when more than `maxDirs` overlay dirs
-    * contribute to current reads (each one is an fs-existence probe plus
-    * a union leg on EVERY read), fold them via [[squash]]; below the
+    * contribute to current reads (each one is a union leg on EVERY read),
+    * fold them via [[squash]]; below the
     * threshold it is a no-op, not a junk history entry. The streaming
     * append sink calls this per micro-batch so a long-running stream
     * self-maintains instead of accruing one dir per trigger until an
@@ -723,28 +699,28 @@ object RowOverlay {
       user: UserId,
       maxDirs: Int = 16): Boolean = {
     require(maxDirs >= 1, "autoSquash maxDirs must be >= 1")
-    val log = ctx.metastore.tableVersions
-    val fs = FileSystem.get(table.location, spark.sessionState.newHadoopConf())
-    if (rawOverlayDirs(fs, log, table, None).sizeIs <= maxDirs) false
+    if (overlayDirs(spark, ctx.metastore.tableVersions, table, None).sizeIs <= maxDirs) false
     else squash(spark, ctx, table, user,
       UpdateMessage(s"AUTO SQUASH row overlay (>$maxDirs dirs)"))
   }
 
   /** SHALLOW-CLONE carry ([[ShallowClone]]): materialize the source's
     * RESOLVED overlay rows at `at` (live contributions minus DV-hidden
-    * rows) as one complete `_squashed` dir anchored at the clone's state
-    * commit. The clone's lineage holds none of the source's anchors —
-    * commit-id-keyed dirs give fork isolation by construction, exactly
-    * like the DV pair carry. Refuses when a live contribution's layout
-    * is not the current scheme (clone the consolidated table instead). */
+    * rows) as one COMPLETE dir at `cloneAnchor` — the clone `dst`'s state
+    * commit, which must carry the returned entry. The clone's lineage
+    * holds none of the source's anchors — commit-id-keyed dirs give fork
+    * isolation by construction, exactly like the DV pair carry. Refuses
+    * when a live contribution's layout is not the current scheme (clone
+    * the consolidated table instead). Empty when no overlay row is live. */
   private[spark] def cloneResolvedState(
       spark: SparkSession,
       log: TableVersions,
       src: TableDefinition,
       at: CommitId,
-      cloneAnchor: CommitId): Unit = {
+      dst: TableDefinition,
+      cloneAnchor: CommitId): Map[String, String] = {
     val contribs = contributions(spark, log, src, Some(at))
-    if (contribs.isEmpty) return
+    if (contribs.isEmpty) return Map.empty
     val curSig = src.partitionSchema.columns.map(_.name)
     contribs.foreach(c => c.leaves.foreach {
       case (Some(p), _) =>
@@ -766,14 +742,13 @@ object RowOverlay {
           dv, unioned(fileCol) === dv("file") && unioned(posCol) === dv("pos"), "left_anti")
     }).drop(fileCol, posCol)
     val dir = appendsDir(src, cloneAnchor) // linked tables share the location
-    val fs = FileSystem.get(src.location, spark.sessionState.newHadoopConf())
+    val entry = MetadataFiles.published(spark, log, dst, MetadataFiles.Appends, complete = true)
     val writer = VersionContext
       .distributeForWrite(live, if (src.isSnapshot) Nil else curSig)
       .write.format(src.format.name)
     if (src.isSnapshot) writer.save(dir)
     else writer.partitionBy(curSig: _*).save(dir)
-    fs.create(new HPath(dir, SquashedMarker), true).close()
-    ()
+    entry
   }
 
   /** MERGE-ON-READ UPDATE: hide every matching row's preimage behind

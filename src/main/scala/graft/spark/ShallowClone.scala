@@ -1,11 +1,12 @@
 package graft.spark
 
 import java.time.Instant
+import java.util.UUID
 
 import org.apache.spark.sql.SparkSession
 
 import graft.core._
-import graft.core.TableVersions.{CommitId, TableOperation, TableUpdate, UpdateMessage, UserId}
+import graft.core.TableVersions.{CommitId, TableOperation, TableUpdate, TableUpdateMetadata, UpdateMessage, UserId}
 
 /**
  * SHALLOW CLONE — zero-copy table fork (the Delta `CREATE TABLE ... SHALLOW
@@ -35,11 +36,12 @@ import graft.core.TableVersions.{CommitId, TableOperation, TableUpdate, UpdateMe
  * Commit-anchored / shared metadata is CARRIED into the clone's own
  * namespace at clone time, so states that depend on it stay correct and
  * the fork stays isolated both ways:
- *  - live DELETION VECTORS: the source's resolved pair state
- *    materializes as one complete (`_squashed`) sidecar anchored at the
- *    clone's state commit — cloned reads keep hiding deleted rows, and
- *    each side's later deletes anchor under its own (uuid) commit ids,
- *    invisible to the other's resolution walk;
+ *  - live DELETION VECTORS and OVERLAY ROWS: the source's resolved pair
+ *    state and overlay rows materialize as one complete sidecar each,
+ *    written under the clone's pre-chosen state commit id BEFORE that
+ *    commit names them — cloned reads keep hiding deleted rows and
+ *    serving appended ones, and each side's later sidecars anchor under
+ *    its own (uuid) commit ids, which the other's log never names;
  *  - COMMIT-CARRIED metadata — an active COLUMN MAPPING, the
  *    PARTITION-EVOLUTION era and the nested-evolution SCHEMA STATE: the
  *    source's resolved values ride the clone's state commit, so
@@ -124,25 +126,22 @@ object ShallowClone {
       SchemaStates.at(spark, log, src, at).fold(none)(s => SchemaStates.entry(s, s)) ++
       DataSchema.carried(spark, log, src, at) ++
       MetadataFiles.declared(spark, log, src)
+    // DV pairs and overlay rows carry into the clone's own namespace (see
+    // the class doc), written under the state commit's id before it lands
+    val stateId = CommitId(UUID.randomUUID().toString)
+    val sidecars =
+      DeletionVectors.cloneResolvedState(spark, log, src, at, dstDefn, stateId) ++
+        RowOverlay.cloneResolvedState(spark, log, src, at, dstDefn, stateId)
     // the mark and the carried metadata must ride a commit even when the
     // cloned state has no ops (an empty-state clone still inherits the
     // never-reuse-ids contract and the source's metadata)
-    if (ops.nonEmpty || identityMark.nonEmpty || carried.nonEmpty) {
+    if (ops.nonEmpty || identityMark.nonEmpty || carried.nonEmpty || sidecars.nonEmpty) {
       ctx.metastore.commit(dst, TableUpdate(
-        user, UpdateMessage(
+        TableUpdateMetadata(stateId, user, UpdateMessage(
           s"clone state of ${src.name.fullyQualifiedName} @ ${at.id}$identityMark"),
-        Instant.now(), ops).withTableMetadata(carried))
+          Instant.now()), ops).withTableMetadata(carried ++ sidecars))
       ()
     }
-    // carry the remaining metadata into the clone's own namespace (see the
-    // class doc): DV pairs and overlay rows re-anchored at the clone's
-    // state commit
-    val cloneAnchor = log.currentCommit(dst)
-    if (DeletionVectors.hasVectors(spark, log, src, Some(at)))
-      DeletionVectors.cloneResolvedState(spark, log, src, at, cloneAnchor)
-    // merge-on-read overlay rows: resolved (live, DV-applied) rows carry as
-    // one complete overlay dir anchored at the clone's state commit
-    RowOverlay.cloneResolvedState(spark, log, src, at, cloneAnchor)
     // COPY INTO load history: the clone's data already contains the
     // source's ingested rows, so the loaded-file set must carry — without
     // it, a COPY INTO on the clone from the same landing dir would

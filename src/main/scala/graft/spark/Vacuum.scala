@@ -24,9 +24,10 @@ import graft.core._
  * and only (relative path, age) pairs return to the driver. Below the
  * threshold (or with no session) the walk stays a driver-side recursion
  * — cheaper than a job for small layouts. The sidecar listings
- * (`_stats`/`_deletes`/`_appends`, single-level, O(#commits)) stay
- * driver-side always. Both walks produce the SAME set (pinned in
- * `VacuumSpec`).
+ * (`_stats`/`_deletes`/`_appends`, one single-level listing per root)
+ * stay driver-side always; which `_deletes`/`_appends` dirs are live is a
+ * fold of the log, not a probe. Both version-dir walks produce the SAME
+ * set (pinned in `VacuumSpec`).
  *
  * Shallow-clone links: linked tables share one storage namespace, so
  * vacuum REFERENCE-COUNTS across the whole transitively linked family —
@@ -275,61 +276,35 @@ object Vacuum {
         }
       }
 
-    // deletion-vector sidecars (`_deletes/commit-<id>`): a retained state
-    // resolves its vectors through EVERY at-or-before anchor back to the
-    // nearest full-rewrite marker (per-file latest-wins), and those anchors
-    // can be OLDER than the retention window — keeping only retained ids
-    // would silently un-delete rows from live states. Keep exactly the
-    // sidecars some retained state (or the pointer) resolves through;
-    // everything else (orphans from crashed deletes, sidecars absorbed by
-    // compaction whose anchors aged out of every retained lineage)
-    // reclaims under the usual mtime grace.
-    // raw resolution (rawSidecarDirs): an `_absorbed` marker dir is as
-    // load-bearing as a pair sidecar — reclaiming it would re-expose the
-    // older pairs it shields to every current read
-    val neededDeleteAnchors: Set[String] =
-      family.flatMap { name =>
+    // deletion-vector and row-overlay sidecars (`_deletes` / `_appends`
+    // `/commit-<id>`): a retained state resolves through EVERY sidecar its
+    // walk names ([[MetadataFiles.sidecars]]) back to the nearest complete
+    // one (or, for vectors, to a full rewrite that absorbed them), and
+    // those anchors can be OLDER than the retention window — keeping only
+    // retained ids would silently un-delete rows from live states. Keep
+    // exactly the dirs some retained state (or the pointer) resolves
+    // through, a fold of the log; each root is listed once, only to find
+    // the rest — orphans of lost races and crashes, and dirs whose anchors
+    // aged out of every retained walk — which reclaim under the mtime
+    // grace.
+    def sidecarsOnDisk(kind: String): List[(String, Boolean)] = {
+      val needed: Set[String] = family.flatMap { name =>
         val defn = table.copy(name = name) // linked tables share the location
         (log.currentCommit(name) :: retainedIdsOf(name)).distinct
-          .flatMap(c => DeletionVectors.rawSidecarDirs(fs, log, defn, Some(c)))
-      }
-        .map(dir => dir.substring(dir.lastIndexOf("commit-") + "commit-".length))
-        .toSet
-    val deletesRoot = new HPath(root, "_deletes")
-    val deletesOnDisk: List[(String, Boolean)] =
-      if (!fs.exists(deletesRoot)) Nil
-      else fs.listStatus(deletesRoot).toList.filter(_.isDirectory).flatMap { st =>
+          .flatMap(c => MetadataFiles.sidecars(hadoopConf, log, defn, kind, Some(c)).map(_._1.id))
+      }.toSet
+      val listed =
+        try fs.listStatus(new HPath(MetadataFiles.sidecarRoot(table, kind))).toList
+        catch { case _: java.io.FileNotFoundException => Nil }
+      listed.filter(_.isDirectory).flatMap { st =>
         val name = st.getPath.getName
-        if (name.startsWith("commit-") &&
-          !neededDeleteAnchors.contains(name.stripPrefix("commit-")))
-          List(s"_deletes/$name" -> (st.getModificationTime < cutoff))
+        if (name.startsWith("commit-") && !needed.contains(name.stripPrefix("commit-")))
+          List(s"_$kind/$name" -> (st.getModificationTime < cutoff))
         else Nil
       }
-
-    // row-overlay data sidecars (`_appends/commit-<id>`, [[RowOverlay]]):
-    // same rule as the deletion-vector sidecars — a retained state unions
-    // every at-or-before overlay dir back to the nearest `_squashed` dir,
-    // so keep exactly the dirs some retained state (or the pointer)
-    // resolves through; orphans from lost OCC races and dirs whose anchors
-    // aged out of every retained lineage reclaim under the mtime grace.
-    val neededAppendAnchors: Set[String] =
-      family.flatMap { name =>
-        val defn = table.copy(name = name)
-        (log.currentCommit(name) :: retainedIdsOf(name)).distinct
-          .flatMap(c => RowOverlay.rawOverlayDirs(fs, log, defn, Some(c)).map(_._2))
-      }
-        .map(dir => dir.substring(dir.lastIndexOf("commit-") + "commit-".length))
-        .toSet
-    val appendsRoot = new HPath(root, "_appends")
-    val appendsOnDisk: List[(String, Boolean)] =
-      if (!fs.exists(appendsRoot)) Nil
-      else fs.listStatus(appendsRoot).toList.filter(_.isDirectory).flatMap { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("commit-") &&
-          !neededAppendAnchors.contains(name.stripPrefix("commit-")))
-          List(s"_appends/$name" -> (st.getModificationTime < cutoff))
-        else Nil
-      }
+    }
+    val deletesOnDisk = sidecarsOnDisk(MetadataFiles.Deletes)
+    val appendsOnDisk = sidecarsOnDisk(MetadataFiles.Appends)
 
     val doomed = (onDisk ++ statsOnDisk ++ deletesOnDisk ++ appendsOnDisk).collect {
       case (rel, oldEnough)

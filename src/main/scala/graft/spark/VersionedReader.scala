@@ -162,7 +162,7 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
 
   /** Refuses when deletion vectors hid rows between `from` and `to` —
     * the condition under which a partition-granular diff is semantically
-    * incomplete. Absorption (markers/tombstones/rewrites) only REMOVES
+    * incomplete. Absorption (tombstones, absorbing rewrites) only REMOVES
     * pairs and re-exposes nothing, so the except direction is the whole
     * check. */
   private def requireNoHiddenRows(
@@ -236,7 +236,7 @@ final case class VersionedReader(spark: SparkSession, log: TableVersions) {
     * scan — `_metadata` never resolves through a union — and type-widening
     * casts applied, then unions by name (missing columns NULL — the
     * additive-evolution posture). Zero cost when no overlay dir exists
-    * (one driver-side existence walk, the deletion-vector probe bound).
+    * (a fold of the log, no file-system call).
     *
     * `only` restricts to a wanted-partition set (partition-scoped reads);
     * `excludeAnchors` drops dirs anchored at-or-before a range start

@@ -238,7 +238,7 @@ object VersionedStream {
 
   /** Whether deletion vectors hid rows inside the commit range — the case
     * a net-new-contents batch cannot express at all. Cheap when the table
-    * has no sidecars (driver-side existence walk); otherwise one
+    * has no sidecars (a fold of the log); otherwise one
     * metadata-sized set-difference job. */
   private[spark] def dvHidRows(spark: SparkSession, h: Handle, from: Int, to: Int): Boolean = {
     if (to <= 0) return false
@@ -268,19 +268,16 @@ object VersionedStream {
   }
 
   /** Whether any merge-on-read append ([[RowOverlay]]) landed inside the
-    * commit range — a driver-side existence walk over the range's commits
-    * only (zero cost on tables that never used the overlay). Overlay rows
-    * live under `_appends`, not under any version dir, so the zero-copy
-    * changed-dirs scan cannot serve them: feed ranges route through
-    * staging, net-contents ranges stage the diff. */
-  private[spark] def overlayTouched(
-      spark: SparkSession, h: Handle, from: Int, to: Int): Boolean = {
-    if (to <= 0) return false
-    val chrono = chronoCommits(h)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      h.defn.location, spark.sessionState.newHadoopConf())
-    chrono.slice(math.max(from, 0), to).exists(m =>
-      fs.exists(new org.apache.hadoop.fs.Path(RowOverlay.appendsDir(h.defn, m.id))))
+    * commit range — a fold of the range's commit lines (the `appends`
+    * entry of each commit that published an overlay dir), behind the
+    * legacy refusal of a log below format 2. Overlay rows live under
+    * `_appends`, not under any version dir, so the zero-copy changed-dirs
+    * scan cannot serve them: feed ranges route through staging,
+    * net-contents ranges stage the diff. */
+  private[spark] def overlayTouched(spark: SparkSession, h: Handle, from: Int, to: Int): Boolean = {
+    MetadataFiles.requireNamedSidecars(spark.sessionState.newHadoopConf(), h.log, h.defn)
+    chronoCommits(h).slice(math.max(from, 0), to)
+      .exists(MetadataFiles.sidecarOf(_, MetadataFiles.Appends).isDefined)
   }
 
   /** Paths (+ reader options) of the partitions whose version moved between

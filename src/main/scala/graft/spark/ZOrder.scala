@@ -74,7 +74,7 @@ object ZOrder {
     * partitions are read and re-clustered (OPTIMIZE the hot partitions);
     * untouched partitions keep their version pointers, and the rewritten
     * partitions' deletion vectors are shed via
-    * [[DeletionVectors.absorbStale]]. Z-value ranges are computed over the
+    * [[DeletionVectors.stageTombstones]]. Z-value ranges are computed over the
     * SCOPED data, which is what clusters it best.
     *
     * `targetBytes`: SIZE-CAPPED Z-order (the Delta `OPTIMIZE ... ZORDER`

@@ -297,6 +297,49 @@ class DeletionVectorsSpec extends AnyFunSuite with Matchers {
     DeletionVectors.read(spark, log, table, Some(preOptimize)).count() shouldBe 80L
   }
 
+  test("a merge-on-read DELETE landing right after a full rewrite commits keeps its rows hidden") {
+    // the catalog sync of the rewrite's commit runs the DELETE: it lands
+    // after the commit that absorbed the older vectors and must not be
+    // taken for absorbed itself
+    def raceAfter(name: String, evolved: Option[PartitionSchema])(
+        rewrite: (VersionContext, TableDefinition) => Unit): Unit = {
+      val log = new InMemoryTableVersions
+      val catalog = new HookedMetastore
+      val ctx = VersionContext(VersionedMetastore(log, catalog))
+      val table = TableDefinition(
+        TableName("test", name), Files.createTempDirectory(s"graft_$name").toUri,
+        PartitionSchema(List(PartitionColumn("date"))), FileFormat.Parquet)
+      ctx.init(table, user, UpdateMessage("init"))
+      (1L to 40L).map(i => Event(i, s"k${i % 2}", s"2024-01-0${i % 2 + 1}"))
+        .toDS().versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
+      DeletionVectors.delete(
+        ctx, log, table, col("id") <= 4, user, UpdateMessage("dv before")) shouldBe 4L
+      val after = evolved.fold(table)(s => table.copy(partitionSchema = s))
+      var raced: Option[TableVersions.CommitId] = None
+      catalog.afterUpdate = _ => {
+        catalog.afterUpdate = _ => ()
+        DeletionVectors.delete(
+          ctx, log, after, col("id") % 5 === 0, user, UpdateMessage("racing dv")) shouldBe 8L
+        raced = Some(log.currentCommit(table.name))
+      }
+      try rewrite(ctx, table) finally catalog.afterUpdate = _ => ()
+      raced should not be empty
+      log.currentCommit(table.name) shouldBe raced.get
+      for (at <- List(None, raced)) {
+        val visible = DeletionVectors.read(spark, log, after, at)
+        visible.count() shouldBe 28L // 40 - 4 - 8
+        visible.where(col("id") % 5 === 0 || col("id") <= 4).count() shouldBe 0L
+      }
+    }
+    raceAfter("dv_race_optimize", None) { (ctx, t) =>
+      Compaction.compact(spark, ctx, t, user, UpdateMessage("optimize")); ()
+    }
+    val byKind = PartitionSchema(List(PartitionColumn("kind")))
+    raceAfter("dv_race_evolve", Some(byKind)) { (ctx, t) =>
+      PartitionEvolution.evolve(spark, ctx, t, byKind, user); ()
+    }
+  }
+
   test("squashSidecars folds many delete sidecars into one contributing dir") {
     val log = new InMemoryTableVersions
     val ctx = VersionContext(VersionedMetastore(log, new InMemoryMetastore))
@@ -312,13 +355,11 @@ class DeletionVectorsSpec extends AnyFunSuite with Matchers {
     val afterD2 = log.currentCommit(table.name) // the d2 commit
     DeletionVectors.delete(ctx, log, table, col("id") === 10, user, UpdateMessage("d3"))
 
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      table.location, spark.sessionState.newHadoopConf())
-    DeletionVectors.liveSidecarDirs(fs, log, table, None) should have size 3
+    DeletionVectors.liveSidecarDirs(spark, log, table, None) should have size 3
 
     DeletionVectors.squashSidecars(spark, ctx, table, user, UpdateMessage("squash")) shouldBe true
     // one dir serves every subsequent read; content unchanged
-    DeletionVectors.liveSidecarDirs(fs, log, table, None) should have size 1
+    DeletionVectors.liveSidecarDirs(spark, log, table, None) should have size 1
     DeletionVectors.read(spark, log, table).count() shouldBe 50L
     DeletionVectors.resolvePairs(spark, log, table, None).get.count() shouldBe 10L
     // idempotent-ish: nothing left to fold

@@ -140,11 +140,9 @@ class RowOverlayMaintenanceSpec extends AnyFunSuite with Matchers {
       DeletionVectors.delete(
         ctx, log, table, col("id") === (100L + k), user, UpdateMessage(s"d$k"))
     }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      table.location, spark.sessionState.newHadoopConf())
-    DeletionVectors.liveSidecarDirs(fs, log, table, None).size should be >= 5
+    DeletionVectors.liveSidecarDirs(spark, log, table, None).size should be >= 5
     DeletionVectors.autoSquash(spark, ctx, table, user, maxDirs = 3) shouldBe true
-    DeletionVectors.liveSidecarDirs(fs, log, table, None) should have size 1
+    DeletionVectors.liveSidecarDirs(spark, log, table, None) should have size 1
     DeletionVectors.read(spark, log, table)
       .where(col("id") > 100L).count() shouldBe 7L
   }
@@ -170,9 +168,7 @@ class RowOverlayMaintenanceSpec extends AnyFunSuite with Matchers {
     // clean squash folds all three sidecars, racing pairs included
     DeletionVectors.squashSidecars(spark, ctx, table, user, UpdateMessage("squash")) shouldBe true
     DeletionVectors.read(spark, log, table).count() shouldBe 25L
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      table.location, spark.sessionState.newHadoopConf())
-    DeletionVectors.liveSidecarDirs(fs, log, table, None) should have size 1
+    DeletionVectors.liveSidecarDirs(spark, log, table, None) should have size 1
   }
 
   test("vacuum reclaims orphaned overlay dirs, keeps live ones") {
