@@ -66,30 +66,18 @@ object DeepClone {
     ctx.init(dstDefn, user, UpdateMessage(
       s"DEEP CLONE of ${src.name.fullyQualifiedName} @ ${at.id}"))
 
-    // TIER CHOICE. When the cloned state has ZERO sidecar debt — no
-    // deletion vectors, no overlay rows, no column mapping (renames/
-    // drops/widening), one partition era — the resolved rows ARE the
-    // bytes on disk, so the clone copies data files byte-for-byte as
-    // per-file distributed tasks: a 100 TB table clones at storage
-    // bandwidth instead of CPU decode+re-encode speed, and file sizes/
-    // statistics carry over exactly. Any sidecar debt falls back to the
-    // resolved-rows write (which doubles as the clone's compaction).
-    val tvAt = log.versionAt(src.name, at)
-    val sidecarFree =
-      !ColumnMapping.hasMapping(spark, log, src, Some(at)) &&
-      !DeletionVectors.hasVectors(spark, log, src, Some(at)) &&
-      RowOverlay.contributions(spark, log, src, Some(at)).isEmpty &&
-      PartitionEvolution.eraSignatures(tvAt).size <= 1 &&
-      // declared-schema evolution (nested ADDs, TYPE widening) leaves
-      // HETEROGENEOUS files behind: a raw copy would register them with
-      // no carried schema, and a single-footer inference could then drop
-      // evolved fields the resolved tier materializes as typed NULLs —
-      // any recorded schema state falls back to the resolved-rows write
-      SchemaStates.at(spark, log, src, at).isEmpty
+    // TIER CHOICE. When the cloned state's files are exactly its rows
+    // ([[FileCopy.filesAreRows]], the predicate the SQL append's carry
+    // shares) the clone copies data files byte-for-byte as per-file
+    // distributed tasks: a 100 TB table clones at storage bandwidth
+    // instead of CPU decode+re-encode speed, and file sizes/statistics
+    // carry over exactly. Any sidecar debt or recorded schema state falls
+    // back to the resolved-rows write (which doubles as the clone's
+    // compaction).
     // the source's declarations ride the clone's state commit
     val declared = MetadataFiles.declared(spark, log, src)
-    if (sidecarFree) {
-      val ops = rawCopy(spark, src, dstLocation, tvAt)
+    if (FileCopy.filesAreRows(spark, log, src, at)) {
+      val ops = rawCopy(spark, src, dstLocation, log.versionAt(src.name, at))
       if (ops.nonEmpty || declared.nonEmpty) {
         // byte copies: the files keep the source state's data schema
         ctx.metastore.commit(dst, TableUpdate(
@@ -158,15 +146,15 @@ object DeepClone {
   /** The distcp-shaped copy: list the state's version dirs distributed
     * (one task per dir — names only return to the driver, the
     * Vacuum/Convert listing bound), then byte-copy each data file as its
-    * own task. The clone reuses the SOURCE's version labels (labels are
-    * mint-unique; dirs differ by table location), so the returned ops
-    * register the copied dirs verbatim. */
+    * own task ([[FileCopy.copy]]). The clone reuses the SOURCE's version
+    * labels (labels are mint-unique; dirs differ by table location), so
+    * the returned ops register the copied dirs verbatim. */
   private def rawCopy(
       spark: SparkSession,
       src: TableDefinition,
       dstLocation: URI,
       tv: TableVersion): List[TableVersions.TableOperation] = {
-    import org.apache.hadoop.fs.{FileUtil, Path => HPath}
+    import org.apache.hadoop.fs.{Path => HPath}
     val (dirPairs, ops) = tv match {
       case SnapshotTableVersion(v) if v == Version.Unversioned =>
         (Nil, Nil) // never-written source: nothing to copy
@@ -188,33 +176,9 @@ object DeepClone {
     val sc = spark.sparkContext
     val listSlices = math.max(1, math.min(dirPairs.size, sc.defaultParallelism))
     val files = sc.parallelize(dirPairs, listSlices).flatMap { case (s, d) =>
-      val fs = new HPath(s).getFileSystem(sconf.value)
-      fs.listStatus(new HPath(s)).toSeq
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .map(st => (s, d, st.getPath.getName))
+      FileCopy.dataFiles(new HPath(s).getFileSystem(sconf.value), new HPath(s)).map((s, d, _))
     }.collect().toSeq
-    if (files.nonEmpty) {
-      val copySlices = math.max(1, math.min(files.size, sc.defaultParallelism))
-      sc.parallelize(files, copySlices).foreachPartition { it =>
-        // src and dst resolve their OWN FileSystems: a DEEP CLONE ...
-        // LOCATION may land on a different scheme/authority than the
-        // source (the resolved-rows tier always handled that)
-        var srcFs: org.apache.hadoop.fs.FileSystem = null
-        var dstFs: org.apache.hadoop.fs.FileSystem = null
-        it.foreach { case (s, d, name) =>
-          if (srcFs == null) srcFs = new HPath(s).getFileSystem(sconf.value)
-          if (dstFs == null) dstFs = new HPath(d).getFileSystem(sconf.value)
-          val dstDir = new HPath(d)
-          dstFs.mkdirs(dstDir)
-          if (!FileUtil.copy(
-              srcFs, new HPath(new HPath(s), name),
-              dstFs, new HPath(dstDir, name),
-              false, true, sconf.value))
-            sys.error(s"DEEP CLONE: failed to copy $s/$name to $d/$name")
-        }
-      }
-    }
+    FileCopy.copy(spark, files, "DEEP CLONE")
     ops
   }
 }

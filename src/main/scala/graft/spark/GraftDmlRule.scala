@@ -485,9 +485,11 @@ final case class GraftMergeCommand(
     val src = org.apache.spark.sql.GraftSqlShim.ofRows(session, source)
     // align to the WRITE-side schema: the versioned reader's view of the
     // current contents when the table holds data (partition columns stay
-    // strings there), else the relation's column order as declared
-    val reader = VersionedReader(session, binding.log)
-    val current = reader.read(defn)
+    // strings there), else the relation's column order as declared — in
+    // LOGICAL names, the ones the source speaks and Merge.mergeInto
+    // rewrites by (a renamed column's files keep the physical name)
+    val current = ColumnMapping.applyLogical(
+      VersionedReader(session, binding.log).read(defn), session, binding.log, defn, None)
     // MERGE SCHEMA EVOLUTION (`SET spark.graft.dml.autoMergeSchema=true`,
     // the Delta autoMerge contract): NEW source columns survive the
     // alignment, the DECLARED schema widens (nullable, metadata-only

@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
 import org.apache.spark.sql.execution.datasources.v2.FileTable
 import org.apache.spark.sql.execution.datasources.v2.orc.OrcTable
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, raise_error, when}
+import org.apache.spark.sql.functions.{coalesce, col, lit, raise_error, when}
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -55,10 +55,13 @@ import graft.spark.VersionContext.DatasetVersionOps
  *    prune commit removing partitions absent from the data). Hive-style
  *    replace-touched-only semantics stay available through the Scala
  *    `versionedInsertInto`;
- *  - `INSERT INTO` = copy-on-write append — the touched partitions' new
- *    version carries their current rows plus the inserted ones (untouched
+ *  - `INSERT INTO` = copy-on-write append — the write job writes only
+ *    the batch, then each touched partition's new version dir receives
+ *    its current state: its data files byte-copied when they are exactly
+ *    its rows, else one write job of its resolved rows (untouched
  *    partitions keep their version), so SQL append never mutates an
- *    immutable version dir.
+ *    immutable version dir. The commit rebases from the state carried and
+ *    refuses when a concurrent commit moved a touched partition.
  * DDL: `CREATE TABLE … LOCATION` builds + inits + registers an external
  * versioned table (the SQL spelling of the reference's caller-side DDL,
  * `examples/.../TableLoader.scala:29-35`); `DROP TABLE` unregisters without
@@ -999,34 +1002,84 @@ private[spark] final class GraftV2Table(
 
 private[spark] object GraftV2Table {
 
-  /** The current table contents, or None while the table has never been
-    * written (reading an unversioned/empty state has no schema to offer). */
-  private def currentOrNone(
-      spark: SparkSession, binding: GraftTableCatalog.Binding, defn: TableDefinition): Option[DataFrame] =
-    binding.log.currentVersion(defn.name) match {
-      case SnapshotTableVersion(v) if v == Version.Unversioned => None
-      case PartitionedTableVersion(m) if m.isEmpty             => None
-      // DV-aware + column-mapped: INSERT's copy-on-write carry-union must
-      // not resurrect merge-on-read-deleted rows, and must carry LOGICAL
-      // names so the union with the (logical) insert batch lines up.
-      // CURRENT-SCHEME DIRS ONLY: on a mixed era fold (metadata-only
-      // evolution) the old-era dirs are NOT replaced by this write —
-      // carrying their rows into a fresh current-scheme dir would serve
-      // them TWICE (both dirs stay referenced). Overlay rows of the
-      // current-scheme partitions ride along (readPartitions) — those ARE
-      // absorbed when their partition re-lands.
-      case PartitionedTableVersion(m) =>
-        val curSig = defn.partitionSchema.columns.map(_.name)
-        val schemeParts = m.keys
-          .filter(_.columnValues.map(_.column.name) == curSig).toList
-        if (schemeParts.isEmpty) None
-        else Some(ColumnMapping.applyLogical(
-          DeletionVectors.readPartitions(spark, binding.log, defn, schemeParts),
-          spark, binding.log, defn, None))
-      case _ => Some(ColumnMapping.applyLogical(
-        DeletionVectors.read(spark, binding.log, defn),
-        spark, binding.log, defn, None))
+  /** Whether `tv` holds rows a write of the table's current scheme
+    * lands beside: a written snapshot, or a partition of the current
+    * scheme (the dirs of an older era are never replaced by a
+    * current-scheme write). From the log alone. */
+  private def holdsRows(defn: TableDefinition, tv: TableVersion): Boolean = tv match {
+    case SnapshotTableVersion(v) => v != Version.Unversioned
+    case PartitionedTableVersion(m) =>
+      val curSig = defn.partitionSchema.columns.map(_.name)
+      m.keys.exists(_.columnValues.map(_.column.name) == curSig)
+  }
+
+  /** Carry the touched partitions' state at `readCommit` into the staged
+    * batch's fresh version dirs, before its commit: copy-on-write never
+    * mutates an immutable dir, so a touched partition's new version holds
+    * its current rows beside the batch. Touched = the staged partitions
+    * the state holds (the same partition values are the current scheme's;
+    * older-era dirs stay referenced and are never carried, or their rows
+    * would be served twice); a snapshot carries its whole version.
+    *  - BYTE TIER: the state's files are exactly its rows
+    *    ([[FileCopy.filesAreRows]]) and the batch's data columns equal its
+    *    [[DataSchema]] record (names and types, so every dir stays uniform
+    *    in schema): the touched dirs' data files are listed on the driver
+    *    and copied byte for byte ([[FileCopy.copy]], one job).
+    *  - ROW TIER: otherwise the touched partitions' resolved rows
+    *    (DV-applied, their overlay rows included — those are absorbed as
+    *    the partition re-lands — in LOGICAL names, aligned to the batch's
+    *    columns: an ADD COLUMN's new column is NULL in them) are written
+    *    into the same dirs by a second write job.
+    * A crash before the commit leaves only unreferenced dirs, which VACUUM
+    * reclaims. */
+  private def carry(
+      spark: SparkSession, ctx: VersionContext, defn: TableDefinition,
+      batch: DataFrame, readCommit: CommitId, staged: VersionContext.StagedCommit): Unit = {
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    val log = ctx.metastore.tableVersions
+    val ops = staged.update.operations
+    // (touched partition, its dir at readCommit, its staged dir)
+    val touched: List[(Option[Partition], String, String)] =
+      log.versionAt(defn.name, readCommit) match {
+        case PartitionedTableVersion(pvs) => ops.collect {
+          case TableOperation.AddPartitionVersion(p, v) if pvs.contains(p) =>
+            (Some(p), SparkPaths.dirFor(defn.location, p, pvs(p)),
+              SparkPaths.dirFor(defn.location, p, v))
+        }
+        case SnapshotTableVersion(cur) if cur != Version.Unversioned => ops.collect {
+          case TableOperation.AddTableVersion(v) =>
+            (None, VersionPaths.pathFor(defn.location, cur).toString,
+              VersionPaths.pathFor(defn.location, v).toString)
+        }
+        case _ => Nil
+      }
+    if (touched.isEmpty) return
+    val resolver = spark.sessionState.conf.resolver
+    val partCols = defn.partitionSchema.columns.map(_.name)
+    def columns(s: StructType) = s.map(f => f.name -> f.dataType)
+    val batchColumns = columns(org.apache.spark.sql.GraftSqlShim.asNullable(StructType(
+      staged.data.filterNot(f => partCols.exists(resolver(_, f.name))))))
+    if (FileCopy.filesAreRows(spark, log, defn, readCommit) &&
+        DataSchema.at(spark, log, defn, Some(readCommit)).exists(columns(_) == batchColumns)) {
+      val fs = FileSystem.get(defn.location, spark.sessionState.newHadoopConf())
+      FileCopy.copy(spark, touched.flatMap { case (_, from, to) =>
+        FileCopy.dataFiles(fs, new HPath(from)).map((from, to, _))
+      }, "INSERT INTO")
+    } else {
+      val current = ColumnMapping.applyLogical(
+        if (defn.isSnapshot) DeletionVectors.read(spark, log, defn, Some(readCommit))
+        else DeletionVectors.readPartitions(spark, log, defn, touched.flatMap(_._1)),
+        spark, log, defn, None)
+      val into = ops.collectFirst {
+        case TableOperation.AddPartitionVersion(_, v) => v
+        case TableOperation.AddTableVersion(v)        => v
+      }
+      VersionContext.writeVersion(
+        batch.limit(0).unionByName(current, allowMissingColumns = true), ctx, defn,
+        staged.update.metadata.userId, staged.update.metadata.message, into = into)
+      ()
     }
+  }
 
   /** The caller's metastore when one is bound — SQL writes then sync their
     * catalog exactly like the Scala API — else a throwaway in-memory one
@@ -1046,6 +1099,8 @@ private[spark] object GraftV2Table {
       overwrite: Boolean): Unit = GeneratedColumns.withSqlNullFill {
     val spark = data.sparkSession
     val ctx = VersionContext(metastoreFor(binding, defn))
+    // the state an append carries, read before anything else
+    val readCommit = binding.log.currentCommit(defn.name)
     val message =
       UpdateMessage(if (overwrite) "INSERT OVERWRITE (SQL)" else "INSERT INTO (SQL)")
     // a DECLARED identity column stamps engine-assigned ids into the batch
@@ -1077,73 +1132,62 @@ private[spark] object GraftV2Table {
     // MERGE-ON-READ append (`SET spark.graft.dml.mergeOnRead=true`): the
     // batch lands as a row-overlay sidecar ([[RowOverlay]]) plus real dirs
     // only for partitions that don't exist yet — O(batch) written, NO
-    // partition rewritten (the copy-on-write carry below re-lands every
-    // touched partition wholesale). Not for OVERWRITE (a replace must move
-    // pointers) and not for the table's first write (nothing to carry —
-    // the ordinary path is already O(batch) there).
+    // partition dir replaced. Not for OVERWRITE (a replace must move
+    // pointers) and not for the table's first write (nothing to carry).
     if (!overwrite &&
         TableProperties.effectiveFlag(
           spark, binding.log, defn, TableProperties.MergeOnRead) &&
-        currentOrNone(spark, binding, defn).isDefined) {
+        holdsRows(defn, binding.log.currentVersion(defn.name))) {
       RowOverlay.append(
-        data0.toDF(), ctx, defn, UserId("sql"),
+        data0, ctx, defn, UserId("sql"),
         UpdateMessage("INSERT INTO (SQL, merge-on-read)"),
         identity = identity.map(c => (c, hwmAtStamp)))
       return
     }
-    val (toWrite, pinned) =
-      if (overwrite) (data0, None)
-      else currentOrNone(spark, binding, defn) match {
-        case None => (data0, None)
-        // allowMissingColumns: after ALTER TABLE ADD COLUMN the batch
-        // carries the widened schema but pre-ALTER files don't — their
-        // rows union in with NULL for the new column (the analyzer already
-        // guarantees the batch side is never narrower than the table)
-        case Some(current) if defn.isSnapshot =>
-          (data0.unionByName(current, allowMissingColumns = true), None)
-        case Some(current) =>
-          // copy-on-write append: the touched partitions' fresh version must
-          // carry their current rows too; `touched` is #partitions rows —
-          // metadata-sized, safe to broadcast at any corpus scale. The batch
-          // is pinned to ONE materialization first: `touched` and the union
-          // otherwise evaluate `data` independently, and a non-deterministic
-          // source could write a partition `touched` missed — silently
-          // dropping that partition's current rows from the fresh version
-          // (the same hazard the overwrite prune below avoids by diffing
-          // commit metadata instead of re-reading `data`).
-          val cached = data0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val partCols = defn.partitionSchema.columns.map(_.name)
-          val touched = cached.select(partCols.map(col): _*).distinct()
-          (cached.unionByName(
-            current.join(broadcast(touched), partCols, "left_semi"),
-            allowMissingColumns = true),
-            Some(cached))
+    if (overwrite) {
+      // SQL INSERT OVERWRITE is a STATIC whole-table replace: partitions
+      // absent from the new data must go too (the Scala API's
+      // versionedInsertInto keeps Hive-style replace-touched-only
+      // semantics). The doomed set is every CURRENT partition; alsoRemove
+      // drops the ones the write job did NOT produce — decided from the
+      // staged-output ops, never from re-evaluating `data` (a
+      // non-deterministic source re-run could disagree with what was
+      // written) — in the SAME commit: one atomic replace, no transient
+      // merged state between a write and a follow-up prune.
+      val doomed: Seq[Partition] = binding.log.currentVersion(defn.name) match {
+        case PartitionedTableVersion(pvs) => pvs.keys.toList
+        case _                            => Nil
       }
-    // SQL INSERT OVERWRITE is a STATIC whole-table replace: partitions
-    // absent from the new data must go too (the Scala API's
-    // versionedInsertInto keeps Hive-style replace-touched-only
-    // semantics). The doomed set is every CURRENT partition; alsoRemove
-    // drops the ones the write job did NOT produce — decided from the
-    // staged-output ops, never from re-evaluating `data` (a
-    // non-deterministic source re-run could disagree with what was
-    // written) — in the SAME commit: one atomic replace, no transient
-    // merged state between a write and a follow-up prune.
-    val doomed: Seq[Partition] =
-      if (overwrite && !defn.isSnapshot)
-        binding.log.currentVersion(defn.name) match {
-          case PartitionedTableVersion(pvs) => pvs.keys.toList
-          case _                            => Nil
-        }
-      else Nil
-    // an identity write commits through the stage→derive-hwm→commit path
-    // so the advanced high-water mark rides the same atomic commit
-    try identity match {
+      // an identity write commits through the stage→derive-hwm→commit
+      // path so the advanced high-water mark rides the same atomic commit
+      identity match {
+        case Some(c) => IdentityColumns.stageAndCommit(
+          data0, ctx, defn, c, UserId("sql"), message,
+          alsoRemove = doomed, hwmAtStamp = hwmAtStamp)
+        case None => data0.versionedInsertInto(
+          ctx, defn, UserId("sql"), message, alsoRemove = doomed)
+      }
+      return
+    }
+    // copy-on-write append: the write job writes the batch alone, then
+    // [[carry]] lands the touched partitions' current rows in the same
+    // fresh dirs (the staged output names them: the batch is evaluated
+    // once and never re-read). The commit is a rebase anchored at
+    // `readCommit`, the state carried: an intervening commit on a touched
+    // partition (or any op-less one, a deletion-vector delete) throws
+    // ConcurrentWriteException instead of re-targeting onto a head whose
+    // rows the carry never saw; disjoint partition commits compose.
+    val add = (staged: VersionContext.StagedCommit) =>
+      carry(spark, ctx, defn, data0, readCommit, staged)
+    identity match {
       case Some(c) => IdentityColumns.stageAndCommit(
-        toWrite.toDF(), ctx, defn, c, UserId("sql"), message,
-        alsoRemove = doomed, hwmAtStamp = hwmAtStamp)
-      case None => toWrite.versionedInsertInto(
-        ctx, defn, UserId("sql"), message, alsoRemove = doomed)
-    } finally pinned.foreach { df => df.unpersist(); () }
+        data0, ctx, defn, c, UserId("sql"), message,
+        hwmAtStamp = hwmAtStamp, rebaseAt = Some(readCommit), beforeCommit = add)
+      case None =>
+        val staged = data0.versionedStage(ctx, defn, UserId("sql"), message)
+        add(staged)
+        VersionContext.commitRebased(spark, ctx, staged, readCommit)
+    }
     ()
   }
 }

@@ -238,6 +238,9 @@ object IdentityColumns {
     *
     * `alsoRemove` partitions the job did not write ride the same commit
     * (the SQL INSERT OVERWRITE stale set — [[VersionContext]]'s contract).
+    * `beforeCommit` runs on the staged write after its ids are read back
+    * and before the commit (the SQL append carries its touched
+    * partitions' rows into the staged dirs there).
     *
     * CONCURRENCY: the high-water mark is whole-table state invisible to
     * partition conflict scopes, so two identity writers stamping from the
@@ -261,7 +264,8 @@ object IdentityColumns {
       alsoRemove: Seq[Partition] = Nil,
       hwmAtStamp: Long = -1L,
       rebaseAt: Option[TableVersions.CommitId] = None,
-      txn: Option[TableVersions.StreamTxn] = None): (TableVersion, TableChanges) = {
+      txn: Option[TableVersions.StreamTxn] = None,
+      beforeCommit: VersionContext.StagedCommit => Unit = _ => ()): (TableVersion, TableChanges) = {
     val log = ctx.metastore.tableVersions
     val staged = df.versionedStage(ctx, table, userId, message, alsoRemove)
     val spark = df.sparkSession
@@ -284,6 +288,7 @@ object IdentityColumns {
     val stampBase =
       if (hwmAtStamp >= 0L) hwmAtStamp
       else effectiveHighWaterMark(spark, log, table, column)
+    beforeCommit(staged)
     val newHwm = assignedMax.map(math.max(_, stampBase)).getOrElse(stampBase)
     val marked = staged.copy(update = staged.update.copy(
       metadata = staged.update.metadata.copy(
@@ -302,7 +307,7 @@ object IdentityColumns {
           metadata = () => marked.schemaEntry(log),
           revalidate = () => {
             PartitionEvolution.requireCurrentScheme(spark, log, table)
-            requireMarkUnmoved(spark, log, table, column, stampBase, "merge")
+            requireMarkUnmoved(spark, log, table, column, stampBase, "rewrite")
           })
       case None => ()
     }

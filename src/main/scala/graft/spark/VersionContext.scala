@@ -140,6 +140,32 @@ object VersionContext {
     sys.error("unreachable")
   }
 
+  /** Commit a staged copy-on-write rewrite of state `readCommit` with the
+    * [[TableVersions.commitRebase]] discipline (see
+    * [[DatasetVersionOps.versionedInsertIntoRebase]]); returns the new
+    * commit id, or `readCommit` when the staged update has no ops. */
+  private[spark] def commitRebased(
+      spark: org.apache.spark.sql.SparkSession,
+      ctx: VersionContext,
+      staged: StagedCommit,
+      readCommit: TableVersions.CommitId): TableVersions.CommitId = {
+    val table = staged.table
+    // nothing written, nothing removed: committing an EMPTY-ops update
+    // would be a junk history entry with whole-table conflict scope
+    if (staged.update.operations.isEmpty) return readCommit
+    // the sidecar refresh anchors on the pre-commit head, not readCommit:
+    // a rebase may compose over commits that landed after the read
+    val log = ctx.metastore.tableVersions
+    val preHead = log.currentCommit(table.name)
+    ctx.metastore.commitRebase(
+      table.name, staged.update, readCommit,
+      revalidate = () => PartitionEvolution.requireCurrentScheme(spark, log, table),
+      metadata = () => staged.schemaEntry(log))
+    FileStats.maybeAutoUpdate(spark, log, table, preHead)
+    TableProperties.maybeAutoOptimize(spark, ctx, table, staged.update.metadata.userId)
+    staged.update.metadata.id
+  }
+
   /** Enrichment giving `Dataset[T]` the reference's headline write API. */
   implicit final class DatasetVersionOps[T](private val ds: Dataset[T]) extends AnyVal {
 
@@ -249,21 +275,8 @@ object VersionContext {
         readCommit: TableVersions.CommitId,
         txn: Option[TableVersions.StreamTxn] = None,
         alsoRemove: Seq[Partition] = Nil): TableVersions.CommitId = {
-      val staged = writeVersion(ds, ctx, table, userId, message, txn, alsoRemove)
-      // nothing written, nothing removed: committing an EMPTY-ops update
-      // would be a junk history entry with whole-table conflict scope
-      if (staged.update.operations.isEmpty) return readCommit
-      // the sidecar refresh anchors on the pre-commit head, not readCommit:
-      // a rebase may compose over commits that landed after the read
-      val log = ctx.metastore.tableVersions
-      val preHead = log.currentCommit(table.name)
-      ctx.metastore.commitRebase(
-        table.name, staged.update, readCommit,
-        revalidate = () => PartitionEvolution.requireCurrentScheme(ds.sparkSession, log, table),
-        metadata = () => staged.schemaEntry(log))
-      FileStats.maybeAutoUpdate(ds.sparkSession, log, table, preHead)
-      TableProperties.maybeAutoOptimize(ds.sparkSession, ctx, table, userId)
-      staged.update.metadata.id
+      commitRebased(ds.sparkSession, ctx,
+        writeVersion(ds, ctx, table, userId, message, txn, alsoRemove), readCommit)
     }
 
     def versionedInsertIntoIf(
@@ -292,13 +305,15 @@ object VersionContext {
     * translation files store), one write job into fresh version dirs, and
     * the update to commit: the written dirs and `alsoRemove`'s unwritten
     * partitions, with the written schema its [[DataSchema]] entry derives
-    * from at commit time. */
-  private def writeVersion(
+    * from at commit time. `into`: add the rows to that already-written,
+    * still uncommitted version's dirs instead of minting a new one. */
+  private[spark] def writeVersion(
       ds: Dataset[_], ctx: VersionContext, table: TableDefinition,
       userId: UserId, message: UpdateMessage,
       txn: Option[TableVersions.StreamTxn] = None,
-      alsoRemove: Seq[Partition] = Nil): StagedCommit = {
-    val version = ctx.newVersion()
+      alsoRemove: Seq[Partition] = Nil,
+      into: Option[Version] = None): StagedCommit = {
+    val version = into.getOrElse(ctx.newVersion())
     val log = ctx.metastore.tableVersions
     PartitionEvolution.requireCurrentScheme(ds.sparkSession, log, table)
     val mapped = ColumnMapping.toPhysical(
@@ -308,7 +323,7 @@ object VersionContext {
       table, log)
     val written =
       if (table.isSnapshot) List(writeSnapshot(mapped, table, version))
-      else writePartitioned(mapped, table, version)
+      else writePartitioned(mapped, table, version, into = into.isDefined)
     val present = written.collect { case TableOperation.AddPartitionVersion(p, _) => p }.toSet
     val removes = alsoRemove.distinct.filterNot(present).map(TableOperation.RemovePartition(_))
     StagedCommit(table,
@@ -455,11 +470,14 @@ object VersionContext {
   }
 
   /** V17: one `partitionBy` job into staging, then per-partition rename
-    * into `<partition>/<label>` (SURVEY.md §7.3). */
+    * into `<partition>/<label>` (SURVEY.md §7.3). `into`: the version's
+    * dirs may exist already (a second write of the same uncommitted
+    * version) — staged files then move into them one by one. */
   private[spark] def writePartitioned[T](
       ds: Dataset[T],
       table: TableDefinition,
-      version: Version): List[TableOperation] = {
+      version: Version,
+      into: Boolean = false): List[TableOperation] = {
     val spark = ds.sparkSession
     val staging = new URI(
       Partition.normalizedDir(table.location).toString + s"_staging/${version.label}/")
@@ -495,8 +513,11 @@ object VersionContext {
         val from = new HPath(staging.toString + escaped)
         val dest = new HPath(SparkPaths.dirFor(table.location, p, version))
         fs.mkdirs(dest.getParent)
-        if (!fs.rename(from, dest))
-          sys.error(s"failed to move staged partition $from to $dest")
+        val moved =
+          if (into && fs.exists(dest))
+            fs.listStatus(from).forall(st => fs.rename(st.getPath, new HPath(dest, st.getPath.getName)))
+          else fs.rename(from, dest)
+        if (!moved) sys.error(s"failed to move staged partition $from to $dest")
       }
       // trailing slash matters: Path("…/label/").getParent is "…/label" itself
       val stagingPath = new HPath(staging.toString.stripSuffix("/"))

@@ -165,6 +165,34 @@ class ColumnMappingSpec extends AnyFunSuite with Matchers {
       spark.sql("ALTER TABLE graftmap.test.map_sql ADD COLUMN category STRING"))
   }
 
+  test("SQL MERGE with UPDATE SET * / INSERT * after a RENAME COLUMN aligns the source by logical names") {
+    Seq(false, true).foreach { autoMerge =>
+      val name = s"map_merge_$autoMerge"
+      val (ctx, log, table) = freshTable(name)
+      spark.conf.set("spark.sql.catalog.graftmapmerge", classOf[GraftTableCatalog].getName)
+      GraftTableCatalog.bind("graftmapmerge", log)
+      (1L to 3L).map(i => Event(i, s"k$i", "a"))
+        .toDS().versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
+      GraftTableCatalog.register("graftmapmerge", table,
+        Some(VersionedReader(spark, log).read(table).schema))
+      val t = s"graftmapmerge.test.$name"
+      spark.sql(s"ALTER TABLE $t RENAME COLUMN kind TO category")
+      Seq((2L, "upd", "a"), (4L, "new", "b")).toDF("id", "category", "date")
+        .createOrReplaceTempView("map_merge_src")
+      SessionConf.withConf(spark, "spark.graft.dml.autoMergeSchema", autoMerge.toString) {
+        spark.sql(
+          s"""MERGE INTO $t t USING map_merge_src s ON t.id = s.id
+             |WHEN MATCHED THEN UPDATE SET *
+             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      }
+      spark.sql(s"SELECT id, category, date FROM $t").as[(Long, String, String)]
+        .collect().sorted shouldBe Array(
+          (1L, "k1", "a"), (2L, "upd", "a"), (3L, "k3", "a"), (4L, "new", "b"))
+      spark.sql(s"SELECT * FROM $t").columns.toList shouldBe List("id", "category", "date")
+      VersionedReader(spark, log).read(table).columns should contain("kind") // still physical
+    }
+  }
+
   test("type widening is metadata-only: narrow old files upcast, wide writes land, time travel stays narrow") {
     val (ctx, log, table) = freshTable("map_widen")
     // v1 stores int + float (the narrow physical types)

@@ -5,8 +5,6 @@ import java.time.Instant
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path}
-import org.apache.spark.ListenerBusShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{Metadata, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -23,6 +21,7 @@ class SchemaRecordSpec extends AnyFunSuite with Matchers {
 
   private val spark = TestSpark.session
   import spark.implicits._
+  import TestSpark.jobs
   private val user = UserId("schema-record")
   private val cat = "recordcat"
 
@@ -99,20 +98,6 @@ class SchemaRecordSpec extends AnyFunSuite with Matchers {
       shape(VersionedReader(spark, log).read(t).schema) shouldBe
         shape(inferred(t, head(t), typed = false))
     }
-  }
-
-  /** Spark jobs `body` runs, counted by a listener over a drained bus. */
-  private def jobs(body: => Any): Int = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    val sc = spark.sparkContext
-    ListenerBusShim.drain(sc)
-    sc.addSparkListener(l)
-    try { body; ListenerBusShim.drain(sc) }
-    finally sc.removeSparkListener(l)
-    n.get
   }
 
   test("partitioned tables with int, string and date partition values serve the inferred schema at every commit") {

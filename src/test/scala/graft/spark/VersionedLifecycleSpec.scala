@@ -27,6 +27,22 @@ object TestSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .getOrCreate()
+
+  /** Spark jobs `body` runs, counted by a listener over a drained bus. */
+  def jobs(body: => Any): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    val sc = session.sparkContext
+    org.apache.spark.ListenerBusShim.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusShim.drain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
 }
 
 /** End-to-end scenario coverage mirroring the reference's loader specs
