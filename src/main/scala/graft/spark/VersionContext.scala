@@ -471,8 +471,9 @@ object VersionContext {
 
   /** V17: one `partitionBy` job into staging, then per-partition rename
     * into `<partition>/<label>` (SURVEY.md §7.3). `into`: the version's
-    * dirs may exist already (a second write of the same uncommitted
-    * version) — staged files then move into them one by one. */
+    * dirs exist already (a second write of the same uncommitted version,
+    * into partitions the first one wrote) — staged files move into them
+    * one by one. */
   private[spark] def writePartitioned[T](
       ds: Dataset[T],
       table: TableDefinition,
@@ -514,7 +515,7 @@ object VersionContext {
         val dest = new HPath(SparkPaths.dirFor(table.location, p, version))
         fs.mkdirs(dest.getParent)
         val moved =
-          if (into && fs.exists(dest))
+          if (into)
             fs.listStatus(from).forall(st => fs.rename(st.getPath, new HPath(dest, st.getPath.getName)))
           else fs.rename(from, dest)
         if (!moved) sys.error(s"failed to move staged partition $from to $dest")
