@@ -733,6 +733,18 @@ object ColumnMapping {
       DeletionVectors.read(spark, log, table, asOf, mergeSchema),
       spark, log, table, asOf)
 
+  /** [[read]] of the current state scoped to `parts` — a partition-granular
+    * rewrite's input: the current rows of exactly the version dirs it
+    * replaces (vectors applied, overlay rows included, logical names). Its
+    * leaves are those dirs, so the write's size gate
+    * ([[VersionContext.distributeForWrite]]) sees their real size. */
+  def readPartitions(
+      spark: SparkSession,
+      log: TableVersions,
+      table: TableDefinition,
+      parts: Seq[Partition]): DataFrame =
+    applyLogical(DeletionVectors.readPartitions(spark, log, table, parts), spark, log, table, None)
+
   /** The PHYSICAL (in-file) name behind logical `column` at `at`
     * (default: current) — identity when no mapping entry covers it.
     * Physical names are stable across renames, so artifacts keyed at

@@ -23,14 +23,14 @@ import graft.spark.VersionContext.DatasetVersionOps
  * horizon with the source's retention, exactly like the StreamTxn
  * replay-marker contract.
  *
- * Ingestion is COPY-ON-WRITE APPEND (the SQL `INSERT INTO` posture): the
- * new files' rows union with the current contents of the partitions they
- * touch, through the ordinary pre-write pipeline — generated columns
- * derive, constraints enforce, column mapping applies — then one
- * versioned commit. Scale shape: file listing is driver-side
- * O(#source-files) metadata; only the partitions the new rows land in are
- * read and rewritten; the already-ingested check is a set lookup, never a
- * data read.
+ * Ingestion is COPY-ON-WRITE APPEND (the SQL `INSERT INTO` carry): the
+ * new files' rows are written through the ordinary pre-write pipeline —
+ * generated columns derive, constraints enforce, column mapping applies —
+ * the partitions they touch carry their current contents into the same
+ * fresh dirs, then one versioned commit rebased on the state carried.
+ * Scale shape: file listing is driver-side O(#source-files) metadata;
+ * only the partitions the new rows land in are read and rewritten; the
+ * already-ingested check is a set lookup, never a data read.
  */
 object CopyInto {
 
@@ -130,8 +130,8 @@ object CopyInto {
       return Result(Nil, candidates, 0L, None)
 
     // the table's current state in LOGICAL names: everything COPY INTO
-    // derives from it (the pinned-schema fallback, the copy-on-write
-    // union) enters the logical->physical write pipeline, so a raw
+    // derives from it (the pinned-schema fallback, the batch's
+    // alignment) enters the logical->physical write pipeline, so a raw
     // (physical-named) read would misresolve renamed columns
     lazy val currentLogical = ColumnMapping.applyLogical(
       DeletionVectors.read(spark, log, table), spark, log, table, None)
@@ -199,38 +199,6 @@ object CopyInto {
           case _ => col(c)
         }
       }.toIndexedSeq: _*)
-    // copy-on-write append: union with the current contents of the touched
-    // partitions only (a snapshot table unions with its whole state)
-    // CARRY SOURCE: current-scheme dirs only — on a mixed era fold the
-    // old-era dirs are not replaced by this ingest, so carrying their rows
-    // into fresh current-scheme dirs would serve them twice (the
-    // insertVersioned carry rule)
-    lazy val carrySource: DataFrame = {
-      val curSig = table.partitionSchema.columns.map(_.name)
-      val schemeParts = log.currentVersion(table.name) match {
-        case graft.core.PartitionedTableVersion(m) =>
-          m.keys.filter(_.columnValues.map(_.column.name) == curSig).toList
-        case _ => Nil
-      }
-      if (schemeParts.isEmpty)
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), batch.schema)
-      else ColumnMapping.applyLogical(
-        DeletionVectors.readPartitions(spark, log, table, schemeParts),
-        spark, log, table, None)
-    }
-    val current = currentLogical
-    val toWrite: DataFrame =
-      if (current.columns.isEmpty) batch
-      else if (table.isSnapshot)
-        conformedCarry(current).unionByName(batch, allowMissingColumns = true)
-      else {
-        val partCols = table.partitionSchema.columns.map(_.name)
-        val touched = batch.select(partCols.map(org.apache.spark.sql.functions.col): _*)
-          .distinct()
-        val existing = carrySource.join(touched, partCols, "left_semi")
-        conformedCarry(existing).unionByName(batch, allowMissingColumns = true)
-      }
     val msg = UpdateMessage(
       s"COPY INTO ${table.name.fullyQualifiedName} from $srcDir " +
         s"files=[${fresh.map(fileKey(dir, _)).mkString(";")}]")
@@ -238,7 +206,7 @@ object CopyInto {
     // an APPEND — under the flag it lands as a row overlay (O(batch), no
     // partition re-carried; the load-history keys ride the same commit
     // message). First loads keep the ordinary path (nothing to carry).
-    if (current.columns.nonEmpty &&
+    if (currentLogical.columns.nonEmpty &&
         spark.conf.get("spark.graft.dml.mergeOnRead", "false").toBoolean) {
       // overlay rows must share the stored shape — an evolving batch needs
       // the copy-on-write carry; refuse rather than fork the overlay union
@@ -254,12 +222,27 @@ object CopyInto {
       numWide.foreach { case (p, t) =>
         ColumnMapping.widenPath(spark, ctx, table, p, t, user)
       }
-      toWrite.versionedInsertInto(ctx, table, user, msg)
+      // copy-on-write append, the SQL INSERT INTO discipline: the batch is
+      // staged alone (aligned to the current columns, the new ones
+      // appended), [[GraftV2Table.carry]] lands the touched partitions'
+      // current rows in the same fresh dirs (a snapshot carries its whole
+      // state), and the commit rebases on `readCommit` — a concurrent
+      // commit on a touched partition throws instead of being dropped.
+      // Read after the widen declarations: those commits move no pointer
+      // but would count as whole-table intervening commits.
+      val readCommit = log.currentCommit(table.name)
+      val aligned =
+        if (currentLogical.columns.isEmpty) batch
+        else conformedCarry(currentLogical.limit(0))
+          .unionByName(batch, allowMissingColumns = true)
+      val staged = aligned.versionedStage(ctx, table, user, msg)
+      GraftV2Table.carry(spark, ctx, table, aligned, readCommit, staged, conformedCarry)
+      VersionContext.commitRebased(spark, ctx, staged, readCommit)
       // DATA FIRST, adds/struct-widening AFTER (the q94 discipline): the
       // declared schema and its audit commit land only once the data
       // commit is in (type widening declared up top — benign alone)
       if (extras.nonEmpty || structWide.nonEmpty || numWide.nonEmpty) {
-        val base = current.schema
+        val base = currentLogical.schema
         val widened = org.apache.spark.sql.types.StructType(
           ColumnMapping.applyWideningToSchema(base, numWideMap)
             .map(f => structWide.get(f.name.toLowerCase(java.util.Locale.ROOT))

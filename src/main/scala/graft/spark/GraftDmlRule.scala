@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{broadcast, col, when}
+import org.apache.spark.sql.functions.{col, when}
 import org.apache.spark.sql.types.StructType
 
 import graft.core.TableDefinition
@@ -667,8 +667,7 @@ final case class GraftUpdateCommand(
       session, binding.log, defn, None)
     if (current.columns.isEmpty) return Seq.empty // never written
     val byName = assignments.map { case (n, e) => n.toLowerCase -> GraftDml.column(e.expr) }.toMap
-    val partColsDef = defn.partitionSchema.columns
-    val names = partColsDef.map(_.name)
+    val names = defn.partitionSchema.columns.map(_.name)
     val partSet = names.map(_.toLowerCase).toSet
     // partition-column assignment = ROW MIGRATION: updated rows leave
     // their partitions for whatever their new values say. Copy-on-write
@@ -681,27 +680,21 @@ final case class GraftUpdateCommand(
     // entry (and a snapshot table a full identical rewrite) for a no-op.
     // The partitioned branches derive this from their own single
     // touched-set pass (the GraftDeleteCommand shape — collecting the
-    // #partitions-row set both answers the no-match probe and feeds the
-    // broadcast, ONE scan instead of a probe scan + a broadcast-side
-    // scan); snapshots keep the explicit probe.
+    // #partitions-row set both answers the no-match probe and names the
+    // dirs the rewrite reads); snapshots keep the explicit probe.
     if (!migrating && defn.isSnapshot && current.where(cond).isEmpty)
       return Seq.empty
     val (scope, alsoRemove, cached) =
       if (defn.isSnapshot) (current, Nil, None)
       else if (!migrating) {
-        // touched-partition set is #partitions rows — metadata-sized,
-        // safe to broadcast at any scale
-        val touchedRows = current.where(cond)
-          .select(names.map(c0 => col(c0).cast("string")): _*).distinct().collect()
-        if (touchedRows.isEmpty) return Seq.empty
-        val touchedDf = session.createDataFrame(
-          java.util.Arrays.asList(touchedRows: _*),
-          StructType(names.map(n0 =>
-            org.apache.spark.sql.types.StructField(
-              n0, org.apache.spark.sql.types.StringType))))
-        (current.join(broadcast(touchedDf), names.toSeq, "left_semi"), Nil, None)
+        val touched = VersionContext.partitionValues(current.where(cond), defn.partitionSchema)
+        if (touched.isEmpty) return Seq.empty
+        (ColumnMapping.readPartitions(session, binding.log, defn, touched), Nil, None)
       } else {
         import graft.core.{ColumnValue, Partition, PartitionedTableVersion}
+        def partitions(values: Iterable[List[String]]): List[Partition] =
+          values.toList.map(vs => Partition(
+            defn.partitionSchema.columns.zip(vs).map { case (c0, v) => ColumnValue(c0, v) }))
         // ONE DV-aware pass over the matched rows projects BOTH the
         // source and the post-assignment destination partition values
         // (a two-sided distinct — #partition-pairs rows back, metadata-
@@ -720,15 +713,11 @@ final case class GraftUpdateCommand(
             "rows need a concrete partition to land in"))
         val srcVals = pairs.map(r => names.indices.map(r.getString).toList).toSet
         val dstSet = pairs.map(r => names.indices.map(i => r.getString(n + i)).toList).toSet
-        val schema = StructType(names.map(c0 =>
-          org.apache.spark.sql.types.StructField(c0, org.apache.spark.sql.types.StringType)))
-        val wantedDf = session.createDataFrame(
-          java.util.Arrays.asList(
-            (srcVals ++ dstSet).toSeq.map(vs => Row.fromSeq(vs)): _*), schema)
         // persisted ONCE: the carried-partition probe below and the final
         // rewrite both read this scoped scan — without the persist each
-        // would be its own full DV-aware pass over the wanted partitions
-        val scoped = current.join(broadcast(wantedDf), names.toSeq, "left_semi")
+        // would be its own DV-aware pass over the wanted partitions
+        val scoped = ColumnMapping.readPartitions(
+          session, binding.log, defn, partitions(srcVals ++ dstSet))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // a source partition with no carried row and no arriving row is
         // EMPTIED — its RemovePartition rides the same atomic commit
@@ -740,9 +729,8 @@ final case class GraftUpdateCommand(
           case PartitionedTableVersion(pvs) => pvs.keySet
           case _                            => Set.empty[Partition]
         }
-        val emptied = srcVals.toList
-          .filter(vs => !dstSet.contains(vs) && !carried.contains(vs))
-          .map(vs => Partition(partColsDef.zip(vs).map { case (c0, v) => ColumnValue(c0, v) }))
+        val emptied = partitions(
+          srcVals.filter(vs => !dstSet.contains(vs) && !carried.contains(vs)))
           .filter(before.contains)
         (scoped, emptied, Some(scoped))
       }
@@ -768,16 +756,16 @@ final case class GraftUpdateCommand(
   * matched produces no surviving rows — its `RemovePartition` op rides
   * the same atomic rebase-checked commit (`alsoRemove`), so there is no
   * window where the emptied partition still serves its rows and no racer
-  * can resurrect it unnoticed. Reading `current` twice is safe here: it
-  * scans immutable version dirs, not a re-runnable source query. */
+  * can resurrect it unnoticed. The rewrite reads only the touched
+  * partitions' dirs ([[ColumnMapping.readPartitions]]); a table-wide scan
+  * runs once, for the touched set. */
 final case class GraftDeleteCommand(
     defn: TableDefinition,
     binding: GraftTableCatalog.Binding,
     condition: Detached) extends LeafRunnableCommand {
 
   override def run(session: SparkSession): Seq[Row] = GeneratedColumns.withSqlNullFill {
-    import graft.core.{ColumnValue, Partition, PartitionedTableVersion}
-    import graft.core.TableVersions.{TableOperation, TableUpdate}
+    import graft.core.PartitionedTableVersion
     val cond = GraftDml.column(condition.expr)
     // MERGE-ON-READ mode (`SET spark.graft.dml.mergeOnRead=true`): hide the
     // matched rows behind a deletion-vector sidecar + empty-ops commit
@@ -818,23 +806,9 @@ final case class GraftDeleteCommand(
     // CURRENT scheme's dirs only — a mixed fold's old-era copies would
     // survive and resurrect the deleted rows; refuse until consolidateEras
     PartitionEvolution.requireUniformFold(binding.log, defn, "DELETE (SQL)")
-    val partCols = defn.partitionSchema.columns
-    val names = partCols.map(_.name)
-    val touchedRows = current.where(cond)
-      .select(names.map(c => col(c).cast("string")): _*).distinct().collect()
-    if (touchedRows.isEmpty) return Seq.empty // nothing matched — no commit
-    val touched = touchedRows.map { r =>
-      Partition(partCols.zipWithIndex.map { case (c, i) => ColumnValue(c, r.getString(i)) })
-    }.toList
-    // schema built in the SAME order the rows were selected (partition
-    // schema order, all strings after the cast) — filtering current.schema
-    // would follow the data's column order instead and misalign values for
-    // multi-column partition schemas
-    val touchedDf = current.sparkSession.createDataFrame(
-      java.util.Arrays.asList(touchedRows: _*),
-      StructType(names.map(n =>
-        org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType))))
-    val scope = current.join(broadcast(touchedDf), names.toSeq, "left_semi")
+    val touched = VersionContext.partitionValues(current.where(cond), defn.partitionSchema)
+    if (touched.isEmpty) return Seq.empty // nothing matched — no commit
+    val scope = ColumnMapping.readPartitions(session, binding.log, defn, touched)
     val before = binding.log.currentVersion(defn.name) match {
       case PartitionedTableVersion(pvs) => pvs
       case other                        => sys.error(s"row-level delete does not apply to $other")

@@ -1679,7 +1679,7 @@ final case class GraftStageInsertCommand(
     AttributeReference("staged", IntegerType, nullable = false)())
 
   override def run(session: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     import graft.spark.VersionContext.DatasetVersionOps
     val (binding, defn) = GraftMaintenanceSql.resolve(session, parts)
     val ctx = VersionContext(GraftV2Table.metastoreFor(binding, defn))
@@ -1708,9 +1708,10 @@ final case class GraftStageInsertCommand(
       else {
         PartitionEvolution.requireUniformFold(
           binding.log, defn, "STAGE INSERT INTO")
-        val partCols = defn.partitionSchema.columns.map(_.name)
-        val touched = df.select(partCols.map(col): _*).distinct()
-        current.join(broadcast(touched), partCols.toSeq, "left_semi")
+        // the batch's partitions name the dirs to carry: a DV-aware,
+        // overlay-aware read of exactly those
+        ColumnMapping.readPartitions(session, binding.log, defn,
+          VersionContext.partitionValues(df, defn.partitionSchema))
           .unionByName(df, allowMissingColumns = true)
       }
     val mode = if (overwrite) "OVERWRITE" else "INTO"

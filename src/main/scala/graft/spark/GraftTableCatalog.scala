@@ -1030,11 +1030,14 @@ private[spark] object GraftV2Table {
     *    the partition re-lands — in LOGICAL names, aligned to the batch's
     *    columns: an ADD COLUMN's new column is NULL in them) are written
     *    into the same dirs by a second write job.
-    * A crash before the commit leaves only unreferenced dirs, which VACUUM
-    * reclaims. */
-  private def carry(
+    * `conform` adapts the row tier's carried rows to the batch before the
+    * alignment (COPY INTO lifts narrow structs to an evolving batch's wide
+    * shape). A crash before the commit leaves only unreferenced dirs, which
+    * VACUUM reclaims. */
+  private[spark] def carry(
       spark: SparkSession, ctx: VersionContext, defn: TableDefinition,
-      batch: DataFrame, readCommit: CommitId, staged: VersionContext.StagedCommit): Unit = {
+      batch: DataFrame, readCommit: CommitId, staged: VersionContext.StagedCommit,
+      conform: DataFrame => DataFrame = identity): Unit = {
     import org.apache.hadoop.fs.{FileSystem, Path => HPath}
     val log = ctx.metastore.tableVersions
     val ops = staged.update.operations
@@ -1075,7 +1078,7 @@ private[spark] object GraftV2Table {
         case TableOperation.AddTableVersion(v)        => v
       }
       VersionContext.writeVersion(
-        batch.limit(0).unionByName(current, allowMissingColumns = true), ctx, defn,
+        batch.limit(0).unionByName(conform(current), allowMissingColumns = true), ctx, defn,
         staged.update.metadata.userId, staged.update.metadata.message, into = into)
       ()
     }

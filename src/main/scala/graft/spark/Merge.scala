@@ -363,9 +363,7 @@ object Merge {
                 spark, log, table, wanted)
               if (df.columns.isEmpty) df
               else df.withColumnRenamed(f, MorFileCol).withColumnRenamed(p, MorPosCol)
-            } else ColumnMapping.applyLogical(
-              DeletionVectors.readPartitions(spark, log, table, wanted),
-              spark, log, table, None)
+            } else ColumnMapping.readPartitions(spark, log, table, wanted)
           }
 
         // ---- the clause join: one shuffled full-outer equi-join ----

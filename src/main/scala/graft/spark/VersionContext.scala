@@ -361,14 +361,18 @@ object VersionContext {
     * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`), a narrow
     * `coalesce(1)` yields the same bounded layout the rebalance would —
     * at most one file per partition dir — without paying an extra
-    * exchange + AQE stage per commit. The estimate is safe to trust in
-    * that direction: it comes from exact sources (parquet leaf sizes,
-    * cached-relation sizes, local relations) or conservative
-    * OVER-estimates (filters and joins keep child sizes; aggregates
-    * ignore group reduction), so a genuinely large input cannot slip
-    * into the single-task branch — unknown-size sources (streaming
-    * batches) estimate huge and keep the rebalance. Bytes-driven, so
-    * the branch taken is identical at any core count. */
+    * exchange + AQE stage per commit. The estimate starts from exact
+    * leaf sizes (parquet leaf sizes, cached-relation sizes, local
+    * relations), and unknown-size sources (streaming batches) estimate
+    * huge and keep the rebalance. It is NOT a guaranteed over-estimate:
+    * default statistics scale a `Project` by the ratio of output to
+    * input row width, and with CBO on, filter and aggregate estimates
+    * shrink below the child's size — a narrowing projection or a
+    * selective filter over a large scan can land in the single-task
+    * branch. Copy-on-write DML scopes read only the touched partitions'
+    * dirs ([[ColumnMapping.readPartitions]]), so their leaves are the touched
+    * partitions' real size, not the whole table's. Bytes-driven, so the
+    * branch taken is identical at any core count. */
   private[spark] def distributeForWrite(
       df: org.apache.spark.sql.DataFrame,
       partitionCols: Seq[String]): org.apache.spark.sql.DataFrame = {

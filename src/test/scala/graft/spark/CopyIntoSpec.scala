@@ -65,6 +65,31 @@ class CopyIntoSpec extends AnyFunSuite with Matchers {
       .select("id").as[Long].collect().sorted shouldBe Array(1L, 2L, 3L, 4L)
   }
 
+  test("a COPY INTO that loses its commit race on a touched partition throws instead of dropping the other load") {
+    val hooked = new HookedTableVersions(new InMemoryTableVersions)
+    val ctx = VersionContext(VersionedMetastore(hooked, new InMemoryMetastore))
+    val t = TableDefinition(
+      TableName("db", "copy_race"),
+      Files.createTempDirectory("graft_copy_race").toUri,
+      PartitionSchema(List(PartitionColumn("grp"))), FileFormat.Parquet)
+    ctx.init(t, user, UpdateMessage("init"))
+    def source(prefix: String, rows: Seq[(Long, String)]): String = {
+      val src = Files.createTempDirectory(s"graft_copy_race_$prefix")
+      land(src, prefix, rows)
+      src.toString
+    }
+    CopyInto.ingest(spark, ctx, t, source("first", Seq((1L, "x"))), "parquet", user)
+    val other = source("other", Seq((2L, "x")))
+    // the other load lands inside this load's commit window, on its partition
+    hooked.beforeAppend = _ => {
+      CopyInto.ingest(spark, ctx, t, other, "parquet", user); ()
+    }
+    intercept[TableVersions.ConcurrentWriteException](
+      CopyInto.ingest(spark, ctx, t, source("late", Seq((3L, "x"))), "parquet", user))
+    VersionedReader(spark, hooked).read(t)
+      .select("id").as[Long].collect().sorted shouldBe Array(1L, 2L)
+  }
+
   test("reserved characters in source file names are rejected up front (history-format safety)") {
     val log = new InMemoryTableVersions
     val ctx = VersionContext(VersionedMetastore(log, new InMemoryMetastore))

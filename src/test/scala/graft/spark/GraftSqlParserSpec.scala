@@ -77,4 +77,28 @@ class GraftSqlParserSpec extends AnyFunSuite with Matchers {
         "FORMAT_OPTIONS ('header' = 'true' garbage)").collect())
       .getMessage should include("FORMAT_OPTIONS")
   }
+
+  test("STAGE INSERT INTO carries the touched partition's visible rows; COMMIT serves them beside the batch") {
+    val (ctx, log, t) = setup("graftstage", "staged")
+    Seq(Event(1, "a", "2024-01-01"), Event(2, "b", "2024-01-01"), Event(3, "c", "2024-01-02"))
+      .toDS().versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
+    spark.conf.set("spark.graft.dml.mergeOnRead", "true")
+    try spark.sql("DELETE FROM graftstage.db.staged WHERE id = 2")
+    finally spark.conf.unset("spark.graft.dml.mergeOnRead")
+    val untouched = log.currentVersion(t.name) match {
+      case PartitionedTableVersion(pvs) => pvs.filter(_._1.columnValues.head.value == "2024-01-02")
+      case other                        => fail(s"not partitioned: $other")
+    }
+    spark.sql("BEGIN GRAFT TRANSACTION")
+    spark.sql("STAGE INSERT INTO graftstage.db.staged " +
+      "SELECT 4L AS id, 'd' AS kind, '2024-01-01' AS date")
+    spark.sql("COMMIT GRAFT TRANSACTION")
+    spark.table("graftstage.db.staged").select("id", "kind", "date")
+      .as[(Long, String, String)].collect().sortBy(_._1) shouldBe Array(
+        (1L, "a", "2024-01-01"), (3L, "c", "2024-01-02"), (4L, "d", "2024-01-01"))
+    log.currentVersion(t.name) match {
+      case PartitionedTableVersion(pvs) => pvs.toSeq should contain allElementsOf untouched
+      case other                        => fail(s"not partitioned: $other")
+    }
+  }
 }

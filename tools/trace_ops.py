@@ -4,9 +4,11 @@
     python3 tools/trace_ops.py PARENT.trace.json CHANGE.trace.json
 
 For every op kind (class/name) it prints, for both runs, the op count, the
-median wall time, the Spark jobs per op and the median summed job wall per
-op (jobs are matched to ops by the `op-<id>` job group). A kind whose jobs
-per op rose is marked `+JOB`; the exit code is 1 when any kind is.
+median wall time, the Spark jobs per op, the Spark tasks per op and the
+median summed job wall per op (jobs are matched to ops by the `op-<id>` job
+group). Tasks show a removed shuffle stage even where wall time is noisy. A
+kind whose jobs per op rose is marked `+JOB`; the exit code is 1 when any
+kind is.
 """
 import json
 import statistics
@@ -17,28 +19,30 @@ def kinds(path):
     doc = json.load(open(path))
     jobs = {}
     for j in doc["jobs"]:
-        jobs.setdefault(j["group"], []).append(j["end"] - j["start"])
+        jobs.setdefault(j["group"], []).append((j["end"] - j["start"], j["tasks"]))
     out = {}
     for op in doc["ops"]:
         if op["cls"] == "check" or not op["ok"]:
             continue
         js = jobs.get(f"op-{op['id']}", [])
-        out.setdefault(f"{op['cls']}/{op['name']}", []).append((op["wall_ms"], len(js), sum(js)))
+        out.setdefault(f"{op['cls']}/{op['name']}", []).append(
+            (op["wall_ms"], len(js), sum(w for w, _ in js), sum(t for _, t in js)))
     return out
 
 
 def cols(ops):
     if not ops:
-        return f"{'-':>4} {'-':>8} {'-':>6} {'-':>8}"
+        return f"{'-':>4} {'-':>8} {'-':>6} {'-':>6} {'-':>8}"
     wall = statistics.median(o[0] for o in ops)
     jobs = sum(o[1] for o in ops) / len(ops)
+    tasks = sum(o[3] for o in ops) / len(ops)
     job_ms = statistics.median(o[2] for o in ops)
-    return f"{len(ops):>4} {wall:>8.1f} {jobs:>6.2f} {job_ms:>8.1f}"
+    return f"{len(ops):>4} {wall:>8.1f} {jobs:>6.2f} {tasks:>6.1f} {job_ms:>8.1f}"
 
 
 def main(parent, change):
     a, b = kinds(parent), kinds(change)
-    head = f"{'n':>4} {'wall_ms':>8} {'jobs':>6} {'job_ms':>8}"
+    head = f"{'n':>4} {'wall_ms':>8} {'jobs':>6} {'tasks':>6} {'job_ms':>8}"
     print(f"{'op kind':<34} {head}   {head}")
     gained = False
     for k in sorted(set(a) | set(b)):
