@@ -45,9 +45,6 @@ object ChangeFeed {
   val UpdatePre = "update_preimage"
   val UpdatePost = "update_postimage"
 
-  private val FileCol = "__cf_file"
-  private val PosCol = "__cf_pos"
-
   /** The change feed from `from` (exclusive; None = the pre-init void, so
     * everything visible at `to` is an insert) to `to` (inclusive). The
     * feed speaks the LOGICAL schema of the `to` state ([[ColumnMapping]]):
@@ -184,7 +181,6 @@ object ChangeFeed {
           "boundary: the two eras reconstruct different logical schemas — " +
           "re-anchor at-or-after the boundary commit, or rebuild the " +
           "consumer (REFRESH ... FULL)")
-    val reader = VersionedReader(spark, log)
     val vFrom: TableVersion = from
       .map(log.versionAt(table.name, _))
       .getOrElse(emptyStateLike(log.versionAt(table.name, to)))
@@ -237,65 +233,47 @@ object ChangeFeed {
         contribs
       case None => RowOverlay.contributions(spark, log, table, Some(to))
     }
-    val widenedTo = ColumnMapping.widenedTypesAt(spark, log, table, Some(to))
+    // one scan of a state's sources at `at`: physical names, the state's
+    // own vectors applied unless `vectors` says otherwise
+    def scan(
+        at: CommitId,
+        dirs: TableVersion = VersionedScan.NoDirs,
+        overlays: List[RowOverlay.Contribution] = Nil,
+        vectors: VersionedScan.Vectors = VersionedScan.Vectors.Live): DataFrame =
+      VersionedScan(
+        spark, log, table, Some(at), dirs = Some(dirs), overlays = Some(overlays),
+        vectors = vectors)
     val overlayInserts: Option[DataFrame] = {
-      val frames = contribsTo.filterNot(c => fromAnchors.contains(c.anchor)).map(c =>
-        RowOverlay.loadLeaves(spark, log, table, c, c.leaves, Some((FileCol, PosCol)), widenedTo))
-      if (frames.isEmpty) None
-      else {
-        val unioned = frames.reduce(_.unionByName(_, allowMissingColumns = true))
-        val visible = pairsTo match {
-          case None => unioned
-          case Some(dv) =>
-            unioned.join(
-              dv, unioned(FileCol) === dv("file") && unioned(PosCol) === dv("pos"), "left_anti")
-        }
-        Some(tag(visible.drop(FileCol, PosCol), Insert))
-      }
+      val inRange = contribsTo.filterNot(c => fromAnchors.contains(c.anchor))
+      if (inRange.isEmpty) None else Some(tag(scan(to, overlays = inRange), Insert))
     }
     val overlayDeletes: Option[DataFrame] = from.flatMap { f =>
       val contribsFrom = RowOverlay.contributions(spark, log, table, Some(f))
       if (contribsFrom.isEmpty) None
       else {
         val pvsOfF = log.versionAt(table.name, f)
-        val pvsOfTo = vTo
-        def leafAlive(p: Option[Partition]): Boolean = (pvsOfF, pvsOfTo) match {
+        def leafAlive(p: Option[Partition]): Boolean = (pvsOfF, vTo) match {
           case (SnapshotTableVersion(a), SnapshotTableVersion(b)) => a == b
           case (PartitionedTableVersion(pa0), PartitionedTableVersion(pb0)) =>
             p.forall(pp => pa0.get(pp) == pb0.get(pp) && pa0.contains(pp))
           case _ => false
         }
-        val widenedFrom = ColumnMapping.widenedTypesAt(spark, log, table, Some(f))
-        val frames = contribsFrom.flatMap { c =>
-          val (kept, died) = c.leaves.partition { case (p, _) => leafAlive(p) }
-          // a died leaf's every from-visible row is a delete (the overlay
-          // contribution ended with the partition's replacement/removal);
-          // a kept leaf's rows delete only when newly vector-hidden
-          val diedRows =
-            if (died.isEmpty) None
-            else {
-              val d = RowOverlay.loadLeaves(
-                spark, log, table, c, died, Some((FileCol, PosCol)), widenedFrom)
-              Some(pairsFrom match {
-                case None => d
-                case Some(dv) =>
-                  d.join(dv, d(FileCol) === dv("file") && d(PosCol) === dv("pos"), "left_anti")
-              })
-            }
-          val keptRows = (kept, newHidden) match {
-            case (Nil, _) | (_, None) => None
-            case (ks, Some(nh)) =>
-              val k = RowOverlay.loadLeaves(
-                spark, log, table, c, ks, Some((FileCol, PosCol)), widenedFrom)
-              Some(k.join(
-                nh, k(FileCol) === nh("file") && k(PosCol) === nh("pos"), "left_semi"))
-          }
-          diedRows.toList ++ keptRows.toList
+        // a died leaf's every from-visible row is a delete (the overlay
+        // contribution ended with the partition's replacement/removal);
+        // a kept leaf's rows delete only when newly vector-hidden
+        val split = contribsFrom.map(c => c.leaves.partition { case (p, _) => leafAlive(p) })
+        val died = contribsFrom.zip(split).collect {
+          case (c, (_, d)) if d.nonEmpty => c.copy(leaves = d)
         }
-        if (frames.isEmpty) None
-        else Some(tag(
-          frames.reduce(_.unionByName(_, allowMissingColumns = true)).drop(FileCol, PosCol),
-          Delete))
+        val kept = contribsFrom.zip(split).collect {
+          case (c, (k, _)) if k.nonEmpty => c.copy(leaves = k)
+        }
+        val diedRows = if (died.isEmpty) None else Some(scan(f, overlays = died))
+        val keptRows = newHidden.filter(_ => kept.nonEmpty)
+          .map(nh => scan(f, overlays = kept, vectors = VersionedScan.Vectors.Only(nh)))
+        (diedRows.toList ++ keptRows.toList)
+          .reduceOption(_.unionByName(_, allowMissingColumns = true))
+          .map(tag(_, Delete))
       }
     }
     (vFrom, vTo) match {
@@ -310,19 +288,17 @@ object ChangeFeed {
 
       case (SnapshotTableVersion(_), SnapshotTableVersion(b)) =>
         // version unchanged: DV hiding and overlay appends. The hidden-row
-        // scan reads the RAW state at `to` (overlay-inclusive), so it
-        // already covers newly-hidden overlay rows — only the in-range
-        // overlay INSERTS need adding.
-        // the raw state at `to` can be a Union (base scan + overlay
-        // leaves) and Union carries no _metadata — take the pointer-
-        // attached read, which stamps (file, pos) per scan BEFORE unioning
+        // scan reads the state at `to` overlay-inclusive, so it already
+        // covers newly-hidden overlay rows — only the in-range overlay
+        // INSERTS need adding.
         val dvDel = newHidden
           .filter(_ => b != Version.Unversioned)
           .map(nh => tag(
-            hiddenRowsPointed(reader.readPointed(table, Some(to), FileCol, PosCol), nh),
+            VersionedScan(
+              spark, log, table, Some(to), vectors = VersionedScan.Vectors.Only(nh)),
             Delete))
         (dvDel.toList ++ overlayInserts.toList) match {
-          case Nil          => emptyFeed(spark, reader, table, to)
+          case Nil          => emptyFeed(spark, log, table, to)
           case head :: rest =>
             rest.foldLeft(head)(_.unionByName(_, allowMissingColumns = true))
         }
@@ -334,12 +310,11 @@ object ChangeFeed {
 
         val inserts =
           if (changedNew.isEmpty) None
-          else Some(tag(
-            dvApply(reader.materializeSubset(table, changedNew, to), pairsTo), Insert))
+          else Some(tag(scan(to, dirs = PartitionedTableVersion(changedNew)), Insert))
         val deletesOld =
           if (changedOld.isEmpty) None
-          else Some(tag(dvApply(
-            reader.materializeSubset(table, changedOld, from.getOrElse(to)), pairsFrom), Delete))
+          else Some(tag(
+            scan(from.getOrElse(to), dirs = PartitionedTableVersion(changedOld)), Delete))
         // rows newly hidden in partitions that did NOT move: prune to the
         // partitions that own an affected file (driver-side on the
         // metadata-sized distinct-file list), then semi-join
@@ -354,12 +329,15 @@ object ChangeFeed {
             }
             if (affected.isEmpty) None
             else Some(tag(
-              hiddenRows(reader.materializeSubset(table, affected, to), nh), Delete))
+              scan(
+                to, dirs = PartitionedTableVersion(affected),
+                vectors = VersionedScan.Vectors.Only(nh)),
+              Delete))
           }
         }
         (deletesOld.toList ++ dvDeletes.toList ++ inserts.toList ++
           overlayDeletes.toList ++ overlayInserts.toList) match {
-          case Nil          => emptyFeed(spark, reader, table, to)
+          case Nil          => emptyFeed(spark, log, table, to)
           case head :: rest =>
             rest.foldLeft(head)(_.unionByName(_, allowMissingColumns = true))
         }
@@ -384,53 +362,14 @@ object ChangeFeed {
   private def tag(df: DataFrame, tpe: String): DataFrame =
     df.withColumn(ChangeTypeCol, lit(tpe))
 
-  /** The rows of `scan` whose `(file, pos)` pointer is in `pairs` —
-    * `scan` must be a DIRECT file scan (never a Union: Union carries no
-    * `_metadata`; overlay-inclusive callers use [[hiddenRowsPointed]]). */
-  private def hiddenRows(scan: DataFrame, pairs: DataFrame): DataFrame = {
-    if (scan.columns.isEmpty) return scan
-    val ptr = scan.select(
-      col("*"),
-      col("_metadata.file_path").as(FileCol),
-      col("_metadata.row_index").as(PosCol))
-    hiddenRowsPointed(ptr, pairs)
-  }
-
-  /** [[hiddenRows]] over a scan that already carries `(FileCol, PosCol)`
-    * pointers — the shape [[VersionedReader.readPointed]] produces, which
-    * stamps pointers per scan before any overlay union. */
-  private def hiddenRowsPointed(ptr: DataFrame, pairs: DataFrame): DataFrame = {
-    if (ptr.columns.isEmpty) return ptr
-    ptr
-      .join(pairs, ptr(FileCol) === pairs("file") && ptr(PosCol) === pairs("pos"), "left_semi")
-      .drop(FileCol, PosCol)
-  }
-
-  /** `scan` minus the rows whose pointer is in `pairs` (merge-on-read). */
-  private def dvApply(scan: DataFrame, pairs: Option[DataFrame]): DataFrame =
-    pairs match {
-      case None => scan
-      case Some(dv) =>
-        if (scan.columns.isEmpty) scan
-        else {
-          val ptr = scan.select(
-            col("*"),
-            col("_metadata.file_path").as(FileCol),
-            col("_metadata.row_index").as(PosCol))
-          ptr
-            .join(dv, ptr(FileCol) === dv("file") && ptr(PosCol) === dv("pos"), "left_anti")
-            .drop(FileCol, PosCol)
-        }
-    }
-
   /** Zero rows, schema = table columns + `_change_type` (quiet ranges must
     * keep resolving downstream references). */
   private def emptyFeed(
       spark: SparkSession,
-      reader: VersionedReader,
+      log: TableVersions,
       table: TableDefinition,
       to: CommitId): DataFrame = {
-    val base = reader.readAsOf(table, to)
+    val base = VersionedReader(spark, log).readAsOf(table, to)
     if (base.columns.isEmpty) base else tag(base.limit(0), Insert).limit(0)
   }
 

@@ -455,8 +455,8 @@ object ColumnMapping {
     if (widened.isEmpty) schema else walk(schema, "")
   }
 
-  /** Apply widening as CASTS on an already-loaded frame (overlay leaves,
-    * write batches) — nested keys cast the whole owning struct to its
+  /** Apply widening as CASTS on an already-loaded frame (a write batch)
+    * — nested keys cast the whole owning struct to its
     * widened type (field count unchanged, so a plain struct cast serves).
     * Identity for columns the map doesn't touch. */
   private[spark] def applyWideningCasts(
@@ -719,31 +719,18 @@ object ColumnMapping {
         df.select(cols: _*)
     }
 
-  /** The mapped (logical-schema) read at `at` — merge-on-read deletes
-    * applied, then the mapping of the addressed commit: a read as of a
-    * pre-rename commit shows the old names, a post-drop read stops
-    * projecting the column. */
+  /** The mapped (logical-schema) read at `at` ([[VersionedScan]]) —
+    * merge-on-read deletes applied, then the mapping of the addressed
+    * commit: a read as of a pre-rename commit shows the old names, a
+    * post-drop read stops projecting the column. */
   def read(
       spark: SparkSession,
       log: TableVersions,
       table: TableDefinition,
       asOf: Option[CommitId] = None,
       mergeSchema: Boolean = false): DataFrame =
-    applyLogical(
-      DeletionVectors.read(spark, log, table, asOf, mergeSchema),
-      spark, log, table, asOf)
-
-  /** [[read]] of the current state scoped to `parts` — a partition-granular
-    * rewrite's input: the current rows of exactly the version dirs it
-    * replaces (vectors applied, overlay rows included, logical names). Its
-    * leaves are those dirs, so the write's size gate
-    * ([[VersionContext.distributeForWrite]]) sees their real size. */
-  def readPartitions(
-      spark: SparkSession,
-      log: TableVersions,
-      table: TableDefinition,
-      parts: Seq[Partition]): DataFrame =
-    applyLogical(DeletionVectors.readPartitions(spark, log, table, parts), spark, log, table, None)
+    VersionedScan(
+      spark, log, table, asOf, names = VersionedScan.Names.AtState, mergeSchema = mergeSchema)
 
   /** The PHYSICAL (in-file) name behind logical `column` at `at`
     * (default: current) — identity when no mapping entry covers it.

@@ -81,12 +81,11 @@ object Compaction {
     // sidecar exists) keeps OPTIMIZE from resurrecting merge-on-read
     // deleted rows into the rewritten files — compaction is exactly where
     // deletion vectors get absorbed into the physical layout.
-    val current = ColumnMapping.applyLogical(
-      if (partitions.isEmpty)
-        DeletionVectors.read(spark, log, table, Some(readCommit))
-      else
-        DeletionVectors.readPartitions(spark, log, table, partitions),
-      spark, log, table, None)
+    val current = VersionedScan(
+      spark, log, table,
+      at = if (partitions.isEmpty) Some(readCommit) else None,
+      partitions = if (partitions.isEmpty) None else Some(partitions.toSet),
+      names = VersionedScan.Names.AtHead)
     val packed =
       if (table.isSnapshot) current.coalesce(maxFiles)
       else if (splitsByPartition.exists(_._2 > 1)) {

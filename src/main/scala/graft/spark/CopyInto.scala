@@ -133,8 +133,7 @@ object CopyInto {
     // derives from it (the pinned-schema fallback, the batch's
     // alignment) enters the logical->physical write pipeline, so a raw
     // (physical-named) read would misresolve renamed columns
-    lazy val currentLogical = ColumnMapping.applyLogical(
-      DeletionVectors.read(spark, log, table), spark, log, table, None)
+    lazy val currentLogical = ColumnMapping.read(spark, log, table)
     val autoMerge =
       TableProperties.effectiveFlag(spark, log, table, TableProperties.AutoMergeSchema)
     val reader0 = spark.read.format(format).options(options)

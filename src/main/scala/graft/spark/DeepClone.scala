@@ -99,8 +99,8 @@ object DeepClone {
       // VERSION AS OF load of the source would declare) — a raw
       // physical-named copy of a renamed source would NULL-blank the
       // renamed column under the clone's declared schema.
-      val rows = ColumnMapping.applyLogical(
-        DeletionVectors.read(spark, log, src, Some(at)), spark, log, src, None)
+      val rows = VersionedScan(
+        spark, log, src, Some(at), names = VersionedScan.Names.AtHead)
       val message = UpdateMessage(
         s"deep clone state of ${src.name.fullyQualifiedName} @ ${at.id}")
       val state =

@@ -66,8 +66,6 @@ import graft.core.TableVersions.{CommitId, TableOperation, TableUpdate, TableUpd
  */
 object DeletionVectors {
 
-  private val FileCol = "__dv_file"
-  private val PosCol = "__dv_pos"
   private val SeqCol = "__dv_seq"
 
   /** Per-file tombstone position: after latest-wins resolution, a group
@@ -113,12 +111,12 @@ object DeletionVectors {
     if (dirs.isEmpty) None
     else if (dirs.sizeIs == 1)
       Some(
-        spark.read.parquet(dirs.head)
+        readSidecar(spark, dirs.head)
           .where(col("pos") >= 0L).select(col("file"), col("pos")))
     else {
       val unioned = dirs.zipWithIndex
         .map { case (d, i) =>
-          spark.read.parquet(d).select(col("file"), col("pos"), lit(i).as(SeqCol))
+          readSidecar(spark, d).select(col("file"), col("pos"), lit(i).as(SeqCol))
         }
         .reduce(_ unionByName _)
       val w = Window.partitionBy(col("file"))
@@ -228,7 +226,7 @@ object DeletionVectors {
     // pairs, a dead/tombstoned group by a tombstone — otherwise the older
     // sidecar's entry would become "latest" again for that file
     val mentioned = dirs
-      .map(d => spark.read.parquet(d).select(col("file")))
+      .map(d => readSidecar(spark, d).select(col("file")))
       .reduce(_ union _)
       .distinct()
     val livePairs = resolvePairs(spark, log, table, Some(anchor))
@@ -293,6 +291,12 @@ object DeletionVectors {
       entry
     }
 
+  /** One pair sidecar's rows, read under its fixed schema: every read of
+    * a state with live vectors resolves its sidecars, and a footer
+    * inference would cost a Spark job per dir. */
+  private def readSidecar(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema("file STRING, pos BIGINT").parquet(dir)
+
   /** Write the pair sidecar of the not-yet-landed commit `anchor` — the
     * one write its dir ever gets. The caller keeps the per-file
     * completeness contract: pairs for a file this sidecar mentions must be
@@ -320,39 +324,6 @@ object DeletionVectors {
       ()
     } catch { case _: java.io.IOException => () }
 
-  /** The VISIBLE state (vectors applied, logical column names) with the
-    * `(file, pos)` pointers still attached under the engine's internal
-    * aliases — what row-level preimage collectors (the merge-on-read
-    * UPDATE, [[RowOverlay.update]]) match predicates against. Pointer
-    * columns pass through the mapping untouched (never mapped). */
-  private[spark] def readVisiblePointed(
-      spark: SparkSession,
-      log: TableVersions,
-      table: TableDefinition,
-      asOf: Option[CommitId]): (DataFrame, String, String) =
-    (ColumnMapping.applyLogical(
-      readWithPointers(spark, log, table, asOf), spark, log, table, asOf),
-      FileCol, PosCol)
-
-  /** Partition-scoped twin of [[readVisiblePointed]] — the merge-on-read
-    * MERGE's pruned target read. */
-  private[spark] def readPartitionsVisiblePointed(
-      spark: SparkSession,
-      log: TableVersions,
-      table: TableDefinition,
-      parts: Seq[Partition]): (DataFrame, String, String) = {
-    val reader = VersionedReader(spark, log)
-    val withPtr = reader.readPartitionsPointed(table, parts, FileCol, PosCol)
-    val dvApplied = resolvePairs(spark, log, table, None) match {
-      case None => withPtr
-      case Some(dv) =>
-        if (withPtr.columns.isEmpty) withPtr
-        else withPtr.join(
-          dv, withPtr(FileCol) === dv("file") && withPtr(PosCol) === dv("pos"), "left_anti")
-    }
-    (ColumnMapping.applyLogical(dvApplied, spark, log, table, None), FileCol, PosCol)
-  }
-
   /** Fold `newPairs` with the prior pairs of the files they touch — the
     * per-file-completeness discipline every sidecar write must keep (see
     * [[delete]]): the newest sidecar mentioning a file owns that file's
@@ -373,67 +344,17 @@ object DeletionVectors {
     }
   }
 
-  /** The DV-filtered scan WITH its `(file, pos)` pointer columns still
-    * attached — `_metadata` resolves only on the scan relation itself, so
-    * anything that needs row pointers (the delete path) must capture them
-    * here, before the anti-join. */
-  private def readWithPointers(
-      spark: SparkSession,
-      log: TableVersions,
-      table: TableDefinition,
-      asOf: Option[CommitId],
-      mergeSchema: Boolean = false): DataFrame = {
-    val reader = VersionedReader(spark, log)
-    // pointer capture happens INSIDE the reader, per era scan: `_metadata`
-    // does not resolve through the union a mixed-era fold materializes as
-    val withPtr = reader.readPointed(table, asOf, FileCol, PosCol, mergeSchema)
-    if (withPtr.columns.isEmpty) return withPtr
-    resolvePairs(spark, log, table, asOf) match {
-      case None => withPtr
-      case Some(dv) =>
-        withPtr
-          .join(dv, withPtr(FileCol) === dv("file") && withPtr(PosCol) === dv("pos"), "left_anti")
-    }
-  }
-
   /** Merge-on-read scan: the state at `asOf` (default current) minus every
-    * live `(file, pos)` vector. One shuffled anti-join (AQE broadcasts it
-    * when the vectors are small); zero extra cost when the table has no
-    * deletion vectors. */
+    * live `(file, pos)` vector ([[VersionedScan]]). One shuffled anti-join
+    * (AQE broadcasts it when the vectors are small); zero extra cost when
+    * the table has no deletion vectors. */
   def read(
       spark: SparkSession,
       log: TableVersions,
       table: TableDefinition,
       asOf: Option[CommitId] = None,
-      mergeSchema: Boolean = false): DataFrame = {
-    val df = readWithPointers(spark, log, table, asOf, mergeSchema)
-    if (df.columns.isEmpty) df else df.drop(FileCol, PosCol)
-  }
-
-  /** DV-aware partition-scoped read — what every PARTITION-GRANULAR
-    * copy-on-write rewrite (MERGE, UPDATE, DELETE, INSERT's carry-union,
-    * Z-order) must scan instead of the raw [[VersionedReader]]: a raw read
-    * would materialize DV-hidden rows into the rewritten files,
-    * RESURRECTING them. Vectors match rows by (file, pos), so a rewrite
-    * reading through here absorbs the touched partitions' vectors while
-    * the untouched partitions' sidecars keep applying to their original
-    * files — both sides stay correct with no sidecar rewrite. */
-  def readPartitions(
-      spark: SparkSession,
-      log: TableVersions,
-      table: TableDefinition,
-      parts: Seq[Partition]): DataFrame = {
-    val reader = VersionedReader(spark, log)
-    resolvePairs(spark, log, table, None) match {
-      case None => reader.readPartitions(table, parts)
-      case Some(dv) =>
-        val withPtr = reader.readPartitionsPointed(table, parts, FileCol, PosCol)
-        if (withPtr.columns.isEmpty) withPtr
-        else withPtr
-          .join(dv, withPtr(FileCol) === dv("file") && withPtr(PosCol) === dv("pos"), "left_anti")
-          .drop(FileCol, PosCol)
-    }
-  }
+      mergeSchema: Boolean = false): DataFrame =
+    VersionedScan(spark, log, table, asOf, mergeSchema = mergeSchema)
 
   /** Guard to run BEFORE [[TableVersions]] log checkpointing on a table
     * that may carry deletion vectors or overlay rows. Sidecars anchor to
@@ -508,8 +429,8 @@ object DeletionVectors {
     // rename swap leaves the old physical name meaning a different
     // logical column). Unmapped columns — the (file, pos) pointers
     // included — pass through untouched.
-    val visible = ColumnMapping.applyLogical(
-      readWithPointers(spark, log, table, None), spark, log, table, None)
+    val visible = VersionedScan(
+      spark, log, table, pointers = true, names = VersionedScan.Names.AtState)
     if (visible.columns.isEmpty) return 0L
     // stale-name guard: the analyzer's missing-reference fallback would
     // resolve a predicate naming a PRE-RENAME physical column straight
@@ -523,7 +444,7 @@ object DeletionVectors {
       .where(cond)
     val newPairs = visible
       .where(cond)
-      .select(col(FileCol).as("file"), col(PosCol).as("pos"))
+      .select(col(VersionedScan.FileCol).as("file"), col(VersionedScan.PosCol).as("pos"))
       .persist()
     try {
       val n = newPairs.count()

@@ -234,7 +234,7 @@ object FileStats {
     // AQE-sized files (hash by `file`), not one per shuffle partition
     VersionContext.distributeForWrite(
       zoneMaps(
-        VersionedReader(spark, log).readRawDirs(table), cols.map(phys),
+        versionDirs(spark, log, table, None), cols.map(phys),
         carryCols = table.partitionSchema.columns.map(_.name),
         distinctCols = distinctCols.map(phys),
         bloomCols = bloomCols.map(phys)),
@@ -420,7 +420,7 @@ object FileStats {
     val dropped = before.keySet -- now.keySet
 
     val fresh = zoneMaps(
-      VersionedReader(spark, log).readRawDirsPartitions(table, moved),
+      versionDirs(spark, log, table, Some(moved.toSet)),
       physCols, carryCols = partCols, distinctCols = physDistinct, bloomCols = physBloom)
     require(prev.columns.sorted.sameElements(fresh.columns.sorted),
       s"previous sidecar schema [${prev.columns.sorted.mkString(",")}] does not match " +
@@ -522,10 +522,19 @@ object FileStats {
           .orElse(stats.schema.find(_.name == s"dv_$column").map(_.dataType).collect {
             case org.apache.spark.sql.types.ArrayType(et, _) => et
           })
-          // bloom-only sidecar: resolve from the table's own schema — one
-          // driver-side footer read, metadata-scale, and only on this path
-          .orElse(VersionedReader(spark, log).read(table)
-            .schema.find(_.name == column).map(_.dataType))
+          // bloom-only sidecar: the state's recorded data columns
+          // ([[DataSchema]]) and its string-typed partition columns; a log
+          // with no record (an earlier version's table, adopted files)
+          // types them from the footers, as its reads do
+          .orElse(DataSchema.at(spark, log, table, asOf)
+            .map(ColumnMapping.applyWideningToSchema(
+              _, ColumnMapping.widenedTypesAt(spark, log, table, asOf)))
+            .getOrElse(VersionedScan(
+              spark, log, table, asOf, overlays = Some(Nil),
+              vectors = VersionedScan.Vectors.Raw).schema)
+            .find(_.name == column).map(_.dataType)
+            .orElse(table.partitionSchema.columns.find(_.name == column)
+              .map(_ => org.apache.spark.sql.types.StringType)))
       val bloomKeep =
         if (hasBloom)
           when(col(s"bloom_$column").isNull, lit(true))
@@ -593,43 +602,14 @@ object FileStats {
       .select("file")
       .collect()
       .map(_.getString(0))
-    val scan =
-      if (keep.isEmpty)
-        // pointer-attached empty frame: the overlay/DV plumbing below may
-        // still contribute rows, and `_metadata` cannot be captured on the
-        // (possibly unioned) public read — readPointed attaches per scan
-        VersionedReader(spark, log)
-          .readPointed(table, asOf, "__fs_file", "__fs_pos").limit(0)
-      else
-        // same string-pinned partition parsing as VersionedReader: values must
-        // round-trip verbatim (schema resolves eagerly inside load())
-        SessionConf.withConf(
-          spark, "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
-          val reader = spark.read.format(table.format.name)
-          val based =
-            if (table.isSnapshot) reader
-            else reader.option("basePath", table.location.toString)
-          based.load(keep.toIndexedSeq: _*)
-        }
     // merge-on-read state applies to PRUNED scans too: live row-overlay
     // rows union in, then DV pairs anti-join out — a raw kept-file read
-    // would resurrect DV-hidden rows into every skipping query. Zero cost
-    // when the table has no sidecars. Overlay dirs carrying a `_stats`
-    // sidecar (written at append/squash time, [[writeOverlayStats]]) get
-    // LEAF-LEVEL SKIPPING through the same predicates as the main scan;
-    // dirs without one (or whose stats predate a config change) union
-    // unpruned — a superset, still correct (the caller's row predicate
-    // applies on top, and `partitionFilter` prunes overlay rows by value).
-    val pairs = DeletionVectors.resolvePairs(spark, log, table, asOf)
-    val contribs =
-      if (scan.columns.isEmpty) Nil
-      else RowOverlay.contributions(spark, log, table, asOf)
-    val ptrCols = Some(("__fs_file", "__fs_pos"))
-    // the widening probe reads a metadata sidecar — only pay it when an
-    // overlay frame actually loads
-    val widened =
-      if (contribs.isEmpty) Map.empty[String, org.apache.spark.sql.types.DataType]
-      else ColumnMapping.widenedTypesAt(spark, log, table, asOf)
+    // would resurrect DV-hidden rows into every skipping query. Overlay
+    // dirs carrying a `_stats` sidecar (written at append/squash time,
+    // [[writeOverlayStats]]) get LEAF-LEVEL SKIPPING through the same
+    // predicates as the main scan; dirs without one (or whose stats
+    // predate a config change) union unpruned — a superset, still correct
+    // (the caller's row predicate applies on top).
     def uriPath(s: String) = new org.apache.hadoop.fs.Path(s).toUri.getPath
     def prunedLeaves(c: RowOverlay.Contribution): List[(Option[graft.core.Partition], String)] = {
       val sPath = new org.apache.hadoop.fs.Path(c.dir.stripSuffix("/") + "/_stats")
@@ -653,37 +633,29 @@ object FileStats {
         case _: org.apache.spark.sql.AnalysisException => c.leaves
       }
     }
-    val overlayFrames = contribs.flatMap { c =>
-      val leaves = prunedLeaves(c)
-      if (leaves.isEmpty) None
-      else Some(partitionFilter.foldLeft(
-        RowOverlay.loadLeaves(spark, log, table, c, leaves, ptrCols, widened))(_.where(_)))
-    }
-    val scanHasPtr = keep.isEmpty && scan.columns.nonEmpty
-    val basePtr =
-      if (scan.columns.isEmpty || scanHasPtr ||
-        (pairs.isEmpty && overlayFrames.isEmpty)) scan
-      else scan.select(
-        col("*"),
-        col("_metadata.file_path").as("__fs_file"),
-        col("_metadata.row_index").as("__fs_pos"))
-    val unioned = overlayFrames
-      .foldLeft(basePtr)(_.unionByName(_, allowMissingColumns = true))
-    val hasPtr = scanHasPtr || (basePtr ne scan) || overlayFrames.nonEmpty
-    val dvApplied = pairs match {
-      case None =>
-        if (hasPtr && unioned.columns.nonEmpty) unioned.drop("__fs_file", "__fs_pos")
-        else unioned
-      case Some(dv) =>
-        if (unioned.columns.isEmpty) unioned
-        else unioned.join(
-            dv,
-            unioned("__fs_file") === dv("file") && unioned("__fs_pos") === dv("pos"),
-            "left_anti")
-          .drop("__fs_file", "__fs_pos")
-    }
-    // the pruned scan reads files (physical names); serve the LOGICAL
-    // view like every other read path — identity without a mapping
-    ColumnMapping.applyLogical(dvApplied, spark, log, table, asOf)
+    val overlays = RowOverlay.contributions(spark, log, table, asOf)
+      .map(c => c.copy(leaves = prunedLeaves(c)))
+    // the kept files read under the state's record: no footer job
+    val scan = VersionedScan(
+      spark, log, table, asOf, overlays = Some(overlays), files = Some(keep.toIndexedSeq),
+      names = VersionedScan.Names.AtState)
+    // the kept files already match the partition predicate; it prunes the
+    // overlay leaves' rows here
+    if (scan.columns.isEmpty || !sidecarHasCarry) scan
+    else partitionFilter.foldLeft(scan)(_.where(_))
   }
+
+  /** The version dirs of the current state (of `partitions` only, when
+    * given) as written: no overlay rows, no vectors — the zone-map
+    * writers' input. Stats sidecars key by file and must cover exactly
+    * the version-dir files (overlay rows carry their OWN per-dir stats —
+    * indexing them here would double-count). */
+  private def versionDirs(
+      spark: SparkSession,
+      log: TableVersions,
+      table: TableDefinition,
+      partitions: Option[Set[graft.core.Partition]]): DataFrame =
+    VersionedScan(
+      spark, log, table, partitions = partitions, overlays = Some(Nil),
+      vectors = VersionedScan.Vectors.Raw)
 }

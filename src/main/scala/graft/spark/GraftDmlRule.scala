@@ -468,6 +468,7 @@ private[spark] object GraftDml {
       alsoRemove = alsoRemove)
     ()
   }
+
 }
 
 /** Driver-side execution of the intercepted MERGE: materialize the source,
@@ -488,8 +489,9 @@ final case class GraftMergeCommand(
     // strings there), else the relation's column order as declared — in
     // LOGICAL names, the ones the source speaks and Merge.mergeInto
     // rewrites by (a renamed column's files keep the physical name)
-    val current = ColumnMapping.applyLogical(
-      VersionedReader(session, binding.log).read(defn), session, binding.log, defn, None)
+    val current = VersionedScan(
+      session, binding.log, defn, vectors = VersionedScan.Vectors.Raw,
+      names = VersionedScan.Names.AtState)
     // MERGE SCHEMA EVOLUTION (`SET spark.graft.dml.autoMergeSchema=true`,
     // the Delta autoMerge contract): NEW source columns survive the
     // alignment, the DECLARED schema widens (nullable, metadata-only
@@ -662,9 +664,7 @@ final case class GraftUpdateCommand(
     val readCommit = binding.log.currentCommit(defn.name)
     // DV-aware + column-mapped: rewriting from a raw read would resurrect
     // hidden rows / break against logical column references
-    val current = ColumnMapping.applyLogical(
-      DeletionVectors.read(session, binding.log, defn),
-      session, binding.log, defn, None)
+    val current = ColumnMapping.read(session, binding.log, defn)
     if (current.columns.isEmpty) return Seq.empty // never written
     val byName = assignments.map { case (n, e) => n.toLowerCase -> GraftDml.column(e.expr) }.toMap
     val names = defn.partitionSchema.columns.map(_.name)
@@ -689,7 +689,9 @@ final case class GraftUpdateCommand(
       else if (!migrating) {
         val touched = VersionContext.partitionValues(current.where(cond), defn.partitionSchema)
         if (touched.isEmpty) return Seq.empty
-        (ColumnMapping.readPartitions(session, binding.log, defn, touched), Nil, None)
+        (VersionedScan(
+          session, binding.log, defn, partitions = Some(touched.toSet),
+          names = VersionedScan.Names.AtState), Nil, None)
       } else {
         import graft.core.{ColumnValue, Partition, PartitionedTableVersion}
         def partitions(values: Iterable[List[String]]): List[Partition] =
@@ -716,8 +718,9 @@ final case class GraftUpdateCommand(
         // persisted ONCE: the carried-partition probe below and the final
         // rewrite both read this scoped scan — without the persist each
         // would be its own DV-aware pass over the wanted partitions
-        val scoped = ColumnMapping.readPartitions(
-          session, binding.log, defn, partitions(srcVals ++ dstSet))
+        val scoped = VersionedScan(
+          session, binding.log, defn, partitions = Some(partitions(srcVals ++ dstSet).toSet),
+          names = VersionedScan.Names.AtState)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // a source partition with no carried row and no arriving row is
         // EMPTIED — its RemovePartition rides the same atomic commit
@@ -757,7 +760,7 @@ final case class GraftUpdateCommand(
   * the same atomic rebase-checked commit (`alsoRemove`), so there is no
   * window where the emptied partition still serves its rows and no racer
   * can resurrect it unnoticed. The rewrite reads only the touched
-  * partitions' dirs ([[ColumnMapping.readPartitions]]); a table-wide scan
+  * partitions' dirs ([[VersionedScan]] over `partitions`); a table-wide scan
   * runs once, for the touched set. */
 final case class GraftDeleteCommand(
     defn: TableDefinition,
@@ -788,9 +791,7 @@ final case class GraftDeleteCommand(
     // the state this rewrite derives from (rebase discipline)
     val readCommit = binding.log.currentCommit(defn.name)
     // DV-aware + column-mapped (see GraftUpdateCommand)
-    val current = ColumnMapping.applyLogical(
-      DeletionVectors.read(session, binding.log, defn),
-      session, binding.log, defn, None)
+    val current = ColumnMapping.read(session, binding.log, defn)
     if (current.columns.isEmpty) return Seq.empty
     if (defn.isSnapshot) {
       // survivors = rows where the predicate is NOT TRUE (false OR null):
@@ -808,7 +809,9 @@ final case class GraftDeleteCommand(
     PartitionEvolution.requireUniformFold(binding.log, defn, "DELETE (SQL)")
     val touched = VersionContext.partitionValues(current.where(cond), defn.partitionSchema)
     if (touched.isEmpty) return Seq.empty // nothing matched — no commit
-    val scope = ColumnMapping.readPartitions(session, binding.log, defn, touched)
+    val scope = VersionedScan(
+      session, binding.log, defn, partitions = Some(touched.toSet),
+      names = VersionedScan.Names.AtState)
     val before = binding.log.currentVersion(defn.name) match {
       case PartitionedTableVersion(pvs) => pvs
       case other                        => sys.error(s"row-level delete does not apply to $other")

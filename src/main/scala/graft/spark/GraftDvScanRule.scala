@@ -31,7 +31,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
  * DML statements are deliberately NOT rewritten at the top level: graft
  * UPDATE/DELETE/MERGE targets are routed by [[GraftDmlRule]] (injected
  * AFTER this rule) onto copy-on-write commands that already read DV-aware
- * ([[DeletionVectors.readPartitions]]) — rewriting the target relation
+ * ([[VersionedScan]]) — rewriting the target relation
  * here would hide it from that routing. MERGE *sources* and any subquery
  * inside a DML statement are reads, and are rewritten.
  */
@@ -93,18 +93,20 @@ final case class GraftDvScanRule(spark: SparkSession) extends Rule[LogicalPlan] 
           "vectors: the DV anti-join consumes the scan's metadata columns. " +
           "Run OPTIMIZE to absorb the vectors first")
     // merge-on-read deletes applied, then the mapping of the addressed
-    // commit (identity when absent) — the full logical view
+    // commit (identity when absent) — the full logical view, one
+    // [[VersionedScan]]
     val df0 = ColumnMapping.read(
       spark, t.tableBinding.log, t.tableDefinition, t.tableAsOf)
-    // ADDITIVE-EVOLUTION soundness: the read above infers its schema from
-    // file footers (no mergeSchema — one footer), so after an evolution a
-    // NARROW footer can win the inference while WIDE files hold real
-    // values for the evolved column — NULL-aliasing those columns below
-    // would silently blank data. When the relation declares a column the
-    // inference missed (or a wider struct shape than it found), rebuild
-    // the read with SCHEMA MERGING — the distributed footer union — so
-    // every file's columns survive. Costs a footer job, and only when an
-    // evolution actually left the inference short.
+    // ADDITIVE-EVOLUTION soundness: a one-era state with a [[DataSchema]]
+    // record reads under it, and a declared column the record lacks comes
+    // from a metadata-only ADD COLUMN / ADD FIELD that no file holds — it
+    // projects as NULL below. A state with no record, or a mixed fold
+    // (each era typed apart), infers from footers (no mergeSchema — one
+    // footer per era), where a NARROW footer can win while WIDE files hold
+    // real values for an evolved column. When the relation declares a
+    // column that inference missed (or a wider struct shape than it
+    // found), rebuild the read with SCHEMA MERGING — the distributed footer
+    // union — so every file's columns survive.
     def inferenceShort(d: org.apache.spark.sql.DataFrame): Boolean =
       d.columns.nonEmpty && r.output.exists { out =>
         d.schema.fields.find(_.name.equalsIgnoreCase(out.name)) match {
@@ -114,7 +116,9 @@ final case class GraftDvScanRule(spark: SparkSession) extends Rule[LogicalPlan] 
         }
       }
     val df =
-      if (inferenceShort(df0))
+      if ((t.isMixedFold ||
+          DataSchema.at(spark, t.tableBinding.log, t.tableDefinition, t.tableAsOf).isEmpty) &&
+          inferenceShort(df0))
         ColumnMapping.read(
           spark, t.tableBinding.log, t.tableDefinition, t.tableAsOf,
           mergeSchema = true)

@@ -1710,8 +1710,10 @@ final case class GraftStageInsertCommand(
           binding.log, defn, "STAGE INSERT INTO")
         // the batch's partitions name the dirs to carry: a DV-aware,
         // overlay-aware read of exactly those
-        ColumnMapping.readPartitions(session, binding.log, defn,
-          VersionContext.partitionValues(df, defn.partitionSchema))
+        VersionedScan(
+          session, binding.log, defn,
+          partitions = Some(VersionContext.partitionValues(df, defn.partitionSchema).toSet),
+          names = VersionedScan.Names.AtState)
           .unionByName(df, allowMissingColumns = true)
       }
     val mode = if (overwrite) "OVERWRITE" else "INTO"

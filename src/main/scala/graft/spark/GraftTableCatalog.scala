@@ -214,7 +214,7 @@ final class GraftTableCatalog extends TableCatalog {
     // before the widen carry the narrow physical type, and a narrow
     // declaration would make consumers (and the scan-rule re-alias cast)
     // truncate post-widen values. Same override as
-    // VersionedReader.withWidening; zero cost when nothing is widened.
+    // VersionedScan; zero cost when nothing is widened.
     val widenMap = ColumnMapping.widenedTypesAt(spark, log, defn, at)
     val finalSchema =
       if (widenMap.isEmpty) schema
@@ -247,7 +247,7 @@ final class GraftTableCatalog extends TableCatalog {
         (Nil, Map.empty[String, String])
       case PartitionedTableVersion(pvs) =>
         // leaf version dirs + basePath so `k=v` segments become partition
-        // columns (same layout contract as VersionedReader.doMaterialize)
+        // columns (the values [[VersionedScan]] takes from the fold)
         (pvs.toSeq.map { case (p, v) => SparkPaths.dirFor(defn.location, p, v) }.sorted,
           Map("basePath" -> defn.location.toString))
     }
@@ -1069,10 +1069,11 @@ private[spark] object GraftV2Table {
         FileCopy.dataFiles(fs, new HPath(from)).map((from, to, _))
       }, "INSERT INTO")
     } else {
-      val current = ColumnMapping.applyLogical(
-        if (defn.isSnapshot) DeletionVectors.read(spark, log, defn, Some(readCommit))
-        else DeletionVectors.readPartitions(spark, log, defn, touched.flatMap(_._1)),
-        spark, log, defn, None)
+      val current = VersionedScan(
+        spark, log, defn,
+        at = if (defn.isSnapshot) Some(readCommit) else None,
+        partitions = if (defn.isSnapshot) None else Some(touched.flatMap(_._1).toSet),
+        names = VersionedScan.Names.AtHead)
       val into = ops.collectFirst {
         case TableOperation.AddPartitionVersion(_, v) => v
         case TableOperation.AddTableVersion(v)        => v

@@ -171,17 +171,14 @@ object IdentityColumns {
       asOf: Option[TableVersions.CommitId]): Long = {
     val at = asOf.getOrElse(log.currentCommit(table.name))
     markAt(log, table.name, column, at).getOrElse {
-      val reader = VersionedReader(spark, log)
-      val raw = asOf.map(reader.readAsOf(table, _)).getOrElse(reader.read(table))
-      if (raw.columns.isEmpty) 0L
+      val logical = VersionedScan(
+        spark, log, table, asOf, vectors = VersionedScan.Vectors.Raw,
+        names = VersionedScan.Names.AtState)
+      if (!logical.columns.exists(_.equalsIgnoreCase(column))) 0L
       else {
-        val logical = ColumnMapping.applyLogical(raw, spark, log, table, asOf)
-        if (!logical.columns.exists(_.equalsIgnoreCase(column))) 0L
-        else {
-          val r = logical.agg(org.apache.spark.sql.functions.max(
-            org.apache.spark.sql.functions.col(column))).head()
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-        }
+        val r = logical.agg(org.apache.spark.sql.functions.max(
+          org.apache.spark.sql.functions.col(column))).head()
+        if (r.isNullAt(0)) 0L else r.getLong(0)
       }
     }
   }

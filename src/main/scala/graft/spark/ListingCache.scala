@@ -1,12 +1,8 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex, NoopCache}
-import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex, NoopCache, PartitionSpec}
 import org.apache.spark.sql.types.StructType
-
-import graft.core.FileFormat
 
 /**
  * Driver-side LISTING cache for IMMUTABLE versioned dirs: version and
@@ -48,32 +44,17 @@ object ListingCache {
   private[spark] def invalidateAll(): Unit = Option(listingClient).foreach(_.invalidateAll())
 
   /** An `InMemoryFileIndex` over published version/overlay dirs, listed
-    * through the shared cache. The existence check of the stock path runs
-    * on every build: a reclaimed dir fails here, never from the cache. */
+    * through the shared cache; `partitions` fixes the partition values
+    * (no path discovery). The existence check of the stock path runs on
+    * every build: a reclaimed dir fails here, never from the cache. */
   private[spark] def fileIndex(
       spark: SparkSession,
       paths: Seq[String],
       options: Map[String, String],
-      schema: Option[StructType]): InMemoryFileIndex = {
+      schema: Option[StructType],
+      partitions: Option[PartitionSpec] = None): InMemoryFileIndex = {
     val roots = org.apache.spark.sql.GraftSqlShim.checkedPaths(
       paths, spark.sessionState.newHadoopConfWithOptions(options))
-    new InMemoryFileIndex(spark, roots, options, schema, listings(spark))
-  }
-
-  /** A batch scan of published version/overlay dirs — the plan
-    * `spark.read.format(f).options(o).schema(s).load(paths)` builds (a V1
-    * `HadoopFsRelation`, so `_metadata` pointers and partition pruning
-    * behave the same), with the listing from the shared cache; `schema`
-    * None infers the data columns from the footers (one Spark job). */
-  private[spark] def load(
-      spark: SparkSession,
-      format: FileFormat,
-      paths: Seq[String],
-      options: Map[String, String],
-      schema: Option[StructType]): DataFrame = {
-    // the catalog's format mapping (GraftTableCatalog.buildFileTable)
-    val fileFormat = if (format == FileFormat.Orc) new OrcFileFormat else new ParquetFileFormat
-    spark.baseRelationToDataFrame(org.apache.spark.sql.GraftSqlShim.fileRelation(
-      spark, fileIndex(spark, paths, options, schema), fileFormat, options, schema))
+    new InMemoryFileIndex(spark, roots, options, schema, listings(spark), partitions)
   }
 }

@@ -376,9 +376,7 @@ object MaterializedView {
       // a dim landing mid-refresh cannot make the mark claim a state the
       // join never read
       val at = dimAts.get(dimDefn.name.fullyQualifiedName)
-      val dim = ColumnMapping.applyLogical(
-        DeletionVectors.read(session, binding.log, dimDefn, at),
-        session, binding.log, dimDefn, at)
+      val dim = ColumnMapping.read(session, binding.log, dimDefn, at)
       acc.join(broadcast(dim.alias(j.alias)), expr(j.onSql), "inner")
     }
   }
@@ -450,9 +448,7 @@ object MaterializedView {
     // LOGICAL names: the view definition speaks the source's logical
     // schema, so a column-mapped source must project physical → logical
     // before the WHERE/GROUP BY resolve (the change-feed path already does)
-    val base = ColumnMapping.applyLogical(
-      DeletionVectors.read(session, binding.log, srcDefn, Some(at)),
-      session, binding.log, srcDefn, Some(at))
+    val base = ColumnMapping.read(session, binding.log, srcDefn, Some(at))
     // star join first: the WHERE (and the group columns) may speak dim
     // attributes; dims read at their CURRENT state (the refresh recorded
     // their anchors and re-anchors FULL when one moved)

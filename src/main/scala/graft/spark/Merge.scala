@@ -34,10 +34,11 @@ import graft.spark.VersionContext.DatasetVersionOps
  */
 object Merge {
 
-  /** Pointer-column aliases the merge-on-read MERGE threads through the
-    * clause join (always dropped before output). */
-  private val MorFileCol = "__mor_file"
-  private val MorPosCol = "__mor_pos"
+  /** The pointer columns of a pointed [[VersionedScan]], which the
+    * merge-on-read MERGE threads through the clause join (always dropped
+    * before output). */
+  private val MorFileCol = VersionedScan.FileCol
+  private val MorPosCol = VersionedScan.PosCol
 
   /** Apply `source` to `table` by `keyCols`: matched current rows are
     * replaced by their source row, unmatched source rows are inserted,
@@ -72,11 +73,12 @@ object Merge {
     try {
       // DV-aware: a raw read would resurrect merge-on-read-deleted rows
       // into the rewritten partitions (and match them as upsert targets)
-      val current = ColumnMapping.applyLogical(
-        if (table.isSnapshot) DeletionVectors.read(spark, log, table)
-        else DeletionVectors.readPartitions(
-          spark, log, table, VersionContext.partitionValues(src, table.partitionSchema)),
-        spark, log, table, None)
+      val current = VersionedScan(
+        spark, log, table,
+        partitions =
+          if (table.isSnapshot) None
+          else Some(VersionContext.partitionValues(src, table.partitionSchema).toSet),
+        names = VersionedScan.Names.AtState)
       // a source missing one of the table's columns would silently REWRITE
       // the touched partitions without it (kept rows are projected to the
       // source's columns) — refuse instead; additive evolution goes the
@@ -289,12 +291,9 @@ object Merge {
         // side (pointer columns ride the __t_ prefix like any column and
         // never reach the output projection).
         val current0 =
-          if (morMode) {
-            val (df, f, p) = DeletionVectors.readVisiblePointed(spark, log, table, None)
-            if (df.columns.isEmpty) df
-            else df.withColumnRenamed(f, MorFileCol).withColumnRenamed(p, MorPosCol)
-          } else ColumnMapping.applyLogical(
-            DeletionVectors.read(spark, log, table), spark, log, table, None)
+          if (morMode) VersionedScan(
+            spark, log, table, pointers = true, names = VersionedScan.Names.AtState)
+          else ColumnMapping.read(spark, log, table)
         val neverWritten = current0.columns.isEmpty
         // the versioned reader surfaces partition columns as strings (they
         // come from k=v dirs); mirror that in the never-written schema so
@@ -327,18 +326,15 @@ object Merge {
             // DISCOVERY (narrow): partitions holding a matched key — a
             // column-pruned scan of (keys ∪ partition cols) semi-joined to
             // the distinct source keys; collects O(#partitions) rows.
-            // Never through the POINTED read: discovery needs no row
-            // pointers, and the `_metadata`-attached scan is measurably
-            // heavier — the cheap logical view sees the same rows
+            // Discovery reads the logical view without pointers: its scan
+            // carries `(file, pos)` only while a vector is live (for the
+            // anti-join), and sees the same rows as the clause join
             // (overlay-unioned, DV-applied)
             // differing-name keys: project the source's key columns under
             // the TARGET names so the semi join stays a plain by-name join
             val srcKeyDf =
               src.select(srcKeys.map(col): _*).toDF(keyCols: _*).distinct()
-            val discovery =
-              if (morMode) ColumnMapping.applyLogical(
-                DeletionVectors.read(spark, log, table), spark, log, table, None)
-              else current
+            val discovery = if (morMode) ColumnMapping.read(spark, log, table) else current
             val matchedParts = VersionContext.partitionValues(
               discovery.select((keyCols ++ partCols).distinct.map(col): _*)
                 .join(srcKeyDf, keyCols, "left_semi"),
@@ -358,12 +354,9 @@ object Merge {
                 }))
             }
             val wanted = (matchedParts ++ insertParts).distinct
-            if (morMode) {
-              val (df, f, p) = DeletionVectors.readPartitionsVisiblePointed(
-                spark, log, table, wanted)
-              if (df.columns.isEmpty) df
-              else df.withColumnRenamed(f, MorFileCol).withColumnRenamed(p, MorPosCol)
-            } else ColumnMapping.readPartitions(spark, log, table, wanted)
+            VersionedScan(
+              spark, log, table, partitions = Some(wanted.toSet), pointers = morMode,
+              names = VersionedScan.Names.AtState)
           }
 
         // ---- the clause join: one shuffled full-outer equi-join ----
@@ -416,8 +409,7 @@ object Merge {
             .groupBy(col("__graft_t_rid")).count().where(col("count") > 1).isEmpty,
           "merge ON condition matches multiple source rows to one target row — " +
             "ambiguous match (tighten the ON condition or pre-aggregate the source)")
-      val current0 = ColumnMapping.applyLogical(
-        DeletionVectors.read(spark, log, table), spark, log, table, None)
+      val current0 = ColumnMapping.read(spark, log, table)
       val neverWritten = current0.columns.isEmpty
       val outSchema: Seq[StructField] = {
         val base = emptySchema.filter(_ => neverWritten)

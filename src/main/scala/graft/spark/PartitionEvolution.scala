@@ -155,9 +155,8 @@ object PartitionEvolution {
     // boundary rewrite derives from exactly this state
     val readCommit = log.currentCommit(table.name)
     val curDefn = table.copy(partitionSchema = current)
-    val rows = ColumnMapping.applyLogical(
-      DeletionVectors.read(spark, log, curDefn, Some(readCommit)),
-      spark, log, curDefn, None)
+    val rows = VersionedScan(
+      spark, log, curDefn, Some(readCommit), names = VersionedScan.Names.AtHead)
     if (rows.columns.nonEmpty)
       newSchema.columns.foreach(c =>
         require(rows.columns.exists(_.equalsIgnoreCase(c.name)),
@@ -242,9 +241,8 @@ object PartitionEvolution {
     val readCommit = log.currentCommit(table.name)
     // schema probe is metadata-only (footer resolution, no data pass)
     val curDefn = table.copy(partitionSchema = current)
-    val cols = ColumnMapping.applyLogical(
-      DeletionVectors.read(spark, log, curDefn, Some(readCommit)),
-      spark, log, curDefn, None).columns
+    val cols = VersionedScan(
+      spark, log, curDefn, Some(readCommit), names = VersionedScan.Names.AtHead).columns
     if (cols.nonEmpty)
       newSchema.columns.foreach(c =>
         require(cols.exists(_.equalsIgnoreCase(c.name)),
@@ -299,9 +297,8 @@ object PartitionEvolution {
     val readCommit = log.currentCommit(table.name)
     if (eraSignatures(log.versionAt(table.name, readCommit)).size <= 1) return
     requireCurrentScheme(spark, log, table) // the caller must hold the new-era handle
-    val rows = ColumnMapping.applyLogical(
-      DeletionVectors.read(spark, log, table, Some(readCommit)),
-      spark, log, table, None)
+    val rows = VersionedScan(
+      spark, log, table, Some(readCommit), names = VersionedScan.Names.AtHead)
     val before: Map[Partition, Version] = log.versionAt(table.name, readCommit) match {
       case PartitionedTableVersion(pvs) => pvs
       case _                            => Map.empty

@@ -54,8 +54,7 @@ object ReplaceWhere {
     val pred = expr(predicateSql)
     val notPred = not(coalesce(pred, lit(false)))
     val readCommit = log.currentCommit(defn.name)
-    val current = ColumnMapping.applyLogical(
-      DeletionVectors.read(session, log, defn), session, log, defn, None)
+    val current = ColumnMapping.read(session, log, defn)
     // align to the current write-side (logical) schema; a never-written
     // table takes the statement's own shape
     // PERSIST across the guard and the commit: a non-deterministic source

@@ -27,8 +27,8 @@ import graft.core.TableVersions.{CommitId, TableOperation, TableUpdate, TableUpd
  *    [[MetadataFiles]]). The dir is keyed by the commit id and written
  *    before that commit, never after it, so it is invisible until the
  *    commit lands — the DV-sidecar staging posture ([[DeletionVectors]]);
- *  - reads union the overlay rows into the state ([[VersionedReader]]
- *    does this for every state-resolving read), and deletion vectors
+ *  - reads scan the overlay leaves beside the version dirs
+ *    ([[VersionedScan]] does this for every state-resolving read), and deletion vectors
  *    apply uniformly on top: overlay files are ordinary immutable files,
  *    so a later DV DELETE or merge-on-read UPDATE hides overlay rows by
  *    `(file, pos)` exactly like base rows.
@@ -261,39 +261,6 @@ object RowOverlay {
     }
     (resolveContributions(spark, log, table, log.versionAt(table.name, at), dirs.toList),
       skippedSquash)
-  }
-
-  /** Load one contribution's leaves as a DataFrame: the dir's own layout
-    * (partition columns from its `k=v` subdirs, string-pinned like every
-    * versioned read), the [[DataSchema]] record at the dir's anchor commit
-    * (footer inference without one), optional `(file, pos)` pointer
-    * capture per scan, and type-widening casts. Shared by
-    * [[VersionedReader]]'s state union and the change feed's range-scoped
-    * overlay scans. */
-  private[spark] def loadLeaves(
-      spark: SparkSession,
-      log: TableVersions,
-      table: TableDefinition,
-      c: Contribution,
-      leaves: List[(Option[Partition], String)],
-      pointers: Option[(String, String)],
-      widened: Map[String, org.apache.spark.sql.types.DataType]): DataFrame = {
-    val partitioned = leaves.head._1.isDefined
-    val df0 = SessionConf.withConf(
-      spark, "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
-      // listings cached per immutable overlay leaf ([[ListingCache]])
-      ListingCache.load(
-        spark, table.format, leaves.map(_._2),
-        if (partitioned) Map("basePath" -> c.dir) else Map.empty[String, String],
-        DataSchema.at(spark, log, table, Some(c.anchor)))
-    }
-    val pointed = pointers.fold(df0) { case (f, p) =>
-      df0.select(
-        col("*"),
-        col("_metadata.file_path").as(f),
-        col("_metadata.row_index").as(p))
-    }
-    ColumnMapping.applyWideningCasts(pointed, widened)
   }
 
   /** MERGE-ON-READ APPEND: land `df`'s rows into the current state of
@@ -643,17 +610,8 @@ object RowOverlay {
     val anchor = log.currentCommit(table.name)
     val contribs = contributions(spark, log, table, Some(anchor))
     if (contribs.sizeIs <= 1) return false
-    val fileCol = "__ro_file"; val posCol = "__ro_pos"
-    val widened = ColumnMapping.widenedTypesAt(spark, log, table, Some(anchor))
-    val unioned = contribs
-      .map(c => loadLeaves(spark, log, table, c, c.leaves, Some((fileCol, posCol)), widened))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    val live = (DeletionVectors.resolvePairs(spark, log, table, Some(anchor)) match {
-      case None => unioned
-      case Some(dv) =>
-        unioned.join(
-          dv, unioned(fileCol) === dv("file") && unioned(posCol) === dv("pos"), "left_anti")
-    }).drop(fileCol, posCol)
+    val live = VersionedScan(
+      spark, log, table, Some(anchor), dirs = Some(VersionedScan.NoDirs), overlays = Some(contribs))
     val commitId = CommitId(UUID.randomUUID().toString)
     val dir = appendsDir(table, commitId) // invisible until the commit lands
     val entry = MetadataFiles.published(spark, log, table, MetadataFiles.Appends, complete = true)
@@ -683,7 +641,7 @@ object RowOverlay {
 
   /** AUTO-SQUASH — the merge-on-read analogue of
     * [[Compaction.autoCompact]]: when more than `maxDirs` overlay dirs
-    * contribute to current reads (each one is a union leg on EVERY read),
+    * contribute to current reads (each one adds its leaves to EVERY read),
     * fold them via [[squash]]; below the
     * threshold it is a no-op, not a junk history entry. The streaming
     * append sink calls this per micro-batch so a long-running stream
@@ -730,17 +688,8 @@ object RowOverlay {
             "consolidate eras (or OPTIMIZE) before cloning")
       case _ => ()
     })
-    val fileCol = "__ro_file"; val posCol = "__ro_pos"
-    val widened = ColumnMapping.widenedTypesAt(spark, log, src, Some(at))
-    val unioned = contribs
-      .map(c => loadLeaves(spark, log, src, c, c.leaves, Some((fileCol, posCol)), widened))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    val live = (DeletionVectors.resolvePairs(spark, log, src, Some(at)) match {
-      case None => unioned
-      case Some(dv) =>
-        unioned.join(
-          dv, unioned(fileCol) === dv("file") && unioned(posCol) === dv("pos"), "left_anti")
-    }).drop(fileCol, posCol)
+    val live = VersionedScan(
+      spark, log, src, Some(at), dirs = Some(VersionedScan.NoDirs), overlays = Some(contribs))
     val dir = appendsDir(src, cloneAnchor) // linked tables share the location
     val entry = MetadataFiles.published(spark, log, dst, MetadataFiles.Appends, complete = true)
     val writer = VersionContext
@@ -790,8 +739,9 @@ object RowOverlay {
     val spark = SparkSession.active
     val log = ctx.metastore.tableVersions
     val expected = log.currentCommit(table.name)
-    val (visible, fileCol, posCol) =
-      DeletionVectors.readVisiblePointed(spark, log, table, None)
+    val visible = VersionedScan(
+      spark, log, table, pointers = true, names = VersionedScan.Names.AtState)
+    val (fileCol, posCol) = (VersionedScan.FileCol, VersionedScan.PosCol)
     if (visible.columns.isEmpty) { // never-written table: nothing to hide
       if (!incoming.isEmpty) { append(incoming, ctx, table, user, message); () }
       return 0L
@@ -827,8 +777,9 @@ object RowOverlay {
     val spark = SparkSession.active
     val log = ctx.metastore.tableVersions
     val expected = log.currentCommit(table.name)
-    val (visible, fileCol, posCol) =
-      DeletionVectors.readVisiblePointed(spark, log, table, None)
+    val visible = VersionedScan(
+      spark, log, table, pointers = true, names = VersionedScan.Names.AtState)
+    val (fileCol, posCol) = (VersionedScan.FileCol, VersionedScan.PosCol)
     if (visible.columns.isEmpty) return 0L
     // stale-name guard (the DV-delete posture): analyze predicate and
     // assignment expressions against a lineage-free frame of the logical

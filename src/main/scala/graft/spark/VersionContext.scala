@@ -370,7 +370,7 @@ object VersionContext {
     * shrink below the child's size — a narrowing projection or a
     * selective filter over a large scan can land in the single-task
     * branch. Copy-on-write DML scopes read only the touched partitions'
-    * dirs ([[ColumnMapping.readPartitions]]), so their leaves are the touched
+    * dirs ([[VersionedScan]] over `partitions`), so their leaves are the touched
     * partitions' real size, not the whole table's. Bytes-driven, so the
     * branch taken is identical at any core count. */
   private[spark] def distributeForWrite(

@@ -195,8 +195,9 @@ object VersionedStream {
     * schema into the stream (which would break every downstream column
     * reference with an unrelated analysis error). */
   private[spark] def resolveSchema(spark: SparkSession, h: Handle): StructType = {
-    val schema = ColumnMapping.applyLogical(
-      VersionedReader(spark, h.log).read(h.defn), spark, h.log, h.defn, None).schema
+    val schema = VersionedScan(
+      spark, h.log, h.defn, vectors = VersionedScan.Vectors.Raw,
+      names = VersionedScan.Names.AtState).schema
     if (schema.isEmpty)
       sys.error(
         s"table ${h.defn.name.fullyQualifiedName} has no committed data to resolve a " +

@@ -109,12 +109,11 @@ object ZOrder {
     val readCommit = log.currentCommit(table.name)
     // DV-aware (like Compaction): the Z-order rewrite must not resurrect
     // merge-on-read-deleted rows into the clustered files
-    val current = ColumnMapping.applyLogical(
-      if (partitions.isEmpty)
-        DeletionVectors.read(spark, log, table, Some(readCommit))
-      else
-        DeletionVectors.readPartitions(spark, log, table, partitions),
-      spark, log, table, None)
+    val current = VersionedScan(
+      spark, log, table,
+      at = if (partitions.isEmpty) Some(readCommit) else None,
+      partitions = if (partitions.isEmpty) None else Some(partitions.toSet),
+      names = VersionedScan.Names.AtHead)
     val z = zvalue(ranges(current, zorderCols), bits)
     def writersFor(bytes: Long, target: Long): Int =
       math.max(1L, math.min(Int.MaxValue.toLong, (bytes + target - 1) / target)).toInt

@@ -214,7 +214,7 @@ object Streams {
     * query loudly and the restarted batch (never committed) retries.
     *
     * SELF-MAINTAINING: overlay dirs accumulate one per trigger, and each
-    * live dir costs every read an existence probe plus a union leg — at a
+    * live dir adds its leaves to every read's listing and scan — at a
     * 1-minute cadence that is ~1.4k dirs/day of read debt. So after each
     * batch the sink runs [[graft.spark.RowOverlay.autoSquash]] (folding
     * the dirs to ONE once more than `autoSquashMaxDirs` contribute — the

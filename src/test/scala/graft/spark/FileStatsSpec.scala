@@ -198,6 +198,37 @@ class FileStatsSpec extends AnyFunSuite with Matchers {
       .inputFiles.length should be < totalFiles
   }
 
+  test("a bloom-only probe on a log with no schema record types the literal from the footers") {
+    import org.apache.spark.sql.functions.col
+    val log = new InMemoryTableVersions
+    val ctx = VersionContext(VersionedMetastore(log, new InMemoryMetastore))
+    val table = TableDefinition(
+      TableName("graft_spec", "dbl_bloom_legacy"),
+      Files.createTempDirectory("graft_spec_dblbloom_legacy").toUri,
+      PartitionSchema.snapshot,
+      FileFormat.Parquet)
+    ctx.init(table, user, UpdateMessage("init"))
+    spark.range(4000).toDF("k")
+      .withColumn("d", col("k").cast("double"))
+      .repartition(4, col("k"))
+      .versionedInsertInto(ctx, table, user, UpdateMessage("v1"))
+    // the same files under a log an earlier version wrote: no record
+    val legacy = new InMemoryTableVersions
+    legacy.init(table.name, isSnapshot = true, user, UpdateMessage("init"), java.time.Instant.now())
+    val v = log.currentVersion(table.name) match {
+      case SnapshotTableVersion(v) => v
+      case other                   => fail(s"not a snapshot: $other")
+    }
+    legacy.commit(table.name, TableVersions.TableUpdate(
+      user, UpdateMessage("adopt"), java.time.Instant.now(),
+      List(TableVersions.TableOperation.AddTableVersion(v))))
+    DataSchema.at(spark, legacy, table, None) shouldBe None
+    // bloom-only sidecar: the int probe must still hash '17.0'
+    FileStats.writeZoneMaps(spark, legacy, table, Seq("k"), bloomCols = Seq("d"))
+    FileStats.readSkippingEquals(spark, legacy, table, "d", Seq(17: Int))
+      .where(col("d") === 17.0).count() shouldBe 1L
+  }
+
   test("readSkipping drops files outside the predicate range, keeps every matching row") {
     import org.apache.spark.sql.functions.col
     val (table, log) = rangeClusteredTable()

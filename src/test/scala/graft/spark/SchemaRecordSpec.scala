@@ -272,6 +272,43 @@ class SchemaRecordSpec extends AnyFunSuite with Matchers {
     spark.sql(s"SELECT day FROM $name").as[Int].collect().sorted shouldBe Array(0, 2, 3)
   }
 
+  test("a table with a live vector serves a metadata-only ADD COLUMN as NULL, with no footer job") {
+    val t = table("dv_add_column", Seq("day"))
+    Seq((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")).toDF("id", "label", "day")
+      .versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
+    DeletionVectors.delete(
+      ctx, log, t, org.apache.spark.sql.functions.col("id") === 2L, user, UpdateMessage("dv"))
+    val name = sqlName(t)
+    def plan() = spark.sql(s"SELECT * FROM $name").queryExecution.optimizedPlan
+    plan()
+    val before = jobs(plan())
+    spark.sql(s"ALTER TABLE $name ADD COLUMN score DOUBLE")
+    // the state's record holds no `score`, and no file does: planning the
+    // read runs the jobs it ran before the DDL, and no footer union
+    jobs(plan()) shouldBe before
+    val q = spark.sql(s"SELECT id, label, score FROM $name")
+    q.schema("score").dataType shouldBe org.apache.spark.sql.types.DoubleType
+    q.as[(Long, String, Option[Double])].collect().sortBy(_._1) shouldBe
+      Array((1L, "a", None), (3L, "c", None))
+  }
+
+  test("a mixed fold serves a column added after its new era's first write") {
+    val t = table("mixed_add_column", Seq("day"))
+    Seq((1L, "k0", "d1")).toDF("id", "kind", "day")
+      .versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
+    val name = sqlName(t)
+    spark.sql(s"ALTER TABLE $name SET PARTITIONED BY (kind) METADATA ONLY")
+    spark.sql(s"INSERT INTO $name (id, kind, day) VALUES (2, 'k0', 'd2')")
+    spark.sql(s"ALTER TABLE $name ADD COLUMN extra STRING")
+    spark.sql(s"INSERT INTO $name (id, kind, day, extra) VALUES (3, 'k1', 'd3', 'e3')")
+    PartitionEvolution.eraSignatures(log.currentVersion(t.name)) shouldBe
+      Set(List("day"), List("kind"))
+    // the new era's dirs are typed from footers (kind=k0's lacks `extra`):
+    // the read must still find k1's values
+    spark.sql(s"SELECT id, extra FROM $name").as[(Long, Option[String])].collect()
+      .sortBy(_._1) shouldBe Array((1L, None), (2L, None), (3L, Some("e3")))
+  }
+
   test("a log with no schema record infers from the footers: one job, and its writes start no record") {
     val t = table("legacy_src", Seq("p"))
     Seq((1L, "a", "x")).toDF("id", "label", "p").versionedInsertInto(ctx, t, user, UpdateMessage("v1"))
